@@ -32,6 +32,10 @@ final case class CategoricalEncoding(column: String, mapping: DataFrame) {
 
 object Encoding {
 
+  /** Default vocabulary cap (reference MAX_CAT_CARDINALITY,
+    * spark/preprocess.py:20). */
+  val MaxCardinality = 30000
+
   /**
    * D1 cardinality probe driving the encoding-strategy choice (reference
    * spark/preprocess.py:261,319; estimate_parameters.py:8). Exact by
@@ -49,7 +53,7 @@ object Encoding {
     else df.select(col(column)).na.drop().distinct().count()
 
   /** Fit one column's (value, rank) map; rank 1 = most frequent. */
-  def fit(df: DataFrame, column: String, maxCardinality: Int = 30000): CategoricalEncoding = {
+  def fit(df: DataFrame, column: String, maxCardinality: Int = MaxCardinality): CategoricalEncoding = {
     val freq = df.select(col(column)).na.drop()
       .groupBy(col(column)).agg(count(lit(1)).as("cnt"))
     // Unpartitioned window is safe here: input is the small aggregate.

@@ -28,7 +28,7 @@ final case class FeaturizerConfig(
     leftPad: Boolean = false,
     normMode: String = "min_max",
     dateMode: String = "interval", // or "absolute" (unix seconds)
-    maxCardinality: Int = 30000,
+    maxCardinality: Int = Encoding.MaxCardinality,
     tiebreak: Seq[String] = Nil) {
 
   /** Name of the derived per-event date feature for date column `c`. */

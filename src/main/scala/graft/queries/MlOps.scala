@@ -85,16 +85,20 @@ object MlOps extends QueryGroup {
     val mmRow = wide.agg(min("c_acctbal").as("__mn"),
       max("c_acctbal").as("__mx"),
       countDistinct(col("c_mktsegment")).as("__card")).head()
-    val (mn, mx) = (mmRow.getDouble(0), mmRow.getDouble(1))
+    // min and max are null on an empty frame or an all-null c_acctbal,
+    // which then scales like a constant column
+    val (mn, mx) =
+      if (mmRow.isNullAt(0)) (0.0, 0.0) else (mmRow.getDouble(0), mmRow.getDouble(1))
     val wideEnc = Encoding.apply(wide, segEnc)
       // constant-column guard (mirrors NormalizationSummary.minMaxOf):
       // max==min would divide to NaN and read as a silent 0-fill downstream
       .withColumn("c_acctbal",
         if (mx == mn) lit(0.0)
         else (col("c_acctbal") - lit(mn)) / lit(mx - mn))
+    // segEnc keeps at most MaxCardinality codes; the vocab matches it
     val vocab = Map(
       "event_type" -> (model.cardinality("event_type") + 1),
-      "c_mktsegment" -> (mmRow.getLong(2) + 1))
+      "c_mktsegment" -> (math.min(mmRow.getLong(2), Encoding.MaxCardinality.toLong) + 1))
     (wideEnc, vocab)
   }
 

@@ -26,15 +26,22 @@ import org.apache.spark.storage.StorageLevel
  * the difference. `batchSize <= 0` means one full-batch step per epoch.
  *
  * Step slicing costs ONE pass per epoch: examples are assigned a random
- * step key map-side and shuffled into nSteps partitions (partition i =
- * step i), then each optimizer step reads exactly its partition via
- * partition pruning — the shuffle map stage runs once and is reused by
- * every step's job (Spark skips completed map stages). The per-epoch cost
- * is O(corpus + shuffle(corpus)), NOT the O(nSteps x corpus) that per-step
- * `randomSplit` selection scans would pay — the same each-shard-read-once
- * behavior as the reference's Petastorm sharding (spark/large/
- * train.py:152-157). Slice sizes are Binomial(n, 1/nSteps) ~ batchSize,
- * like randomSplit's.
+ * step key map-side and shuffled into nSteps x k partitions, where step s
+ * owns partitions [s*k, (s+1)*k); each optimizer step reads exactly its k
+ * partitions via partition pruning — the shuffle map stage runs once and
+ * is reused by every step's job (Spark skips completed map stages). The
+ * per-epoch cost is O(corpus + shuffle(corpus)), NOT the O(nSteps x corpus)
+ * that per-step `randomSplit` selection scans would pay — the same
+ * each-shard-read-once behavior as the reference's Petastorm sharding
+ * (spark/large/train.py:152-157). Slice sizes are Binomial(n, 1/nSteps) ~
+ * batchSize, like randomSplit's.
+ *
+ * The k sub-partitions make each step data-parallel, as the reference's
+ * Horovod workers split every batch: k = min(cores, ceil(batchSize /
+ * MinExamplesPerTask)) tasks run the step's gradient sum side by side. A
+ * step's membership does not depend on k (see [[sliceKeys]]), and the k
+ * partial sums are added on the driver in partition order, so a run is
+ * reproducible bit for bit; with k = 1 it is the one-task-per-step layout.
  *
  * Monitored (early-stop / plateau / reported) loss: with full coverage it
  * is the epoch's mean training loss, exactly what the reference monitors.
@@ -52,6 +59,33 @@ import org.apache.spark.storage.StorageLevel
 object EpochLoop {
 
   final case class RunResult(losses: Seq[Double], stoppedAt: Int)
+
+  /** Step-task grain: a step of batchSize examples is split into
+    * ceil(batchSize / MinExamplesPerTask) tasks, at most one per core, so
+    * at the transformer's ~3 ms of forward+backward per example
+    * (perfbench's `nn.tf_lossgrad_us`, d16 caspr model, one core of a
+    * 4-core x86 host) a task holds ~0.2 s of work, well above Spark's
+    * per-task overhead. */
+  private val MinExamplesPerTask = 64
+
+  /**
+   * Keys one map partition's examples for a sliced epoch: key = step * k +
+   * sub. The step is `Random(epochSeed + pi).nextInt(nSteps)`, one draw per
+   * example, so step membership is the same for every k; `sub` cycles
+   * round-robin through [0, k) per step, starting at `pi`, and draws no
+   * random numbers. With k = 1 the key is the step itself.
+   */
+  private[graft] def sliceKeys[E](it: Iterator[E], pi: Int, epochSeed: Long,
+      nSteps: Int, k: Int): Iterator[(Int, E)] = {
+    val rng = new java.util.Random(epochSeed + pi)
+    val nextSub = Array.fill(nSteps)(pi % k)
+    it.map { e =>
+      val s = rng.nextInt(nSteps)
+      val sub = nextSub(s)
+      nextSub(s) = if (sub + 1 == k) 0 else sub + 1
+      (s * k + sub, e)
+    }
+  }
 
   /**
    * Runs the loop, updating `params` IN PLACE.
@@ -74,7 +108,7 @@ object EpochLoop {
     val n = params.length
     val total = data.count()
     val frac = examplesPerEpoch match {
-      case Some(k) if k > 0 && k < total => k.toDouble / total
+      case Some(cap) if cap > 0 && cap < total => cap.toDouble / total
       case _ => 1.0
     }
 
@@ -85,15 +119,25 @@ object EpochLoop {
     // responsible for scaling its own loss/grad contributions by w).
     val weightOf: E => Double = weight.getOrElse((_: E) => 1.0)
 
-    def sweep(rdd: RDD[E], p: Array[Double]): Array[Double] = {
+    val addInto = (a: Array[Double], b: Array[Double]) => {
+      var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
+    }
+
+    /** (gradientSum ++ lossSum ++ count) over `rdd`. `inOrder` adds the
+      * per-partition sums on the driver in partition order, so the result
+      * does not depend on which task finishes first (treeAggregate's final
+      * fold adds them in completion order); it holds one array per
+      * partition, so it is for sliced steps, whose k <= cores. */
+    def sweep(rdd: RDD[E], p: Array[Double], inOrder: Boolean = false): Array[Double] = {
       val bc = sc.broadcast(p)
-      val acc = rdd.treeAggregate(new Array[Double](n + 2))(
-        seqOp = (a, ex) => {
-          val l = lossGrad(bc.value, a, ex); a(n) += l; a(n + 1) += weightOf(ex); a
-        },
-        combOp = (a, b) => {
-          var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-        })
+      val seqOp = (a: Array[Double], ex: E) => {
+        val l = lossGrad(bc.value, a, ex); a(n) += l; a(n + 1) += weightOf(ex); a
+      }
+      val acc =
+        if (inOrder)
+          rdd.mapPartitions(it => Iterator.single(it.foldLeft(new Array[Double](n + 2))(seqOp)))
+            .collect().foldLeft(new Array[Double](n + 2))(addInto)
+        else rdd.treeAggregate(new Array[Double](n + 2))(seqOp, addInto)
       bc.destroy()
       acc
     }
@@ -123,6 +167,10 @@ object EpochLoop {
           .persist(StorageLevel.MEMORY_AND_DISK))
       }
 
+    // sub-partitions per sliced step (see the class doc)
+    val k = math.max(1, math.min(sc.defaultParallelism,
+      math.ceil(batchSize.toDouble / MinExamplesPerTask).toInt))
+
     val adam = new Adam(n, frozen = frozenRanges)
     val sched = new LrSchedule(train.lr, train.warmupEpochs)
     val stopper = new EarlyStopping(train.patience, train.delta)
@@ -139,8 +187,8 @@ object EpochLoop {
       var lossSum = 0.0
       var cntSum = 0.0
 
-      def step(slice: RDD[E]): Unit = {
-        val acc = sweep(slice, params)
+      def step(slice: RDD[E], inOrder: Boolean): Unit = {
+        val acc = sweep(slice, params, inOrder)
         val cnt = acc(n + 1)
         if (cnt > 0) { // empty-slice guard: skip the step, record no loss
           val grad = Array.tabulate(n)(i => acc(i) / cnt)
@@ -149,21 +197,19 @@ object EpochLoop {
         }
       }
 
-      if (nSteps == 1) step(epochData)
+      if (nSteps == 1) step(epochData, inOrder = false)
       else {
-        // one shuffle assigns each example a random step; partition i IS
-        // step i (HashPartitioner on a key in [0, nSteps) is the identity),
-        // and each step's job prunes to its own partition — map outputs are
-        // computed once and reused by every subsequent step (skipped stages)
+        // one shuffle assigns each example a step and a sub-partition;
+        // partition i IS key i (HashPartitioner on a key in [0, nSteps * k)
+        // is the identity), and each step's job prunes to its own k
+        // partitions — map outputs are computed once and reused by every
+        // subsequent step (skipped stages)
         val epochSeed = train.seed ^ ((epoch + 1) * 0x9E3779B97F4A7C15L)
         val keyed = epochData
-          .mapPartitionsWithIndex { (pi, it) =>
-            val rng = new java.util.Random(epochSeed + pi)
-            it.map(e => (rng.nextInt(nSteps), e))
-          }
-          .partitionBy(new HashPartitioner(nSteps))
+          .mapPartitionsWithIndex((pi, it) => sliceKeys(it, pi, epochSeed, nSteps, k))
+          .partitionBy(new HashPartitioner(nSteps * k))
         for (s <- 0 until nSteps)
-          step(PartitionPruningRDD.create(keyed, _ == s).map(_._2))
+          step(PartitionPruningRDD.create(keyed, _ / k == s).map(_._2), inOrder = true)
       }
 
       val trainLoss = if (cntSum > 0) lossSum / cntSum else Double.PositiveInfinity

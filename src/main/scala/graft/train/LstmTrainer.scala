@@ -66,8 +66,10 @@ object LstmTrainer {
         nonSeqCatCols, nonSeqContCols, labelCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val params = cfg.initParams()
-    // per-example dropout seed (see TransformerTrainer.fit); probe
-    // evaluates with dropout off (inference behavior)
+    // per-example dropout seed (see TransformerTrainer.fit: its call
+    // counter is per task, so the masks depend on EpochLoop's per-step
+    // split, the expected loss does not); probe evaluates with dropout off
+    // (inference behavior)
     val lossGradFn = {
       var calls = 0L
       (p: Array[Double], a: Array[Double], ex: Example) => {

@@ -75,7 +75,9 @@ object TransformerTrainer {
     val params = cfg.initParams()
     // per-example dropout seed: content hash x call counter x train seed —
     // deterministic for a given partition order, varies across epochs (the
-    // epoch shuffle re-slices, changing each example's call position)
+    // epoch shuffle re-slices, changing each example's call position). The
+    // counter is per task, so with dropout > 0 the masks depend on how many
+    // sub-partitions EpochLoop splits a step into; the expected loss does not
     val lossGradFn = {
       var calls = 0L
       (p: Array[Double], a: Array[Double], ex: Example) => {

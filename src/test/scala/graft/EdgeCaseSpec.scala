@@ -237,4 +237,16 @@ class EdgeCaseSpec extends SparkSpec {
     assert(rows(1).getLong(4) - rows(1).getLong(3) == 1L)
     assert(rows(1).getBoolean(5))
   }
+
+  test("profile scoring: empty input and all-null c_acctbal take the constant-column branch") {
+    val raw = (t: String) => spark.read.parquet(s"$sf/$t.parquet")
+    val empty = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    Seq("events", "customer").foreach(t => raw(t).limit(0).write.parquet(s"$empty/$t.parquet"))
+    assert(SparkEntry.queries("q_score_embeddings")(spark, empty).count() == 0)
+    val noBal = java.nio.file.Files.createTempDirectory("graft-nobal").toString
+    raw("events").write.parquet(s"$noBal/events.parquet")
+    raw("customer").withColumn("c_acctbal", lit(null).cast("double"))
+      .write.parquet(s"$noBal/customer.parquet")
+    assert(SparkEntry.queries("q_score_embeddings")(spark, noBal).count() > 0)
+  }
 }

@@ -1,10 +1,46 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.graftbridge.CatalystBridge
 import graft.nn.AeConfig
-import graft.train.{TrainConfig, TransformerTrainer}
+import graft.train.{EpochLoop, TrainConfig, TransformerTrainer}
 
 /** Distributed transformer-AE training on the real featurized fixture. */
 class TrainerSpec extends SparkSpec {
+
+  /** Per job, in job order: (result-stage tasks, partitions of the shuffle
+    * the result stage reads; 0 when it reads none). */
+  private class ResultStages extends SparkListener {
+    private val finalStage = scala.collection.mutable.ArrayBuffer[Int]()
+    private val shape = scala.collection.mutable.Map[Int, (Int, Int)]()
+    override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
+      finalStage += j.stageIds.max
+    }
+    override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = synchronized {
+      val i = s.stageInfo
+      val shuffled = i.rddInfos.filter(_.name == "ShuffledRDD").map(_.numPartitions)
+      shape(i.stageId) = (i.numTasks, shuffled.headOption.getOrElse(0))
+    }
+    def jobs: Seq[(Int, Int)] = synchronized(finalStage.toSeq.map(shape))
+  }
+
+  private def withResultStages[A](body: => A): (A, Seq[(Int, Int)]) = {
+    val sc = spark.sparkContext
+    val l = new ResultStages
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      CatalystBridge.drainListenerBus(sc)
+      (r, l.jobs)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** 0.5 * (p0 - x)^2 + 0.5 * (p1 - x^2)^2: two params, order-sensitive sums. */
+  private val quadLoss = (p: Array[Double], a: Array[Double], x: Double) => {
+    val e0 = p(0) - x; val e1 = p(1) - x * x
+    a(0) += e0; a(1) += e1
+    0.5 * (e0 * e0 + e1 * e1)
+  }
 
   test("BENCH-4 train-smoke: loss decreases over epochs on sf0.001") {
     val wide = SparkEntry.queries("q_pipeline_e2e")(spark, sf)
@@ -182,14 +218,72 @@ class TrainerSpec extends SparkSpec {
     val reads = sc.longAccumulator("sourceReads")
     val data = sc.parallelize(1 to n, 8).map { x => reads.add(1); x.toDouble }
     val params = Array(0.0)
-    val res = graft.train.EpochLoop.run[Double](data, params,
+    val (res, jobs) = withResultStages(graft.train.EpochLoop.run[Double](data, params,
       TrainConfig(lr = 1e-2, maxEpochs = 1), batchSize = 400, // -> 5 steps
       examplesPerEpoch = None,
-      (p, a, x) => { val e = p(0) - x; a(0) += e; 0.5 * e * e })
+      (p, a, x) => { val e = p(0) - x; a(0) += e; 0.5 * e * e }))
     assert(res.losses.size == 1 && res.losses.head.isFinite)
     // count() pass + one epoch map-side pass = 2n; randomSplit would be 6n
     assert(reads.value <= 3L * n,
       s"epoch read amplification: ${reads.value} reads for $n examples")
+    // one job per step after the count(); each step's result stage runs k
+    // tasks over its k of the nSteps * k shuffle partitions
+    val k = math.min(sc.defaultParallelism, math.ceil(400 / 64.0).toInt)
+    assert(jobs.size == 1 + 5, s"jobs: $jobs")
+    assert(jobs.tail == Seq.fill(5)((k, 5 * k)), s"step result stages: ${jobs.tail}")
+  }
+
+  test("EpochLoop step key: sub-partitions split exactly the one-per-step draw") {
+    val seed = 42L
+    for (nSteps <- Seq(1, 3, 7); k <- Seq(1, 2, 4); pi <- Seq(0, 5)) {
+      val keys = EpochLoop.sliceKeys((0 until 500).iterator, pi, seed, nSteps, k).toSeq
+      val rng = new java.util.Random(seed + pi)
+      val draw = Seq.fill(500)(rng.nextInt(nSteps))
+      assert(keys.map(_._2) == (0 until 500))
+      assert(keys.forall { case (key, _) => key >= 0 && key < nSteps * k })
+      // the union of step s's sub-partitions is exactly the step-s draw
+      assert(keys.map(_._1 / k) == draw, s"nSteps=$nSteps k=$k pi=$pi")
+      if (k == 1) assert(keys.map(_._1) == draw)
+      // round-robin per step: a step's subs differ in size by at most one
+      for (s <- 0 until nSteps) {
+        val sizes = (0 until k).map(sub => keys.count(_._1 == s * k + sub))
+        assert(sizes.max - sizes.min <= 1, s"step $s sub sizes $sizes")
+      }
+    }
+  }
+
+  test("EpochLoop multi-task steps are bit-for-bit reproducible") {
+    val sc = spark.sparkContext
+    // irrational values make every sum order-sensitive; the jitter varies
+    // which step task finishes first between the two runs
+    val data = sc.parallelize((1 to 1200).map(i => math.sqrt(i.toDouble) / 7.0), 6)
+    val loss = quadLoss
+    val jittered = (p: Array[Double], a: Array[Double], x: Double) => {
+      if (scala.util.Random.nextInt(50) == 0) Thread.sleep(1)
+      loss(p, a, x)
+    }
+    def fit(): (Seq[Double], Array[Double]) = {
+      val params = Array(0.3, -0.2)
+      val res = EpochLoop.run[Double](data, params,
+        TrainConfig(lr = 5e-2, maxEpochs = 3), batchSize = 256, // k > 1
+        examplesPerEpoch = None, jittered)
+      (res.losses, params)
+    }
+    val (l1, p1) = fit()
+    val (l2, p2) = fit()
+    val bits = (xs: Seq[Double]) => xs.map(java.lang.Double.doubleToRawLongBits)
+    assert(bits(l1) == bits(l2), s"losses $l1 vs $l2")
+    assert(bits(p1.toSeq) == bits(p2.toSeq), s"params ${p1.toSeq} vs ${p2.toSeq}")
+  }
+
+  test("EpochLoop batchSize 32 keeps one task and one shuffle partition per step") {
+    val sc = spark.sparkContext
+    val data = sc.parallelize((1 to 320).map(_.toDouble / 320), 4)
+    val (res, jobs) = withResultStages(EpochLoop.run[Double](data, Array(0.0, 0.0),
+      TrainConfig(lr = 1e-2, maxEpochs = 1), batchSize = 32, // -> 10 steps, k = 1
+      examplesPerEpoch = None, quadLoss))
+    assert(res.losses.size == 1 && res.losses.head.isFinite)
+    assert(jobs.tail == Seq.fill(10)((1, 10)), s"step result stages: ${jobs.tail}")
   }
 
   test("weighted AE training: weight w equals the example repeated w times; w=1 is a no-op") {
