@@ -2,19 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Dev tool: dump formatted physical plans for plan-shape auditing. */
+/** Dev tool: dump formatted physical plans for plan-shape auditing, under
+  * the Bench session config (SessionTuning, `SPARK_GRAFT_CPUS` cores,
+  * shuffle partitions = cores), so the dumps show the plans Bench times:
+  * `runMain graft.Explain [sfDir] [query ...]` writes
+  * `/tmp/explain_<query>.txt` per query. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q_pipeline_e2e", "q_e1_pivot", "q_b1_window_filter",
         "q_f1_encode_join", "q_dedup_minhash_lsh", "q_ann_brute")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = graft.core.SessionTuning(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

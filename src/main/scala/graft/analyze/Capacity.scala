@@ -18,7 +18,9 @@ object Capacity {
   def encoderLayerParams(d: Int, pf: Int): Long =
     4 * linearParams(d, d) + linearParams(d, pf) + linearParams(pf, d) + 4L * d
 
-  /** Full unified transformer encoder (matches EncoderWeights.init). */
+  /** Full unified transformer encoder without non-seq features (matches
+    * the encoder blocks of [[graft.nn.AeConfig.layout]] at
+    * `maxLen = cfg.tEff`). */
   def transformerEncoderParams(vocabSizes: Seq[Long], nCont: Int,
       d: Int, layers: Int, pf: Int, maxLen: Int): Long = {
     val embDim = vocabSizes.map(v => Dims.embeddingDim(v)).sum
@@ -34,8 +36,7 @@ object Capacity {
 
   /**
    * Full LSTM-architecture unified encoder (matches
-   * [[graft.nn.LstmAeConfig.layout]]'s encoder blocks and
-   * [[graft.nn.LstmEncoderWeights.init]]): embeddings + stacked
+   * [[graft.nn.LstmAeConfig.layout]]'s encoder blocks): embeddings + stacked
    * (+bidirectional) cells + reference-faithful Bahdanau
    * (attention_mechanisms.py:108-110: fc_encoder D*h -> h bias-FREE,
    * attnHidden h -> 1 WITH bias) + lstm_to_dense + ns branch + fuse.

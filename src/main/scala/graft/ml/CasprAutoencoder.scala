@@ -25,9 +25,8 @@ import graft.train.{TrainConfig, TransformerTrainer}
  * treeAggregate grads — the J1/J2/J5 loop); the fitted [[CasprModel]]
  * scores via the same typed-mapPartitions path the standalone trainer
  * exposes, appending `embedding: array<float>`. Column lists derive from
- * the base feature names × cfg.seqLen exactly like
- * [[CasprScorer.forWide]], so the stage drops onto [[CasprStage]] output
- * unchanged.
+ * the base feature names × cfg.seqLen (`<feature>_<t>`, the featurizer's
+ * wide naming), so the stage drops onto [[CasprStage]] output unchanged.
  *
  * [[CasprModel]] is `MLWritable` (reference checkpoints state_dicts,
  * early_stopping.py:66-70): weights go through [[Persist.saveParams]]
@@ -60,7 +59,7 @@ class CasprAutoencoder(
       examplesPerEpoch, uid)
 
   override def transformSchema(schema: StructType): StructType =
-    CasprModel.outSchema(schema, idCol)
+    EmbeddingStage.outSchema(schema)
 }
 
 /** The fitted autoencoder as an MLlib `Model`: APPENDS the entity
@@ -78,24 +77,18 @@ class CasprModel(
     val seqCat: Seq[String],
     val seqCont: Seq[String],
     override val uid: String = Identifiable.randomUID("casprModel"))
-    extends Model[CasprModel] with MLWritable {
+    extends Model[CasprModel] with EmbeddingStage with MLWritable {
 
   private def cols(names: Seq[String]): Seq[Seq[String]] =
     names.map(c => (1 to cfg.seqLen).map(t => s"${c}_$t"))
 
-  override def transform(ds: Dataset[_]): DataFrame = {
-    val df = ds.toDF()
-    val emb = TransformerTrainer.transform(df,
+  override protected def score(df: DataFrame): DataFrame =
+    TransformerTrainer.transform(df,
       TransformerTrainer.Result(cfg, weights, Nil, 0),
       idCol, cols(seqCat), cols(seqCont))
-    df.join(emb, Seq(idCol))
-  }
 
   override def copy(extra: ParamMap): CasprModel =
     new CasprModel(cfg, weights, idCol, seqCat, seqCont, uid)
-
-  override def transformSchema(schema: StructType): StructType =
-    CasprModel.outSchema(schema, idCol)
 
   /** A4 persistence: params via [[Persist.saveParams]], config as
     * key=value lines. */
@@ -129,10 +122,6 @@ class CasprModel(
 }
 
 object CasprModel extends MLReadable[CasprModel] {
-
-  private[ml] def outSchema(input: StructType, idCol: String): StructType =
-    StructType(input.fields.toIndexedSeq :+
-      StructField("embedding", ArrayType(FloatType, containsNull = false)))
 
   override def read: MLReader[CasprModel] = new MLReader[CasprModel] {
     override def load(path: String): CasprModel = {

@@ -1,10 +1,12 @@
 package graft.ml
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, StructField, StructType}
 
 /**
- * Row ingress for the model-side operators (scorers, trainers, explainer).
+ * Row ingress for the model-side operators (trainers, scoring, explainer).
  *
  * `wide.rdd` over the raw featurizer output deserializes EVERY column of
  * every row — including string profile columns the model never reads — and
@@ -40,4 +42,64 @@ private[graft] object Ingress {
   def nsContOf(row: Row, t: Int, nCat: Int, nCont: Int, nNsCat: Int,
       nNsCont: Int): Array[Double] =
     Array.tabulate(nNsCont)(c => row.getDouble(1 + (nCat + nCont) * t + nNsCat + c))
+
+  /** One entity's model inputs: (T x nCat codes, T x nCont doubles, ns
+    * codes, ns doubles, label). */
+  type Example =
+    (Array[Array[Int]], Array[Array[Double]], Array[Int], Array[Double], Double)
+
+  /** Training examples for the autoencoder trainers. The label (churn mode
+    * only) rides the projection as one extra ns-cont double. */
+  def examples(wide: DataFrame, seqCat: Seq[Seq[String]],
+      seqCont: Seq[Seq[String]], nsCat: Seq[String], nsCont: Seq[String],
+      labelCol: Option[String]): RDD[Example] = {
+    val t = seqCat.headOption.map(_.size)
+      .orElse(seqCont.headOption.map(_.size)).getOrElse(0)
+    val nCat = seqCat.size; val nCont = seqCont.size
+    val nNsCat = nsCat.size
+    val nsContAll = nsCont ++ labelCol.toSeq
+    val nAll = nsContAll.size
+    val hasLabel = labelCol.isDefined
+    // any column works as the ingress anchor
+    project(wide, wide.columns.head, seqCat, seqCont, nsCat, nsContAll)
+      .rdd.map { row =>
+        val nsAll = nsContOf(row, t, nCat, nCont, nNsCat, nAll)
+        val (nsC, label) =
+          if (hasLabel) (nsAll.dropRight(1), nsAll.last) else (nsAll, 0.0)
+        (seqCatOf(row, t, nCat), seqContOf(row, t, nCat, nCont),
+         nsCatOf(row, t, nCat, nCont, nNsCat), nsC, label): Example
+      }
+  }
+
+  /** The scoring output column every embedding path emits. */
+  val EmbeddingField: StructField =
+    StructField("embedding", ArrayType(FloatType, containsNull = false))
+
+  /** Per-entity scoring over the narrowed projection: broadcasts `params`
+    * once, and emits one (id, `out`) row per input row. `rowFn` receives
+    * the broadcast value once per partition and returns the per-row
+    * function of (seq cat, seq cont, ns cat, ns cont). `t` is the
+    * model's sequence length. */
+  def score(wide: DataFrame, idCol: String, t: Int,
+      seqCat: Seq[Seq[String]], seqCont: Seq[Seq[String]],
+      nsCat: Seq[String], nsCont: Seq[String],
+      params: Array[Double], out: StructField)(
+      rowFn: Array[Double] =>
+        (Array[Array[Int]], Array[Array[Double]], Array[Int], Array[Double]) => Any)
+      : DataFrame = {
+    val bc = wide.sparkSession.sparkContext.broadcast(params)
+    val nCat = seqCat.size; val nCont = seqCont.size
+    val nNsCat = nsCat.size; val nNsCont = nsCont.size
+    val proj = project(wide, idCol, seqCat, seqCont, nsCat, nsCont)
+    proj.mapPartitions { rows =>
+      val f = rowFn(bc.value)
+      rows.map { row =>
+        Row(row.get(0), f(
+          seqCatOf(row, t, nCat),
+          seqContOf(row, t, nCat, nCont),
+          nsCatOf(row, t, nCat, nCont, nNsCat),
+          nsContOf(row, t, nCat, nCont, nNsCat, nNsCont)))
+      }
+    }(Encoders.row(StructType(Seq(proj.schema(0), out))))
+  }
 }

@@ -4,15 +4,14 @@ import org.apache.spark.ml.Transformer
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
+import graft.train.LstmTrainer
 
 /**
- * Thin `ml.Transformer` adapters completing the idiomatic MLlib surface
- * (SURVEY.md §7.1): the deterministic scorer models ([[CasprScorerModel]]
- * transformer arch, [[LstmScorerModel]] LSTM arch — the J6 serving path
- * with externally supplied weights) drop into an
- * `org.apache.spark.ml.Pipeline` next to [[CasprStage]] and
- * [[CasprAutoencoder]]. Like [[CasprModel]], the stage APPENDS
+ * Shared `ml.Transformer` surface of the embedding stages (SURVEY.md
+ * §7.1): [[CasprModel]] (transformer arch) and [[LstmScorerStage]] (LSTM
+ * arch, the J6 serving path) drop into an `org.apache.spark.ml.Pipeline`
+ * next to [[CasprStage]] and [[CasprAutoencoder]]. The stage APPENDS
  * `embedding: array<float>` to the input row (computed on the narrowed
  * Ingress projection, joined back on the entity-unique id), so labels and
  * profile columns flow through to downstream MLlib stages.
@@ -28,29 +27,31 @@ private[ml] trait EmbeddingStage extends Transformer {
   }
 
   override def transformSchema(schema: StructType): StructType =
-    StructType(schema.fields.toIndexedSeq :+
-      StructField("embedding", ArrayType(FloatType, containsNull = false)))
+    EmbeddingStage.outSchema(schema)
 }
 
-/** [[CasprScorerModel]] (transformer encoder, I8 extra-timestep non-seq
-  * routing) as a Pipeline stage. */
-class CasprScorerStage(val model: CasprScorerModel,
-    override val uid: String = Identifiable.randomUID("casprScorer"))
-    extends EmbeddingStage {
-  override def idCol: String = model.idCol
-  override protected def score(df: DataFrame): DataFrame = model.transform(df)
-  override def copy(extra: ParamMap): CasprScorerStage =
-    new CasprScorerStage(model, uid)
+private[ml] object EmbeddingStage {
+  def outSchema(input: StructType): StructType =
+    StructType(input.fields.toIndexedSeq :+ Ingress.EmbeddingField)
 }
 
-/** [[LstmScorerModel]] (LSTM encoder arch, ns-MLP fuse routing) as a
-  * Pipeline stage — the reference's architecture switch on the same
-  * serving surface. */
-class LstmScorerStage(val model: LstmScorerModel,
+/** LSTM-architecture scoring (the reference's arch switch,
+  * caspr/utils/spark/score.py:53-61) as a Pipeline stage: embeds through
+  * [[graft.train.LstmTrainer.transform]] with the result's weights. Column
+  * lists are the per-timestep wide columns, as for the trainer. */
+class LstmScorerStage(
+    val res: LstmTrainer.Result,
+    override val idCol: String,
+    val seqCatCols: Seq[Seq[String]],
+    val seqContCols: Seq[Seq[String]],
+    val nonSeqCatCols: Seq[String] = Nil,
+    val nonSeqContCols: Seq[String] = Nil,
     override val uid: String = Identifiable.randomUID("lstmScorer"))
     extends EmbeddingStage {
-  override def idCol: String = model.idCol
-  override protected def score(df: DataFrame): DataFrame = model.transform(df)
+  override protected def score(df: DataFrame): DataFrame =
+    LstmTrainer.transform(df, res, idCol, seqCatCols, seqContCols,
+      nonSeqCatCols, nonSeqContCols)
   override def copy(extra: ParamMap): LstmScorerStage =
-    new LstmScorerStage(model, uid)
+    new LstmScorerStage(res, idCol, seqCatCols, seqContCols,
+      nonSeqCatCols, nonSeqContCols, uid)
 }

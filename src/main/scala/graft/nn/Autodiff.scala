@@ -36,6 +36,11 @@ import breeze.numerics.exp
  */
 final case class ParamSpec(name: String, rows: Int, cols: Int) { def size: Int = rows * cols }
 
+object Dims {
+  /** Embedding dim rule from factory.py:63-64. */
+  def embeddingDim(vocab: Long): Int = math.min(25, ((vocab + 1) / 2).toInt)
+}
+
 final class ParamLayout(val specs: Seq[ParamSpec]) extends Serializable {
   val offsets: Map[String, (Int, ParamSpec)] = {
     var off = 0
@@ -254,7 +259,8 @@ object TransformerAE {
     dX
   }
 
-  private def softmaxRows(m: DenseMatrix[Double]): DenseMatrix[Double] = {
+  /** Row-wise softmax. */
+  private[nn] def softmaxRows(m: DenseMatrix[Double]): DenseMatrix[Double] = {
     val out = m.copy
     for (i <- 0 until m.rows) {
       val row = out(i, ::).t
@@ -829,8 +835,10 @@ object TransformerAE {
     loss
   }
 
-  /** Inference: flattened encoder output over tEff timesteps (same as
-    * EncoderWeights.forward but over the flat-param model). */
+  /** Inference: the flattened encoder output over tEff timesteps — the
+    * serving embedding (caspr/utils/spark/score.py:55-57). Every
+    * transformer scoring path (trainer, [[graft.ml.CasprModel]], the
+    * scoring queries) runs this one forward. */
   def embed(cfg: AeConfig, lay: ParamLayout, p: Array[Double],
       catCodes: Array[Array[Int]], cont: Array[Array[Double]],
       nsCat: Array[Int] = null, nsCont: Array[Double] = null): Array[Float] =

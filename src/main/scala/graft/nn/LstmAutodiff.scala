@@ -45,9 +45,9 @@ import breeze.numerics.{exp, sigmoid, tanh}
  * linear. The BatchNorm inside the MLP normalizes with its RUNNING
  * statistics (init mean 0 / var 1) in this per-example gradient scheme —
  * batch statistics are undefined at batch size 1 under treeAggregate —
- * with gamma/beta trained; the serving twin ([[DenseBnBlock.forward]])
- * applies the same running-stats affine, so trained and scored paths
- * agree by construction.
+ * with gamma/beta trained. Serving (`embedOnly = true`) runs this same
+ * forward, so trained and scored paths agree by construction. The
+ * reference's training-mode batch statistics are not modelled.
  *
  * Bahdanau attention follows attention_mechanisms.py:102-110 exactly by
  * default: fc_encoder = Linear(D*h -> h, bias=False) and attnHidden =
@@ -58,8 +58,7 @@ import breeze.numerics.{exp, sigmoid, tanh}
  * `attnInputBias = true` opts into the generalized form kept from earlier
  * rounds. `attnHeads > 1` selects the I5 MHA wrapper instead
  * (unified_encoder.py:186-192; attention_mechanisms.py:63-99: per-head
- * softmax(QK/sqrt(hd))V, residual + layernorm, sum-over-time pooling) —
- * the trainable twin of [[MhaSumPool]].
+ * softmax(QK/sqrt(hd))V, residual + layernorm, sum-over-time pooling).
  */
 final case class LstmAeConfig(hidden: Int, outDim: Int, attnDim: Int,
     seqLen: Int, vocabSizes: Seq[Int], nCont: Int, seed: Long = 42L,
@@ -411,7 +410,8 @@ object LstmAE {
         mAttnMask = new Array[DenseMatrix[Double]](cfg.attnHeads)
         for (hh <- 0 until cfg.attnHeads) {
           val sl = hh * hd until (hh + 1) * hd
-          val a = Layers.softmaxRows((mQ(::, sl) * mK(::, sl).t) / math.sqrt(hd.toDouble))
+          val a = TransformerAE.softmaxRows(
+            (mQ(::, sl) * mK(::, sl).t) / math.sqrt(hd.toDouble))
           mAttn(hh) = a // raw weights cached for the softmax backward
           mAttnMask(hh) = attnDropMask(t, t)
           // x = dropout(attention) @ V (attention_mechanisms.py:64)
@@ -422,7 +422,7 @@ object LstmAE {
         // q = ln(q + dropout(_q)) (attention_mechanisms.py:95)
         mResMask = attnDropMask(t, oW)
         val res = outputs + masked(ctxO, mResMask)
-        // row layernorm with cached xhat + 1/sd (Layers.layerNorm semantics)
+        // row layernorm with cached xhat + 1/sd
         mXhat = DenseMatrix.zeros[Double](t, oW)
         mInv = new Array[Double](t)
         val normed = DenseMatrix.zeros[Double](t, oW)

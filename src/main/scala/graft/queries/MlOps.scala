@@ -4,10 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.analyze.Segmentation
 import graft.core.{ColumnRoles, Tables}
-import graft.ml.CasprScorer
-import graft.nn.TransformerConfig
+import graft.nn.{AeConfig, LstmAeConfig}
 import graft.prep.{CasprFeaturizer, Encoding, FeaturizerConfig}
-import graft.train.{LinearAutoencoder, TrainConfig}
+import graft.train.{LinearAutoencoder, LstmTrainer, TrainConfig, TransformerTrainer}
 import Catalog.{HistoryDays, LabelDays, PredTs}
 
 /**
@@ -102,6 +101,13 @@ object MlOps extends QueryGroup {
     (wideEnc, vocab)
   }
 
+  /** Scoring columns of [[profileFeaturized]]'s output. */
+  private val ProfileSeqCat = Seq((1 to seqLen).map(t => s"event_type_$t"))
+  private val ProfileSeqCont =
+    Seq("value", "ts_days").map(c => (1 to seqLen).map(t => s"${c}_$t"))
+  private val ProfileNsCat = Seq("c_mktsegment")
+  private val ProfileNsCont = Seq("c_acctbal")
+
   /** Driver-checkable projection of an (id, embedding) frame: L2 norm +
     * first 4 dims as rounded scalars. */
   private def embedScalars(df: DataFrame): DataFrame = {
@@ -119,16 +125,16 @@ object MlOps extends QueryGroup {
   def queries: Seq[QueryDef] = Seq(
 
     // J6 scoring: featurize (with the customer profile as NON-SEQ inputs,
-    // I8 extra timestep) -> deterministic transformer encoder -> embeddings
+    // I8 extra timestep) -> seeded-init transformer encoder -> embeddings
     QueryDef("q_score_embeddings",
       (s, dir) => {
         val (wideEnc, vocab) = profileFeaturized(s, dir)
-        embedScalars(
-          CasprScorer.forWide(TransformerConfig(dModel = 16, heads = 2, layers = 2, pf = 8),
-              "user_id", vocab, seqLen,
-              seqCat = Seq("event_type"), seqCont = Seq("value", "ts_days"),
-              nonSeqCat = Seq("c_mktsegment"), nonSeqCont = Seq("c_acctbal"))
-            .transform(wideEnc))
+        val cfg = AeConfig(dModel = 16, heads = 2, layers = 2, pf = 8,
+          seqLen = seqLen, vocabSizes = Seq(vocab("event_type").toInt), nCont = 2,
+          nonSeqVocabSizes = Seq(vocab("c_mktsegment").toInt), nNonSeqCont = 1)
+        embedScalars(TransformerTrainer.transform(wideEnc,
+          TransformerTrainer.Result(cfg, cfg.initParams(), Nil, 0), "user_id",
+          ProfileSeqCat, ProfileSeqCont, ProfileNsCat, ProfileNsCont))
       },
       None),
 
@@ -139,15 +145,13 @@ object MlOps extends QueryGroup {
     QueryDef("q_score_embeddings_lstm",
       (s, dir) => {
         val (wideEnc, vocab) = profileFeaturized(s, dir)
-        val w = graft.nn.LstmEncoderWeights.init(hidden = 16, outDim = 16,
-          vocabSizes = Seq(vocab("event_type")), nCont = 2,
-          nonSeqVocabSizes = Seq(vocab("c_mktsegment")), nNonSeqCont = 1,
+        val cfg = LstmAeConfig(hidden = 16, outDim = 16, attnDim = 0,
+          seqLen = seqLen, vocabSizes = Seq(vocab("event_type").toInt), nCont = 2,
+          nonSeqVocabSizes = Seq(vocab("c_mktsegment").toInt), nNonSeqCont = 1,
           numLayers = 2, bidirectional = true) // I12 stack exercised end-to-end
-        embedScalars(graft.ml.LstmScorerModel(w, "user_id",
-          Seq((1 to seqLen).map(t => s"event_type_$t")),
-          Seq("value", "ts_days").map(c => (1 to seqLen).map(t => s"${c}_$t")),
-          nonSeqCatCols = Seq("c_mktsegment"), nonSeqContCols = Seq("c_acctbal"))
-          .transform(wideEnc))
+        embedScalars(LstmTrainer.transform(wideEnc,
+          LstmTrainer.Result(cfg, cfg.initParams(), Nil, 0), "user_id",
+          ProfileSeqCat, ProfileSeqCont, ProfileNsCat, ProfileNsCont))
       },
       None),
 

@@ -1,6 +1,6 @@
 package graft.train
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 import graft.nn.{AeConfig, TransformerAE}
 
@@ -24,38 +24,7 @@ object TransformerTrainer {
   final case class Result(cfg: AeConfig, params: Array[Double],
       losses: Seq[Double], stoppedAt: Int)
 
-  private type Example =
-    (Array[Array[Int]], Array[Array[Double]], Array[Int], Array[Double], Double)
-
-  /** Extract (T x nCat codes, T x nCont doubles, ns codes, ns doubles,
-    * label) examples via the narrowed positional projection
-    * (graft.ml.Ingress) — casts/null-fills run in codegen, extraction is
-    * primitive getters. The label (churn mode only) rides the projection
-    * as one extra ns-cont double. */
-  private def examples(wide: DataFrame, seqCatCols: Seq[Seq[String]],
-      seqContCols: Seq[Seq[String]],
-      nonSeqCatCols: Seq[String], nonSeqContCols: Seq[String],
-      labelCol: Option[String] = None) = {
-    val t = seqCatCols.headOption.map(_.size)
-      .orElse(seqContCols.headOption.map(_.size)).getOrElse(0)
-    val nCat = seqCatCols.size; val nCont = seqContCols.size
-    val nNsCat = nonSeqCatCols.size
-    val nsContAll = nonSeqContCols ++ labelCol.toSeq
-    val nAll = nsContAll.size
-    val hasLabel = labelCol.isDefined
-    val idCol = wide.columns.head // any column works as the ingress anchor
-    graft.ml.Ingress.project(wide, idCol, seqCatCols, seqContCols,
-        nonSeqCatCols, nsContAll)
-      .rdd.map { row =>
-        val nsAll = graft.ml.Ingress.nsContOf(row, t, nCat, nCont, nNsCat, nAll)
-        val (nsCont, label) =
-          if (hasLabel) (nsAll.dropRight(1), nsAll.last) else (nsAll, 0.0)
-        (graft.ml.Ingress.seqCatOf(row, t, nCat),
-         graft.ml.Ingress.seqContOf(row, t, nCat, nCont),
-         graft.ml.Ingress.nsCatOf(row, t, nCat, nCont, nNsCat),
-         nsCont, label): Example
-      }
-  }
+  private type Example = graft.ml.Ingress.Example
 
   def fit(wide: DataFrame, cfg: AeConfig,
       seqCatCols: Seq[Seq[String]], seqContCols: Seq[Seq[String]],
@@ -69,8 +38,8 @@ object TransformerTrainer {
     require(!cfg.churn || labelCol.nonEmpty,
       "churn = true trains BCE against labelCol — pass one")
     val lay = cfg.layout
-    val data = examples(wide, seqCatCols, seqContCols, nonSeqCatCols,
-        nonSeqContCols, labelCol)
+    val data = graft.ml.Ingress.examples(wide, seqCatCols, seqContCols,
+        nonSeqCatCols, nonSeqContCols, labelCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val params = cfg.initParams()
     // per-example dropout seed: content hash x call counter x train seed —
@@ -109,34 +78,23 @@ object TransformerTrainer {
       nonSeqCatCols: Seq[String] = Nil,
       nonSeqContCols: Seq[String] = Nil): DataFrame = {
     require(res.cfg.churn, "transformChurn needs a churn-trained Result")
-    val spark = wide.sparkSession
-    val lay = res.cfg.layout
-    val bc = spark.sparkContext.broadcast(res.params)
-    val t = res.cfg.seqLen
-    val nCat = seqCatCols.size; val nCont = seqContCols.size
-    val nNsCat = nonSeqCatCols.size; val nNsCont = nonSeqContCols.size
-    val proj = graft.ml.Ingress.project(wide, idCol, seqCatCols, seqContCols,
-      nonSeqCatCols, nonSeqContCols)
-    val outSchema = StructType(Seq(proj.schema(0),
-      StructField("churn_prob", DoubleType, nullable = false)))
-    proj.mapPartitions { rows =>
-      val p = bc.value
+    val cfg = res.cfg
+    val lay = cfg.layout
+    graft.ml.Ingress.score(wide, idCol, cfg.seqLen, seqCatCols, seqContCols,
+        nonSeqCatCols, nonSeqContCols, res.params,
+        StructField("churn_prob", DoubleType, nullable = false)) { p =>
       val (wOff, _) = lay.offsets("churn_w")
       val (bOff, _) = lay.offsets("churn_b")
-      rows.map { row =>
+      (cat, cont, nsCat, nsCont) => {
         // embed() returns the row-major-flattened encoder output — exactly
         // the churn head's input view (model_wrapper.py:297-298)
-        val emb = TransformerAE.embed(res.cfg, lay, p,
-          graft.ml.Ingress.seqCatOf(row, t, nCat),
-          graft.ml.Ingress.seqContOf(row, t, nCat, nCont),
-          graft.ml.Ingress.nsCatOf(row, t, nCat, nCont, nNsCat),
-          graft.ml.Ingress.nsContOf(row, t, nCat, nCont, nNsCat, nNsCont))
+        val emb = TransformerAE.embed(cfg, lay, p, cat, cont, nsCat, nsCont)
         var z = p(bOff)
         var i = 0
         while (i < emb.length) { z += p(wOff + i) * emb(i); i += 1 }
-        Row(row.get(0), 1.0 / (1.0 + math.exp(-z)))
+        1.0 / (1.0 + math.exp(-z))
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** Score with trained weights: embedding = flattened encoder output over
@@ -144,25 +102,13 @@ object TransformerTrainer {
   def transform(wide: DataFrame, res: Result, idCol: String,
       seqCatCols: Seq[Seq[String]], seqContCols: Seq[Seq[String]],
       nonSeqCatCols: Seq[String] = Nil, nonSeqContCols: Seq[String] = Nil): DataFrame = {
-    val spark = wide.sparkSession
-    val lay = res.cfg.layout
-    val bc = spark.sparkContext.broadcast(res.params)
-    val t = res.cfg.seqLen
-    val nCat = seqCatCols.size; val nCont = seqContCols.size
-    val nNsCat = nonSeqCatCols.size; val nNsCont = nonSeqContCols.size
-    val proj = graft.ml.Ingress.project(wide, idCol, seqCatCols, seqContCols,
-      nonSeqCatCols, nonSeqContCols)
-    val outSchema = StructType(Seq(proj.schema(0),
-      StructField("embedding", ArrayType(FloatType, containsNull = false))))
-    proj.mapPartitions { rows =>
-      val p = bc.value
-      rows.map { row =>
-        Row(row.get(0), TransformerAE.embed(res.cfg, lay, p,
-          graft.ml.Ingress.seqCatOf(row, t, nCat),
-          graft.ml.Ingress.seqContOf(row, t, nCat, nCont),
-          graft.ml.Ingress.nsCatOf(row, t, nCat, nCont, nNsCat),
-          graft.ml.Ingress.nsContOf(row, t, nCat, nCont, nNsCat, nNsCont)))
-      }
-    }(Encoders.row(outSchema))
+    val cfg = res.cfg
+    val lay = cfg.layout
+    graft.ml.Ingress.score(wide, idCol, cfg.seqLen, seqCatCols, seqContCols,
+        nonSeqCatCols, nonSeqContCols, res.params,
+        graft.ml.Ingress.EmbeddingField) { p =>
+      (cat, cont, nsCat, nsCont) =>
+        TransformerAE.embed(cfg, lay, p, cat, cont, nsCat, nsCont)
+    }
   }
 }

@@ -134,6 +134,9 @@ class AutodiffSpec extends AnyFunSuite {
     assert(e1.length == cfg.seqLen * cfg.dModel)
     assert(e1.sameElements(TransformerAE.embed(cfg, lay, p, cat, cont)))
     assert(e1.forall(v => !v.isNaN && !v.isInfinite))
+    // different input -> different embedding
+    val e2 = TransformerAE.embed(cfg, lay, p, Array(Array(2), Array(3), Array(2)), cont)
+    assert(!e1.sameElements(e2))
   }
 
   test("non-seq branch (I8): extra timestep changes the embedding; gradients match FD") {

@@ -100,17 +100,17 @@ class CasprStageSpec extends SparkSpec {
       Nil, Seq("ts"))
     val cfg = FeaturizerConfig(roles, seqLen = 4, historyDays = 21,
       tiebreak = Seq("event_id"))
-    val vocab = Map("event_type" -> 8L)
-    val tStage = new graft.ml.CasprScorerStage(graft.ml.CasprScorer.forWide(
-      graft.nn.TransformerConfig(dModel = 8, heads = 2, layers = 1, pf = 8),
-      "user_id", vocab, seqLen = 4,
-      seqCat = Seq("event_type"), seqCont = Seq("value", "ts_days")))
-    val lStage = new graft.ml.LstmScorerStage(graft.ml.LstmScorerModel(
-      graft.nn.LstmEncoderWeights.init(hidden = 8, outDim = 6,
-        vocabSizes = Seq(8), nCont = 2),
+    val tCfg = graft.nn.AeConfig(dModel = 8, heads = 2, layers = 1, pf = 8,
+      seqLen = 4, vocabSizes = Seq(8), nCont = 2)
+    val tStage = new CasprModel(tCfg, tCfg.initParams(), "user_id",
+      Seq("event_type"), Seq("value", "ts_days"))
+    val lCfg = graft.nn.LstmAeConfig(hidden = 8, outDim = 6, attnDim = 0,
+      seqLen = 4, vocabSizes = Seq(8), nCont = 2)
+    val lStage = new graft.ml.LstmScorerStage(
+      graft.train.LstmTrainer.Result(lCfg, lCfg.initParams(), Nil, 0),
       "user_id",
       Seq((1 to 4).map(t => s"event_type_$t")),
-      Seq("value", "ts_days").map(c => (1 to 4).map(t => s"${c}_$t"))))
+      Seq("value", "ts_days").map(c => (1 to 4).map(t => s"${c}_$t")))
     for (stage <- Seq[Transformer](tStage, lStage)) {
       val out = new Pipeline().setStages(Array(
         new CasprStage(cfg), stage, new EmbeddingToVector(),

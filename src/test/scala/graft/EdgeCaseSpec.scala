@@ -242,11 +242,13 @@ class EdgeCaseSpec extends SparkSpec {
     val raw = (t: String) => spark.read.parquet(s"$sf/$t.parquet")
     val empty = java.nio.file.Files.createTempDirectory("graft-empty").toString
     Seq("events", "customer").foreach(t => raw(t).limit(0).write.parquet(s"$empty/$t.parquet"))
-    assert(SparkEntry.queries("q_score_embeddings")(spark, empty).count() == 0)
     val noBal = java.nio.file.Files.createTempDirectory("graft-nobal").toString
     raw("events").write.parquet(s"$noBal/events.parquet")
     raw("customer").withColumn("c_acctbal", lit(null).cast("double"))
       .write.parquet(s"$noBal/customer.parquet")
-    assert(SparkEntry.queries("q_score_embeddings")(spark, noBal).count() > 0)
+    for (q <- Seq("q_score_embeddings", "q_score_embeddings_lstm")) {
+      assert(SparkEntry.queries(q)(spark, empty).count() == 0, q)
+      assert(SparkEntry.queries(q)(spark, noBal).count() > 0, q)
+    }
   }
 }

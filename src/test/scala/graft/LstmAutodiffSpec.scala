@@ -140,44 +140,6 @@ class LstmAutodiffSpec extends AnyFunSuite {
     assert(eUni.toSeq != eBid.toSeq)
   }
 
-  test("I11 ConvAggregation: tanh-conv + max-pool matches a hand computation") {
-    import breeze.linalg.DenseMatrix
-    // identity-diagonal kernel, stride (1,1), pool (2,2), bias 0:
-    // conv(i,j) = tanh(x(i,j) + x(i+1,j+1)); output = max over 2x2 blocks
-    val ca = graft.nn.ConvAgg(DenseMatrix((1.0, 0.0), (0.0, 1.0)), bias = 0.0,
-      strideT = 1, strideF = 1, poolT = 2, poolF = 2)
-    val x = DenseMatrix(
-      (1.0, 0.0, 2.0, 1.0, 0.5),
-      (0.0, 1.0, 0.0, 0.0, 1.0),
-      (2.0, 0.0, 1.0, 3.0, 0.0),
-      (0.0, 2.0, 0.0, 0.0, 1.0),
-      (1.0, 0.0, 1.0, 0.0, 2.0))
-    val out = ca.forward(x)
-    assert(out.rows == 2 && out.cols == 2 && ca.outShape(5, 5) == (2, 2))
-    def c(i: Int, j: Int) = math.tanh(x(i, j) + x(i + 1, j + 1))
-    val want = Seq(
-      (0, 0, Seq(c(0, 0), c(0, 1), c(1, 0), c(1, 1)).max),
-      (0, 1, Seq(c(0, 2), c(0, 3), c(1, 2), c(1, 3)).max),
-      (1, 0, Seq(c(2, 0), c(2, 1), c(3, 0), c(3, 1)).max),
-      (1, 1, Seq(c(2, 2), c(2, 3), c(3, 2), c(3, 3)).max))
-    for ((i, j, v) <- want)
-      assert(math.abs(out(i, j) - v) < 1e-12, s"out($i,$j)=${out(i, j)} want $v")
-  }
-
-  test("I11 gate end-to-end: conv-aggregated encoder emits a finite embedding") {
-    val w = graft.nn.LstmEncoderWeights.init(hidden = 6, outDim = 5,
-      vocabSizes = Seq(5), nCont = 8, useConvAgg = true,
-      convKernel = (3, 3), convStride = (1, 1), convPool = (2, 2))
-    val t = 8
-    val cat8 = Array.fill(t)(Array(1))
-    val cont8 = Array.tabulate(t)(i => Array.tabulate(8)(j => (i * 8 + j) / 10.0))
-    val e = w.forward(cat8, cont8)
-    assert(e.length == 5 && e.forall(v => !v.isNaN && !v.isInfinite))
-    // the LSTM consumed the REDUCED sequence: cell input width = conv width
-    val convW = w.convAgg.get.outShape(t, w.catEmbeddings.map(_.cols).sum + 8)._2
-    assert(w.cells.head.head.wi.rows == convW)
-  }
-
   test("I15 teacher-forced decoder: BPTT gradients match finite differences") {
     val f = fdCheck(cfg.copy(outDim = 5, decoder = "teacher", seed = 27L))
     assert(f.isEmpty, s"teacher-decoder mismatches:\n${f.mkString("\n")}")
@@ -312,8 +274,7 @@ class LstmAutodiffSpec extends AnyFunSuite {
 
   test("I5 MHA attention path trains: FD green, heads > 1 replaces Bahdanau") {
     // unified_encoder.py:186-192 selects MHA over Bahdanau at heads > 1;
-    // the serving twin (Lstm.MhaSumPool) has had this path since round 4 —
-    // this makes it TRAINABLE (residual + layernorm + sum-pool backward)
+    // the path is TRAINABLE (residual + layernorm + sum-pool backward)
     for ((nl, bd) <- Seq((1, false), (2, true))) {
       val c = cfg.copy(hidden = 6, outDim = 4, attnHeads = 2,
         numLayers = nl, bidirectional = bd, seed = 97L + nl)

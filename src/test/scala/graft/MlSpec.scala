@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.nn.{Dims, EncoderWeights, TransformerConfig}
+import graft.nn.Dims
 import graft.train.{LinearAutoencoder, TrainConfig}
 
 /** Model-side specs: encoder numerics, training convergence, scoring shape. */
@@ -12,21 +12,6 @@ class MlSpec extends SparkSpec {
     assert(Dims.embeddingDim(3) == 2)
     assert(Dims.embeddingDim(49) == 25)
     assert(Dims.embeddingDim(100000) == 25)
-  }
-
-  test("encoder forward: deterministic, finite, right shape") {
-    val cfg = TransformerConfig(dModel = 8, heads = 2, layers = 2, pf = 4, maxLen = 10)
-    val w = EncoderWeights.init(cfg, vocabSizes = Seq(5), nCont = 2)
-    val cat = Array(Array(1), Array(2), Array(0))
-    val cont = Array(Array(0.5, 0.1), Array(0.2, 0.9), Array(0.0, 0.0))
-    val e1 = w.forward(cat, cont)
-    val e2 = w.forward(cat, cont)
-    assert(e1.length == 3 * 8)
-    assert(e1.sameElements(e2))
-    assert(e1.forall(v => !v.isNaN && !v.isInfinite))
-    // different input -> different embedding
-    val e3 = w.forward(Array(Array(3), Array(2), Array(0)), cont)
-    assert(!e1.sameElements(e3))
   }
 
   test("linear AE training: loss strictly decreases on overfit-able data") {

@@ -840,21 +840,24 @@ class StreamingSpec extends SparkSpec {
     val cfg = FeaturizerConfig(roles, seqLen = 5, historyDays = HistoryDays,
       tiebreak = Seq("event_id"))
     val model = CasprFeaturizer.fit(input, cfg)
-    val vocab = (model.encodings("event_type").mapping.count() + 1)
-    val scorer = graft.ml.CasprScorer.forWide(
-      graft.nn.TransformerConfig(dModel = 8, heads = 2, layers = 1, pf = 8),
-      "user_id", Map("event_type" -> vocab), 5,
-      seqCat = Seq("event_type"), seqCont = Seq("value", "ts_days"))
-    // the scorer is a projection + mapPartitions with broadcast weights, so
-    // the SAME model object transforms the batch wide frame and the
-    // streaming featurized frame — end-to-end streaming inference
-    val batchEmb = scorer.transform(model.transform(input))
+    val vocab = (model.encodings("event_type").mapping.count() + 1).toInt
+    val aeCfg = graft.nn.AeConfig(dModel = 8, heads = 2, layers = 1, pf = 8,
+      seqLen = 5, vocabSizes = Seq(vocab), nCont = 2)
+    val res = graft.train.TransformerTrainer.Result(aeCfg, aeCfg.initParams(), Nil, 0)
+    // scoring is a projection + mapPartitions with broadcast weights, so
+    // the SAME weights transform the batch wide frame and the streaming
+    // featurized frame — end-to-end streaming inference
+    def score(wide: org.apache.spark.sql.DataFrame) =
+      graft.train.TransformerTrainer.transform(wide, res, "user_id",
+        Seq((1 to 5).map(t => s"event_type_$t")),
+        Seq("value", "ts_days").map(c => (1 to 5).map(t => s"${c}_$t")))
+    val batchEmb = score(model.transform(input))
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
     val predTs = java.sql.Timestamp.from(
       java.time.Instant.parse(PredTs.replace(" ", "T") + "Z"))
     val streamWide = EventStream.streamingFeaturize(spark,
       EventStream.readEvents(spark, streamDir), model, predTs)
-    val q = scorer.transform(streamWide)
+    val q = score(streamWide)
       .writeStream.outputMode(OutputMode.Update())
       .format("memory").queryName("stream_emb").start()
     try {
