@@ -22,16 +22,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
  * (matched by `cacheBuilder` reference identity — the builder instance is
  * shared between the CacheManager entry and every InMemoryRelation
  * substituted into a consumer plan). On that action it unpersists the
- * blocks and deregisters itself, leaving the session clean — verified
- * synchronously via [[awaitClean]].
+ * blocks and deregisters itself, leaving the session clean.
  *
  * Contract: the cache accelerates the FIRST materialization (the
  * multi-branch reuse inside one action, which is what the dedup operators
  * need); later actions on the same result recompute uncached — correct,
  * just not re-accelerated. Listener delivery is async (Spark's listener
- * bus), so "clean" is eventual — within milliseconds in practice;
- * [[graft.core.CacheScope.awaitClean]] blocks until delivered for tests
- * and strict callers.
+ * bus), so "clean" is eventual — within milliseconds in practice.
  *
  * Bindings are REFERENCE-COUNTED per cache entry: re-invoking an operator
  * with an identical plan rebinds the same CacheManager entry, and without
@@ -150,18 +147,5 @@ object CacheScope {
       spark.listenerManager.register(listener)
     }
     df
-  }
-
-  /** Listener delivery is async; poll until no persistent RDD blocks
-    * remain (or timeout). Returns true when the session is clean. For
-    * specs and strict callers that need a synchronous guarantee. */
-  def awaitClean(spark: org.apache.spark.sql.SparkSession,
-      timeoutMs: Long = 30000): Boolean = {
-    val deadline = System.nanoTime + timeoutMs * 1000000L
-    while (System.nanoTime < deadline) {
-      if (spark.sparkContext.getPersistentRDDs.isEmpty) return true
-      Thread.sleep(50)
-    }
-    spark.sparkContext.getPersistentRDDs.isEmpty
   }
 }

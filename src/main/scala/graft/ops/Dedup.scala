@@ -25,9 +25,8 @@ object Dedup {
     * are stripped too (Spark `trim` strips spaces only — collapsing
     * first turns them into strippable spaces). This changes the content
     * hash for such texts: persisted artifacts keyed on the old hash —
-    * notably [[graft.streaming.EventStream]] exact-dedup checkpoint
-    * state — will no longer match and must be rebuilt from the corpus
-    * after upgrading. */
+    * notably [[hashIndex]] tables — will no longer match and must be
+    * rebuilt from the corpus after upgrading. */
   def normText(c: String): Column =
     trim(regexp_replace(lower(col(c)), "\\s+", " "))
 
@@ -1070,9 +1069,8 @@ object Dedup {
    * state that makes near-dup admission INCREMENTAL. Build once over the
    * existing corpus, write to parquet; each new batch is admitted against
    * the index ([[admitNearDups]]) and its own rows appended — the corpus
-   * text is never re-read and never re-shingled. The batch counterpart of
-   * [[graft.streaming.EventStream]]'s streaming MinHash state, and the
-   * near-dup analogue of [[hashIndex]]/[[dedupIncremental]].
+   * text is never re-read and never re-shingled. The near-dup analogue
+   * of [[hashIndex]]/[[dedupIncremental]].
    *
    * `fastHash = false` uses the md5 hash family ([[minhashSigs]], oracle-
    * replayable); `true` uses xxhash64 longs ([[minhashSigsFast]], the
@@ -1105,9 +1103,8 @@ object Dedup {
    * Candidates come from band-key equality against the index; verification
    * is the MinHash AGREEMENT estimate jhat = |matching components| / k —
    * the index stores signatures, not shingle sets, which is precisely what
-   * makes admission O(new batch), so the verify step uses the estimator
-   * (the same contract as the streaming twin `streamingMinhashDedup`), not
-   * exact Jaccard. Run [[minhashLshPairs]] WITHIN the batch separately if
+   * makes admission O(new batch), so the verify step uses the estimator,
+   * not exact Jaccard. Run [[minhashLshPairs]] WITHIN the batch separately if
    * intra-batch dups matter.
    *
    * Scale shape: the new batch is shingled and signed (narrow, O(batch));

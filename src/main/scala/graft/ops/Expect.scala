@@ -48,8 +48,8 @@ object Expect {
   private def ratio(num: Column, den: Column): Column =
     round(when(den === 0, lit(null)).otherwise(num.cast("double") / den), 6)
 
-  /** (kind, target, metric aggregate, threshold) per check — shared by
-    * [[report]] and the streaming per-window twin. */
+  /** (kind, target, metric aggregate, threshold) per check, for
+    * [[report]]. */
   private[graft] def metricsFor(checks: Seq[Check],
       approxDistinct: Boolean): Seq[(String, String, Column, Double)] = {
     require(checks.nonEmpty, "need at least one check")
@@ -77,8 +77,8 @@ object Expect {
     }
   }
 
-  /** The explode-to-verdicts tail shared with the streaming twin:
-    * wide metric columns `__v0..` become one graded row per check. */
+  /** The explode-to-verdicts tail of [[report]]: wide metric columns
+    * `__v0..` become one graded row per check. */
   private[graft] def verdictRows(
       metrics: Seq[(String, String, Column, Double)]): Column = {
     val rows = metrics.zipWithIndex.map { case ((kind, target, _, th), i) =>

@@ -219,11 +219,6 @@ object Search {
       queryBatch.toDF("query_id", "qtext"), k, mu)
   }
 
-  /** [[qlTopK]] with the query batch as a (query_id, qtext) DataFrame. */
-  def qlTopKDf(docs: DataFrame, textCol: String, idCol: String,
-      queryDf: DataFrame, k: Int, mu: Double = 2000.0): DataFrame =
-    qlCore(InlineSource(docs, textCol, idCol), queryDf, k, mu)
-
   /** [[qlTopK]] against a PREBUILT [[SearchIndex]] — identical results
     * to the inline build (the [[bm25TopKIdx]] serving shape). */
   def qlTopKIdx(index: SearchIndex, queryDf: DataFrame, k: Int,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -35,29 +35,11 @@ object Skew {
   }
 
   /**
-   * Partial-aggregation salt for `collect_list`/`collect_set`-style aggs
-   * whose map-side combine cannot shrink a hot key: aggregate on
-   * (key, salt) first (bounded partitions), then merge the per-salt
-   * partials on the key (nSalts rows per key max). `merge` sees the
-   * salt-level frame grouped by key and produces the final columns.
-   */
-  def twoPhaseAgg(df: DataFrame, key: String, nSalts: Int,
-      saltBy: Seq[String], partial: Seq[Column],
-      merge: DataFrame => DataFrame): DataFrame = {
-    require(nSalts >= 2, "nSalts >= 2")
-    val salted = df.withColumn("__salt",
-      pmod(xxhash64(saltBy.map(col): _*), lit(nSalts.toLong)).cast("int"))
-    merge(salted.groupBy(col(key), col("__salt")).agg(partial.head, partial.tail: _*)
-      .drop("__salt"))
-  }
-
-  /**
    * Key-skew diagnosis: the one-row report that tells you whether a
-   * planned `groupBy`/`join` on `keyCol` needs [[saltedJoin]]/
-   * [[twoPhaseAgg]] at all — n_keys, n_rows, the share of the single
-   * hottest key, the share of the top-`topK`, and the Gini coefficient
-   * of the per-key count distribution (0 = perfectly uniform, → 1 =
-   * one key owns everything).
+   * planned `groupBy`/`join` on `keyCol` needs [[saltedJoin]] at all —
+   * n_keys, n_rows, the share of the single hottest key, the share of
+   * the top-`topK`, and the Gini coefficient of the per-key count
+   * distribution (0 = perfectly uniform, → 1 = one key owns everything).
    *
    * Shape: one map-side-combining count per key (the same aggregate the
    * skewed job itself would run), then windows over the KEY-count table —

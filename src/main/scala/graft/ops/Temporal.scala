@@ -567,8 +567,7 @@ object Temporal {
    * rows bounds per-row state at scale (the dropped tail carries weight
    * `(1-alpha)^window` — pick the window to make it negligible for your
    * alpha) and makes the value a pure function of the frame, so the same
-   * fold replays in any engine and in the streaming twin
-   * ([[graft.streaming.EventStream.streamingEwma]]).
+   * fold replays in any engine.
    *
    * Shape: ONE exchange on the key + one sort; the frame materializes at
    * most `window` doubles per row (`collect_list` over a bounded frame)
@@ -672,8 +671,7 @@ object Temporal {
    * (the model's 6-dp row), `is_improbable` (p < minP OR unseen).
    * Scale shape: ONE key shuffle for the lead window; the state²-grain
    * model broadcasts onto the handoff stream (the [[markovBacktest]]
-   * plan). Streaming twin:
-   * [[graft.streaming.EventStream.streamingMarkovScore]].
+   * plan).
    */
   def markovScoreHandoffs(df: DataFrame, keys: Seq[String], tsCol: String,
       stateCol: String, model: DataFrame, minP: Double,
@@ -1255,10 +1253,8 @@ object Temporal {
 
   /** Per-season (hour-of-day) observation profile — (season, n, mean,
     * std), UNROUNDED: the reference table [[seasonalAnomalies]] scores
-    * against, and the frozen baseline
-    * [[graft.streaming.EventStream.streamingSeasonalAnomalies]] serves
-    * live events against (compute it on a reference period, persist it,
-    * refresh offline). One broadcast-sized aggregate: at most 24 rows. */
+    * against (compute it on a reference period, persist it, refresh
+    * offline). One broadcast-sized aggregate: at most 24 rows. */
   def seasonalProfile(df: DataFrame, tsCol: String,
       valueCol: String): DataFrame = {
     val season = hour(col(tsCol).cast("timestamp")).cast("long")
@@ -1270,10 +1266,10 @@ object Temporal {
   }
 
   /** Score rows against a [[seasonalProfile]] (z per row vs its season's
-    * mean/std; |z| > threshold flags) — the shared core of the batch
-    * operator and the streaming twin: one broadcast join of a <=24-row
-    * profile + a narrow projection, so it is append-mode legal on a
-    * stream with ZERO state. Thin (n < minBucket) and zero-variance
+    * mean/std; |z| > threshold flags) — the core of
+    * [[seasonalAnomalies]]: one broadcast join of a <=24-row profile + a
+    * narrow projection, so it is append-mode legal on a stream with ZERO
+    * state. Thin (n < minBucket) and zero-variance
     * seasons null their z and never flag. */
   def seasonalScore(df: DataFrame, tsCol: String, valueCol: String,
       profile: DataFrame, threshold: Double = 3.0, minBucket: Long = 2L,
@@ -1931,9 +1927,7 @@ object Temporal {
    * Scale shape — the [[cusum]] family: THREE running window aggregates
    * on ONE shuffle by `keys` (cumulative sum+count for the running mean,
    * cumulative sum for m, running min for the envelope). No per-row
-   * array, no O(n²) re-fold; unbounded history for free. The streaming
-   * twin ([[graft.streaming.EventStream.streamingPageHinkley]]) carries
-   * the same four scalars as its whole per-key state.
+   * array, no O(n²) re-fold; unbounded history for free.
    */
   def pageHinkley(df: DataFrame, keys: Seq[String], tsCol: String,
       valueCol: String, delta: Double, lambda: Double,
@@ -1948,8 +1942,7 @@ object Temporal {
     val keep = (keys ++ idCols).distinct.map(col)
     // Null values are dropped up front (not carried as rows): a null
     // contributes nothing to the running mean, so keeping the row would
-    // add a duplicate mean term to the m prefix — and the streaming twin
-    // must see the identical event set to stay bit-for-bit.
+    // add a duplicate mean term to the m prefix.
     df.filter(v.isNotNull)
       .withColumn("__mean", sum(v).over(run) / count(v).over(run))
       .withColumn("__m", sum(v - lit(delta)).over(run) -

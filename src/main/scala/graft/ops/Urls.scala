@@ -64,17 +64,6 @@ object Urls {
       when(cleanQuery === "", lit("")).otherwise(concat(lit("?"), cleanQuery))))
   }
 
-  /**
-   * Per-domain document cap: [[parse]] + the deterministic salted-hash
-   * quota sample ([[Text.quotaSample]]) keyed on the registered domain —
-   * "no domain contributes more than `quota` docs", the standard
-   * anti-spam / diversity bound of crawl curation. One window pass
-   * partitioned by domain.
-   */
-  def capPerDomain(df: DataFrame, urlCol: String, idCol: String,
-      quota: Int): DataFrame =
-    Text.quotaSample(parse(df, urlCol), Seq("domain"), idCol, quota)
-
   /** The dot-suffix chain of a host, most-specific first:
     * `a.b.example.org` → `[a.b.example.org, b.example.org, example.org,
     * org]`. A blocklist entry matches a host iff it equals one of these —

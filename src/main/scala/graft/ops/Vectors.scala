@@ -213,9 +213,8 @@ object Vectors {
 
   /** The [[nearestCentroid]] fit artifact: one (`label`, `centroid`)
     * row per label, components 6-dp rounded — persist it and serve live
-    * vectors through [[centroidApply]] /
-    * [[graft.streaming.EventStream.streamingClassify]] with ZERO state
-    * (the winsorizeFit / seasonalProfile pattern). */
+    * vectors through [[centroidApply]] with ZERO state (the
+    * winsorizeFit / seasonalProfile pattern). */
   def centroidFit(train: DataFrame, vecCol: String,
       labelCol: String): DataFrame =
     train.select(col(labelCol).as("label"),
@@ -230,9 +229,8 @@ object Vectors {
   /** Cosine-argmax rows against a [[centroidFit]] table — a labels-sized
     * broadcast + narrow scoring projection, append-mode legal. Labels
     * must be NUMERIC on both sides (they are cast to long in the
-    * output, matching [[graft.streaming.EventStream.streamingClassify]]'s
-    * `Long` state key); a string-labeled fit table would otherwise cast
-    * to null silently, so it is rejected here. */
+    * output); a string-labeled fit table would otherwise cast to null
+    * silently, so it is rejected here. */
   def centroidApply(df: DataFrame, centroids: DataFrame, idCol: String,
       vecCol: String, labelCol: String): DataFrame = {
     require(df.schema(labelCol).dataType

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Prebuilt, Tables}
 import graft.ops.{Cf, Text, Vectors}
 import graft.stats.Planners
 
@@ -34,20 +34,15 @@ object MiningQ extends QueryGroup {
     * measured the in-plan sharing alternatives: localCheckpoint +50%,
     * SQL-cache 4x — see [[Cf.saveState]]). The warm-up pass pays
     * fit+save; timed passes (and Verify) plan the merge from
-    * stats-bearing parquet. Keyed on the source's (size, mtime) so a
-    * regenerated sf dir can never serve a stale state. */
+    * stats-bearing parquet. [[graft.core.Prebuilt]] keys it on the
+    * source, the cap and the fitting code. */
   private def prebuiltCfState(s: org.apache.spark.sql.SparkSession,
-      dir: String, cap: Int): Cf.CfState = {
-    val src = new java.io.File(s"$dir/events.parquet")
-    val fp = java.lang.Long.toHexString(java.util.Objects.hash(
-      dir, src.length(), src.lastModified(), cap).toLong & 0xffffffffL)
-    val stDir = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_cfstate_$fp").getAbsolutePath
-    if (!new java.io.File(s"$stDir/items/_SUCCESS").exists())
+      dir: String, cap: Int): Cf.CfState =
+    Cf.loadState(s, Prebuilt.dir("cfstate", new java.io.File(s"$dir/events.parquet"),
+        Prebuilt.codeToken(Cf.getClass, MiningQ.getClass), cap) { stDir =>
       Cf.saveState(Cf.cfFit(cfEvents(s, dir).filter(col("event_id") % 2 === 0),
         "user_id", "item", maxUserItems = cap), stDir)
-    Cf.loadState(s, stDir)
-  }
+    })
 
   /** md5 16-bit value of an id expression, DuckDB side (LlmOps twin). */
   private def md5Val16Sql(idExpr: String): String = {

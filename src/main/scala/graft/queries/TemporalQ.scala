@@ -560,9 +560,8 @@ object TemporalQ extends QueryGroup {
              |  COUNT(DISTINCT a.user_id) AS n_active
              |FROM a JOIN c USING (user_id) GROUP BY 1, 2""".stripMargin)),
 
-    // Tumbling-window aggregate in batch: the batch face of the streaming
-    // windowedTypeCounts twin (same window() expression Structured
-    // Streaming runs), oracled against DuckDB time_bucket.
+    // Tumbling-window aggregate in batch (the same window() expression
+    // Structured Streaming runs), oracled against DuckDB time_bucket.
     QueryDef("q_tumbling_agg",
       (s, dir) => {
         val ev = Tables.load(s, dir, "events")

@@ -1643,10 +1643,9 @@ object Planners {
       keys, valueCol, idCols)
 
   /** The [[winsorize]] fit artifact: one (keys, lo, hi) row per group —
-    * persist it and serve live data through [[winsorizeApply]] /
-    * [[graft.streaming.EventStream.streamingWinsorize]] (the
-    * seasonalProfile/seasonalScore pattern: fit offline, clamp on the
-    * stream with ZERO state). */
+    * persist it and serve live data through [[winsorizeApply]] (the
+    * seasonalProfile/seasonalScore pattern: fit offline, clamp with ZERO
+    * state). */
   def winsorizeFit(df: DataFrame, keys: Seq[String], valueCol: String,
       pLo: Double = 0.05, pHi: Double = 0.95): DataFrame = {
     require(pLo >= 0 && pHi <= 1 && pLo < pHi, "need 0 <= pLo < pHi <= 1")
@@ -1668,9 +1667,8 @@ object Planners {
    * discreteness of small groups); the returned bound is an observed
    * value, not an interpolation, so the clamp can only be off by the
    * local value gap at the tail cut — spec-bounded on the fixture.
-   * Serve through the same [[winsorizeApply]] /
-   * [[graft.streaming.EventStream.streamingWinsorize]]; keep the exact
-   * fit as the oracle fixture.
+   * Serve through the same [[winsorizeApply]]; keep the exact fit as
+   * the oracle fixture.
    */
   def winsorizeFitApprox(df: DataFrame, keys: Seq[String],
       valueCol: String, pLo: Double = 0.05, pHi: Double = 0.95,

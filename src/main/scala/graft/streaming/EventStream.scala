@@ -1,22 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 /**
- * Streaming ingestion of the event log (SURVEY.md §2.L / §7.5 extension —
- * the reference is batch-only; its "sliding windows" are batch cutoff
- * augmentation). Structured Streaming gives the same long-form table
- * incrementally:
+ * Streaming featurize-and-score for the CASPR event log (SURVEY.md §2.L /
+ * §7.5 extension — the reference is batch-only; its "sliding windows" are
+ * batch cutoff augmentation). Structured Streaming file-streams the event
+ * log ([[EventStream.readEvents]]) and turns each update into the same wide
+ * featurized row the batch [[graft.prep.CasprFeaturizerModel.transform]]
+ * yields ([[EventStream.streamingFeaturize]]). Scoring needs no streaming
+ * code: the scorer is a projection + mapPartitions over broadcast weights,
+ * so the batch scorer runs on the streaming wide frame unchanged.
  *
- *  - windowed aggregation with a watermark = bounded state, late events
- *    beyond the watermark dropped deterministically;
- *  - per-entity latest-N sequence state via mapGroupsWithState — the
- *    incremental twin of the batch rank+pivot (C1+E1): the state holds at
- *    most N (ts, cat, cont) triples per entity, so state size is
- *    O(entities x N), independent of stream length.
+ * Every other operator that runs stream-legal does so as its batch call on
+ * a streaming DataFrame (stateless projections, stream-static joins);
+ * StreamingSpec pins that contract for the ones that claim it.
  *
  * At scale this runs with the same shuffle key (entity id) as the batch
  * pipeline; checkpointed state is RocksDB-backed on a real cluster.
@@ -56,54 +57,11 @@ object EventStream {
     }
   }
 
-  /** Tumbling-window per-type counts with a watermark bounding state. */
-  def windowedTypeCounts(events: DataFrame, window: String = "1 hour",
-      watermark: String = "2 hours"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-
-  /**
-   * Per-user session aggregates over the stream via Spark's native
-   * `session_window` (merging state windows; the streaming twin of
-   * `graft.ops.Temporal.sessionize`/`sessionStats`). The watermark bounds
-   * session state: a session older than watermark behind the stream's
-   * max event time is finalized and its state dropped, so state is
-   * O(active sessions), not O(history). Works identically on a batch
-   * DataFrame (batch `session_window` support), which is what the parity
-   * spec pins. Boundary convention: an inter-event gap strictly smaller
-   * than `gap` merges; a gap equal to `gap` starts a new session (the
-   * window closes at last_event + gap, exclusive).
-   */
-  def sessionStats(events: DataFrame, gap: String = "30 minutes",
-      watermark: String = "1 day"): DataFrame = {
-    val windowed =
-      if (events.isStreaming) events.withWatermark("ts", watermark) else events
-    windowed
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("total_value"))
-  }
-
-  final case class Ev(user_id: Long, ts_us: Long, event_type: String, value: Double)
-  final case class SeqState(events: List[(Long, String, Double)])
-  final case class UserSeq(user_id: Long, seq_len: Int,
-      types: Seq[String], values: Seq[Double])
-
-  final case class Doc(doc_id: Long, content_hash: String)
-  final case class DedupState(keepId: Long, nSeen: Long)
-  final case class DedupDecision(doc_id: Long, content_hash: String,
-      keep: Boolean, keep_id: Long)
-
-  /** The streaming dedup operators emit LONG ids. Fail fast on a
+  /** [[streamingFeaturize]] decodes ids into a typed Long. Fail fast on a
     * non-integral id column instead of letting the cast produce nulls that
-    * die later in the typed encoder (their batch twins are id-type
-    * generic; string ids must be hashed to long — e.g. `xxhash64(id)` —
-    * BEFORE entering the stream, an explicit and collision-aware choice
-    * the operator refuses to make silently). */
+    * die later in the typed encoder (string ids must be hashed to long —
+    * e.g. `xxhash64(id)` — BEFORE entering the stream, an explicit and
+    * collision-aware choice the operator refuses to make silently). */
   private def requireIntegralId(df: DataFrame, idCol: String, op: String): Unit = {
     val dt = df.schema(idCol).dataType
     val ok = dt == ByteType || dt == ShortType || dt == IntegerType || dt == LongType
@@ -116,1675 +74,9 @@ object EventStream {
     if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
     else GroupStateTimeout.NoTimeout
 
-  /**
-   * Streaming exact dedup: the incremental twin of [[graft.ops.Dedup
-   * .exactGroups]]. Keyed by md5(normalized text) — the same 16-byte
-   * content key the batch operator shuffles — with flatMapGroupsWithState
-   * holding one (keepId, count) pair per distinct content hash. The FIRST
-   * arrival of a hash is emitted keep=true (it becomes the canonical doc of
-   * its group); every later duplicate emits keep=false pointing at the
-   * canonical id. State is O(distinct contents), the minimum any exact
-   * streaming dedup must hold; on a real cluster it lives in the RocksDB
-   * state store behind the same content-hash shuffle key.
-   *
-   * Batch/stream parity caveat (spec-checked): batch keeps min(doc_id) per
-   * group; the stream keeps the FIRST-SEEN doc_id — identical whenever
-   * arrival order follows doc_id (the file-stream fixture), divergent under
-   * reordering, which is inherent to single-pass dedup.
-   *
-   * `stateTtl` (e.g. `Some("1 hour")`): optional processing-time TTL for
-   * long-running production streams — a content hash not re-seen within
-   * the TTL is evicted (a later duplicate of an evicted doc re-enters as a
-   * fresh canonical). Default None = exact unbounded-horizon dedup.
-   */
-  def streamingExactDedup(spark: SparkSession, docs: DataFrame,
-      textCol: String, idCol: String,
-      stateTtl: Option[String] = None): Dataset[DedupDecision] = {
-    import spark.implicits._
-    requireIntegralId(docs, idCol, "streamingExactDedup")
-    docs.select(col(idCol).cast("long").as("doc_id"),
-        md5(trim(regexp_replace(lower(col(textCol)), "\\s+", " "))).as("content_hash"))
-      .as[Doc]
-      .groupByKey(_.content_hash)
-      .flatMapGroupsWithState[DedupState, DedupDecision](
-        OutputMode.Append, ttlConf(stateTtl)) {
-        (hash: String, ds: Iterator[Doc], state: GroupState[DedupState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(DedupState(-1L, 0L))
-            val out = ds.map { d =>
-              val first = st.nSeen == 0L
-              if (first) st = DedupState(d.doc_id, 1L)
-              else st = st.copy(nSeen = st.nSeen + 1L)
-              DedupDecision(d.doc_id, hash, keep = first, keep_id = st.keepId)
-            }.toList // materialize before state.update (iterator is lazy)
-            state.update(st)
-            stateTtl.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
-  }
-
-  /**
-   * Streaming downsample: keep the LAST event per (user, tumbling
-   * bucket) — the streaming twin of [[graft.ops.Temporal.downsample]]
-   * (same epoch-aligned buckets), expressed as a watermarked window
-   * aggregate with `max_by` over the (ts, tiebreak) order, so state per
-   * open (key, bucket) is one row. Works identically on a batch frame;
-   * parity spec pins streaming == batch survivors.
-   */
-  def streamingDownsample(events: DataFrame, bucket: String = "6 hours",
-      watermark: String = "1 day"): DataFrame = {
-    val windowed =
-      if (events.isStreaming) events.withWatermark("ts", watermark) else events
-    windowed
-      .groupBy(window(col("ts"), bucket), col("user_id"))
-      .agg(max_by(
-        struct(col("event_id"), col("ts"), col("value")),
-        struct(col("ts"), col("event_id"))).as("_last"))
-      .select(col("user_id"), col("window.start").as("bucket_start"),
-        col("_last.event_id").as("event_id"), col("_last.ts").as("ts"),
-        col("_last.value").as("value"))
-  }
-
-  /**
-   * Per-window data-quality monitoring: the streaming twin of
-   * [[graft.ops.Expect.report]] — the SAME check list compiles into one
-   * windowed aggregation (tumbling `windowDur`, watermark-bounded
-   * state, append-legal), one verdict row per (window, check). Distinct
-   * counts for Unique checks are always the HLL sketch here (exact
-   * multi-distinct isn't streaming-legal, and the batch operator's
-   * `approxDistinct = true` path computes the identical estimate, so
-   * batch/stream parity is bit-for-bit — spec-pinned).
-   */
-  def streamingExpectations(events: DataFrame, tsCol: String,
-      windowDur: String, checks: Seq[graft.ops.Expect.Check],
-      watermark: String = "1 day"): DataFrame = {
-    val metrics = graft.ops.Expect.metricsFor(checks, approxDistinct = true)
-    val aggs = metrics.zipWithIndex.map { case ((_, _, m, _), i) =>
-      m.as(s"__v$i")
-    }
-    val windowed =
-      if (events.isStreaming) events.withWatermark(tsCol, watermark)
-      else events
-    windowed
-      .groupBy(window(col(tsCol), windowDur))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("window.start").as("window_start"),
-        graft.ops.Expect.verdictRows(metrics).as("__r"))
-      .select(col("window_start"), col("__r.check_name"), col("__r.target"),
-        col("__r.value"), col("__r.threshold"), lit("ge").as("op"),
-        coalesce(col("__r.value") >= col("__r.threshold"), lit(false))
-          .as("passed"))
-  }
-
-  final case class ChangeEv(key: Long, ts_us: Long, attr: String)
-  final case class Scd2State(sinceUs: Long, attr: String)
-  final case class ClosedInterval(key: Long, attr: String,
-      valid_from_us: Long, valid_to_us: Long)
-
-  /**
-   * Streaming SCD-2 history build: the incremental twin of
-   * [[graft.ops.Temporal.scd2]] over a changelog stream. State per key is
-   * ONLY the open regime (start, attrs); an arriving change emits the
-   * regime it closes as a half-open interval and replaces the state;
-   * unchanged attrs extend the open regime silently (the batch operator's
-   * compaction). Emitted rows therefore equal exactly the batch scd2's
-   * CLOSED intervals (valid_to non-null) — the open tail lives in state
-   * until the next change, the standard changelog-consumer contract.
-   * Parity is spec-pinned on the events stream.
-   *
-   * Arrival must be event-time ordered per key (rows are sorted within
-   * each micro-batch group; an out-of-order event ACROSS batches is a
-   * changelog-source contract violation and fails fast rather than
-   * emitting overlapping history).
-   */
-  def streamingScd2(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, attrCol: String): Dataset[ClosedInterval] = {
-    import spark.implicits._
-    requireIntegralId(events, keyCol, "streamingScd2")
-    events.select(col(keyCol).cast("long").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"), col(attrCol).as("attr"))
-      .as[ChangeEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[Scd2State, ClosedInterval](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, evs: Iterator[ChangeEv], state: GroupState[Scd2State]) =>
-          val sorted = evs.toList.sortBy(e => (e.ts_us, e.attr))
-          var st = state.getOption.orNull
-          val out = List.newBuilder[ClosedInterval]
-          sorted.foreach { e =>
-            if (st == null) st = Scd2State(e.ts_us, e.attr)
-            else {
-              require(e.ts_us >= st.sinceUs,
-                s"out-of-order changelog for key $key: ${e.ts_us} < ${st.sinceUs}")
-              if (e.attr != st.attr) {
-                out += ClosedInterval(key, st.attr, st.sinceUs, e.ts_us)
-                st = Scd2State(e.ts_us, e.attr)
-              }
-            }
-          }
-          if (st != null) state.update(st)
-          out.result().iterator
-      }
-  }
-
-  final case class QuotaDoc(group: String, doc_id: Long, hkey: String)
-  final case class QuotaState(admitted: Long)
-  final case class QuotaDecision(group: String, doc_id: Long, admitted: Boolean)
-
-  /**
-   * Streaming per-group quota: admit at most `quota` docs per group over
-   * the stream's lifetime (state = one counter per group). Within a
-   * micro-batch, candidates are ordered by the SAME salted md5 the batch
-   * [[graft.ops.Text.quotaSample]] uses, so a single-batch stream admits
-   * exactly the batch sample (parity spec); across batches the cap
-   * becomes first-come within the remaining budget — the arrival-order
-   * semantics an unbounded ingest actually wants.
-   */
-  def streamingQuotaSample(spark: SparkSession, docs: DataFrame,
-      groupCol: String, idCol: String, quota: Int): Dataset[QuotaDecision] = {
-    import spark.implicits._
-    require(quota > 0, "quota must be positive")
-    requireIntegralId(docs, idCol, "streamingQuotaSample")
-    docs.select(col(groupCol).as("group"), col(idCol).cast("long").as("doc_id"),
-        md5(concat_ws("#", col(idCol).cast("string"), lit("quota"))).as("hkey"))
-      .as[QuotaDoc]
-      .groupByKey(_.group)
-      .flatMapGroupsWithState[QuotaState, QuotaDecision](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (group: String, ds: Iterator[QuotaDoc], state: GroupState[QuotaState]) =>
-          var st = state.getOption.getOrElse(QuotaState(0L))
-          val out = ds.toList.sortBy(d => (d.hkey, d.doc_id)).map { d =>
-            val ok = st.admitted < quota
-            if (ok) st = QuotaState(st.admitted + 1L)
-            QuotaDecision(group, d.doc_id, ok)
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
-
-  final case class FunnelEv(key: Long, ts_us: Long, step: Int)
-  final case class FunnelState(idx: Int, lastUs: Long)
-  final case class StepHit(key: Long, step: Int, ts_us: Long)
-
-  /**
-   * Streaming funnel: the incremental twin of
-   * [[graft.ops.Temporal.funnel]] for event-time-ordered streams. State
-   * per key is just (steps completed, last match time); an event of the
-   * next expected step type at-or-after the last match advances the
-   * chain and emits a [[StepHit]]. Rows are sorted within each
-   * micro-batch group by (ts, step priority) — step order ahead of any
-   * other tiebreak so same-instant progressions (the batch `>=`
-   * semantics) count; under ordered arrival the greedy first-match
-   * equals the batch nested-min chain exactly (parity spec-pinned).
-   */
-  def streamingFunnel(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, typeCol: String,
-      steps: Seq[String]): Dataset[StepHit] = {
-    import spark.implicits._
-    requireIntegralId(events, keyCol, "streamingFunnel")
-    val stepIdx = steps.zipWithIndex
-      .foldRight(lit(-1): org.apache.spark.sql.Column) { case ((st, i), rest) =>
-        when(col(typeCol) === st, lit(i)).otherwise(rest)
-      }
-    events.select(col(keyCol).cast("long").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"), stepIdx.as("step"))
-      .filter(col("step") >= 0)
-      .as[FunnelEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[FunnelState, StepHit](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, evs: Iterator[FunnelEv], state: GroupState[FunnelState]) =>
-          val sorted = evs.toList.sortBy(e => (e.ts_us, e.step))
-          var st = state.getOption.getOrElse(FunnelState(0, Long.MinValue))
-          val out = List.newBuilder[StepHit]
-          sorted.foreach { e =>
-            if (st.idx < steps.length && e.step == st.idx &&
-                e.ts_us >= st.lastUs) {
-              out += StepHit(key, st.idx, e.ts_us)
-              st = FunnelState(st.idx + 1, e.ts_us)
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
-  }
-
-  /**
-   * Stream-stream interval join: pair each `leftType` event with every
-   * `rightType` event of the same key within `[l_ts, l_ts + withinSec]` —
-   * the click→purchase attribution shape. This is Spark's watermarked
-   * stream-stream inner join: BOTH sides carry a watermark and the join
-   * condition bounds event time on both ends, so each side's join state
-   * is evicted once the other side's watermark passes the window —
-   * bounded state, the whole point of the construction. Works identically
-   * on a batch DataFrame (the parity spec pins streaming == batch on the
-   * same inputs).
-   */
-  def streamingIntervalJoin(events: DataFrame, keyCol: String, tsCol: String,
-      typeCol: String, idCol: String, leftType: String, rightType: String,
-      withinSec: Long, watermark: String = "1 day"): DataFrame = {
-    require(withinSec > 0, "withinSec must be positive")
-    def side(t: String, p: String) = {
-      val base = events.filter(col(typeCol) === t)
-        .select(col(keyCol).as(s"${p}_key"), col(idCol).as(s"${p}_id"),
-          col(tsCol).as(s"${p}_ts"))
-      if (base.isStreaming) base.withWatermark(s"${p}_ts", watermark) else base
-    }
-    side(leftType, "l").join(side(rightType, "r"),
-      expr(s"l_key = r_key AND r_ts >= l_ts AND " +
-        s"r_ts <= l_ts + INTERVAL $withinSec SECONDS"), "inner")
-      .select(col("l_key").as("key"), col("l_id"), col("r_id"),
-        col("l_ts"), col("r_ts"))
-  }
-
-  final case class EwmaEv(key: Long, id: Long, ts_us: Long, value: Double)
-  final case class EwmaState(tail: List[Double])
-  final case class EwmaOut(user_id: Long, event_id: Long, ewma: Double)
-
-  /**
-   * Streaming bounded-window EWMA: the incremental twin of
-   * [[graft.ops.Temporal.ewma]]. State per key is the most recent
-   * `window - 1` values (oldest first); each arrival folds
-   * `alpha*v + (1-alpha)*acc` over exactly the batch operator's trailing
-   * frame (state ++ current, seeded with the frame's oldest element), so
-   * under event-time-ordered arrival the emitted doubles are BIT-identical
-   * to the batch fold (parity spec-pinned). O(window) doubles per key,
-   * independent of stream length — the reason [[graft.ops.Temporal.ewma]]
-   * truncates the recursion in the first place.
-   */
-  def streamingEwma(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, valueCol: String, idCol: String,
-      alpha: Double, window: Int = 10): Dataset[EwmaOut] = {
-    import spark.implicits._
-    require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
-    require(window >= 1, "window must be >= 1")
-    requireIntegralId(events, keyCol, "streamingEwma")
-    // a null value/ts row would throw at the non-nullable encoder and
-    // kill the stream; the batch twin's window skips nulls the same way
-    events
-      .filter(col(valueCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(keyCol).cast("long").as("key"),
-        col(idCol).cast("long").as("id"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(valueCol).cast("double").as("value"))
-      .as[EwmaEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[EwmaState, EwmaOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, evs: Iterator[EwmaEv], state: GroupState[EwmaState]) =>
-          var tail = state.getOption.map(_.tail).getOrElse(Nil)
-          val out = evs.toList.sortBy(e => (e.ts_us, e.id)).map { e =>
-            val frame = tail :+ e.value
-            val ewma = frame.tail.foldLeft(frame.head)(
-              (acc, x) => alpha * x + (1.0 - alpha) * acc)
-            tail = frame.takeRight(window - 1)
-            EwmaOut(key, e.id, ewma)
-          }
-          state.update(EwmaState(tail))
-          out.iterator
-      }
-  }
-
-  final case class HoltOut(key: Long, id: Long, level: Double,
-      trend: Double, forecast: Double)
-
-  /**
-   * Streaming bounded-window Holt smoothing: the incremental twin of
-   * [[graft.ops.Temporal.holtSmooth]], with [[streamingEwma]]'s state
-   * contract — the most recent `window − 1` values per key; each arrival
-   * folds the level/trend recurrences over exactly the batch operator's
-   * trailing frame (seeded l = oldest, b = 0), so under event-time-
-   * ordered arrival the pre-rounding doubles are BIT-identical to the
-   * batch fold (parity spec-pinned). O(window) doubles per key.
-   */
-  def streamingHolt(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, valueCol: String, idCol: String,
-      alpha: Double, gamma: Double, window: Int = 10): Dataset[HoltOut] = {
-    import spark.implicits._
-    require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
-    require(gamma > 0 && gamma <= 1, "gamma must be in (0, 1]")
-    require(window >= 1, "window must be >= 1")
-    requireIntegralId(events, keyCol, "streamingHolt")
-    def round6(x: Double): Double = math.round(x * 1e6) / 1e6
-    // null guard: see streamingEwma — one null event must not kill the
-    // monitor at the non-nullable encoder
-    events
-      .filter(col(valueCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(keyCol).cast("long").as("key"),
-        col(idCol).cast("long").as("id"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(valueCol).cast("double").as("value"))
-      .as[EwmaEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[EwmaState, HoltOut](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, evs: Iterator[EwmaEv], state: GroupState[EwmaState]) =>
-          var tail = state.getOption.map(_.tail).getOrElse(Nil)
-          val out = evs.toList.sortBy(e => (e.ts_us, e.id)).map { e =>
-            val frame = tail :+ e.value
-            val (l, b) = frame.tail.foldLeft((frame.head, 0.0)) {
-              case ((l0, b0), x) =>
-                val l1 = alpha * x + (1.0 - alpha) * (l0 + b0)
-                (l1, gamma * (l1 - l0) + (1.0 - gamma) * b0)
-            }
-            tail = frame.takeRight(window - 1)
-            HoltOut(key, e.id, round6(l), round6(b), round6(l + b))
-          }
-          state.update(EwmaState(tail))
-          out.iterator
-      }
-  }
-
-  final case class PsiEv(wstart_us: Long, bin: Int)
-  final case class PsiState(counts: Seq[Long])
-  final case class PsiOut(window_start_us: Long, n_events: Long, psi: Double)
-
-  /**
-   * Streaming PSI drift monitor: the incremental twin of
-   * [[graft.ops.Profile.psi]] — per event-time window, the population
-   * stability index of the stream's `valueCol` histogram against a FIXED
-   * reference distribution (the training slice), the standard
-   * "has the serving distribution drifted from what the model saw"
-   * alarm. `refCounts` is the reference histogram's raw per-bin counts
-   * ([[graft.stats.Planners.histogram]] output — a bounded fit statistic,
-   * nBins longs), smoothed here exactly like the batch operator.
-   *
-   * State per window is the nBins-long count vector behind a window-key
-   * shuffle — O(active windows × nBins) longs, the minimum any windowed
-   * histogram holds. Each micro-batch the updated window re-emits
-   * (Update semantics): `psi` = Σ_b round₆((p_ref − p_cur)·ln(p_ref/p_cur))
-   * with the same per-bin 6-dp rounding the batch operator applies, so a
-   * window's final emission equals the batch PSI's `sum(contrib)` over
-   * the same slice exactly. `stateTtl` evicts windows idle past the TTL
-   * (their next event would restart the count — use a TTL comfortably
-   * beyond the watermark/window span).
-   */
-  def streamingPsi(spark: SparkSession, events: DataFrame,
-      valueCol: String, tsCol: String, refCounts: Seq[Long],
-      lo: Double, hi: Double, nBins: Int, windowSec: Long,
-      smooth: Double = 0.5, stateTtl: Option[String] = None): Dataset[PsiOut] = {
-    import spark.implicits._
-    require(nBins >= 1 && refCounts.length == nBins,
-      s"refCounts must carry exactly nBins=$nBins entries")
-    require(smooth > 0, "smooth must be positive")
-    require(windowSec >= 1, "windowSec must be >= 1")
-    val tRef = refCounts.sum.toDouble + smooth * nBins
-    val pRef = refCounts.map(n => (n + smooth) / tRef)
-    val w = (hi - lo) / nBins
-    val winUs = windowSec * 1000000L
-    def round6(x: Double): Double = math.round(x * 1e6) / 1e6
-    events
-      .filter(col(valueCol).isNotNull && col(tsCol).isNotNull)
-      .select(
-        (floor(unix_micros(col(tsCol)) / winUs) * winUs).as("wstart_us"),
-        least(greatest(floor((col(valueCol).cast("double") - lo) / w)
-          .cast("int"), lit(0)), lit(nBins - 1)).as("bin"))
-      .as[PsiEv]
-      .groupByKey(_.wstart_us)
-      .flatMapGroupsWithState[PsiState, PsiOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (wstart: Long, evs: Iterator[PsiEv], state: GroupState[PsiState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val counts = state.getOption.map(_.counts.toArray)
-              .getOrElse(Array.fill(nBins)(0L))
-            evs.foreach(e => counts(e.bin) += 1)
-            state.update(PsiState(counts.toSeq))
-            stateTtl.foreach(state.setTimeoutDuration)
-            val tCur = counts.sum.toDouble + smooth * nBins
-            // per-bin 6-dp rounding mirrors the batch operator's contrib
-            // column, so the sums agree bit-for-bit
-            val psi = (0 until nBins).map { b =>
-              val pc = (counts(b) + smooth) / tCur
-              round6((pRef(b) - pc) * math.log(pRef(b) / pc))
-            }.sum
-            Iterator.single(PsiOut(wstart, counts.sum, round6(psi)))
-          }
-      }
-  }
-
-  final case class CusumEv(key: String, ts_us: Long, event_id: Long, v: Double)
-  final case class CusumState(sh: Double, sl: Double, n: Long)
-  final case class CusumOut(key: String, n_events: Long,
-      cusum_hi: Double, cusum_lo: Double, alarm: Boolean)
-
-  /**
-   * Streaming two-sided CUSUM per key — the live twin of
-   * [[graft.ops.Temporal.cusum]] and the sequential complement of
-   * [[streamingPsi]] (PSI alarms on a window's distribution, CUSUM
-   * accumulates slow drift ACROSS windows). State per key is two
-   * doubles + a count; each micro-batch folds its events in
-   * (ts, event_id) order through the clamped recurrences
-   * S⁺ ← max(0, S⁺ + (x − target − slack)),
-   * S⁻ ← max(0, S⁻ + (target − slack − x)) and re-emits the key's
-   * updated statistics (Update semantics). Feeding the same events in
-   * one batch or many yields the same final state (a left fold splits
-   * over ordered batches) — parity with the batch operator's last row
-   * per key is spec-checked to 1e-6 (the batch form computes the
-   * algebraically-equal prefix-sum identity, which differs only in FP
-   * rounding order). Events inside a micro-batch are sorted before the
-   * fold (micro-batch iterators carry no order guarantee); ACROSS
-   * batches the source must deliver a key's events in time order —
-   * true for append-ordered monitors, the op's use case.
-   */
-  def streamingCusum(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, valueCol: String, idCol: String,
-      target: Double, slack: Double, h: Double,
-      stateTtl: Option[String] = None): Dataset[CusumOut] = {
-    import spark.implicits._
-    require(slack >= 0, "slack must be >= 0")
-    require(h > 0, "h must be > 0")
-    def round6(x: Double): Double = math.round(x * 1e6) / 1e6
-    events
-      .filter(col(valueCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).cast("long").as("event_id"),
-        col(valueCol).cast("double").as("v"))
-      .as[CusumEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CusumState, CusumOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (key: String, evs: Iterator[CusumEv], state: GroupState[CusumState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = evs.toArray.sortBy(e => (e.ts_us, e.event_id))
-            val init = state.getOption.getOrElse(CusumState(0.0, 0.0, 0L))
-            val folded = sorted.foldLeft(init) { (s, e) =>
-              CusumState(
-                math.max(0.0, s.sh + (e.v - target - slack)),
-                math.max(0.0, s.sl + (target - slack - e.v)),
-                s.n + 1)
-            }
-            state.update(folded)
-            stateTtl.foreach(state.setTimeoutDuration)
-            val (sh, sl) = (round6(folded.sh), round6(folded.sl))
-            Iterator.single(CusumOut(key, folded.n, sh, sl, sh > h || sl > h))
-          }
-      }
-  }
-
-  final case class DwEv(key: String, ts_us: Long, event_id: Long, x: Long)
-  final case class DwState(n: Long, s: Long, ss: Long, num: Long,
-      last: Long, hasLast: Boolean)
-  final case class DwOut(key: String, n_events: Long, dw: Option[Double])
-
-  /**
-   * Streaming Durbin–Watson monitor per key — the live twin of
-   * [[graft.ops.Temporal.durbinWatson]], completing the
-   * serial-correlation corner of the monitor family
-   * ([[streamingCusum]] tracks level vs a target,
-   * [[streamingPageHinkley]] drift vs the running mean; DW watches the
-   * SIGN PATTERN — momentum or over-correction — of the residuals).
-   * State per key is five integers: n, Σx, Σx², Σ(Δx)² and the last
-   * value (`valueCol` integral — the batch op's cents contract), so
-   * the fold is EXACT and the emitted statistic reproduces the batch
-   * operator's double arithmetic operation-for-operation: parity is
-   * bit-for-bit, not tolerance (spec-checked). Same ordering contract
-   * as [[streamingCusum]]: in-batch events sorted, across batches the
-   * source must be time-ordered per key. Keys below `minN` or with
-   * zero variance emit a null statistic, like the batch op.
-   *
-   * (Long Σx² bounds the per-key stream at ~10⁸ events of 10⁵-cent
-   * values — beyond that, re-baseline the key or scale the units; the
-   * batch op's decimal(38,0) has no such bound.)
-   */
-  def streamingDurbinWatson(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, valueCol: String, idCol: String,
-      minN: Int = 8, stateTtl: Option[String] = None): Dataset[DwOut] = {
-    import spark.implicits._
-    require(minN >= 2, "minN must be >= 2")
-    // the batch op rounds via Spark's decimal HALF_UP — mirror it
-    // exactly (the streamingPageHinkley bit-parity convention)
-    def round6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    events
-      .filter(col(valueCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).cast("long").as("event_id"),
-        col(valueCol).cast("long").as("x"))
-      .as[DwEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[DwState, DwOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (key: String, evs: Iterator[DwEv], state: GroupState[DwState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = evs.toArray.sortBy(e => (e.ts_us, e.event_id))
-            val init = state.getOption
-              .getOrElse(DwState(0L, 0L, 0L, 0L, 0L, hasLast = false))
-            val folded = sorted.foldLeft(init) { (st, e) =>
-              val d = e.x - st.last
-              DwState(st.n + 1, st.s + e.x, st.ss + e.x * e.x,
-                if (st.hasLast) st.num + d * d else st.num,
-                e.x, hasLast = true)
-            }
-            state.update(folded)
-            stateTtl.foreach(state.setTimeoutDuration)
-            // mirror the batch op's exact double chain:
-            // den = max(ssD − sD·sD/n, 0); dw = numD/den
-            val sD = folded.s.toDouble
-            val den = math.max(folded.ss.toDouble - sD * sD / folded.n, 0.0)
-            val dw =
-              if (folded.n >= minN && den > 0)
-                Some(round6(folded.num.toDouble / den))
-              else None
-            Iterator.single(DwOut(key, folded.n, dw))
-          }
-      }
-  }
-
-  final case class PhEv(key: String, ts_us: Long, event_id: Long, v: Double)
-  final case class PhState(n: Long, sV: Double, sA: Double, sB: Double,
-      minM: Double)
-  final case class PhOut(key: String, n_events: Long, run_mean: Double,
-      ph_stat: Double, alarm: Boolean)
-
-  /**
-   * Streaming Page–Hinkley drift test per key — the live twin of
-   * [[graft.ops.Temporal.pageHinkley]], completing the self-baselined
-   * end of the monitor family ([[streamingCusum]] needs a reference
-   * `target`; PH baselines against the series' own running mean).
-   * State per key is FOUR doubles + a count: the cumulative value sum
-   * (for the running mean), the two prefix sums whose difference is
-   * mₜ — kept SEPARATE, mirroring the batch operator's
-   * `sum(v−δ) − sum(mean)` prefix-sum identity so the fold reproduces
-   * Spark's left-folded running-frame arithmetic operation-for-
-   * operation — and the running minimum of m. Emissions match the
-   * batch operator's last row per key bit-for-bit (spec-checked),
-   * including the decimal-string HALF_UP 6-dp round. Same ordering
-   * contract as [[streamingCusum]]: in-batch events are sorted, across
-   * batches the source must be time-ordered per key.
-   */
-  def streamingPageHinkley(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, valueCol: String, idCol: String,
-      delta: Double, lambda: Double,
-      stateTtl: Option[String] = None): Dataset[PhOut] = {
-    import spark.implicits._
-    require(delta >= 0, "delta must be >= 0")
-    require(lambda > 0, "lambda must be > 0")
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    events
-      .filter(col(valueCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).cast("long").as("event_id"),
-        col(valueCol).cast("double").as("v"))
-      .as[PhEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[PhState, PhOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (key: String, evs: Iterator[PhEv], state: GroupState[PhState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = evs.toArray.sortBy(e => (e.ts_us, e.event_id))
-            val init = state.getOption
-              .getOrElse(PhState(0L, 0.0, 0.0, 0.0, Double.MaxValue))
-            val folded = sorted.foldLeft(init) { (s, e) =>
-              val n = s.n + 1
-              val sV = s.sV + e.v
-              val sA = s.sA + (e.v - delta)
-              val sB = s.sB + sV / n
-              val m = sA - sB
-              PhState(n, sV, sA, sB, math.min(s.minM, m))
-            }
-            state.update(folded)
-            stateTtl.foreach(state.setTimeoutDuration)
-            val ph = r6((folded.sA - folded.sB) - folded.minM)
-            Iterator.single(PhOut(key, folded.n, r6(folded.sV / folded.n),
-              ph, ph > lambda))
-          }
-      }
-  }
-
-  final case class SprtEv(key: String, ts_us: Long, event_id: Long,
-      x: Boolean)
-  final case class SprtState(n: Long, pos: Long, decided: Boolean,
-      nDec: Long, llrDec: Double, label: String)
-  final case class SprtOut(key: String, n_total: Long, n_decision: Long,
-      llr: Double, decision: String)
-
-  /**
-   * Streaming Wald SPRT per key — the live twin of
-   * [[graft.ops.Experiment.sprt]], and the op the TEST WAS INVENTED
-   * FOR: monitor the experiment as exposures arrive and stop the
-   * moment the boundary is crossed instead of re-reading history every
-   * night. State per key is two counts + the frozen decision (a
-   * decision, once made, never unmakes — later data updates n_total
-   * only, exactly like the batch operator's first-crossing semantics).
-   * The LLR is pos·c1 + neg·c0 with JVM-computed constants, so
-   * emissions match the batch rows BIT-FOR-BIT including the 6-dp
-   * round — integer counts times shared literals, no float fold at
-   * all. Same ordering contract as the other monitors: in-batch events
-   * are sorted, across batches the source is time-ordered per key.
-   */
-  def streamingSprt(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, outcomeCol: String, idCol: String,
-      p0: Double, p1: Double, alpha: Double = 0.05, beta: Double = 0.05,
-      stateTtl: Option[String] = None): Dataset[SprtOut] = {
-    import spark.implicits._
-    val (c1, c0) = graft.ops.Experiment.sprtLlrConstants(p0, p1)
-    val (lo, hi) = graft.ops.Experiment.sprtBounds(alpha, beta)
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    events
-      .filter(col(tsCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).cast("long").as("event_id"),
-        coalesce(col(outcomeCol).cast("boolean"), lit(false)).as("x"))
-      .as[SprtEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[SprtState, SprtOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (key: String, evs: Iterator[SprtEv], state: GroupState[SprtState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = evs.toArray.sortBy(e => (e.ts_us, e.event_id))
-            val init = state.getOption
-              .getOrElse(SprtState(0L, 0L, false, 0L, 0.0, "continue"))
-            val folded = sorted.foldLeft(init) { (s, e) =>
-              val n = s.n + 1
-              val pos = s.pos + (if (e.x) 1L else 0L)
-              if (s.decided) s.copy(n = n, pos = pos)
-              else {
-                val llr = pos * c1 + (n - pos) * c0
-                if (llr >= hi) SprtState(n, pos, true, n, llr, "accept_h1")
-                else if (llr <= lo) SprtState(n, pos, true, n, llr, "accept_h0")
-                else SprtState(n, pos, false, n, llr, "continue")
-              }
-            }
-            state.update(folded)
-            stateTtl.foreach(state.setTimeoutDuration)
-            Iterator.single(SprtOut(key, folded.n, folded.nDec,
-              r6(folded.llrDec), folded.label))
-          }
-      }
-  }
-
-  final case class MsprtEv(key: String, ts_us: Long, event_id: Long,
-      v: Double)
-  final case class MsprtState(n: Long, s: Double, mx: Double,
-      decided: Boolean, nDec: Long, mxDec: Double)
-  final case class MsprtOut(key: String, n_total: Long, n_decision: Long,
-      log_lambda: Double, p_always_valid: Double, decision: String)
-
-  /**
-   * Streaming mixture SPRT per key — the live twin of
-   * [[graft.ops.Experiment.msprt]], and THE operator invented for
-   * continuous monitoring (the always-valid p-value process is what
-   * makes peeking at every micro-batch legal; a streaming deployment
-   * that only had [[streamingSprt]]'s point alternative was the gap).
-   * State per key is three scalars — n, S_n = Σ(x − μ0), and the
-   * running max of ln Λ — plus the frozen first-crossing marker (a
-   * rejection, once made, never unmakes; later data advances n_total
-   * only, the batch first-crossing semantics).
-   *
-   * Parity: the fold replays the batch operator's EXACT op shapes —
-   * S_n is the same in-order double accumulation the batch running
-   * window computes, ln Λ = 0.5·ln(σ²/(σ²+n·τ²)) + (τ²·S·S)/(2σ²·(σ²+n·τ²))
-   * with identical literal parenthesization, the verdict compares
-   * 6-dp-rounded running max against the same JVM bound — so
-   * emissions at the final micro-batch equal the batch first-crossing
-   * rows bit-for-bit on any batch split (spec-checked; both sides use
-   * one JVM's libm for ln/exp).
-   */
-  def streamingMsprt(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, valueCol: String, idCol: String,
-      mu0: Double, sigma: Double, tau: Double, alpha: Double = 0.05,
-      stateTtl: Option[String] = None): Dataset[MsprtOut] = {
-    require(sigma > 0 && tau > 0, "sigma and tau must be > 0")
-    require(alpha > 0 && alpha < 1, "alpha in (0,1)")
-    import spark.implicits._
-    val s2 = sigma * sigma
-    val t2 = tau * tau
-    val bound = math.log(1.0 / alpha)
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    events
-      .filter(col(tsCol).isNotNull && col(valueCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).cast("long").as("event_id"),
-        col(valueCol).cast("double").as("v"))
-      .as[MsprtEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[MsprtState, MsprtOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (key: String, evs: Iterator[MsprtEv], state: GroupState[MsprtState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = evs.toArray.sortBy(e => (e.ts_us, e.event_id))
-            val init = state.getOption
-              .getOrElse(MsprtState(0L, 0.0, Double.NegativeInfinity,
-                false, 0L, 0.0))
-            val folded = sorted.foldLeft(init) { (st, e) =>
-              val n = st.n + 1
-              val s = st.s + (e.v - mu0)
-              // batch op shapes verbatim: denom = σ² + i·τ² (i as
-              // double), 0.5·ln(σ²/denom) + (τ²·S·S)/(2.0·σ²·denom)
-              val denom = s2 + n.toDouble * t2
-              val ln = 0.5 * math.log(s2 / denom) +
-                (t2 * s * s) / (2.0 * s2 * denom)
-              val mx = math.max(st.mx, ln)
-              if (st.decided) st.copy(n = n, s = s, mx = mx)
-              else if (r6(mx) >= bound)
-                MsprtState(n, s, mx, true, n, mx)
-              else MsprtState(n, s, mx, false, n, mx)
-            }
-            state.update(folded)
-            stateTtl.foreach(state.setTimeoutDuration)
-            val mxOut = if (folded.decided) folded.mxDec else folded.mx
-            Iterator.single(MsprtOut(key, folded.n, folded.nDec,
-              r6(mxOut), r6(math.min(1.0, math.exp(-mxOut))),
-              if (folded.decided) "reject" else "continue"))
-          }
-      }
-  }
-
-  final case class SrmSeqEv(key: String, ts_us: Long, event_id: Long,
-      hit: Boolean)
-  final case class SrmSeqState(n: Long, pos: Long, mx: Double,
-      decided: Boolean, nDec: Long, mxDec: Double)
-  final case class SrmSeqOut(arm: String, share: Double, n_total: Long,
-      n_decision: Long, log_lambda: Double, p_always_valid: Double,
-      decision: String)
-
-  /**
-   * Streaming sequential SRM — the live twin of
-   * [[graft.ops.Experiment.srmSequential]], watching the assignment
-   * ramp as exposures arrive: per DECLARED arm, the mSPRT fold over
-   * the indicator 1{arm = a} with μ0 = declared share, σ² = q(1−q).
-   * Each assignment row fans out to all |arms| monitors through a
-   * stream-static cross join with the tiny declared table; per-monitor
-   * state is the [[streamingMsprt]] three-scalar fold with S_n kept as
-   * the INTEGER hit count (S = pos − n·q computed fresh each step —
-   * count × literal, bit-identical to the batch window's running sum).
-   * Emissions at the final micro-batch equal the batch first-crossing
-   * rows bit-for-bit on any batch split (spec-checked).
-   */
-  def streamingSrmSequential(spark: SparkSession, events: DataFrame,
-      armCol: String, tsCol: String, idCol: String,
-      expected: Seq[(String, Double)], tau: Double, alpha: Double = 0.05,
-      stateTtl: Option[String] = None): Dataset[SrmSeqOut] = {
-    require(expected.size >= 2, "need >= 2 declared arms")
-    require(expected.forall(_._2 > 0), "shares must be positive")
-    require(expected.map(_._1).distinct.size == expected.size,
-      "arm names must be distinct")
-    require(tau > 0 && alpha > 0 && alpha < 1, "tau > 0, alpha in (0,1)")
-    import spark.implicits._
-    val total = expected.map(_._2).sum
-    val shares = expected.map { case (a, w) => a -> (w / total) }.toMap
-    val t2 = tau * tau
-    val bound = math.log(1.0 / alpha)
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    val declared = expected.map(_._1).toDF("__mon")
-    events
-      .filter(col(tsCol).isNotNull &&
-        col(armCol).isin(expected.map(_._1): _*))
-      .select(col(armCol).cast("string").as("__obs"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).cast("long").as("event_id"))
-      .crossJoin(broadcast(declared))
-      .select(col("__mon").as("key"), col("ts_us"), col("event_id"),
-        (col("__obs") === col("__mon")).as("hit"))
-      .as[SrmSeqEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[SrmSeqState, SrmSeqOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (key: String, evs: Iterator[SrmSeqEv],
-            state: GroupState[SrmSeqState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val q = shares(key)
-            val s2 = q * (1.0 - q)
-            val sorted = evs.toArray.sortBy(e => (e.ts_us, e.event_id))
-            val init = state.getOption
-              .getOrElse(SrmSeqState(0L, 0L, Double.NegativeInfinity,
-                false, 0L, 0.0))
-            val folded = sorted.foldLeft(init) { (st, e) =>
-              val n = st.n + 1
-              val pos = st.pos + (if (e.hit) 1L else 0L)
-              // batch op shapes: S = pos − i·q (int × literal), then
-              // the msprt mixture LLR with the per-arm σ²
-              val s = pos - n.toDouble * q
-              val denom = s2 + n.toDouble * t2
-              val ln = 0.5 * math.log(s2 / denom) +
-                (t2 * s * s) / (2.0 * s2 * denom)
-              val mx = math.max(st.mx, ln)
-              if (st.decided) st.copy(n = n, pos = pos, mx = mx)
-              else if (r6(mx) >= bound) SrmSeqState(n, pos, mx, true, n, mx)
-              else SrmSeqState(n, pos, mx, false, n, mx)
-            }
-            state.update(folded)
-            stateTtl.foreach(state.setTimeoutDuration)
-            val mxOut = if (folded.decided) folded.mxDec else folded.mx
-            Iterator.single(SrmSeqOut(key, r6(q), folded.n, folded.nDec,
-              r6(mxOut), r6(math.min(1.0, math.exp(-mxOut))),
-              if (folded.decided) "reject" else "continue"))
-          }
-      }
-  }
-
-  final case class CpEv(key: String, ts_us: Long, event_id: Long, v: Double)
-  final case class CpState(buf: Seq[(Long, Long, Double)],
-      emittedTs: Long, emittedId: Long)
-  final case class CpOut(key: String, ts_us: Long, event_id: Long,
-      mean_before: Double, mean_after: Double, score: Option[Double],
-      flat_shift: Boolean, is_changepoint: Boolean)
-
-  /**
-   * Streaming mean-shift changepoint detector per key — the live twin
-   * of [[graft.ops.Temporal.meanShiftChangepoints]]: a point is scored
-   * once `w` points exist on BOTH sides (|Δmean| over the pooled sd of
-   * the two flanking windows), so the stream must buffer a LOOKAHEAD —
-   * state per key is the last 2w (ts, id, value) triples plus the
-   * emitted-horizon marker (BOUNDED; nothing grows with history). Each
-   * micro-batch merges its events in (ts, event_id) order and emits
-   * every newly-completed center exactly once (Update semantics, but
-   * each center appears in exactly one batch's output — the
-   * emitted-horizon marker makes re-emission impossible).
-   *
-   * Arithmetic mirrors the batch operator's aggregates operation-for-
-   * operation — ordered sum/count for the means, Welford's recurrence
-   * for `var_samp` (Spark's CentralMomentAgg), Spark's decimal-string
-   * HALF_UP rounding — so emissions equal the batch rows BIT-FOR-BIT
-   * (spec-checked). Caveat shared with every lookahead monitor: the
-   * last w−1 points of the stream stay unscored until more data
-   * arrives, exactly as the batch operator never scores them.
-   */
-  def streamingChangepoints(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, valueCol: String, idCol: String,
-      w: Int, threshold: Double,
-      stateTtl: Option[String] = None): Dataset[CpOut] = {
-    import spark.implicits._
-    require(w >= 2, "w must be >= 2 (sample variance needs 2 points)")
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    // Spark's var_samp is CentralMomentAgg: Welford in frame order
-    def varSamp(xs: Seq[Double]): Double = {
-      var n = 0.0; var avg = 0.0; var m2 = 0.0
-      xs.foreach { v =>
-        n += 1.0
-        val delta = v - avg
-        avg += delta / n
-        m2 += delta * (v - avg)
-      }
-      m2 / (n - 1.0)
-    }
-    def mean(xs: Seq[Double]): Double = xs.sum / xs.length
-    // null values still occupy FRAME POSITIONS in the batch operator's
-    // row-based windows (the count filter then drops any center whose
-    // flank contains one) — encode them as NaN so the buffer preserves
-    // positions and the NaN check reproduces the count-< w drop exactly
-    events
-      .filter(col(tsCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).cast("long").as("event_id"),
-        coalesce(col(valueCol).cast("double"), lit(Double.NaN)).as("v"))
-      .as[CpEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CpState, CpOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (key: String, evs: Iterator[CpEv], state: GroupState[CpState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val st = state.getOption.getOrElse(CpState(Seq.empty,
-              Long.MinValue, Long.MinValue))
-            val merged = (st.buf ++ evs.map(e => (e.ts_us, e.event_id, e.v)))
-              .sortBy(t => (t._1, t._2))
-            // centers with w points strictly before AND w from them on
-            val outs = (w until (merged.length - w + 1)).iterator.flatMap { i =>
-              val c = merged(i)
-              val before = merged.slice(i - w, i).map(_._3)
-              val after = merged.slice(i, i + w).map(_._3)
-              if (before.exists(_.isNaN) || after.exists(_.isNaN)) None
-              else {
-                val pooled = math.sqrt((varSamp(before) + varSamp(after)) / 2)
-                val delta = math.abs(mean(after) - mean(before))
-                val score = if (pooled > 0) Some(r6(delta / pooled)) else None
-                val flat = pooled == 0 && delta > 0
-                Some(CpOut(key, c._1, c._2, r6(mean(before)), r6(mean(after)),
-                  score, flat, score.exists(_ > threshold) || flat))
-              }
-            }.filter(o => o.ts_us > st.emittedTs ||
-              (o.ts_us == st.emittedTs && o.event_id > st.emittedId)).toVector
-            val horizon = if (outs.isEmpty) (st.emittedTs, st.emittedId)
-              else (outs.last.ts_us, outs.last.event_id)
-            state.update(CpState(merged.takeRight(2 * w),
-              horizon._1, horizon._2))
-            stateTtl.foreach(state.setTimeoutDuration)
-            outs.iterator
-          }
-      }
-  }
-
-  final case class AttrEv(key: String, ts_us: Long, side: Int,
-      ch: String, tb: Long)
-  final case class AttrState(pending: Seq[(Long, String, Long)])
-  final case class AttrOut(key: String, conv_ts_us: Long, channel: String,
-      touch_ts_us: Long, event_id: Long, touch_rank: Long, n_touches: Long,
-      credit_first: Double, credit_last: Double, credit_linear: Double,
-      credit_position: Double, credit_time_decay: Option[Double])
-
-  /**
-   * Streaming multi-touch attribution per key — the live twin of
-   * [[graft.ops.Temporal.attribution]], and the operator a marketing
-   * pipeline actually runs CONTINUOUSLY (batch re-credits the whole
-   * history nightly; the stream credits each journey the moment its
-   * conversion lands). State per key is the touches since the last
-   * conversion — the natural bounded formulation: with `lookbackSec`
-   * set, touches older than the lookback horizon are evicted at every
-   * batch (they can never earn credit: any future conversion is newer
-   * still), so state is O(touch rate × lookback), independent of
-   * history.
-   *
-   * Semantics mirror the batch operator exactly: a touch credits the
-   * EARLIEST conversion at-or-after it (a conversion FLUSHES the
-   * pending buffer as one journey), a same-instant touch belongs to
-   * that conversion (in-batch events sort touches before conversions
-   * at equal ts), lookback-expired touches are dropped from the
-   * journey BEFORE ranks are assigned, and all credit models
-   * (first/last/linear/position, plus time-decay when `halfLifeSec`
-   * is set) use the same arithmetic and Spark's decimal-string
-   * HALF_UP 6-dp round. Parity contract (spec-checked): the four
-   * position models are exact; `credit_time_decay` agrees at the 6-dp
-   * rounder (≤ 1e-6) — its batch denominator is a window-frame double
-   * sum whose fold order Spark does not pin, so the last ulp can land
-   * differently ON a rounding tie. Each journey is emitted exactly
-   * once. Ordering
-   * contract as the other monitors: in-batch events are sorted;
-   * across batches the source must deliver a key's events in time
-   * order. Touches after the last conversion stay pending (the batch
-   * operator never credits them either) until lookback/TTL eviction.
-   */
-  def streamingAttribution(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, typeCol: String,
-      conversionType: String, channelCol: String, idCol: String,
-      lookbackSec: Option[Long] = None, halfLifeSec: Option[Long] = None,
-      stateTtl: Option[String] = None): Dataset[AttrOut] = {
-    import spark.implicits._
-    halfLifeSec.foreach(hl => require(hl >= 1, "halfLifeSec must be >= 1"))
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    events
-      // typeCol.isNotNull: batch attribution drops null-type rows on BOTH
-      // sides (===/=!= are null-unsafe, so a null type is neither a
-      // conversion nor a touch); without this filter the when/otherwise
-      // below would send nulls to the touch branch and break parity
-      .filter(col(tsCol).isNotNull && col(typeCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        when(col(typeCol) === conversionType, 0).otherwise(1).as("side"),
-        when(col(typeCol) =!= conversionType,
-          col(channelCol).cast("string")).as("ch"),
-        col(idCol).cast("long").as("tb"))
-      .as[AttrEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[AttrState, AttrOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (key: String, evs: Iterator[AttrEv], state: GroupState[AttrState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            // touches sort BEFORE conversions at the same instant, so a
-            // same-instant touch is already pending when the flush runs
-            val sorted = evs.toArray.sortBy(e => (e.ts_us, -e.side, e.tb))
-            var pending = state.getOption.map(_.pending.toVector)
-              .getOrElse(Vector.empty)
-            val out = Vector.newBuilder[AttrOut]
-            var maxTs = Long.MinValue
-            sorted.foreach { e =>
-              maxTs = math.max(maxTs, e.ts_us)
-              if (e.side == 1) pending :+= ((e.ts_us, e.ch, e.tb))
-              else {
-                val journey = (lookbackSec match {
-                  case Some(lb) =>
-                    pending.filter(t => e.ts_us - t._1 <= lb * 1000000L)
-                  case None => pending
-                }).sortBy(t => (t._1, t._3))
-                val n = journey.length
-                val decayDen = halfLifeSec.map { hl =>
-                  journey.foldLeft(0.0) { (acc, t) =>
-                    acc + math.pow(0.5,
-                      (e.ts_us - t._1).toDouble / 1000000.0 / hl)
-                  }
-                }
-                journey.zipWithIndex.foreach { case ((tts, ch, tb), i) =>
-                  val rk = i + 1
-                  val positional =
-                    if (n == 1) 1.0
-                    else if (n == 2) 0.5
-                    else if (rk == 1 || rk == n) 0.4
-                    else 0.2 / (n - 2)
-                  val decay = (halfLifeSec, decayDen) match {
-                    case (Some(hl), Some(den)) => Some(r6(math.pow(0.5,
-                      (e.ts_us - tts).toDouble / 1000000.0 / hl) / den))
-                    case _ => None
-                  }
-                  out += AttrOut(key, e.ts_us, ch, tts, tb, rk.toLong,
-                    n.toLong,
-                    if (rk == 1) 1.0 else 0.0,
-                    if (rk == n) 1.0 else 0.0,
-                    r6(1.0 / n), r6(positional), decay)
-                }
-                pending = Vector.empty
-              }
-            }
-            // bounded state: expire touches beyond the lookback horizon
-            val trimmed = lookbackSec match {
-              case Some(lb) if maxTs > Long.MinValue =>
-                pending.filter(t => maxTs - t._1 <= lb * 1000000L)
-              case _ => pending
-            }
-            state.update(AttrState(trimmed))
-            stateTtl.foreach(state.setTimeoutDuration)
-            out.result().iterator
-          }
-      }
-  }
-
-  final case class MkScEv(key: String, ts_us: Long, tb: Long, st: String)
-  final case class MkScState(lastState: String, lastTs: Long, lastTb: Long)
-  // ts_us/tb are the FROM event's (the batch operator's lead-window row
-  // is the from-event's row)
-  final case class MkScOut(key: String, ts_us: Long, tb: Long,
-      from_state: String, to_state: String, p: Option[Double],
-      is_improbable: Boolean)
-
-  /**
-   * Streaming journey-anomaly scorer — the live twin of
-   * [[graft.ops.Temporal.markovScoreHandoffs]]: each arriving event
-   * closes a handoff from the key's previous state and scores it
-   * against a FROZEN [[graft.ops.Temporal.markovTransitions]] model
-   * (fit offline, refreshed offline — the winsorizeFit/seasonalProfile
-   * frozen-artifact pattern). The model is state²-grain, so it ships
-   * as a closure map; per-key state is ONE string. A handoff the model
-   * never saw scores null and flags (unseen IS improbable — the batch
-   * contract). Null STATES follow the batch semantics exactly: a
-   * null-state event OCCUPIES the handoff slot (both the handoff into
-   * it and out of it are dropped, but the chain does not skip over
-   * it). Emissions equal the batch rows exactly (spec-checked), each
-   * handoff emitted once; the usual ordering contract applies, and
-   * `tsCol` must be non-null (the ordered-source requirement).
-   */
-  def streamingMarkovScore(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, stateCol: String, idCol: String,
-      model: DataFrame, minP: Double,
-      stateTtl: Option[String] = None): Dataset[MkScOut] = {
-    import spark.implicits._
-    require(minP > 0 && minP < 1, "minP in (0,1)")
-    // state²-grain fit artifact -> bounded driver collect (the
-    // sanctioned fit-statistic shape)
-    val probs: Map[(String, String), Double] = model
-      .select(col("from_state").cast("string"),
-        col("to_state").cast("string"), col("p").cast("double"))
-      .collect().map(r => (r.getString(0), r.getString(1)) ->
-        r.getDouble(2)).toMap
-    events
-      .filter(col(tsCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).cast("long").as("tb"),
-        col(stateCol).cast("string").as("st"))
-      .as[MkScEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[MkScState, MkScOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (key: String, evs: Iterator[MkScEv], state: GroupState[MkScState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = evs.toArray.sortBy(e => (e.ts_us, e.tb))
-            var last = state.getOption
-            val out = Vector.newBuilder[MkScOut]
-            sorted.foreach { e =>
-              // a null state occupies the slot but emits no handoff on
-              // either side — the batch lead-window semantics
-              last.foreach { prev =>
-                if (prev.lastState != null && e.st != null) {
-                  val p = probs.get((prev.lastState, e.st))
-                  out += MkScOut(key, prev.lastTs, prev.lastTb,
-                    prev.lastState, e.st, p, p.forall(_ < minP))
-                }
-              }
-              last = Some(MkScState(e.st, e.ts_us, e.tb))
-            }
-            last.foreach(state.update)
-            stateTtl.foreach(state.setTimeoutDuration)
-            out.result().iterator
-          }
-      }
-  }
-
-  final case class GapEv(key: String, ts_us: Long, tb: Long)
-  final case class GapState(lastTs: Long, lastTb: Long)
-  final case class GapOut(key: String, prev_ts_us: Long, ts_us: Long,
-      gap_sec: Long)
-
-  /**
-   * Streaming cadence-gap monitor per key — the live twin of
-   * [[graft.ops.Temporal.gapReport]], and the monitor you actually want
-   * LIVE: the batch form can only report yesterday's outage; the
-   * stream emits the violation the moment the feed's next event
-   * reveals it. State per key is ONE (ts, tiebreak) pair — the
-   * smallest state of any twin in this file. In-batch events sort on
-   * (ts, tiebreak); each consecutive gap over `toleranceSec` emits one
-   * violation row, exactly the batch operator's rows (spec-checked,
-   * whole or split across micro-batches). Note the inherent
-   * half-silence both forms share: a feed that stops and never
-   * resumes emits nothing — pair with a freshness check
-   * ([[graft.ops.Expect.freshness]]) for the open-ended case, or a
-   * stateTtl whose timeout you alert on.
-   */
-  def streamingGapReport(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, idCol: String, toleranceSec: Long,
-      stateTtl: Option[String] = None): Dataset[GapOut] = {
-    import spark.implicits._
-    require(toleranceSec >= 1, "toleranceSec must be >= 1")
-    events
-      .filter(col(tsCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).cast("long").as("tb"))
-      .as[GapEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[GapState, GapOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (key: String, evs: Iterator[GapEv], state: GroupState[GapState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = evs.toArray.sortBy(e => (e.ts_us, e.tb))
-            var last = state.getOption
-            val out = Vector.newBuilder[GapOut]
-            sorted.foreach { e =>
-              last.foreach { p =>
-                // the batch form divides in double then truncates —
-                // replay the same arithmetic
-                val gap = ((e.ts_us - p.lastTs).toDouble / 1000000.0).toLong
-                if (gap > toleranceSec)
-                  out += GapOut(key, p.lastTs, e.ts_us, gap)
-              }
-              last = Some(GapState(e.ts_us, e.tb))
-            }
-            last.foreach(state.update)
-            stateTtl.foreach(state.setTimeoutDuration)
-            out.result().iterator
-          }
-      }
-  }
-
-  final case class CrEv(key: String, bucket: Long, d: Double)
-  final case class CrState(buf: Seq[(Long, Double)])
-  final case class CrOut(key: String, n_buckets: Long, n_demands: Long,
-      z_hat: Option[Double], p_hat: Option[Double],
-      forecast: Option[Double])
-
-  /**
-   * Streaming Croston intermittent-demand monitor per key — the live
-   * twin of [[graft.ops.Temporal.croston]]: state per key is the last
-   * `window` (bucket, demand) pairs (BOUNDED — the forecast-window
-   * grain), merged in bucket order each micro-batch; the key's current
-   * ẑ/p̂/forecast re-emits per batch (Update semantics, latest wins —
-   * the [[streamingMannKendall]] contract). Buckets are LONGS (epoch
-   * days / grid indices) and must be unique per key (the regular-grid
-   * contract the batch operator shares). The two SES folds replay the
-   * batch operator's `aggregate` expression operation-for-operation,
-   * so once the stream has seen a key's trailing window the emission
-   * equals the batch row at that bucket BIT-FOR-BIT (spec-checked).
-   */
-  def streamingCroston(spark: SparkSession, events: DataFrame,
-      keyCol: String, bucketCol: String, valueCol: String,
-      alpha: Double, window: Int,
-      stateTtl: Option[String] = None,
-      sba: Boolean = false): Dataset[CrOut] = {
-    import spark.implicits._
-    require(alpha > 0 && alpha <= 1, "alpha must be in (0, 1]")
-    require(window >= 1, "window must be >= 1")
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    def ses(xs: Seq[Double]): Double =
-      xs.tail.foldLeft(xs.head)((acc, x) => alpha * x + (1.0 - alpha) * acc)
-    events
-      .filter(col(bucketCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        col(bucketCol).cast("long").as("bucket"),
-        coalesce(col(valueCol).cast("double"), lit(0.0)).as("d"))
-      .as[CrEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CrState, CrOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (key: String, evs: Iterator[CrEv], state: GroupState[CrState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val merged = (state.getOption.map(_.buf).getOrElse(Seq.empty) ++
-              evs.map(e => (e.bucket, e.d))).sortBy(_._1).takeRight(window)
-            state.update(CrState(merged))
-            stateTtl.foreach(state.setTimeoutDuration)
-            val pos = merged.zipWithIndex.collect {
-              case ((_, d), i) if d > 0 => (i + 1, d)
-            }
-            if (pos.isEmpty)
-              Iterator.single(CrOut(key, merged.length.toLong, 0L,
-                None, None, None))
-            else {
-              val z = ses(pos.map(_._2))
-              val ivs = pos.map(_._1).zip(0 +: pos.map(_._1).dropRight(1))
-                .map { case (cur, prev) => (cur - prev).toDouble }
-              val p = ses(ivs)
-              // sba: (c * z) / p in that order — the batch twin's
-              // Syntetos-Boylan op shape, so parity stays bit-for-bit
-              val fc = if (sba) (1.0 - alpha / 2) * z / p else z / p
-              Iterator.single(CrOut(key, merged.length.toLong,
-                pos.length.toLong, Some(r6(z)), Some(r6(p)),
-                Some(r6(fc))))
-            }
-          }
-      }
-  }
-
-  final case class MkEv(key: String, ts_us: Long, event_id: Long, v: Double)
-  final case class MkState(buf: Seq[(Long, Long, Double)])
-  final case class MkOut(key: String, n: Long, s: Option[Long],
-      var_s: Option[Double], z: Option[Double], sen_slope: Option[Double])
-
-  /**
-   * Streaming Mann–Kendall trend monitor per key — the live twin of
-   * [[graft.ops.Temporal.mannKendall]]: state per key is the last
-   * `window` (ts, id, value) triples (BOUNDED — the monitor-window
-   * grain, nothing grows with history); each micro-batch merges its
-   * events into the buffer in (ts, event_id) order, keeps the newest
-   * `window`, and re-emits the key's S / tie-corrected Var(S) /
-   * continuity-corrected z / Sen's slope (Update semantics). The math
-   * mirrors the batch operator's expression tree operation-for-
-   * operation (including Spark's decimal-string HALF_UP rounding), so
-   * once the stream has seen a key's full window the emission equals
-   * the batch row BIT-FOR-BIT — spec-checked. Late events older than
-   * the buffer's evicted horizon are dropped by construction (they
-   * would not be in the batch's last-`window` slice either).
-   */
-  def streamingMannKendall(spark: SparkSession, events: DataFrame,
-      keyCol: String, tsCol: String, valueCol: String, idCol: String,
-      window: Int, stateTtl: Option[String] = None): Dataset[MkOut] = {
-    import spark.implicits._
-    require(window >= 2, "window must be >= 2")
-    def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
-    def stats(key: String, xs: Seq[Double]): MkOut = {
-      val n = xs.length
-      if (n < 2) return MkOut(key, n.toLong, None, None, None, None)
-      var s = 0L
-      for (j <- 2 to n; i <- 1 until j) {
-        val d = xs(j - 1) - xs(i - 1)
-        if (d > 0) s += 1 else if (d < 0) s -= 1
-      }
-      val tie = xs.map { v0 =>
-        val c = xs.count(_ == v0).toLong
-        (c - 1L) * (2L * c + 5L)
-      }.sum
-      val varS = (n.toLong * (n - 1) * (2L * n + 5) - tie).toDouble / 18.0
-      val z = if (varS > 0) Some(r6(
-        if (s > 0) (s - 1).toDouble / math.sqrt(varS)
-        else if (s < 0) (s + 1).toDouble / math.sqrt(varS)
-        else 0.0)) else None
-      val slopes = (for (j <- 2 to n; i <- 1 until j)
-        yield (xs(j - 1) - xs(i - 1)) / (j - i).toDouble).sorted
-      val m = slopes.length
-      val sen = if (m % 2 == 1) slopes((m + 1) / 2 - 1)
-        else (slopes(m / 2 - 1) + slopes(m / 2)) / 2.0
-      MkOut(key, n.toLong, Some(s), Some(r6(varS)), z, Some(r6(sen)))
-    }
-    events
-      .filter(col(valueCol).isNotNull && col(tsCol).isNotNull)
-      .select(col(keyCol).cast("string").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"),
-        col(idCol).cast("long").as("event_id"),
-        col(valueCol).cast("double").as("v"))
-      .as[MkEv]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[MkState, MkOut](
-        OutputMode.Update, ttlConf(stateTtl)) {
-        (key: String, evs: Iterator[MkEv], state: GroupState[MkState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val merged = (state.getOption.map(_.buf).getOrElse(Seq.empty) ++
-              evs.map(e => (e.ts_us, e.event_id, e.v)))
-              .sortBy(t => (t._1, t._2)).takeRight(window)
-            state.update(MkState(merged))
-            stateTtl.foreach(state.setTimeoutDuration)
-            Iterator.single(stats(key, merged.map(_._3)))
-          }
-      }
-  }
-
-  /**
-   * Streaming seasonal-baseline anomaly scoring — the live twin of
-   * [[graft.ops.Temporal.seasonalAnomalies]], completing the monitor
-   * family (EWMA/Holt track level, CUSUM accumulates drift, PSI alarms
-   * on a window's distribution; this flags POINT outliers against a
-   * cyclic profile). `profile` is a FROZEN [[graft.ops.Temporal
-   * .seasonalProfile]] computed on a reference period (persist it,
-   * refresh offline — the deployment shape: live traffic scored against
-   * last month's baseline; if the baseline itself drifts, [[
-   * streamingPsi]] is the detector for that).
-   *
-   * Scale/state shape: the clearest bounded-state story possible —
-   * ZERO state. The scoring is one broadcast stream-static join of a
-   * <=24-row profile plus a narrow projection ([[graft.ops.Temporal
-   * .seasonalScore]] verbatim), so the query is append-mode legal, has
-   * no watermark, and a micro-batch's output depends only on its own
-   * rows. Parity with the batch operator is by CONSTRUCTION (same
-   * scoring core) and spec-checked end to end: batch `seasonalAnomalies`
-   * == streaming scored against the batch's own profile, row for row.
-   * Null ts/value rows: a null ts yields a null season and drops at the
-   * inner profile join; a null value scores a null z and never flags —
-   * both exactly the batch behavior (no pre-filter needed: the scoring
-   * is pure column algebra, nothing hits a non-nullable encoder).
-   */
-  def streamingSeasonalAnomalies(events: DataFrame, tsCol: String,
-      valueCol: String, profile: DataFrame, threshold: Double = 3.0,
-      minBucket: Long = 2L, idCols: Seq[String] = Nil): DataFrame =
-    graft.ops.Temporal.seasonalScore(events, tsCol, valueCol, profile,
-      threshold, minBucket, idCols)
-
-  /**
-   * Streaming winsorization against a FROZEN [[graft.stats.Planners
-   * .winsorizeFit]] bounds table — the live clamp gate: fit the
-   * per-group p05/p95 on a reference period offline, persist it, and
-   * clamp arriving metrics with ZERO state (stream-static broadcast
-   * join + narrow projection, append-mode legal — the
-   * [[streamingSeasonalAnomalies]] pattern). Batch parity with
-   * [[graft.stats.Planners.winsorizeApply]] is structural: it IS the
-   * same operator applied to the stream.
-   */
-  def streamingWinsorize(events: DataFrame, bounds: DataFrame,
-      keys: Seq[String], valueCol: String,
-      idCols: Seq[String] = Nil): DataFrame =
-    graft.stats.Planners.winsorizeApply(events, bounds, keys, valueCol,
-      idCols)
-
-  /**
-   * Streaming nearest-centroid classification against a FROZEN
-   * [[graft.ops.Vectors.centroidFit]] artifact, collected to the driver
-   * (labels×dim — a bounded fit table, the sanctioned collect) and
-   * embedded as plan literals: the batch twin's per-id argmax WINDOW is
-   * not append-legal on a stream, so the argmax folds over the literal
-   * centroid list row-locally instead (the seedAssignLiteral precedent —
-   * label count is serving-catalog-sized). Iteration runs in ascending
-   * label order with strict-greater replacement, so ties keep the
-   * smallest label exactly like the batch tie-break; zero-norm scores
-   * enter as −2 exactly like the batch coalesce. Batch parity is
-   * spec-checked row for row.
-   */
-  def streamingClassify(df: DataFrame,
-      centroids: Seq[(Long, Seq[Double])], idCol: String, vecCol: String,
-      labelCol: Option[String] = None): DataFrame = {
-    require(centroids.nonEmpty, "need at least one centroid")
-    import graft.ops.Vectors.{dot, norm}
-    val sorted = centroids.sortBy(_._1)
-    val tv = transform(col(vecCol), x => x.cast("double"))
-    def scoreOf(cv: Seq[Double]): org.apache.spark.sql.Column = {
-      val n = math.sqrt(cv.map(x => x * x).sum)
-      val c = lit(cv.toArray)
-      if (n == 0) lit(-2.0)
-      else coalesce(
-        when(norm(tv) > 0, round(dot(tv, c) / (norm(tv) * lit(n)), 6)),
-        lit(-2.0))
-    }
-    val best = sorted.tail.foldLeft(
-      struct(lit(sorted.head._1).as("l"), scoreOf(sorted.head._2).as("c"))) {
-      case (acc, (lbl, cv)) =>
-        val s = scoreOf(cv)
-        when(s > acc.getField("c"),
-          struct(lit(lbl).as("l"), s.as("c"))).otherwise(acc)
-    }
-    val keep = Seq(col(idCol)) ++
-      labelCol.map(c => col(c).cast("long").as("label")).toSeq
-    df.withColumn("__best", best)
-      .select(keep ++ Seq(
-        col("__best.l").cast("long").as("predicted"),
-        when(col("__best.c") > -2.0, col("__best.c")).as("cos")): _*)
-  }
-
-  final case class BandDoc(doc_id: Long, bkey: String, minhash: Seq[Long])
-  final case class BucketState(members: List[(Long, Seq[Long])])
-  final case class NearDup(doc_a: Long, doc_b: Long, band: Int, jhat: Double)
-
-  /**
-   * Streaming MinHash near-dup detection: the incremental twin of
-   * [[graft.ops.Dedup.minhashLshPairs]] (fastHash family). Per-doc
-   * signatures are a NARROW projection (k `array_min(transform(shingles,
-   * xxhash64(i, _)))` expressions — no shuffle, no state); band keys fold
-   * each band's rows with one xxhash64 exactly like the batch fast path, so
-   * a batch-deduped corpus and the stream agree on which docs collide.
-   * Each (band, bandKey) bucket holds its first-seen `maxBucket` member
-   * signatures in flatMapGroupsWithState; a new arrival is compared against
-   * the bucket members and emits (first-seen id, new id) pairs.
-   *
-   * Single-pass tradeoff (vs the batch operator's exact-Jaccard verify):
-   * the stream cannot revisit full shingle sets, so it verifies with the
-   * standard MinHash ESTIMATE jhat = (matching signature components) / k —
-   * unbiased with sd sqrt(J(1-J)/k); identical docs estimate exactly 1.0.
-   * Buckets at the `maxBucket` cap stop accepting members (the batch
-   * operator's degenerate-boilerplate drop). A pair colliding in several
-   * bands emits once per band — dedup downstream on (doc_a, doc_b).
-   * State is O(buckets x maxBucket x k longs), behind the same
-   * (band, key) shuffle the batch candidate join uses. `stateTtl` adds an
-   * optional processing-time eviction of buckets not touched within the
-   * TTL, bounding state on unbounded production streams (an evicted
-   * bucket's members can no longer be matched — a deliberate recall/state
-   * tradeoff the caller opts into).
-   */
-  def streamingMinhashDedup(spark: SparkSession, docs: DataFrame,
-      textCol: String, idCol: String, n: Int, k: Int, bands: Int,
-      tau: Double, maxBucket: Int = 1000,
-      stateTtl: Option[String] = None): Dataset[NearDup] = {
-    import spark.implicits._
-    requireIntegralId(docs, idCol, "streamingMinhashDedup")
-    require(k % bands == 0, "bands must divide k")
-    val rows = k / bands
-    // ONE codegen'd pass per doc ([[graft.functions.MinHash]]) — the k
-    // interpreted array_min/transform lambdas this replaces are
-    // bit-identical but evaluated per element outside codegen; the cheap
-    // token-count filter drops < n-token docs (no shingles, batch parity)
-    // without evaluating the signature twice
-    val withSigs = docs
-      .filter(size(split(col(textCol), "\\s+")) >= n)
-      .select(col(idCol).cast("long").as("doc_id"),
-        graft.functions.MinHash.minhashXx(col(textCol), n, k).as("minhash"))
-    val bandKeys = (0 until bands).map { b =>
-      val cols = (b * rows + 1 to (b + 1) * rows).map(i => col("minhash")(i - 1))
-      struct(lit(b).as("band"), xxhash64(cols: _*).cast("string").as("sig"))
-    }
-    withSigs
-      .select(col("doc_id"), col("minhash"), explode(array(bandKeys: _*)).as("bk"))
-      .select(col("doc_id"),
-        concat_ws(":", col("bk.band"), col("bk.sig")).as("bkey"), col("minhash"))
-      .as[BandDoc]
-      .groupByKey(_.bkey)
-      .flatMapGroupsWithState[BucketState, NearDup](
-        OutputMode.Append, ttlConf(stateTtl)) {
-        (bkey: String, ds: Iterator[BandDoc], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val band = bkey.takeWhile(_ != ':').toInt
-            var members = state.getOption.getOrElse(BucketState(Nil)).members
-            val out = scala.collection.mutable.ListBuffer.empty[NearDup]
-            ds.foreach { d =>
-              if (!members.exists(_._1 == d.doc_id) && members.size < maxBucket) {
-                members.foreach { case (mid, msig) =>
-                  val same = msig.iterator.zip(d.minhash.iterator).count { case (a, b) => a == b }
-                  val jhat = same.toDouble / k
-                  if (jhat >= tau) {
-                    val (a, b) = if (mid < d.doc_id) (mid, d.doc_id) else (d.doc_id, mid)
-                    out += NearDup(a, b, band, math.round(jhat * 1e6) / 1e6)
-                  }
-                }
-                members = (d.doc_id, d.minhash) :: members
-              }
-            }
-            state.update(BucketState(members))
-            stateTtl.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
-  }
-
-  final case class BandVec(vec_id: Long, bkey: String, embedding: Seq[Float])
-  final case class VecBucketState(members: List[(Long, Seq[Float])])
-  final case class EmbedDup(id_a: Long, id_b: Long, band: Int, cos: Double)
-
-  /**
-   * Streaming embedding-cosine near-dup: the incremental twin of
-   * [[graft.ops.Vectors.cosineDupPairs]] (bucketed mode). Band buckets use
-   * the SAME deterministic `planePairs` hyperplane family as the batch
-   * operator, so batch and stream agree on which vectors collide. Unlike
-   * the shingle-based stream, verification here is EXACT: an embedding is
-   * compact enough to keep in state, so each bucket holds its first-seen
-   * `maxBucket` member vectors and a new arrival is verified with the same
-   * left-to-right double-precision cosine the batch/codegen path computes.
-   *
-   * Cap semantics differ from batch under overflow (inherent to one pass):
-   * the batch window DROPS an overfull bucket entirely; the stream FREEZES
-   * membership at `maxBucket` first-seen vectors — both bound fan-out, and
-   * below the cap the two emit identical pairs (spec-checked). A pair
-   * colliding in several bands emits once per band — dedup downstream.
-   * `stateTtl`: optional processing-time bucket eviction, as in
-   * [[streamingMinhashDedup]].
-   */
-  def streamingCosineDedup(spark: SparkSession, vecs: DataFrame,
-      idCol: String, vecCol: String, tau: Double,
-      nBands: Int = 20, nPlanes: Int = 4, dim: Int = 64,
-      maxBucket: Int = 1000, seed: Long = 42L,
-      stateTtl: Option[String] = None): Dataset[EmbedDup] = {
-    import spark.implicits._
-    requireIntegralId(vecs, idCol, "streamingCosineDedup")
-    val bandCols = graft.ops.Vectors.planePairs(nBands, nPlanes, dim, seed)
-      .zipWithIndex.map { case (prs, b) =>
-        struct(lit(b).as("band"),
-          graft.ops.Vectors.bandBucket(col(vecCol), prs).as("bucket"))
-      }
-    vecs
-      .select(col(idCol).cast("long").as("vec_id"), col(vecCol).as("embedding"),
-        explode(array(bandCols: _*)).as("bb"))
-      .select(col("vec_id"),
-        concat_ws(":", col("bb.band"), col("bb.bucket")).as("bkey"), col("embedding"))
-      .as[BandVec]
-      .groupByKey(_.bkey)
-      .flatMapGroupsWithState[VecBucketState, EmbedDup](
-        OutputMode.Append, ttlConf(stateTtl)) {
-        (bkey: String, ds: Iterator[BandVec], state: GroupState[VecBucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val band = bkey.takeWhile(_ != ':').toInt
-            var members = state.getOption.getOrElse(VecBucketState(Nil)).members
-            val out = scala.collection.mutable.ListBuffer.empty[EmbedDup]
-            def cosine(a: Seq[Float], b: Seq[Float]): Double = {
-              var dot = 0.0; var na = 0.0; var nb = 0.0
-              val n = math.min(a.length, b.length)
-              var i = 0
-              while (i < n) {
-                val x = a(i).toDouble; val y = b(i).toDouble
-                dot += x * y; na += x * x; nb += y * y
-                i += 1
-              }
-              if (na == 0.0 || nb == 0.0) 0.0
-              else dot / (math.sqrt(na) * math.sqrt(nb))
-            }
-            ds.foreach { d =>
-              if (!members.exists(_._1 == d.vec_id) && members.size < maxBucket) {
-                members.foreach { case (mid, mvec) =>
-                  val c = BigDecimal(cosine(mvec, d.embedding))
-                    .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-                  if (c >= tau) {
-                    val (a, b) = if (mid < d.vec_id) (mid, d.vec_id) else (d.vec_id, mid)
-                    out += EmbedDup(a, b, band, c)
-                  }
-                }
-                members = (d.vec_id, d.embedding) :: members
-              }
-            }
-            state.update(VecBucketState(members))
-            stateTtl.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
-  }
-
-  final case class PHashBand(doc_id: Long, bkey: String, pcode: Seq[Long])
-  final case class PHashBucketState(members: List[(Long, Seq[Long])])
-  final case class PhashDup(doc_a: Long, doc_b: Long, band: Int, ham: Long)
-
-  /**
-   * Streaming perceptual near-dup over media payloads: the incremental
-   * twin of [[graft.ops.Multimodal.phashNearDup]]. The aHash computation
-   * ([[graft.ops.Multimodal.perceptualHash]] — decoder luma grid,
-   * mean-threshold bits, 4 x 16-bit packed words) runs as the same typed
-   * projection on the stream; the banded candidate structure keys state
-   * on (word_idx, word_value) exactly like the batch equi-join, so by
-   * the same pigeonhole argument a pair within `maxDist < 4` Hamming
-   * bits ALWAYS collides in at least one bucket — the stream loses no
-   * recall vs batch below the cap (parity spec-checked).
-   *
-   * Verification is exact: an 8-byte code trivially fits in state, so
-   * each bucket holds its first-seen `maxBucket` member codes and a new
-   * arrival is checked with the same XOR+popcount distance the batch
-   * path computes. A pair matching in several bands emits once per band
-   * — dedup downstream on (doc_a, doc_b). State is
-   * O(buckets x maxBucket x 4 longs); `stateTtl` optionally evicts idle
-   * buckets on unbounded streams (evicted members can no longer match —
-   * the same opt-in recall/state tradeoff as the other dedup twins).
-   */
-  def streamingPhashDedup(spark: SparkSession, docs: DataFrame, idCol: String,
-      maxDist: Int, maxBucket: Int = 1000,
-      decoder: graft.ops.MediaDecoder = graft.ops.StubDecoder,
-      stateTtl: Option[String] = None): Dataset[PhashDup] = {
-    import spark.implicits._
-    requireIntegralId(docs, idCol, "streamingPhashDedup")
-    require(maxDist >= 0 && maxDist < 4, "banding is exact only for maxDist < 4 words")
-    graft.ops.Multimodal.perceptualHash(spark, docs, idCol, decoder = decoder)
-      .select(col("doc_id"), posexplode(col("pcode")).as(Seq("w", "v")), col("pcode"))
-      .select(col("doc_id"), concat_ws(":", col("w"), col("v")).as("bkey"), col("pcode"))
-      .as[PHashBand]
-      .groupByKey(_.bkey)
-      .flatMapGroupsWithState[PHashBucketState, PhashDup](
-        OutputMode.Append, ttlConf(stateTtl)) {
-        (bkey: String, ds: Iterator[PHashBand], state: GroupState[PHashBucketState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val band = bkey.takeWhile(_ != ':').toInt
-            var members = state.getOption.getOrElse(PHashBucketState(Nil)).members
-            val out = scala.collection.mutable.ListBuffer.empty[PhashDup]
-            def ham(a: Seq[Long], b: Seq[Long]): Long =
-              a.iterator.zip(b.iterator)
-                .map { case (x, y) => java.lang.Long.bitCount(x ^ y).toLong }.sum
-            ds.foreach { d =>
-              if (!members.exists(_._1 == d.doc_id) && members.size < maxBucket) {
-                members.foreach { case (mid, mcode) =>
-                  val h = ham(mcode, d.pcode)
-                  if (h <= maxDist) {
-                    val (a, b) = if (mid < d.doc_id) (mid, d.doc_id) else (d.doc_id, mid)
-                    out += PhashDup(a, b, band, h)
-                  }
-                }
-                members = (d.doc_id, d.pcode) :: members
-              }
-            }
-            state.update(PHashBucketState(members))
-            stateTtl.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
-  }
-
   final case class FeatEv(user_id: Long, ts_us: Long, event_id: Long,
-      event_type: String, value: Double)
-  final case class FeatState(events: List[(Long, Long, String, Double)])
+      event_type: String, value: Option[Double])
+  final case class FeatState(events: List[(Long, Long, String, Option[Double])])
 
   /**
    * Streaming FEATURIZATION end-to-end: the incremental twin of
@@ -1809,7 +101,8 @@ object EventStream {
    *  - slotting: rank/pad-shift algebra (C1+C2) — chronological slots,
    *    right-pad fills slots m+1..T (or left-pad shifts onto T), with the
    *    batch imputation constants (cat 0, cont 0.0, date = normalized
-   *    window start under interval mode);
+   *    window start under interval mode); an event whose cont is null
+   *    still takes its slot and gets the cont imputation 0.0, as in batch;
    *  - state: at most T (ts, event_id, type, value) tuples per entity
    *    (ties broken by event_id, the batch tiebreak), so state size is
    *    O(entities x T) regardless of stream length.
@@ -1820,8 +113,8 @@ object EventStream {
    *
    * State is bounded per entity (T tuples) but the ENTITY SET is not;
    * `stateTtl` (e.g. `Some("1 hour")`) evicts entities idle past the TTL
-   * — their sequence restarts from empty if they reappear (the same
-   * opt-in recall/state tradeoff as the dedup twins). Default None keeps
+   * — their sequence restarts from empty if they reappear (an opt-in
+   * recall/state tradeoff). Default None keeps
    * every entity's state for the life of the query.
    */
   def streamingFeaturize(spark: SparkSession, events: DataFrame,
@@ -1836,8 +129,8 @@ object EventStream {
       r.seqCols.filter(r.dateCols.contains) == Seq(r.activityDate),
       "streamingFeaturize supports the canonical (id, cat, cont, activity-date) event shape")
     val idCol = r.tgtId.head
-    // same fail-fast as the dedup twins: a string id would cast to null and
-    // NPE inside the typed Long encoder; and the batch C1 tiebreak column
+    // a string id would cast to null and NPE inside the typed Long
+    // encoder; and the batch C1 tiebreak column
     // must actually exist (it is not part of the validated role set)
     requireIntegralId(events, idCol, "streamingFeaturize")
     require(events.columns.contains("event_id"),
@@ -1902,7 +195,8 @@ object EventStream {
           for ((ev, i) <- chron.zipWithIndex) {
             val slot = i + shift
             cats(slot) = encMap.value.getOrElse(ev._3, 0L)
-            conts(slot) = summary.normalizedOf(contCol, ev._4, normMode)
+            // a null cont keeps its slot with the batch imputation 0.0
+            conts(slot) = ev._4.fold(0.0)(summary.normalizedOf(contCol, _, normMode))
             val rawDate =
               if (interval) (predEpochDay - Math.floorDiv(ev._1, 86400000000L)).toDouble
               else Math.floorDiv(ev._1, 1000000L).toDouble
@@ -1914,187 +208,4 @@ object EventStream {
           }
       }(implicitly, org.apache.spark.sql.Encoders.row(outSchema))
   }
-
-  /**
-   * Streaming context-window chunking for corpus ingest: [[graft.ops.Text
-   * .chunk]] is a STATELESS filter + projection + bounded explode, so the
-   * batch operator applies to a streaming DataFrame unchanged — this twin
-   * exists to pin that contract (batch-parity spec-checked) and to keep the
-   * corpus-ingest story symmetric with the dedup twins. No state, no
-   * watermark; fan-out bounded by len/stride per document.
-   */
-  def streamingChunk(docs: DataFrame, textCol: String, idCol: String,
-      chunkTokens: Int, overlap: Int = 0): DataFrame =
-    graft.ops.Text.chunk(docs, textCol, idCol, chunkTokens, overlap)
-
-  final case class PackState(nextPackIdx: Long)
-
-  /**
-   * Streaming greedy sequence packing: the incremental twin of
-   * [[graft.ops.Text.packChunks]]. Each micro-batch packs a document's
-   * newly-arrived chunks greedily in chunk_idx order and emits the packs
-   * immediately; per-doc state is ONE long (the next pack index), so pack
-   * numbering continues monotonically if a document's chunks span batches.
-   *
-   * Parity caveat (spec-checked, same family as streamingExactDedup's
-   * first-seen-vs-min-id): identical to batch whenever a document's chunks
-   * arrive within one batch — the file-source shape, since [[Text.chunk]]
-   * emits a doc's chunks together. Chunks split across batches never merge
-   * into one pack (single-pass; an open pack is flushed at batch end
-   * rather than buffered indefinitely), and late chunks open new packs in
-   * arrival order. `stateTtl` evicts idle documents' counters.
-   *
-   * Id-type generic like its batch twin: the shuffle/state key is the id's
-   * string form (lossless for integers and the identity for string
-   * UUIDs/URLs), while the emitted id column keeps its NATIVE type — the
-   * state per doc is still exactly one long (the next pack index).
-   */
-  def streamingPackChunks(spark: SparkSession, chunks: DataFrame,
-      idCol: String, maxTokens: Int,
-      stateTtl: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    require(maxTokens >= 1)
-    val idField = chunks.schema(idCol)
-    val outSchema = StructType(Seq(
-      StructField(idCol, idField.dataType, idField.nullable),
-      StructField("pack_idx", LongType, nullable = false),
-      StructField("n_chunks", LongType, nullable = false),
-      StructField("n_tokens", LongType, nullable = false),
-      StructField("pack_text", StringType, nullable = false)))
-    chunks
-      .select(col(idCol).as("__doc"), col(idCol).cast("string").as("__key"),
-        col("chunk_idx").cast("long").as("__ci"),
-        col("n_tokens").cast("long").as("__t"), col("chunk_text").as("__txt"))
-      .groupByKey((r: org.apache.spark.sql.Row) => r.getString(1))
-      .flatMapGroupsWithState[PackState, org.apache.spark.sql.Row](
-        OutputMode.Append, ttlConf(stateTtl)) {
-        (_: String, it: Iterator[org.apache.spark.sql.Row],
-         state: GroupState[PackState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var packIdx = state.getOption.map(_.nextPackIdx).getOrElse(0L)
-            val ordered = it.toArray.sortBy(_.getLong(2))
-            val docVal: Any = ordered.head.get(0)
-            val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-            var nChunks = 0L
-            var nToks = 0L
-            val sb = new StringBuilder
-            def flush(): Unit = if (nChunks > 0) {
-              out += org.apache.spark.sql.Row(docVal, packIdx, nChunks, nToks, sb.result())
-              packIdx += 1; nChunks = 0; nToks = 0; sb.clear()
-            }
-            for (c <- ordered) {
-              val t = c.getLong(3)
-              if (nChunks > 0 && nToks + t > maxTokens) flush()
-              if (nChunks > 0) sb.append(' ')
-              sb.append(c.getString(4)); nChunks += 1; nToks += t
-            }
-            flush()
-            state.update(PackState(packIdx))
-            stateTtl.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }(implicitly, org.apache.spark.sql.Encoders.row(outSchema))
-  }
-
-  /**
-   * Incremental latest-N sequence per entity: the streaming equivalent of
-   * ranks+latestN+pivot. Emits the refreshed sequence on every update.
-   */
-  def latestNSequences(spark: SparkSession, events: DataFrame, n: Int): Dataset[UserSeq] = {
-    import spark.implicits._
-    events.select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_type"), col("value"))
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[SeqState, UserSeq](GroupStateTimeout.NoTimeout) {
-        (userId: Long, evs: Iterator[Ev], state: GroupState[SeqState]) =>
-          val prev = state.getOption.getOrElse(SeqState(Nil)).events
-          val merged = (prev ++ evs.map(e => (e.ts_us, e.event_type, e.value)))
-            .sortBy(-_._1).take(n) // newest first, bounded state
-          state.update(SeqState(merged))
-          UserSeq(userId, merged.size, merged.map(_._2), merged.map(_._3))
-      }
-  }
-
-  final case class CdcChange(key: Long, ts_us: Long, tie: Long, op: String,
-      v: Double)
-  final case class CdcState(v: Double, deleted: Boolean, tsUs: Long,
-      tie: Long, fromSnapshot: Boolean)
-  final case class CdcRow(key: Long, v: Option[Double], origin: String)
-
-  /**
-   * Streaming CDC apply: the incremental twin of
-   * [[graft.ops.Temporal.applyChangelog]]. State = the current value per
-   * key, seeded from the SNAPSHOT via the initial-state API; each
-   * micro-batch folds its changes in (ts, tiebreak) order and emits one
-   * row per TOUCHED key reflecting the post-batch state (`updated` /
-   * `inserted` / `deleted` — untouched keys emit nothing; their state is
-   * the carry). A single-batch run therefore emits exactly the batch
-   * operator's non-carried rows plus explicit tombstones for the keys the
-   * batch operator dropped (parity spec). Out-of-order arrivals relative
-   * to applied state fail fast, the [[streamingScd2]] contract.
-   */
-  def streamingCdcApply(spark: SparkSession, changes: DataFrame,
-      snapshot: DataFrame, keyCol: String, tsCol: String, opCol: String,
-      valCol: String, tieCol: String): Dataset[CdcRow] = {
-    import spark.implicits._
-    requireIntegralId(changes, keyCol, "streamingCdcApply")
-    val init = snapshot.select(col(keyCol).cast("long").as("key"),
-        col(valCol).cast("double").as("v"))
-      .as[(Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => CdcState(r._2, deleted = false,
-        Long.MinValue, Long.MinValue, fromSnapshot = true))
-    changes.select(col(keyCol).cast("long").as("key"),
-        unix_micros(col(tsCol)).as("ts_us"), col(tieCol).cast("long").as("tie"),
-        col(opCol).as("op"), col(valCol).cast("double").as("v"))
-      .as[CdcChange]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CdcState, CdcRow](
-        OutputMode.Append, GroupStateTimeout.NoTimeout, init) {
-        (key: Long, evs: Iterator[CdcChange], state: GroupState[CdcState]) =>
-          val sorted = evs.toList.sortBy(e => (e.ts_us, e.tie))
-          if (sorted.isEmpty) Iterator.empty
-          else {
-            var st = state.getOption.orNull
-            sorted.foreach { e =>
-              if (st != null && st.tsUs != Long.MinValue)
-                require(e.ts_us >= st.tsUs,
-                  s"out-of-order changelog for key $key")
-              val snap = st != null && st.fromSnapshot
-              st = CdcState(e.v, e.op == "D", e.ts_us, e.tie, snap)
-            }
-            state.update(st)
-            val origin =
-              if (st.deleted) "deleted"
-              else if (st.fromSnapshot) "updated"
-              else "inserted"
-            Iterator.single(
-              CdcRow(key, if (st.deleted) None else Some(st.v), origin))
-          }
-      }
-  }
-
-  /**
-   * Micro-batch retrieval serving: score each arriving (query_id, qtext)
-   * batch against a STATIC prebuilt [[graft.ops.SearchIndex]] and hand the
-   * per-batch top-k to `sink` — the stream-serves-saved-index shape
-   * (index built/refreshed offline, query traffic served continuously).
-   *
-   * `foreachBatch` on purpose: BM25's per-query window/top-k is not an
-   * incremental streaming aggregate and does not need to be — every query
-   * is scored independently against the static index, so per-batch
-   * results equal the batch run over the same queries exactly
-   * (parity-spec'd). State is zero; throughput scales with the batch
-   * size, never the stream history.
-   */
-  def streamingBm25Serve(queries: DataFrame, index: graft.ops.SearchIndex,
-      k: Int)(sink: DataFrame => Unit):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.ops.Search.bm25TopKIdx(index, batch, k))
-      }
-      .start()
 }

@@ -111,6 +111,37 @@ class MiscSpec extends SparkSpec {
     assert(extra.isEmpty, "pre-binding consumer did not release the cache block")
   }
 
+  test("Prebuilt: state built under one code token is not served under another") {
+    import graft.core.Prebuilt
+    val src = java.nio.file.Files.createTempFile("graft_prebuilt_src", ".parquet").toFile
+    var builds = 0
+    def stateFor(token: String) = Prebuilt.dir("spec", src, token, 7) { p =>
+      builds += 1
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(p, "fitted_by"), token)
+    }
+    def fittedBy(dir: String) =
+      java.nio.file.Files.readString(java.nio.file.Paths.get(dir, "fitted_by"))
+    val oldCode = stateFor("old-code")
+    assert(stateFor("old-code") == oldCode && builds == 1, "same token must reuse")
+    val newCode = stateFor("new-code")
+    assert(newCode != oldCode && builds == 2 && fittedBy(newCode) == "new-code")
+    assert(fittedBy(oldCode) == "old-code")
+    // no temp sibling is left behind once a build is renamed into place
+    val parent = new java.io.File(oldCode).getParentFile
+    val name = new java.io.File(oldCode).getName
+    assert(!parent.list().exists(_.startsWith(name + ".tmp-")))
+    for (d <- Seq(oldCode, newCode)) {
+      java.nio.file.Files.delete(java.nio.file.Paths.get(d, "fitted_by"))
+      java.nio.file.Files.delete(java.nio.file.Paths.get(d))
+    }
+    src.delete()
+    // the token tracks bytecode: distinct classes, distinct tokens
+    assert(Prebuilt.codeToken(graft.ops.Cf.getClass) ==
+      Prebuilt.codeToken(graft.ops.Cf.getClass))
+    assert(Prebuilt.codeToken(graft.ops.Cf.getClass) !=
+      Prebuilt.codeToken(classOf[graft.ops.SearchIndex]))
+  }
+
   test("Bench.adjudicate: quiet retry heals a load spike; flag survives only a confirmed-hot retry") {
     import graft.Bench.{adjudicate, ContaminatedAb}
     // mid-run load spike: both passes inflated (8.0s @ ab 2.1), the

@@ -211,12 +211,14 @@ class TemporalSpec extends SparkSpec {
       // user 1: a touch after the last purchase earns nothing
       (7L, 1L, ts("2024-01-01 15:00:00"), "view"),
       // user 2: touches but no conversion at all -> no rows
-      (8L, 2L, ts("2024-01-01 09:00:00"), "click")
+      (8L, 2L, ts("2024-01-01 09:00:00"), "click"),
+      // user 1: a null-typed event is neither a touch nor a conversion
+      (9L, 1L, ts("2024-01-01 10:30:00"), null)
     ).toDF("event_id", "user_id", "ts", "event_type")
     val out = Temporal.attribution(ev, Seq("user_id"), "ts", "event_type",
       "purchase", "event_type", "event_id")
     val rows = out.collect().map(r => r.getAs[Long]("event_id") -> r).toMap
-    assert(rows.keySet == Set(1L, 2L, 3L, 6L)) // 7 post-conv, 8 no conv
+    assert(rows.keySet == Set(1L, 2L, 3L, 6L)) // 7 post-conv, 8 no conv, 9 null
     // journey 1: ranks 1..3 of 3
     val j1 = Seq(1L, 2L, 3L).map(rows)
     assert(j1.map(_.getAs[Long]("touch_rank")) == Seq(1L, 2L, 3L))
@@ -660,7 +662,8 @@ class TemporalSpec extends SparkSpec {
     // key k: demands at buckets 2 (size 2) and 5 (size 3); alpha 0.5
     val rows = Seq(("k", 1, 0.0), ("k", 2, 2.0), ("k", 3, 0.0),
       ("k", 4, 0.0), ("k", 5, 3.0), ("k", 6, 0.0),
-      ("z", 1, 0.0), ("z", 2, 0.0))
+      ("z", 1, 0.0), ("z", 2, 0.0),
+      ("y", 1, 0.0), ("y", 2, 5.0))
     val out = graft.ops.Temporal.croston(rows.toDF("k", "b", "d"),
       Seq("k"), "b", "d", alpha = 0.5, window = 6, idCols = Seq("b"))
       .collect().map(r => (r.getString(0), r.getInt(1)) -> r).toMap
@@ -670,6 +673,8 @@ class TemporalSpec extends SparkSpec {
     assert(b2.getAs[Double]("z_hat") == 2.0)
     assert(b2.getAs[Double]("p_hat") == 2.0)
     assert(b2.getAs[Double]("forecast") == 1.0)
+    // key y: one demand of 5 at bucket 2 -> z=5, p=2, forecast 2.5
+    assert(out(("y", 2)).getAs[Double]("forecast") == 2.5)
     // bucket 6 (full window): ds=[2,3] -> z = .5*3+.5*2 = 2.5;
     // intervals=[2,3] -> p = 2.5; forecast = 1.0
     val b6 = out(("k", 6))
@@ -720,6 +725,14 @@ class TemporalSpec extends SparkSpec {
     assert(out(("b", "c")) == ((None, true)))           // unseen transition
     assert(out(("c", "a")) == ((Some(1.0), false)))
     assert(out.size == 4)
+    // a null state occupies its handoff slot: a->null and null->b emit
+    // nothing, b->a still does
+    val nulls = Seq(("w", 1, Some("a")), ("w", 2, None), ("w", 3, Some("b")),
+      ("w", 4, Some("a"))).toDF("k", "t", "s")
+    val nullOut = graft.ops.Temporal.markovScoreHandoffs(nulls, Seq("k"), "t",
+        "s", model, minP = 0.3).collect()
+      .map(r => (r.getAs[String]("from_state"), r.getAs[String]("to_state")))
+    assert(nullOut.toSeq == Seq(("b", "a")))
   }
 
   test("markovBacktest: argmax on counts, out-of-sample accuracy, unseen states") {
