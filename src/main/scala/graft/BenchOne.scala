@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Micro-bench catalog queries under the exact Bench session config:
   * `runMain graft.BenchOne <query>[,<query>...] [sfDir] [passes] [k=v ...]`.
   * Prints per-pass and best seconds — the tool for A/B-ing one operator's
@@ -13,13 +11,8 @@ object BenchOne {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val passes = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = graft.core.SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
+    val builder = graft.core.SessionTuning.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     args.drop(3).filter(_.contains("=")).foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       println(s"conf override: $k=$v")

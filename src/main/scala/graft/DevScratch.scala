@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway dev probe (not part of any query path): alternate a runtime
   * SQL conf between passes of one query inside a single JVM. */
 object DevScratch {
@@ -16,14 +14,8 @@ object DevScratch {
           .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
         (parse(args(1)), parse(args(2)))
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.core.SessionTuning.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def once(name: String): Double = {
       val t0 = System.nanoTime()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for plan-shape auditing, under
   * the Bench session config (SessionTuning, `SPARK_GRAFT_CPUS` cores,
   * shuffle partitions = cores), so the dumps show the plans Bench times:
@@ -13,14 +11,8 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q_pipeline_e2e", "q_e1_pivot", "q_b1_window_filter",
         "q_f1_encode_join", "q_dedup_minhash_lsh", "q_ann_brute")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.core.SessionTuning.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val df = SparkEntry.queries(n)(spark, sfDir)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * Shared session tuning for every graft entry point (Bench, Verify,
- * BenchOne, Profile, RunOne) — optimization-round settings that make
+ * BenchOne, Profile, RunOne, Explain, DevScratch; `local` builds their
+ * session) — optimization-round settings that make
  * partitioning SCALE-ADAPTIVE instead of constant-tuned (optimization
  * guide §2.2/§6), applied identically to the bench and the correctness
  * harness so the timed configuration is exactly the verified one.
@@ -60,4 +61,14 @@ object SessionTuning {
 
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     configs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The tuned builder every main starts from: `local[cpus]`, shuffle
+    * partitions = cpus, AQE on, UTC session time zone, no UI. */
+  def local(cpus: Int): SparkSession.Builder =
+    apply(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
 }

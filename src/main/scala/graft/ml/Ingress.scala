@@ -43,6 +43,26 @@ private[graft] object Ingress {
       nNsCont: Int): Array[Double] =
     Array.tabulate(nNsCont)(c => row.getDouble(1 + (nCat + nCont) * t + nNsCat + c))
 
+  /** Checks, once per trainer or scoring call and before any task runs,
+    * that the column lists match the model config. A short list would
+    * index past the projected row inside a task, a long one would be
+    * dropped silently, and a seq group that is not `seqLen` long would
+    * make the positional getters read across group boundaries. */
+  def requireColumns(seqLen: Int, vocabSizes: Seq[Int], nCont: Int,
+      nonSeqVocabSizes: Seq[Int], nNonSeqCont: Int,
+      seqCat: Seq[Seq[String]], seqCont: Seq[Seq[String]],
+      nsCat: Seq[String], nsCont: Seq[String]): Unit = {
+    def count(what: String, got: Int, want: Int, field: String): Unit =
+      require(got == want,
+        s"$what: $got column lists given, the model config has $want ($field)")
+    count("seq cat", seqCat.size, vocabSizes.size, "vocabSizes")
+    count("seq cont", seqCont.size, nCont, "nCont")
+    count("non-seq cat", nsCat.size, nonSeqVocabSizes.size, "nonSeqVocabSizes")
+    count("non-seq cont", nsCont.size, nNonSeqCont, "nNonSeqCont")
+    (seqCat ++ seqCont).foreach(g => require(g.size == seqLen,
+      s"seq column group [${g.mkString(", ")}] has ${g.size} columns, the model's seqLen is $seqLen"))
+  }
+
   /** One entity's model inputs: (T x nCat codes, T x nCont doubles, ns
     * codes, ns doubles, label). */
   type Example =

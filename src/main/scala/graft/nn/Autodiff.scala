@@ -1,7 +1,6 @@
 package graft.nn
 
-import breeze.linalg.{*, DenseMatrix, DenseVector, max, sum}
-import breeze.numerics.exp
+import breeze.linalg.{DenseMatrix, DenseVector, sum}
 
 /**
  * Manual forward/backward for the transformer autoencoder pretraining
@@ -33,6 +32,11 @@ import breeze.numerics.exp
  * All parameters live in ONE flat Array[Double]; matrices are zero-copy
  * Breeze views into it. Gradients accumulate into a same-layout flat array,
  * which makes the Spark treeAggregate harness (graft.train) trivial.
+ *
+ * The layers are the shared kernels of [[Layers]] (attention, layer norm,
+ * FFN, the softmax-CE head, embedding lookup, dropout), which [[LstmAE]]
+ * composes too. The encoder forward is written once: `lossAndGrad` trains
+ * through it and `embed` serves it without dropout.
  */
 final case class ParamSpec(name: String, rows: Int, cols: Int) { def size: Int = rows * cols }
 
@@ -207,74 +211,143 @@ final case class AeConfig(
 }
 
 object TransformerAE {
+  import Layers._
 
-  private val LnEps = 1e-5
+  /** One post-LN transformer layer: self-attention (causal in the
+    * decoder), cross-attention to `mem` (decoder only) and the ReLU FFN,
+    * each sublayer LN(x + dropout(f(x))) (transformer.py:30-55, 234-306).
+    * Encoder layer l owns `l${l}_w{q,k,v,o}`, `l${l}_ff{1,2}` and
+    * `l${l}_ln{1,2}`; decoder layer l owns `d${l}_sw*`, `d${l}_cw*`,
+    * `d${l}_ff{1,2}` and `d${l}_ln{1,2,3}`. */
+  private final class Block(P: Params, pre: String, heads: Int, x: M, mem: M,
+      drop: Dropout, rate: Double) {
+    private val dec = mem != null
+    private val self = new Attention(P, pre + (if (dec) "sw" else "w"), heads, x, x,
+      causal = dec, drop, 0.0)
+    private val selfMask = drop.mat(rate, x.rows, x.cols)
+    private val n1 = new LayerNorm(P, pre + "ln1", x + masked(self.out, selfMask))
+    private val cross =
+      if (dec) new Attention(P, pre + "cw", heads, n1.out, mem, causal = false, drop, 0.0) else null
+    private val crossMask = if (dec) drop.mat(rate, x.rows, x.cols) else null
+    private val n2 =
+      if (dec) new LayerNorm(P, pre + "ln2", n1.out + masked(cross.out, crossMask)) else null
+    private val ffIn = if (dec) n2.out else n1.out
+    private val ffn = new Ffn(P, pre, ffIn, drop, rate)
+    private val ffMask = drop.mat(rate, x.rows, x.cols)
+    private val nOut =
+      new LayerNorm(P, pre + (if (dec) "ln3" else "ln2"), ffIn + masked(ffn.out, ffMask))
+    def out: M = nOut.out
 
-  /** ReLU forward (transformer.py:158). */
-  private def relu(m: DenseMatrix[Double]): DenseMatrix[Double] =
-    m.map(v => if (v > 0) v else 0.0)
-
-  /** ReLU backward: dPre = dAct where pre > 0 (subgradient 0 at 0). */
-  private def reluBwd(dAct: DenseMatrix[Double], act: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val out = dAct.copy
-    for (i <- 0 until out.rows; j <- 0 until out.cols)
-      if (act(i, j) <= 0) out(i, j) = 0.0
-    out
+    /** Returns d x; the decoder adds its memory gradient to dMem. */
+    def backward(dOut: M, dMem: M): M = {
+      val dFfRes = nOut.backward(dOut)
+      var d = ffn.backward(masked(dFfRes, ffMask), dFfRes)
+      if (dec) {
+        val dRes = n2.backward(d)
+        val (dq, dkv) = cross.backward(masked(dRes, crossMask), dRes)
+        dMem :+= dkv
+        d = dq
+      }
+      val dRes = n1.backward(d)
+      self.backward(masked(dRes, selfMask), dRes)._1
+    }
   }
 
-  /** LayerNorm forward returning (out, xhat, invstd) caches. */
-  private def lnFwd(x: DenseMatrix[Double], g: DenseVector[Double], b: DenseVector[Double])
-      : (DenseMatrix[Double], DenseMatrix[Double], Array[Double]) = {
-    val out = DenseMatrix.zeros[Double](x.rows, x.cols)
-    val xhat = DenseMatrix.zeros[Double](x.rows, x.cols)
-    val inv = new Array[Double](x.rows)
-    for (i <- 0 until x.rows) {
-      val row = x(i, ::).t
-      val mu = sum(row) / row.length
-      val c = row - mu
-      val istd = 1.0 / math.sqrt(sum(c *:* c) / row.length + LnEps)
-      inv(i) = istd
-      xhat(i, ::) := (c * istd).t
-      out(i, ::) := ((c * istd) *:* g + b).t
+  /** `count` layers named `$pre$l_...` run on x in order. */
+  private def stack(P: Params, pre: Char, count: Int, heads: Int, x: M, mem: M,
+      drop: Dropout, rate: Double): Array[Block] = {
+    val blocks = new Array[Block](count)
+    var h = x
+    for (l <- 0 until count) {
+      blocks(l) = new Block(P, s"$pre${l}_", heads, h, mem, drop, rate)
+      h = blocks(l).out
     }
-    (out, xhat, inv)
+    blocks
   }
 
-  /** LayerNorm backward: returns dX; accumulates dG, dB. */
-  private def lnBwd(dOut: DenseMatrix[Double], xhat: DenseMatrix[Double],
-      inv: Array[Double], g: DenseVector[Double],
-      dG: DenseVector[Double], dB: DenseVector[Double]): DenseMatrix[Double] = {
-    val n = xhat.cols.toDouble
-    val dX = DenseMatrix.zeros[Double](xhat.rows, xhat.cols)
-    for (i <- 0 until xhat.rows) {
-      val dy = dOut(i, ::).t
-      val xh = xhat(i, ::).t
-      dG :+= dy *:* xh
-      dB :+= dy
-      val dxhat = dy *:* g
-      val s1 = sum(dxhat)
-      val s2 = sum(dxhat *:* xh)
-      dX(i, ::) := ((dxhat - (xh * (s2 / n)) - (s1 / n)) * inv(i)).t
-    }
-    dX
+  /** dropout(proj * sqrt(d) + pos): the scaled, position-embedded input of
+    * either stack (transformer.py:122). */
+  private def scalePos(P: Params, proj: M, mask: M): M = {
+    val m = proj.copy
+    m :*= math.sqrt(proj.cols.toDouble)
+    m += P.w("pos")
+    masked(m, mask)
   }
 
-  /** Row-wise softmax. */
-  private[nn] def softmaxRows(m: DenseMatrix[Double]): DenseMatrix[Double] = {
-    val out = m.copy
-    for (i <- 0 until m.rows) {
-      val row = out(i, ::).t
-      val e = exp(row - max(row))
-      out(i, ::) := (e / sum(e)).t
+  /**
+   * The encoder forward, everything `embed` serves: seq cat embeddings ++
+   * seq cont through linear_seq, the non-seq row through linear_non_seq
+   * appended as one more timestep (unified_transformer_encoder.py:91-96),
+   * then scale, positions and the encoder layers. Training applies the
+   * embedding, input and sublayer dropouts (factory.py:75-78); the masks
+   * come from `drop` in a fixed order. `seqEmbInput`, when non-null,
+   * replaces the seq embedding lookups (integrated gradients interpolate
+   * in embedding space, CASPRExplainer.py:138-158).
+   */
+  private final class Encoder(cfg: AeConfig, P: Params, catCodes: Array[Array[Int]],
+      cont: Array[Array[Double]], nsCat: Array[Int], nsCont: Array[Double],
+      seqEmbInput: M, drop: Dropout, rate: Double) {
+    private val t = cfg.seqLen
+    private val embSum = cfg.embDims.sum
+    // x0 is stored DROPPED so the projection forward/backward consume the
+    // dropped activations (EMBEDDING_DROPOUT_SEQUENTIAL)
+    private val x0 =
+      seqInput(P.tables("emb", cfg.vocabSizes.size, P.p), catCodes, cont, t, cfg.nCont)
+    if (seqEmbInput != null && embSum > 0) x0(::, 0 until embSum) := seqEmbInput(::, 0 until embSum)
+    private val embMask = drop.mat(rate, t, cfg.inDim)
+    if (embMask != null) x0 :*= embMask
+    private val nsx0: V =
+      if (!cfg.hasNonSeq) null
+      else {
+        val v = DenseVector.zeros[Double](cfg.nsInDim)
+        lookup(P.tables("nsEmb", cfg.nonSeqVocabSizes.size, P.p), nsCat, v)
+        val nsEmbSum = cfg.nsEmbDims.sum
+        for (c <- 0 until cfg.nNonSeqCont)
+          v(nsEmbSum + c) = if (nsCont != null) nsCont(c) else 0.0
+        v
+      }
+    private val nsMask = if (nsx0 == null) null else drop.vec(rate, cfg.nsInDim)
+    if (nsMask != null) nsx0 :*= nsMask
+    /** The projected src before scale and positions. */
+    val srcProj: M = DenseMatrix.zeros[Double](cfg.tEff, cfg.dModel)
+    srcProj(0 until t, ::) := P.linear("linSeq", x0)
+    if (nsx0 != null) srcProj(t, ::) := P.linear("linNonSeq", nsx0).t
+    private val inMask = drop.mat(rate, cfg.tEff, cfg.dModel)
+    private val h0 = scalePos(P, srcProj, inMask)
+    private val layers = stack(P, 'l', cfg.layers, cfg.heads, h0, null, drop, rate)
+    val out: M = if (layers.isEmpty) h0 else layers.last.out
+
+    /** Backward from dOut, the gradient of `out`, plus dSrcProj, what
+      * already reached srcProj (the decoder's shifted target). The seq
+      * embedding gradient goes to `seqEmbGradOut` when non-null, else to
+      * the tables unless `seqEmbInput` replaced them; the seq cont gradient
+      * also goes to `contGradOut` when non-null. */
+    def backward(dOut: M, dSrcProj: M, seqEmbGradOut: M,
+        contGradOut: Array[Array[Double]]): Unit = {
+      val dH0 = masked(layers.foldRight(dOut)((b, d) => b.backward(d, null)), inMask)
+      P.gw("pos") :+= dH0
+      dSrcProj :+= dH0 * math.sqrt(cfg.dModel.toDouble)
+      val dX0 = masked(P.linearBwd("linSeq", x0, dSrcProj(0 until t, ::)), embMask)
+      if (seqEmbGradOut != null) {
+        if (embSum > 0) seqEmbGradOut(::, 0 until embSum) := dX0(::, 0 until embSum)
+      } else if (seqEmbInput == null)
+        seqScatter(P.tables("emb", cfg.vocabSizes.size, P.grad), catCodes, dX0, t)
+      if (contGradOut != null)
+        for (i <- 0 until t; c <- 0 until cfg.nCont) contGradOut(i)(c) = dX0(i, embSum + c)
+      if (nsx0 != null) {
+        val dNsX0 = P.linearBwd("linNonSeq", nsx0, dSrcProj(t, ::).t)
+        if (nsMask != null) dNsX0 :*= nsMask
+        scatter(P.tables("nsEmb", cfg.nonSeqVocabSizes.size, P.grad), nsCat, dNsX0)
+      }
     }
-    out
   }
 
   /**
    * Forward + backward for ONE example; accumulates into `grad` and returns
    * the example's loss. `catCodes`: T x nCat (targets = inputs);
    * `cont`: T x nCont; `nsCat`/`nsCont`: the non-seq features (required
-   * non-null iff cfg.hasNonSeq).
+   * non-null iff cfg.hasNonSeq). `grad == null` evaluates the loss only
+   * (e.g. the EpochLoop monitoring probe).
    *
    * When `encSeed` is non-null the reconstruction heads are skipped and the
    * backward starts from that encoder-space gradient instead (returns 0);
@@ -285,6 +358,11 @@ object TransformerAE {
    * embedding space, CASPRExplainer.py:138-158), and the gradient w.r.t.
    * those embedding inputs is written to `seqEmbGradOut` (same shape)
    * instead of being scattered into the tables.
+   *
+   * Training-time inverted dropout (transformer.py:47,55,122,158 and the
+   * embedding dropouts, factory.py:75-78) draws its masks from a
+   * dropSeed-seeded RNG in a fixed order, so the same (example, dropSeed)
+   * pair sees identical masks across calls.
    */
   def lossAndGrad(cfg: AeConfig, lay: ParamLayout, p: Array[Double],
       grad: Array[Double], catCodes: Array[Array[Int]],
@@ -300,217 +378,42 @@ object TransformerAE {
     val t = cfg.seqLen
     val tE = cfg.tEff
     val d = cfg.dModel
-    val nCat = cfg.vocabSizes.size
-    val nNsCat = cfg.nonSeqVocabSizes.size
-    val scale = math.sqrt(d.toDouble)
-    // grad == null => forward-only (loss evaluation, e.g. the EpochLoop
-    // monitoring probe): head-gradient writes are skipped and the function
-    // returns right after the loss, before any backward section
     val doGrad = grad != null
-
-    // ---- training-time inverted dropout (reference transformer.py:47,55,
-    // 122,158 + embedding dropouts, factory.py:75-78). Masks are drawn from
-    // a dropSeed-seeded RNG in a FIXED order, so the same (example,
-    // dropSeed) pair sees identical masks across calls — this keeps
-    // finite-difference checks exact at dropout > 0 and the backward masks
-    // identical to the forward's. Serving (embed) never applies dropout.
-    val pDrop = cfg.dropout
-    val dropRng = if (pDrop > 0) new java.util.Random(dropSeed) else null
-    def dropMask(r: Int, c: Int): DenseMatrix[Double] =
-      if (pDrop <= 0) null
-      else DenseMatrix.tabulate(r, c)((_, _) =>
-        if (dropRng.nextDouble() < pDrop) 0.0 else 1.0 / (1.0 - pDrop))
-    def masked(mm: DenseMatrix[Double], mask: DenseMatrix[Double]): DenseMatrix[Double] =
-      if (mask == null) mm else mm *:* mask
-
-    // ---- forward -------------------------------------------------------
-    val embDims = cfg.embDims
-    val x0 = DenseMatrix.zeros[Double](t, cfg.inDim)
-    for (i <- 0 until t) {
-      var off = 0
-      for (c <- 0 until nCat) {
-        if (seqEmbInput != null)
-          x0(i, off until off + embDims(c)) := seqEmbInput(i, off until off + embDims(c))
-        else {
-          val table = lay.mat(s"emb$c", p)
-          val code = math.min(math.max(catCodes(i)(c), 0), table.rows - 1)
-          x0(i, off until off + embDims(c)) := table(code, ::)
-        }
-        off += embDims(c)
-      }
-      for (c <- 0 until cfg.nCont) x0(i, embDims.sum + c) = cont(i)(c)
-    }
-    // EMBEDDING_DROPOUT_SEQUENTIAL (factory.py:77): x0 is stored DROPPED so
-    // the projection forward/backward consume the dropped activations
-    val embMask = dropMask(t, cfg.inDim)
-    if (embMask != null) x0 :*= embMask
-    val wSeq = lay.mat("linSeq_w", p); val bSeq = lay.vec("linSeq_b", p)
-
-    // non-seq input row (cat emb ++ cont), unified_transformer_encoder.py:91-96
-    val nsEmbDims = cfg.nsEmbDims
-    val nsx0: DenseVector[Double] =
-      if (!cfg.hasNonSeq) null
-      else {
-        val v = DenseVector.zeros[Double](cfg.nsInDim)
-        var off = 0
-        for (c <- 0 until nNsCat) {
-          val table = lay.mat(s"nsEmb$c", p)
-          val code = math.min(math.max(if (nsCat != null) nsCat(c) else 0, 0), table.rows - 1)
-          v(off until off + nsEmbDims(c)) := table(code, ::).t
-          off += nsEmbDims(c)
-        }
-        for (c <- 0 until cfg.nNonSeqCont)
-          v(nsEmbDims.sum + c) = if (nsCont != null) nsCont(c) else 0.0
-        v
-      }
-    // EMBEDDING_DROPOUT_NON_SEQUENTIAL (factory.py:78)
-    val nsMask: DenseVector[Double] =
-      if (pDrop <= 0 || nsx0 == null) null
-      else DenseVector.tabulate(cfg.nsInDim)(_ =>
-        if (dropRng.nextDouble() < pDrop) 0.0 else 1.0 / (1.0 - pDrop))
-    if (nsMask != null) nsx0 :*= nsMask
-
-    // projected src (pre scale/pos): seq rows through linear_seq, non-seq
-    // row through linear_non_seq appended last
-    val srcProj = DenseMatrix.zeros[Double](tE, d)
-    locally {
-      val m = x0 * wSeq
-      m(*, ::) :+= bSeq
-      srcProj(0 until t, ::) := m
-      if (cfg.hasNonSeq) {
-        val wNs = lay.mat("linNonSeq_w", p); val bNs = lay.vec("linNonSeq_b", p)
-        srcProj(t, ::) := ((wNs.t * nsx0) + bNs).t
-      }
-    }
-    // src = dropout(src * scale + pos) (transformer.py:122)
-    val inMask = dropMask(tE, d)
-    val h0 = {
-      val m = srcProj.copy
-      m :*= scale
-      m += lay.mat("pos", p)
-      masked(m, inMask)
-    }
-    // per-layer caches
-    final case class LayerCache(x: DenseMatrix[Double], q: DenseMatrix[Double],
-        k: DenseMatrix[Double], v: DenseMatrix[Double],
-        attn: Array[DenseMatrix[Double]], ctx: DenseMatrix[Double],
-        res1Pre: DenseMatrix[Double], res1: DenseMatrix[Double],
-        ln1Xhat: DenseMatrix[Double], ln1Inv: Array[Double],
-        ffPre: DenseMatrix[Double], ffAct: DenseMatrix[Double],
-        res2Pre: DenseMatrix[Double],
-        ln2Xhat: DenseMatrix[Double], ln2Inv: Array[Double],
-        out: DenseMatrix[Double])
-    val caches = new Array[LayerCache](cfg.layers)
-    val encAttnMask = new Array[DenseMatrix[Double]](cfg.layers)
-    val encFfInMask = new Array[DenseMatrix[Double]](cfg.layers)
-    val encFfMask = new Array[DenseMatrix[Double]](cfg.layers)
-    var h = h0
-    for (l <- 0 until cfg.layers) {
-      def m(n: String) = lay.mat(s"l${l}_${n}_w", p)
-      def b(n: String) = lay.vec(s"l${l}_${n}_b", p)
-      val q = h * m("wq"); q(*, ::) :+= b("wq")
-      val k = h * m("wk"); k(*, ::) :+= b("wk")
-      val v = h * m("wv"); v(*, ::) :+= b("wv")
-      val hd = cfg.headDim
-      val ctx = DenseMatrix.zeros[Double](tE, d)
-      val attns = new Array[DenseMatrix[Double]](cfg.heads)
-      for (hh <- 0 until cfg.heads) {
-        val sl = hh * hd until (hh + 1) * hd
-        val scores = (q(::, sl) * k(::, sl).t) / math.sqrt(hd.toDouble)
-        val a = softmaxRows(scores)
-        attns(hh) = a
-        ctx(::, sl) := a * v(::, sl)
-      }
-      val attnOut = ctx * m("wo"); attnOut(*, ::) :+= b("wo")
-      encAttnMask(l) = dropMask(tE, d)
-      // src = ln(src + dropout(attn)) (transformer.py:46-47)
-      val res1Pre = h + masked(attnOut, encAttnMask(l))
-      val (res1, ln1Xhat, ln1Inv) =
-        lnFwd(res1Pre, lay.vec(s"l${l}_ln1_g", p), lay.vec(s"l${l}_ln1_b", p))
-      val ffPre = res1 * m("ff1"); ffPre(*, ::) :+= b("ff1")
-      encFfInMask(l) = dropMask(tE, cfg.pf)
-      // x = dropout(relu(fc1(x))) (transformer.py:158); cached DROPPED
-      val ffAct = masked(relu(ffPre), encFfInMask(l))
-      val ff = ffAct * m("ff2"); ff(*, ::) :+= b("ff2")
-      encFfMask(l) = dropMask(tE, d)
-      // src = ln(src + dropout(ff)) (transformer.py:54-55)
-      val res2Pre = res1 + masked(ff, encFfMask(l))
-      val (out, ln2Xhat, ln2Inv) =
-        lnFwd(res2Pre, lay.vec(s"l${l}_ln2_g", p), lay.vec(s"l${l}_ln2_b", p))
-      caches(l) = LayerCache(h, q, k, v, attns, ctx, res1Pre, res1, ln1Xhat,
-        ln1Inv, ffPre, ffAct, res2Pre, ln2Xhat, ln2Inv, out)
-      h = out
-    }
-    val enc = h
+    val P = new Params(lay, p, grad)
+    val drop = new Dropout(dropSeed)
+    val enc = new Encoder(cfg, P, catCodes, cont, nsCat, nsCont, seqEmbInput, drop, cfg.dropout)
 
     // heads on `x` (enc, or decoder output; tE rows): seq CE/MSE on the seq
     // timesteps, non-seq CE/MSE on the LAST timestep (OutputLayer split,
     // model_wrapper.py:349-360); returns (loss, dX)
-    def applyHeads(x: DenseMatrix[Double]): (Double, DenseMatrix[Double]) = {
+    def applyHeads(x: M): (Double, M) = {
       var hl = 0.0
       val dX = DenseMatrix.zeros[Double](tE, d)
       val xSeq = x(0 until t, ::)
-      for (c <- 0 until nCat) {
-        val w = lay.mat(s"headCat${c}_w", p); val b = lay.vec(s"headCat${c}_b", p)
-        val logits = xSeq * w; logits(*, ::) :+= b
-        val probs = softmaxRows(logits)
-        val dLogits = probs.copy
-        for (i <- 0 until t) {
-          val y = math.min(math.max(catCodes(i)(c), 0), w.cols - 1)
-          hl += -math.log(math.max(probs(i, y), 1e-12))
-          dLogits(i, y) -= 1.0
-        }
-        dLogits :/= t.toDouble
-        if (doGrad) {
-          lay.mat(s"headCat${c}_w", grad) :+= xSeq.t * dLogits
-          val dB = lay.vec(s"headCat${c}_b", grad)
-          for (i <- 0 until t) dB :+= dLogits(i, ::).t
-          dX(0 until t, ::) :+= dLogits * w.t
-        }
+      for (c <- cfg.vocabSizes.indices) {
+        val dLogits = P.linear(s"headCat$c", xSeq)
+        for (i <- 0 until t) hl += softmaxCeRow(dLogits, i, code(catCodes(i), c, dLogits.cols), t)
+        if (doGrad) dX(0 until t, ::) :+= P.linearBwd(s"headCat$c", xSeq, dLogits)
       }
       hl = hl / t
       if (cfg.nCont > 0) {
-        val w = lay.mat("headCont_w", p); val b = lay.vec("headCont_b", p)
-        val pred = xSeq * w; pred(*, ::) :+= b
+        val pred = P.linear("headCont", xSeq)
         val err = DenseMatrix.tabulate(t, cfg.nCont)((i, j) => pred(i, j) - cont(i)(j))
         hl += sum(err *:* err) / (2.0 * t)
-        if (doGrad) {
-          val dPred = err / t.toDouble
-          lay.mat("headCont_w", grad) :+= xSeq.t * dPred
-          val dB = lay.vec("headCont_b", grad)
-          for (i <- 0 until t) dB :+= dPred(i, ::).t
-          dX(0 until t, ::) :+= dPred * w.t
-        }
+        if (doGrad) dX(0 until t, ::) :+= P.linearBwd("headCont", xSeq, err / t.toDouble)
       }
       if (cfg.hasNonSeq) {
         val xNs = x(tE - 1, ::).t // one prediction from the appended timestep
-        for (c <- 0 until nNsCat) {
-          val w = lay.mat(s"headNsCat${c}_w", p); val b = lay.vec(s"headNsCat${c}_b", p)
-          val logits = (w.t * xNs) + b
-          val mx = max(logits)
-          val e = exp(logits - mx)
-          val probs = e / sum(e)
-          val y = math.min(math.max(if (nsCat != null) nsCat(c) else 0, 0), w.cols - 1)
-          hl += -math.log(math.max(probs(y), 1e-12))
-          if (doGrad) {
-            val dLogits = probs.copy
-            dLogits(y) -= 1.0
-            lay.mat(s"headNsCat${c}_w", grad) :+= xNs * dLogits.t
-            lay.vec(s"headNsCat${c}_b", grad) :+= dLogits
-            dX(tE - 1, ::) :+= (w * dLogits).t
-          }
+        for (c <- cfg.nonSeqVocabSizes.indices) {
+          val dLogits = P.linear(s"headNsCat$c", xNs)
+          hl += softmaxCe(dLogits, code(nsCat, c, dLogits.length), 1.0)
+          if (doGrad) dX(tE - 1, ::) :+= P.linearBwd(s"headNsCat$c", xNs, dLogits).t
         }
         if (cfg.nNonSeqCont > 0) {
-          val w = lay.mat("headNsCont_w", p); val b = lay.vec("headNsCont_b", p)
-          val pred = (w.t * xNs) + b
-          val err = DenseVector.tabulate(cfg.nNonSeqCont)(j =>
-            pred(j) - (if (nsCont != null) nsCont(j) else 0.0))
+          val err = P.linear("headNsCont", xNs) - DenseVector.tabulate(cfg.nNonSeqCont)(j =>
+            if (nsCont != null) nsCont(j) else 0.0)
           hl += sum(err *:* err) / 2.0
-          if (doGrad) {
-            lay.mat("headNsCont_w", grad) :+= xNs * err.t
-            lay.vec("headNsCont_b", grad) :+= err
-            dX(tE - 1, ::) :+= (w * err).t
-          }
+          if (doGrad) dX(tE - 1, ::) :+= P.linearBwd("headNsCont", xNs, err).t
         }
       }
       (hl, dX)
@@ -522,316 +425,48 @@ object TransformerAE {
     // encoder path and (in decoder mode) the shifted trg path
     val dSrcProj = DenseMatrix.zeros[Double](tE, d)
 
-    if (encSeed == null && cfg.decoderLayers == 0 && cfg.churn) {
+    if (encSeed == null && cfg.churn) {
       // ---- I16 TransformerChurnModel (model_wrapper.py:296-316): BCE
       // logit on the row-major-flattened encoder output, gradients through
       // the UNFROZEN encoder ------------------------------------------
-      val wc = lay.mat("churn_w", p)(::, 0)
-      var z = lay.vec("churn_b", p)(0)
-      for (i <- 0 until tE; j <- 0 until d) z += enc(i, j) * wc(i * d + j)
+      val wc = P.w("churn_w")(::, 0)
+      var z = P.v("churn_b")(0)
+      for (i <- 0 until tE; j <- 0 until d) z += enc.out(i, j) * wc(i * d + j)
       // numerically stable BCE-with-logits
       loss += math.max(z, 0.0) - z * label + math.log1p(math.exp(-math.abs(z)))
       if (!doGrad) return loss
       val dZ = 1.0 / (1.0 + math.exp(-z)) - label
-      val gw = lay.mat("churn_w", grad)(::, 0)
+      val gw = P.gw("churn_w")(::, 0)
       for (i <- 0 until tE; j <- 0 until d) {
-        gw(i * d + j) += enc(i, j) * dZ
+        gw(i * d + j) += enc.out(i, j) * dZ
         dEnc(i, j) += wc(i * d + j) * dZ
       }
-      lay.vec("churn_b", grad)(0) += dZ
+      P.gv("churn_b")(0) += dZ
     } else if (encSeed == null && cfg.decoderLayers == 0) {
-      val (hl, dX) = applyHeads(enc)
+      val (hl, dX) = applyHeads(enc.out)
       loss += hl
       if (!doGrad) return loss
       dEnc :+= dX
     } else if (encSeed == null) {
       // ---- teacher-forced decoder (I7/I9): trg = [0; src[:-1]] shifted in
-      // projected space (model_wrapper.py:227) --------------------------
+      // projected space (model_wrapper.py:227), positions shared with the
+      // encoder (factory.py:84) ------------------------------------------
       val trgProj = DenseMatrix.zeros[Double](tE, d)
-      for (i <- 1 until tE) trgProj(i, ::) := srcProj(i - 1, ::)
-      // trg = dropout(trg * scale + pos), mirroring the encoder input
-      val trgMask = dropMask(tE, d)
-      val g0 = {
-        val m = trgProj.copy
-        m :*= scale
-        m += lay.mat("pos", p)
-        masked(m, trgMask)
-      }
-      final case class DecCache(x: DenseMatrix[Double],
-          sq: DenseMatrix[Double], sk: DenseMatrix[Double], sv: DenseMatrix[Double],
-          sAttn: Array[DenseMatrix[Double]], sCtx: DenseMatrix[Double],
-          r1Pre: DenseMatrix[Double], r1: DenseMatrix[Double],
-          ln1Xhat: DenseMatrix[Double], ln1Inv: Array[Double],
-          cq: DenseMatrix[Double], ck: DenseMatrix[Double], cv: DenseMatrix[Double],
-          cAttn: Array[DenseMatrix[Double]], cCtx: DenseMatrix[Double],
-          r2Pre: DenseMatrix[Double], r2: DenseMatrix[Double],
-          ln2Xhat: DenseMatrix[Double], ln2Inv: Array[Double],
-          ffPre: DenseMatrix[Double], ffAct: DenseMatrix[Double],
-          r3Pre: DenseMatrix[Double],
-          ln3Xhat: DenseMatrix[Double], ln3Inv: Array[Double])
-      val dcaches = new Array[DecCache](cfg.decoderLayers)
-      val decSelfMask = new Array[DenseMatrix[Double]](cfg.decoderLayers)
-      val decCrossMask = new Array[DenseMatrix[Double]](cfg.decoderLayers)
-      val decFfInMask = new Array[DenseMatrix[Double]](cfg.decoderLayers)
-      val decFfMask = new Array[DenseMatrix[Double]](cfg.decoderLayers)
-      val hd = cfg.headDim
-      var g = g0
-      for (l <- 0 until cfg.decoderLayers) {
-        def m(n: String) = lay.mat(s"d${l}_${n}_w", p)
-        def b(n: String) = lay.vec(s"d${l}_${n}_b", p)
-        // causal self-attention
-        val sq = g * m("swq"); sq(*, ::) :+= b("swq")
-        val sk = g * m("swk"); sk(*, ::) :+= b("swk")
-        val sv = g * m("swv"); sv(*, ::) :+= b("swv")
-        val sCtx = DenseMatrix.zeros[Double](tE, d)
-        val sAttns = new Array[DenseMatrix[Double]](cfg.heads)
-        for (hh <- 0 until cfg.heads) {
-          val sl = hh * hd until (hh + 1) * hd
-          val scores = (sq(::, sl) * sk(::, sl).t) / math.sqrt(hd.toDouble)
-          for (i <- 0 until tE; j <- i + 1 until tE) scores(i, j) = -1e30 // tril mask
-          val a = softmaxRows(scores)
-          sAttns(hh) = a
-          sCtx(::, sl) := a * sv(::, sl)
-        }
-        val sOut = sCtx * m("swo"); sOut(*, ::) :+= b("swo")
-        decSelfMask(l) = dropMask(tE, d)
-        val r1Pre = g + masked(sOut, decSelfMask(l))
-        val (r1, ln1Xhat, ln1Inv) =
-          lnFwd(r1Pre, lay.vec(s"d${l}_ln1_g", p), lay.vec(s"d${l}_ln1_b", p))
-        // cross-attention to the encoder output
-        val cq = r1 * m("cwq"); cq(*, ::) :+= b("cwq")
-        val ck = enc * m("cwk"); ck(*, ::) :+= b("cwk")
-        val cv = enc * m("cwv"); cv(*, ::) :+= b("cwv")
-        val cCtx = DenseMatrix.zeros[Double](tE, d)
-        val cAttns = new Array[DenseMatrix[Double]](cfg.heads)
-        for (hh <- 0 until cfg.heads) {
-          val sl = hh * hd until (hh + 1) * hd
-          val a = softmaxRows((cq(::, sl) * ck(::, sl).t) / math.sqrt(hd.toDouble))
-          cAttns(hh) = a
-          cCtx(::, sl) := a * cv(::, sl)
-        }
-        val cOut = cCtx * m("cwo"); cOut(*, ::) :+= b("cwo")
-        decCrossMask(l) = dropMask(tE, d)
-        val r2Pre = r1 + masked(cOut, decCrossMask(l))
-        val (r2, ln2Xhat, ln2Inv) =
-          lnFwd(r2Pre, lay.vec(s"d${l}_ln2_g", p), lay.vec(s"d${l}_ln2_b", p))
-        val ffPre = r2 * m("ff1"); ffPre(*, ::) :+= b("ff1")
-        decFfInMask(l) = dropMask(tE, cfg.pf)
-        val ffAct = masked(relu(ffPre), decFfInMask(l)) // cached DROPPED
-        val ff = ffAct * m("ff2"); ff(*, ::) :+= b("ff2")
-        decFfMask(l) = dropMask(tE, d)
-        val r3Pre = r2 + masked(ff, decFfMask(l))
-        val (out, ln3Xhat, ln3Inv) =
-          lnFwd(r3Pre, lay.vec(s"d${l}_ln3_g", p), lay.vec(s"d${l}_ln3_b", p))
-        dcaches(l) = DecCache(g, sq, sk, sv, sAttns, sCtx, r1Pre, r1, ln1Xhat,
-          ln1Inv, cq, ck, cv, cAttns, cCtx, r2Pre, r2, ln2Xhat, ln2Inv,
-          ffPre, ffAct, r3Pre, ln3Xhat, ln3Inv)
-        g = out
-      }
-      val (hl, dDecOut) = applyHeads(g)
+      for (i <- 1 until tE) trgProj(i, ::) := enc.srcProj(i - 1, ::)
+      val trgMask = drop.mat(cfg.dropout, tE, d)
+      val g0 = scalePos(P, trgProj, trgMask)
+      val layers = stack(P, 'd', cfg.decoderLayers, cfg.heads, g0, enc.out, drop, cfg.dropout)
+      val (hl, dDecOut) = applyHeads(if (layers.isEmpty) g0 else layers.last.out)
       loss += hl
       if (!doGrad) return loss
-      // decoder backward
-      var dG = dDecOut
-      for (l <- (cfg.decoderLayers - 1) to 0 by -1) {
-        val cch = dcaches(l)
-        def m(n: String) = lay.mat(s"d${l}_${n}_w", p)
-        def gm(n: String) = lay.mat(s"d${l}_${n}_w", grad)
-        def gb(n: String) = lay.vec(s"d${l}_${n}_b", grad)
-        val dR3Pre = lnBwd(dG, cch.ln3Xhat, cch.ln3Inv,
-          lay.vec(s"d${l}_ln3_g", p),
-          lay.vec(s"d${l}_ln3_g", grad), lay.vec(s"d${l}_ln3_b", grad))
-        val dFf = masked(dR3Pre, decFfMask(l))
-        gm("ff2") :+= cch.ffAct.t * dFf
-        for (i <- 0 until tE) gb("ff2") :+= dFf(i, ::).t
-        val dFfAct = dFf * m("ff2").t
-        val dFfPre = reluBwd(masked(dFfAct, decFfInMask(l)), cch.ffPre)
-        gm("ff1") :+= cch.r2.t * dFfPre
-        for (i <- 0 until tE) gb("ff1") :+= dFfPre(i, ::).t
-        val dR2 = dR3Pre + (dFfPre * m("ff1").t)
-        val dR2Pre = lnBwd(dR2, cch.ln2Xhat, cch.ln2Inv,
-          lay.vec(s"d${l}_ln2_g", p),
-          lay.vec(s"d${l}_ln2_g", grad), lay.vec(s"d${l}_ln2_b", grad))
-        // cross-attn backward: r2Pre = r1 + drop(cwo(cCtx))
-        val dCOut = masked(dR2Pre, decCrossMask(l))
-        gm("cwo") :+= cch.cCtx.t * dCOut
-        for (i <- 0 until tE) gb("cwo") :+= dCOut(i, ::).t
-        val dCCtx = dCOut * m("cwo").t
-        val dCq = DenseMatrix.zeros[Double](tE, d)
-        val dCk = DenseMatrix.zeros[Double](tE, d)
-        val dCv = DenseMatrix.zeros[Double](tE, d)
-        for (hh <- 0 until cfg.heads) {
-          val sl = hh * hd until (hh + 1) * hd
-          val a = cch.cAttn(hh)
-          val dCtxH = dCCtx(::, sl)
-          val dA = dCtxH * cch.cv(::, sl).t
-          dCv(::, sl) :+= a.t * dCtxH
-          val dScores = DenseMatrix.zeros[Double](tE, tE)
-          for (i <- 0 until tE) {
-            val ai = a(i, ::).t
-            val dai = dA(i, ::).t
-            val dot = sum(ai *:* dai)
-            dScores(i, ::) := ((dai - dot) *:* ai).t
-          }
-          dScores :/= math.sqrt(hd.toDouble)
-          dCq(::, sl) :+= dScores * cch.ck(::, sl)
-          dCk(::, sl) :+= dScores.t * cch.cq(::, sl)
-        }
-        gm("cwq") :+= cch.r1.t * dCq
-        gm("cwk") :+= enc.t * dCk
-        gm("cwv") :+= enc.t * dCv
-        for (i <- 0 until tE) {
-          gb("cwq") :+= dCq(i, ::).t; gb("cwk") :+= dCk(i, ::).t
-          gb("cwv") :+= dCv(i, ::).t
-        }
-        dEnc :+= (dCk * m("cwk").t) + (dCv * m("cwv").t)
-        val dR1 = dR2Pre + (dCq * m("cwq").t)
-        val dR1Pre = lnBwd(dR1, cch.ln1Xhat, cch.ln1Inv,
-          lay.vec(s"d${l}_ln1_g", p),
-          lay.vec(s"d${l}_ln1_g", grad), lay.vec(s"d${l}_ln1_b", grad))
-        // causal self-attn backward: r1Pre = x + drop(swo(sCtx))
-        val dSOut = masked(dR1Pre, decSelfMask(l))
-        gm("swo") :+= cch.sCtx.t * dSOut
-        for (i <- 0 until tE) gb("swo") :+= dSOut(i, ::).t
-        val dSCtx = dSOut * m("swo").t
-        val dSq = DenseMatrix.zeros[Double](tE, d)
-        val dSk = DenseMatrix.zeros[Double](tE, d)
-        val dSv = DenseMatrix.zeros[Double](tE, d)
-        for (hh <- 0 until cfg.heads) {
-          val sl = hh * hd until (hh + 1) * hd
-          val a = cch.sAttn(hh)
-          val dCtxH = dSCtx(::, sl)
-          val dA = dCtxH * cch.sv(::, sl).t
-          dSv(::, sl) :+= a.t * dCtxH
-          val dScores = DenseMatrix.zeros[Double](tE, tE)
-          for (i <- 0 until tE) {
-            val ai = a(i, ::).t
-            val dai = dA(i, ::).t
-            val dot = sum(ai *:* dai)
-            dScores(i, ::) := ((dai - dot) *:* ai).t
-          }
-          dScores :/= math.sqrt(hd.toDouble)
-          dSq(::, sl) :+= dScores * cch.sk(::, sl)
-          dSk(::, sl) :+= dScores.t * cch.sq(::, sl)
-        }
-        gm("swq") :+= cch.x.t * dSq
-        gm("swk") :+= cch.x.t * dSk
-        gm("swv") :+= cch.x.t * dSv
-        for (i <- 0 until tE) {
-          gb("swq") :+= dSq(i, ::).t; gb("swk") :+= dSk(i, ::).t
-          gb("swv") :+= dSv(i, ::).t
-        }
-        dG = dR1Pre + (dSq * m("swq").t) + (dSk * m("swk").t) + (dSv * m("swv").t)
-      }
-      // g0 = drop(trgProj * scale + pos); trg row 0 is the constant zero
-      // vector, rows 1.. shift back onto srcProj rows 0..
-      val dG0 = masked(dG, trgMask)
-      lay.mat("pos", grad) :+= dG0
-      val dTrgProj = dG0 * scale
+      // trg row 0 is the constant zero vector; rows 1.. shift back onto
+      // srcProj rows 0..
+      val dG0 = masked(layers.foldRight(dDecOut)((b, dg) => b.backward(dg, dEnc)), trgMask)
+      P.gw("pos") :+= dG0
+      val dTrgProj = dG0 * math.sqrt(d.toDouble)
       for (i <- 1 until tE) dSrcProj(i - 1, ::) :+= dTrgProj(i, ::)
     }
-
-    // ---- backward through encoder layers ------------------------------
-    var dH = dEnc
-    for (l <- (cfg.layers - 1) to 0 by -1) {
-      val cch = caches(l)
-      def m(n: String) = lay.mat(s"l${l}_${n}_w", p)
-      def gm(n: String) = lay.mat(s"l${l}_${n}_w", grad)
-      def gb(n: String) = lay.vec(s"l${l}_${n}_b", grad)
-      // ln2
-      val dRes2Pre = lnBwd(dH, cch.ln2Xhat, cch.ln2Inv,
-        lay.vec(s"l${l}_ln2_g", p),
-        lay.vec(s"l${l}_ln2_g", grad), lay.vec(s"l${l}_ln2_b", grad))
-      // res2Pre = res1 + drop(ff2(drop(relu(ff1(res1)))))
-      val dFf = masked(dRes2Pre, encFfMask(l))
-      gm("ff2") :+= cch.ffAct.t * dFf
-      for (i <- 0 until tE) gb("ff2") :+= dFf(i, ::).t
-      val dFfAct = dFf * m("ff2").t
-      val dFfPre = reluBwd(masked(dFfAct, encFfInMask(l)), cch.ffPre)
-      gm("ff1") :+= cch.res1.t * dFfPre
-      for (i <- 0 until tE) gb("ff1") :+= dFfPre(i, ::).t
-      val dRes1 = dRes2Pre + (dFfPre * m("ff1").t)
-      // ln1
-      val dRes1Pre = lnBwd(dRes1, cch.ln1Xhat, cch.ln1Inv,
-        lay.vec(s"l${l}_ln1_g", p),
-        lay.vec(s"l${l}_ln1_g", grad), lay.vec(s"l${l}_ln1_b", grad))
-      // res1Pre = x + drop(wo(ctx))
-      val dAttnOut = masked(dRes1Pre, encAttnMask(l))
-      gm("wo") :+= cch.ctx.t * dAttnOut
-      for (i <- 0 until tE) gb("wo") :+= dAttnOut(i, ::).t
-      val dCtx = dAttnOut * m("wo").t
-      val hd = cfg.headDim
-      val dQ = DenseMatrix.zeros[Double](tE, d)
-      val dK = DenseMatrix.zeros[Double](tE, d)
-      val dV = DenseMatrix.zeros[Double](tE, d)
-      for (hh <- 0 until cfg.heads) {
-        val sl = hh * hd until (hh + 1) * hd
-        val a = cch.attn(hh)
-        val dCtxH = dCtx(::, sl)
-        val dA = dCtxH * cch.v(::, sl).t
-        dV(::, sl) :+= a.t * dCtxH
-        // softmax backward per row
-        val dScores = DenseMatrix.zeros[Double](tE, tE)
-        for (i <- 0 until tE) {
-          val ai = a(i, ::).t
-          val dai = dA(i, ::).t
-          val dot = sum(ai *:* dai)
-          dScores(i, ::) := ((dai - dot) *:* ai).t
-        }
-        dScores :/= math.sqrt(hd.toDouble)
-        dQ(::, sl) :+= dScores * cch.k(::, sl)
-        dK(::, sl) :+= dScores.t * cch.q(::, sl)
-      }
-      gm("wq") :+= cch.x.t * dQ
-      gm("wk") :+= cch.x.t * dK
-      gm("wv") :+= cch.x.t * dV
-      for (i <- 0 until tE) {
-        gb("wq") :+= dQ(i, ::).t; gb("wk") :+= dK(i, ::).t; gb("wv") :+= dV(i, ::).t
-      }
-      dH = dRes1Pre + (dQ * m("wq").t) + (dK * m("wk").t) + (dV * m("wv").t)
-    }
-    // h0 = drop(srcProj * scale + pos)
-    val dH0 = masked(dH, inMask)
-    lay.mat("pos", grad) :+= dH0
-    dSrcProj :+= dH0 * scale
-
-    // ---- projection backward ------------------------------------------
-    val dSeqProj = dSrcProj(0 until t, ::)
-    lay.mat("linSeq_w", grad) :+= x0.t * dSeqProj
-    val dBSeq = lay.vec("linSeq_b", grad)
-    for (i <- 0 until t) dBSeq :+= dSeqProj(i, ::).t
-    // x0 was stored dropped; route grads back through the embedding mask
-    val dX0 = masked(dSeqProj * wSeq.t, embMask)
-    for (i <- 0 until t) {
-      var off = 0
-      for (c <- 0 until nCat) {
-        if (seqEmbGradOut != null)
-          seqEmbGradOut(i, off until off + embDims(c)) := dX0(i, off until off + embDims(c))
-        else if (seqEmbInput == null) {
-          val tableG = lay.mat(s"emb$c", grad)
-          val code = math.min(math.max(catCodes(i)(c), 0), tableG.rows - 1)
-          tableG(code, ::) :+= dX0(i, off until off + embDims(c))
-        }
-        off += embDims(c)
-      }
-      if (contGradOut != null)
-        for (c <- 0 until cfg.nCont) contGradOut(i)(c) = dX0(i, embDims.sum + c)
-    }
-    if (cfg.hasNonSeq) {
-      val dNs = dSrcProj(tE - 1, ::).t
-      val wNs = lay.mat("linNonSeq_w", p)
-      lay.mat("linNonSeq_w", grad) :+= nsx0 * dNs.t
-      lay.vec("linNonSeq_b", grad) :+= dNs
-      val dNsX0 = wNs * dNs
-      if (nsMask != null) dNsX0 :*= nsMask
-      var off = 0
-      for (c <- 0 until nNsCat) {
-        val tableG = lay.mat(s"nsEmb$c", grad)
-        val code = math.min(math.max(if (nsCat != null) nsCat(c) else 0, 0), tableG.rows - 1)
-        tableG(code, ::) :+= dNsX0(off until off + nsEmbDims(c)).t
-        off += nsEmbDims(c)
-      }
-    }
+    enc.backward(dEnc, dSrcProj, seqEmbGradOut, contGradOut)
     loss
   }
 
@@ -845,70 +480,16 @@ object TransformerAE {
     embedDouble(cfg, lay, p, catCodes, cont, nsCat, nsCont).map(_.toFloat)
 
   /** Double-precision embed (numerics tests need it — float output would
-    * drown finite differences in quantization). */
+    * drown finite differences in quantization): `lossAndGrad`'s encoder
+    * forward without dropout, its output flattened row-major. */
   def embedDouble(cfg: AeConfig, lay: ParamLayout, p: Array[Double],
       catCodes: Array[Array[Int]], cont: Array[Array[Double]],
       nsCat: Array[Int] = null, nsCont: Array[Double] = null): Array[Double] = {
-    val t = cfg.seqLen; val tE = cfg.tEff; val d = cfg.dModel
-    val embDims = cfg.embDims
-    val x0 = DenseMatrix.zeros[Double](t, cfg.inDim)
-    for (i <- 0 until t) {
-      var off = 0
-      for (c <- cfg.vocabSizes.indices) {
-        val table = lay.mat(s"emb$c", p)
-        val code = math.min(math.max(catCodes(i)(c), 0), table.rows - 1)
-        x0(i, off until off + embDims(c)) := table(code, ::)
-        off += embDims(c)
-      }
-      for (c <- 0 until cfg.nCont) x0(i, embDims.sum + c) = cont(i)(c)
-    }
-    var h = DenseMatrix.zeros[Double](tE, d)
-    locally {
-      val m = x0 * lay.mat("linSeq_w", p)
-      m(*, ::) :+= lay.vec("linSeq_b", p)
-      h(0 until t, ::) := m
-      if (cfg.hasNonSeq) {
-        val nsEmbDims = cfg.nsEmbDims
-        val v = DenseVector.zeros[Double](cfg.nsInDim)
-        var off = 0
-        for (c <- cfg.nonSeqVocabSizes.indices) {
-          val table = lay.mat(s"nsEmb$c", p)
-          val code = math.min(math.max(if (nsCat != null) nsCat(c) else 0, 0), table.rows - 1)
-          v(off until off + nsEmbDims(c)) := table(code, ::).t
-          off += nsEmbDims(c)
-        }
-        for (c <- 0 until cfg.nNonSeqCont)
-          v(nsEmbDims.sum + c) = if (nsCont != null) nsCont(c) else 0.0
-        h(t, ::) := ((lay.mat("linNonSeq_w", p).t * v) + lay.vec("linNonSeq_b", p)).t
-      }
-    }
-    h :*= math.sqrt(d.toDouble)
-    h += lay.mat("pos", p)
-    for (l <- 0 until cfg.layers) {
-      def m(n: String) = lay.mat(s"l${l}_${n}_w", p)
-      def b(n: String) = lay.vec(s"l${l}_${n}_b", p)
-      val q = h * m("wq"); q(*, ::) :+= b("wq")
-      val k = h * m("wk"); k(*, ::) :+= b("wk")
-      val v = h * m("wv"); v(*, ::) :+= b("wv")
-      val hd = cfg.headDim
-      val ctx = DenseMatrix.zeros[Double](tE, d)
-      for (hh <- 0 until cfg.heads) {
-        val sl = hh * hd until (hh + 1) * hd
-        val a = softmaxRows((q(::, sl) * k(::, sl).t) / math.sqrt(hd.toDouble))
-        ctx(::, sl) := a * v(::, sl)
-      }
-      val attnOut = ctx * m("wo"); attnOut(*, ::) :+= b("wo")
-      val (res1, _, _) = lnFwd(h + attnOut,
-        lay.vec(s"l${l}_ln1_g", p), lay.vec(s"l${l}_ln1_b", p))
-      val ffPre = res1 * m("ff1"); ffPre(*, ::) :+= b("ff1")
-      val ff = relu(ffPre) * m("ff2"); ff(*, ::) :+= b("ff2")
-      val (out, _, _) = lnFwd(res1 + ff,
-        lay.vec(s"l${l}_ln2_g", p), lay.vec(s"l${l}_ln2_b", p))
-      h = out
-    }
-    val out = new Array[Double](tE * d)
+    val enc = new Encoder(cfg, new Params(lay, p, null), catCodes, cont, nsCat, nsCont,
+      null, new Dropout(0L), 0.0).out
+    val out = new Array[Double](cfg.tEff * cfg.dModel)
     var idx = 0
-    for (i <- 0 until tE; j <- 0 until d) { out(idx) = h(i, j); idx += 1 }
+    for (i <- 0 until cfg.tEff; j <- 0 until cfg.dModel) { out(idx) = enc(i, j); idx += 1 }
     out
   }
 }

@@ -35,6 +35,9 @@ object LstmTrainer {
       "labelCol only feeds the churn objective (decoder = \"churn\")")
     require(!cfg.hasChurn || labelCol.nonEmpty,
       "decoder = \"churn\" trains BCE against labelCol — pass one")
+    graft.ml.Ingress.requireColumns(cfg.seqLen, cfg.vocabSizes, cfg.nCont,
+      cfg.nonSeqVocabSizes, cfg.nNonSeqCont,
+      seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols)
     val lay = cfg.layout
     val data = graft.ml.Ingress.examples(wide, seqCatCols, seqContCols,
         nonSeqCatCols, nonSeqContCols, labelCol)
@@ -71,6 +74,9 @@ object LstmTrainer {
       nonSeqCatCols: Seq[String] = Nil,
       nonSeqContCols: Seq[String] = Nil): DataFrame = {
     val cfg = res.cfg
+    graft.ml.Ingress.requireColumns(cfg.seqLen, cfg.vocabSizes, cfg.nCont,
+      cfg.nonSeqVocabSizes, cfg.nNonSeqCont,
+      seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols)
     val lay = cfg.layout
     graft.ml.Ingress.score(wide, idCol, cfg.seqLen, seqCatCols, seqContCols,
         nonSeqCatCols, nonSeqContCols, res.params,
@@ -89,6 +95,9 @@ object LstmTrainer {
       nonSeqContCols: Seq[String] = Nil): DataFrame = {
     require(res.cfg.hasChurn, "transformChurn needs a churn-trained Result")
     val cfg = res.cfg
+    graft.ml.Ingress.requireColumns(cfg.seqLen, cfg.vocabSizes, cfg.nCont,
+      cfg.nonSeqVocabSizes, cfg.nNonSeqCont,
+      seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols)
     val lay = cfg.layout
     graft.ml.Ingress.score(wide, idCol, cfg.seqLen, seqCatCols, seqContCols,
         nonSeqCatCols, nonSeqContCols, res.params,

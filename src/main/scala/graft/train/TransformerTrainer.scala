@@ -37,6 +37,9 @@ object TransformerTrainer {
       "labelCol only feeds the churn objective (churn = true)")
     require(!cfg.churn || labelCol.nonEmpty,
       "churn = true trains BCE against labelCol — pass one")
+    graft.ml.Ingress.requireColumns(cfg.seqLen, cfg.vocabSizes, cfg.nCont,
+      cfg.nonSeqVocabSizes, cfg.nNonSeqCont,
+      seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols)
     val lay = cfg.layout
     val data = graft.ml.Ingress.examples(wide, seqCatCols, seqContCols,
         nonSeqCatCols, nonSeqContCols, labelCol)
@@ -79,6 +82,9 @@ object TransformerTrainer {
       nonSeqContCols: Seq[String] = Nil): DataFrame = {
     require(res.cfg.churn, "transformChurn needs a churn-trained Result")
     val cfg = res.cfg
+    graft.ml.Ingress.requireColumns(cfg.seqLen, cfg.vocabSizes, cfg.nCont,
+      cfg.nonSeqVocabSizes, cfg.nNonSeqCont,
+      seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols)
     val lay = cfg.layout
     graft.ml.Ingress.score(wide, idCol, cfg.seqLen, seqCatCols, seqContCols,
         nonSeqCatCols, nonSeqContCols, res.params,
@@ -103,6 +109,9 @@ object TransformerTrainer {
       seqCatCols: Seq[Seq[String]], seqContCols: Seq[Seq[String]],
       nonSeqCatCols: Seq[String] = Nil, nonSeqContCols: Seq[String] = Nil): DataFrame = {
     val cfg = res.cfg
+    graft.ml.Ingress.requireColumns(cfg.seqLen, cfg.vocabSizes, cfg.nCont,
+      cfg.nonSeqVocabSizes, cfg.nNonSeqCont,
+      seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols)
     val lay = cfg.layout
     graft.ml.Ingress.score(wide, idCol, cfg.seqLen, seqCatCols, seqContCols,
         nonSeqCatCols, nonSeqContCols, res.params,

@@ -336,4 +336,69 @@ class AutodiffSpec extends AnyFunSuite {
       cfg.copy(pretrainedEmb = Map(5 -> vecs))
     }
   }
+
+  test("golden values: loss, gradient and embedding bits are pinned per config") {
+    import breeze.linalg.DenseMatrix
+    // (name, config, non-seq inputs, churn label, dropSeed) -> the loss bits
+    // and the fingerprints of the full gradient and of embedDouble
+    val cases = Seq(
+      ("encoder", cfg, false, 0.0, 0L),
+      ("decoder", cfg.copy(decoderLayers = 1, seed = 23L), false, 0.0, 0L),
+      ("churn", cfg.copy(churn = true, seed = 37L, nonSeqVocabSizes = Seq(3), nNonSeqCont = 1),
+        true, 1.0, 0L),
+      ("non-seq", cfg.copy(nonSeqVocabSizes = Seq(3), nNonSeqCont = 2, seed = 31L), true, 0.0, 0L),
+      ("dropout", cfg.copy(dropout = 0.1, decoderLayers = 1, nonSeqVocabSizes = Seq(3),
+        nNonSeqCont = 1, seed = 15L), true, 0.0, 99L))
+    val expected = Map(
+      "encoder" -> (4616084611128114132L,
+        Fingerprint(7339126773010277895L, 151.29704523523307, 21.652914717311155),
+        Fingerprint(8744547759530157145L, 9.927481339023506, 11.340551710254745)),
+      "decoder" -> (4617690293900483728L,
+        Fingerprint(-742622128581048892L, 96.25824157219789, -29.63000239758643),
+        Fingerprint(7161939938857316721L, 10.38831087297484, -12.79945649491145)),
+      "churn" -> (4603815823292439310L,
+        Fingerprint(-9172875949987463305L, 43.55386562805632, -3.9525037877863842),
+        Fingerprint(-3558683535451419344L, 13.655064045752999, -2.664728482927047)),
+      "non-seq" -> (4618714558397687370L,
+        Fingerprint(-323782648104608730L, 70.4590171773686, -2.7097841707376933),
+        Fingerprint(-3266186632848987116L, 13.281906480125796, 5.54615354587912)),
+      "dropout" -> (4621803481878143680L,
+        Fingerprint(3402955396685782256L, 98.74506043583808, 44.674925446843105),
+        Fingerprint(1578419796355735575L, 13.432538724700951, 5.728753163534358)))
+    val failures = scala.collection.mutable.ArrayBuffer[String]()
+    for ((name, c, withNs, label, dropSeed) <- cases) {
+      val l = c.layout
+      val p = c.initParams()
+      val nsCatV = if (withNs) Array(1) else null
+      val nsContV = if (withNs) Array(0.7, -0.2).take(c.nNonSeqCont) else null
+      val grad = new Array[Double](l.totalSize)
+      val loss = TransformerAE.lossAndGrad(c, l, p, grad, cat, cont, nsCat = nsCatV,
+        nsCont = nsContV, label = label, dropSeed = dropSeed)
+      val lossFwd = TransformerAE.lossAndGrad(c, l, p, null, cat, cont, nsCat = nsCatV,
+        nsCont = nsContV, label = label, dropSeed = dropSeed)
+      assert(lossFwd == loss, s"$name: forward-only loss $lossFwd != $loss")
+      val emb = TransformerAE.embedDouble(c, l, p, cat, cont, nsCatV, nsContV)
+      val got = (java.lang.Double.doubleToLongBits(loss), Fingerprint.of(grad), Fingerprint.of(emb))
+      if (got != expected(name)) failures += s"$name: got $got, want ${expected(name)}"
+    }
+    // the integrated-gradients path: encoder-space seed, embedding-space
+    // input, and the input gradients written to the caller's buffers
+    locally {
+      val p = cfg.initParams()
+      val grad = new Array[Double](lay.totalSize)
+      val seed = DenseMatrix.tabulate(cfg.tEff, cfg.dModel)((i, j) => 0.1 * (i + 1) - 0.05 * j)
+      val embIn = DenseMatrix.tabulate(cfg.seqLen, cfg.embDims.sum)((i, j) => 0.2 * i - 0.1 * j)
+      val embGrad = DenseMatrix.zeros[Double](cfg.seqLen, cfg.embDims.sum)
+      val contGrad = Array.ofDim[Double](cfg.seqLen, cfg.nCont)
+      val loss = TransformerAE.lossAndGrad(cfg, lay, p, grad, cat, cont, encSeed = seed,
+        contGradOut = contGrad, seqEmbInput = embIn, seqEmbGradOut = embGrad)
+      assert(loss == 0.0)
+      val got = (Fingerprint.of(grad), Fingerprint.of(embGrad.toArray), Fingerprint.of(contGrad.flatten))
+      val want = (Fingerprint(2263368813473985391L, 8.831687416108183, 3.9241785199391543),
+        Fingerprint(-6934979667595736519L, 0.38693362369870693, -0.09899003648366361),
+        Fingerprint(-7829996413351538582L, 0.7345436018067824, -0.2391408420875597))
+      if (got != want) failures += s"explain: got $got, want $want"
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
 }

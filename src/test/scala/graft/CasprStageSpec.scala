@@ -137,7 +137,7 @@ class CasprStageSpec extends SparkSpec {
       Seq("value", "ts_days"),
       graft.train.TrainConfig(lr = 1e-2, maxEpochs = 2, warmupEpochs = 1),
       batchSize = 64).fit(wide)
-    val dir = java.nio.file.Files.createTempDirectory("caspr_model").toString
+    val dir = tempDir("caspr_model").toString
     model.write.overwrite().save(dir)
     val loaded = CasprModel.load(dir)
     assert(loaded.weights.toSeq == model.weights.toSeq)

@@ -13,7 +13,7 @@ class CorpusIoSpec extends SparkSpec {
     StructField("source", StringType)))
 
   test("jsonl ingest: good lines parse, broken lines quarantine, drift nulls") {
-    val dir = Files.createTempDirectory("graft-jsonl").toFile
+    val dir = tempDir("graft-jsonl").toFile
     val f = new java.io.File(dir, "part0.jsonl")
     Files.writeString(f.toPath,
       """{"doc_id": 1, "text": "hello world", "source": "web"}
@@ -71,7 +71,7 @@ class CorpusIoSpec extends SparkSpec {
       (1L, "a", "web", "train"), (2L, "b", "web", "test"),
       (3L, "c", "books", "train"), (4L, "d", "books", "train")
     ).toDF("doc_id", "text", "source", "split")
-    val dir = Files.createTempDirectory("graft-corpus").toFile.getAbsolutePath
+    val dir = tempDir("graft-corpus").toFile.getAbsolutePath
     val path = CorpusIo.writeCorpus(docs, s"$dir/corpus",
       partitionCols = Seq("source", "split"))
     val back = CorpusIo.readCorpus(spark, path)
@@ -115,7 +115,7 @@ class CorpusIoSpec extends SparkSpec {
       // record trailer
       (5L, "привет мир — ok", "web")
     ).toDF("doc_id", "text", "source")
-    val dir = Files.createTempDirectory("graft-warc").toString
+    val dir = tempDir("graft-warc").toString
     val uri = concat(lit("http://x/"), col("source"), lit("/"), col("doc_id"))
     graft.sources.Warc.write(docs, "doc_id", "text", uri, dir)
     val back = graft.sources.Warc.read(spark, dir)
@@ -133,7 +133,7 @@ class CorpusIoSpec extends SparkSpec {
       nonAscii.getBytes(java.nio.charset.StandardCharsets.UTF_8).length.toLong,
       nonAscii)))
     // malformed record (no headers at all) parses to null fields, no throw
-    val badDir = Files.createTempDirectory("graft-warc-bad").toString
+    val badDir = tempDir("graft-warc-bad").toString
     Seq("WARC/1.0\r\ngarbage with no headers").toDF("value")
       .write.mode("overwrite").text(badDir)
     val bad = graft.sources.Warc.read(spark, badDir).collect()

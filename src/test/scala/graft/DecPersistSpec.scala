@@ -39,7 +39,7 @@ class DecPersistSpec extends SparkSpec {
     val cfg = FeaturizerConfig(roles, seqLen = 3, historyDays = 21,
       tiebreak = Seq("event_id"))
     val model = CasprFeaturizer.fit(ev, cfg)
-    val dir = java.nio.file.Files.createTempDirectory("graft_persist").toString
+    val dir = tempDir("graft_persist").toString
     Persist.saveFeaturizer(model, dir)
     val loaded = Persist.loadFeaturizer(spark, dir, cfg)
     // identical transforms

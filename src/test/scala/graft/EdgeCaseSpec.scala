@@ -240,9 +240,9 @@ class EdgeCaseSpec extends SparkSpec {
 
   test("profile scoring: empty input and all-null c_acctbal take the constant-column branch") {
     val raw = (t: String) => spark.read.parquet(s"$sf/$t.parquet")
-    val empty = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val empty = tempDir("graft-empty").toString
     Seq("events", "customer").foreach(t => raw(t).limit(0).write.parquet(s"$empty/$t.parquet"))
-    val noBal = java.nio.file.Files.createTempDirectory("graft-nobal").toString
+    val noBal = tempDir("graft-nobal").toString
     raw("events").write.parquet(s"$noBal/events.parquet")
     raw("customer").withColumn("c_acctbal", lit(null).cast("double"))
       .write.parquet(s"$noBal/customer.parquet")

@@ -63,7 +63,7 @@ class LayoutSpec extends SparkSpec {
 
   test("compactTo coalesces a many-file corpus without losing rows") {
     import graft.sources.CorpusIo
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toFile.getAbsolutePath
+    val dir = tempDir("graft-compact").toFile.getAbsolutePath
     val docs = (1 to 100).map(i => (i.toLong, s"doc $i")).toDF("doc_id", "text")
     docs.repartition(16).write.parquet(s"$dir/in")
     assert(spark.read.parquet(s"$dir/in").inputFiles.length == 16)

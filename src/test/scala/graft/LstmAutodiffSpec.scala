@@ -352,4 +352,96 @@ class LstmAutodiffSpec extends AnyFunSuite {
     assert(p.indices.exists(i => p(i) != before(i)))
     assert(pre.copy(freezePretrained = false).frozenRanges.isEmpty)
   }
+
+  test("golden values: loss, gradient and embedding bits are pinned per config") {
+    // (name, config, non-seq inputs, churn label, dropSeed) -> the loss and
+    // the fingerprints of the full gradient, the training call's embedding
+    // and the serving (embedOnly) embedding. Every config is bit-exact
+    // except attnHeads > 1, whose attention layer norm shares the
+    // transformer's LayerNorm kernel: rounding may move those values by at
+    // most 1e-12 relative.
+    val mha = cfg.copy(hidden = 6, outDim = 4, attnHeads = 2, seed = 98L)
+    val cases = Seq(
+      ("none", cfg, false, 0.0, 0L),
+      ("teacher", cfg.copy(outDim = 5, decoder = "teacher", seed = 27L), false, 0.0, 0L),
+      ("auto", cfg.copy(outDim = 5, decoder = "auto", nonSeqVocabSizes = Seq(3),
+        nNonSeqCont = 2, nsMlpDim = 4, seed = 79L), true, 0.0, 0L),
+      ("churn", cfg.copy(decoder = "churn", seed = 83L), false, 1.0, 0L),
+      ("mha", mha, false, 0.0, 0L),
+      ("mha-teacher-ns", cfg.copy(hidden = 6, outDim = 6, attnHeads = 3, decoder = "teacher",
+        nonSeqVocabSizes = Seq(3), nNonSeqCont = 1, nsMlpDim = 4, seed = 101L), true, 0.0, 0L),
+      ("mha-dropout-bidir2", mha.copy(dropout = 0.2, numLayers = 2, bidirectional = true,
+        seed = 103L), false, 0.0, 7L),
+      ("bidir2", cfg.copy(numLayers = 2, bidirectional = true, seed = 42L), false, 0.0, 0L),
+      ("non-seq", cfg.copy(nonSeqVocabSizes = Seq(3, 4), nNonSeqCont = 2, nsMlpDim = 4,
+        seed = 71L), true, 0.0, 0L),
+      ("dropout", cfg.copy(numLayers = 2, bidirectional = true, dropout = 0.2, seed = 61L),
+        false, 0.0, 7L))
+    val expected = Map(
+      "none" -> (4611109546798657916L,
+        Fingerprint(7511605064916613840L, 4.606222170347288, -0.22683984646703248),
+        Fingerprint(4593932291826776232L, 0.1322350984417617, 0.5289403937670468),
+        Fingerprint(4593932291826776232L, 0.1322350984417617, 0.5289403937670468)),
+      "teacher" -> (4610841515452685826L,
+        Fingerprint(-4111157402643082354L, 2.946659932506155, -0.5851895327907006),
+        Fingerprint(-16776314453998940L, 0.0466196216101822, 0.09641902514602586),
+        Fingerprint(-16776314453998940L, 0.0466196216101822, 0.09641902514602586)),
+      "auto" -> (4615198261173442354L,
+        Fingerprint(-2657338858007998185L, 12.783583533731427, 5.874688523334081),
+        Fingerprint(-371927171743732034L, 0.5813700554593242, 2.546810470938552),
+        Fingerprint(-371927171743732034L, 0.5813700554593242, 2.546810470938552)),
+      "churn" -> (4605139011457679904L,
+        Fingerprint(-1897998619960352877L, 7.356126444077644, -4.721159220767866),
+        Fingerprint(-886624910084825983L, 0.16193335002479525, 0.6199832708887362),
+        Fingerprint(-886624910084825983L, 0.16193335002479525, 0.6199832708887362)),
+      "mha" -> (4616544373741050453L,
+        Fingerprint(-7095781010248463789L, 403.2741804386576, 275.2281871706486),
+        Fingerprint(-7973542212109791414L, 2.041828255742908, 6.0569103632910375),
+        Fingerprint(-1027940552395926297L, 1.8572759145444433, 5.165786746115085)),
+      "mha-teacher-ns" -> (4610940378868858641L,
+        Fingerprint(-8363519241823711245L, 12.954415969052347, 9.67018029681548),
+        Fingerprint(3011316433383924698L, 6.527468324006725, 29.867051757703084),
+        Fingerprint(-2504974634256474890L, 6.768016167458949, 30.458245447088952)),
+      "mha-dropout-bidir2" -> (4610970927963230862L,
+        Fingerprint(-1727157218836519881L, 4.421684276882448, -3.9847231621316315),
+        Fingerprint(15699857L, 0.0, 0.0),
+        Fingerprint(4603651620623870015L, 0.6080026552106312, 2.432010620842525)),
+      "bidir2" -> (4611209919516822530L,
+        Fingerprint(4693089801909580632L, 5.248220981647276, -2.0369712515866207),
+        Fingerprint(5876179583748920379L, 0.10900405622242046, 0.27850935340165967),
+        Fingerprint(5876179583748920379L, 0.10900405622242046, 0.27850935340165967)),
+      "non-seq" -> (4611316631824286437L,
+        Fingerprint(-5157520746745331742L, 6.662865815061041, 0.9902126341810387),
+        Fingerprint(-2385725669782754176L, 0.09966580443832122, 0.19970617049981867),
+        Fingerprint(-2385725669782754176L, 0.09966580443832122, 0.19970617049981867)),
+      "dropout" -> (4611374677644005959L,
+        Fingerprint(1409422088528992193L, 12.304935667877906, -3.491022116135909),
+        Fingerprint(-7518670709698958529L, 0.279760487459503, 1.0771876069414843),
+        Fingerprint(-7488018421205859778L, 0.2777479743412451, 1.0687578963118682)))
+    val failures = scala.collection.mutable.ArrayBuffer[String]()
+    for ((name, c, withNs, label, dropSeed) <- cases) {
+      val l = c.layout
+      val p = c.initParams()
+      val nsCatV = if (withNs) Array(2, 0).take(c.nonSeqVocabSizes.size) else null
+      val nsContV = if (withNs) Array(0.4, -0.7).take(c.nNonSeqCont) else null
+      val grad = new Array[Double](l.totalSize)
+      val (loss, emb) = LstmAE.lossGradEmbed(c, l, p, grad, cat, cont, nsCatV, nsContV,
+        label, dropSeed = dropSeed)
+      val lossFwd = LstmAE.lossGradEmbed(c, l, p, null, cat, cont, nsCatV, nsContV,
+        label, dropSeed = dropSeed)._1
+      val serve = LstmAE.lossGradEmbed(c, l, p, null, cat, cont, nsCatV, nsContV,
+        embedOnly = true)._2
+      assert(lossFwd == loss, s"$name: forward-only loss $lossFwd != $loss")
+      val got = (java.lang.Double.doubleToLongBits(loss), Fingerprint.of(grad),
+        Fingerprint.of(emb), Fingerprint.of(serve))
+      val want @ (lossBits, gradFp, embFp, serveFp) = expected(name)
+      val tol = if (c.attnHeads > 1) 1e-12 else 0.0
+      val wantLoss = java.lang.Double.longBitsToDouble(lossBits)
+      val ok = (if (tol == 0) got._1 == lossBits
+                else math.abs(loss - wantLoss) <= tol * math.abs(wantLoss)) &&
+        got._2.matches(gradFp, tol) && got._3.matches(embFp, tol) && got._4.matches(serveFp, tol)
+      if (!ok) failures += s"$name: got $got, want $want"
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
 }

@@ -68,8 +68,7 @@ class MiscSpec extends SparkSpec {
 
   test("A1 handover: round trip with block-size option") {
     val df = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-    val path = Handover.write(df, java.nio.file.Files
-      .createTempDirectory("graft_handover").toString, partitions = 4)
+    val path = Handover.write(df, tempDir("graft_handover").toString, partitions = 4)
     val back = Handover.read(spark, path)
     assert(back.count() == 100)
     assert(back.rdd.getNumPartitions >= 1)
@@ -113,7 +112,7 @@ class MiscSpec extends SparkSpec {
 
   test("Prebuilt: state built under one code token is not served under another") {
     import graft.core.Prebuilt
-    val src = java.nio.file.Files.createTempFile("graft_prebuilt_src", ".parquet").toFile
+    val src = tempFile("graft_prebuilt_src", ".parquet").toFile
     var builds = 0
     def stateFor(token: String) = Prebuilt.dir("spec", src, token, 7) { p =>
       builds += 1

@@ -300,7 +300,7 @@ class OpsSpec extends SparkSpec {
 
   test("BPE / n-gram LMs / quality classifier persist and reload identically") {
     import graft.ops.Bpe
-    val dir = java.nio.file.Files.createTempDirectory("graft_persist").toString
+    val dir = tempDir("graft_persist").toString
     val docs = graft.core.Tables.load(spark, sf, "documents").limit(80)
     // BPE: fitted merges round-trip in rank order; tokenization identical
     val m = Bpe.fit(docs, "text", nMerges = 24)
@@ -1028,7 +1028,7 @@ class OpsSpec extends SparkSpec {
     val q = e.filter($"vec_id" < 10).select($"vec_id".as("qid"), $"embedding")
     val c = e.filter($"vec_id" >= 10).select($"vec_id".as("cid"), $"embedding")
     val idx = IvfIndex.fit(c, nCells = 5)
-    val dir = java.nio.file.Files.createTempDirectory("ivf").toString
+    val dir = tempDir("ivf").toString
     idx.save(dir)
     // the inverted file is partitioned by cell on disk (DPP-prunable)
     val cellDirs = new java.io.File(s"$dir/corpus").listFiles()
@@ -1059,7 +1059,7 @@ class OpsSpec extends SparkSpec {
     val brute = rows(Vectors.bruteForceTopK(q, base.unionByName(extra), k = 3))
     assert(rows(grown.topK(q, 3, nProbe = 4)) == brute)
     // on-disk twin: save + appendTo + load serves the same grown corpus
-    val dir = java.nio.file.Files.createTempDirectory("ivf_add").toString
+    val dir = tempDir("ivf_add").toString
     idx.save(dir)
     idx.appendTo(dir, extra)
     val loaded = IvfIndex.load(spark, dir)

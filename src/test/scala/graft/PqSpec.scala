@@ -142,7 +142,7 @@ class PqSpec extends SparkSpec {
 
   test("PqCodebook save/load round-trips exactly; loaded codebook encodes identically") {
     val cb = Pq.fit(clustered, m = 2, k = 3, seed = 7L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-").toString
+    val dir = tempDir("graft-pq-").toString
     try {
       Pq.save(cb, spark, dir)
       val cb2 = Pq.loadCodebook(spark, dir)

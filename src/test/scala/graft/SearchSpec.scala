@@ -225,7 +225,7 @@ class SearchSpec extends SparkSpec {
 
   test("SearchIndex: saved+loaded index serves BM25 and RM3 identically to the inline build") {
     import graft.ops.SearchIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft-searchidx-").toString
+    val dir = tempDir("graft-searchidx-").toString
     try {
       SearchIndex.fit(docs, "text", "doc_id").save(dir)
       val idx = SearchIndex.load(spark, dir)
@@ -251,7 +251,7 @@ class SearchSpec extends SparkSpec {
 
   test("SearchIndex.appendTo: incremental growth equals a fresh fit over the union") {
     import graft.ops.SearchIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft-searchidx-add-").toString
+    val dir = tempDir("graft-searchidx-add-").toString
     try {
       SearchIndex.fit(docs.filter(col("doc_id") <= 2), "text", "doc_id").save(dir)
       SearchIndex.appendTo(spark, dir,

@@ -141,7 +141,7 @@ class SqSpec extends SparkSpec {
       (1L, Seq(0.0f, -2.0f, 7.0f)),
       (2L, Seq(1.0f, 3.0f, 7.0f))))
     val p = Sq.fit(df)
-    val dir = java.nio.file.Files.createTempDirectory("graft-sq-").toString
+    val dir = tempDir("graft-sq-").toString
     try {
       Sq.save(p, spark, dir)
       val p2 = Sq.loadParams(spark, dir)

@@ -8,7 +8,7 @@ import graft.streaming.EventStream
 class StreamingSpec extends SparkSpec {
 
   private lazy val streamDir: String = {
-    val dir = Files.createTempDirectory("graft_stream")
+    val dir = tempDir("graft_stream")
     Files.copy(Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     dir.toString
@@ -48,7 +48,7 @@ class StreamingSpec extends SparkSpec {
     // mixCorpus is one projection + explode with content-derived copy
     // counts — it applies to a streaming DataFrame unchanged, and the
     // mixture is partition/batch-invariant because nothing is RNG-driven
-    val dir = Files.createTempDirectory("graft_docs_mix")
+    val dir = tempDir("graft_docs_mix")
     Files.copy(Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val docsStream = spark.readStream
@@ -70,7 +70,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming blocklist + truncation: shuffle-free projections run stream-legal, batch-identical") {
-    val dir = Files.createTempDirectory("graft_docs_gate")
+    val dir = tempDir("graft_docs_gate")
     Files.copy(Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val docsStream = spark.readStream
@@ -97,7 +97,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-static packed ANN equals batch single-probe lshTopK") {
     import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("graft_annq_stream")
+    val dir = tempDir("graft_annq_stream")
     Files.copy(Paths.get(s"$sf/embeddings.parquet"),
       dir.resolve("embeddings.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val e = graft.core.Tables.load(spark, sf, "embeddings")
@@ -144,14 +144,14 @@ class StreamingSpec extends SparkSpec {
       val ev = Tables.load(spark, sf, "events")
       val nulled = ev.filter(col("ts") < to_timestamp(lit(PredTs)))
         .orderBy(col("ts").desc, col("event_id").desc).head().getAs[Long]("event_id")
-      val stage = Files.createTempDirectory("graft_feat_null_stage")
+      val stage = tempDir("graft_feat_null_stage")
       ev.drop(Tables.RawTsCol)
         .withColumn("value", when(col("event_id") === nulled, lit(null))
           .otherwise(col("value")))
         .coalesce(1).write.parquet(s"$stage/out")
       val part = Files.list(Paths.get(s"$stage/out")).toArray.map(_.toString)
         .find(_.endsWith(".parquet")).get
-      val dir = Files.createTempDirectory("graft_feat_null")
+      val dir = tempDir("graft_feat_null")
       Files.copy(Paths.get(part), dir.resolve("events.parquet"))
       dir.toString
     }
@@ -242,7 +242,7 @@ class StreamingSpec extends SparkSpec {
   test("objective transforms (FIM, span corruption, winnowing) are stateless: streaming equals batch") {
     import graft.ops.Text
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_obj_stream")
+    val dir = tempDir("graft_obj_stream")
     Files.copy(Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val docsStream = spark.readStream
@@ -283,7 +283,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("subword tokenizers are stateless projections: streaming equals batch") {
-    val dir = Files.createTempDirectory("graft_tok_stream")
+    val dir = tempDir("graft_tok_stream")
     Files.copy(Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val docsStream = spark.readStream
@@ -320,7 +320,7 @@ class StreamingSpec extends SparkSpec {
         when(col("doc_id") % 3 === 0, concat(col("text"), lit(" donâ€™t Ã©lite")))
           .when(col("doc_id") % 5 === 0, concat(col("text"), lit(" привет 你好")))
           .otherwise(col("text")))
-    val warcDir = Files.createTempDirectory("graft_warc_stream").toString
+    val warcDir = tempDir("graft_warc_stream").toString
     graft.sources.Warc.write(batchDocs, "doc_id", "text",
       concat(lit("http://x/"), col("doc_id")), warcDir)
     val streamed = graft.sources.Warc.readStream(spark, warcDir)
@@ -353,7 +353,7 @@ class StreamingSpec extends SparkSpec {
 
   test("readability and compression gates are stateless: streaming equals batch") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_gate_stream")
+    val dir = tempDir("graft_gate_stream")
     Files.copy(Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val docsStream = spark.readStream
@@ -383,7 +383,7 @@ class StreamingSpec extends SparkSpec {
   test("curation chain (strip -> scrub -> normalize -> gate) is stateless: streaming equals batch") {
     import graft.ops.Text
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_cur_stream")
+    val dir = tempDir("graft_cur_stream")
     Files.copy(Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     def chain(df: org.apache.spark.sql.DataFrame) = {
@@ -424,7 +424,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming paragraph Bloom cut: append-legal, equals the batch form") {
     import graft.ops.Dedup
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_para_stream")
+    val dir = tempDir("graft_para_stream")
     Files.copy(Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val batchDocs = graft.core.Tables.load(spark, sf, "documents")
@@ -459,7 +459,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming chunk Bloom cut: append-legal, equals the batch form") {
     import graft.ops.Dedup
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("graft_chunk_stream")
+    val dir = tempDir("graft_chunk_stream")
     Files.copy(Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val batchDocs = graft.core.Tables.load(spark, sf, "documents")
@@ -495,7 +495,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-static packed admission equals the batch admission verdicts") {
     import graft.ops.Dedup
-    val dir = Files.createTempDirectory("graft_admit_stream")
+    val dir = tempDir("graft_admit_stream")
     Files.copy(Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val all = graft.core.Tables.load(spark, sf, "documents")

@@ -116,7 +116,7 @@ class TokenizerSpec extends SparkSpec {
   test("wordpiece fit: fitted vocab round-trips save/load and tokenizes its corpus unk-free") {
     val docs = spark.read.parquet(s"$sf/documents.parquet").limit(200)
     val v = WordPiece.fit(docs, "text", nMerges = 30)
-    val dir = java.nio.file.Files.createTempDirectory("wp").toString
+    val dir = tempDir("wp").toString
     WordPiece.save(v, spark, dir)
     assert(WordPiece.load(spark, dir) == v)
     val unkCount = WordPiece.tokenize(docs, "text", "doc_id", v)
@@ -170,7 +170,7 @@ class TokenizerSpec extends SparkSpec {
     val nllChars = Unigram.corpusNll(docs, "text", charsOnly)
     assert(nllFit < nllChars,
       s"fitted NLL $nllFit should beat char-only $nllChars")
-    val dir = java.nio.file.Files.createTempDirectory("ulm").toString
+    val dir = tempDir("ulm").toString
     Unigram.save(p, spark, dir)
     assert(Unigram.load(spark, dir) == p)
     // fitted multi-char pieces fire on the corpus

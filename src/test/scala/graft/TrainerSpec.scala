@@ -328,4 +328,64 @@ class TrainerSpec extends SparkSpec {
     assert(res.losses.size == 3)
     assert(res.losses.last < res.losses.head) // full-batch steps still learn
   }
+
+  test("trainers and scorers reject column lists that do not match the model config") {
+    import spark.implicits._
+    import graft.nn.LstmAeConfig
+    import graft.train.LstmTrainer
+    val wide = Seq((1L, 1, 2, 3, 0.1, 0.2, 0.3, 1, 0.5), (2L, 3, 1, 0, 0.4, 0.5, 0.6, 2, 0.7))
+      .toDF("id", "c_1", "c_2", "c_3", "x_1", "x_2", "x_3", "ns", "nsx")
+    val cat = Seq(Seq("c_1", "c_2", "c_3"))
+    val cont = Seq(Seq("x_1", "x_2", "x_3"))
+    val tf = AeConfig(dModel = 4, heads = 2, layers = 1, pf = 4, seqLen = 3,
+      vocabSizes = Seq(4), nCont = 1, nonSeqVocabSizes = Seq(3), nNonSeqCont = 1)
+    val lstm = LstmAeConfig(hidden = 4, outDim = 4, attnDim = 0, seqLen = 3,
+      vocabSizes = Seq(4), nCont = 1, nonSeqVocabSizes = Seq(3), nNonSeqCont = 1)
+    val tfChurn = tf.copy(churn = true)
+    val lstmChurn = lstm.copy(decoder = "churn")
+    val train = TrainConfig(lr = 1e-2, maxEpochs = 1)
+    // (seq cat, seq cont, non-seq cat, non-seq cont) -> the named message
+    val mismatches = Seq(
+      (Nil, cont, Seq("ns"), Seq("nsx"),
+        "seq cat: 0 column lists given, the model config has 1 (vocabSizes)"),
+      (cat ++ cat, cont, Seq("ns"), Seq("nsx"),
+        "seq cat: 2 column lists given, the model config has 1 (vocabSizes)"),
+      (cat, Nil, Seq("ns"), Seq("nsx"),
+        "seq cont: 0 column lists given, the model config has 1 (nCont)"),
+      (cat, cont ++ cont, Seq("ns"), Seq("nsx"),
+        "seq cont: 2 column lists given, the model config has 1 (nCont)"),
+      (cat, cont, Nil, Seq("nsx"),
+        "non-seq cat: 0 column lists given, the model config has 1 (nonSeqVocabSizes)"),
+      (cat, cont, Seq("ns"), Seq("nsx", "nsx"),
+        "non-seq cont: 2 column lists given, the model config has 1 (nNonSeqCont)"),
+      (Seq(Seq("c_1", "c_2")), cont, Seq("ns"), Seq("nsx"),
+        "seq column group [c_1, c_2] has 2 columns, the model's seqLen is 3"),
+      (cat, Seq(Seq("x_1", "x_2", "x_3", "c_1")), Seq("ns"), Seq("nsx"),
+        "seq column group [x_1, x_2, x_3, c_1] has 4 columns, the model's seqLen is 3"))
+    for ((sc, so, nc, no, msg) <- mismatches) {
+      val calls = Seq[(String, () => Any)](
+        "TransformerTrainer.fit" -> (() => TransformerTrainer.fit(wide, tf, sc, so, train, nc, no)),
+        "TransformerTrainer.transform" -> (() => TransformerTrainer.transform(wide,
+          TransformerTrainer.Result(tf, tf.initParams(), Nil, 0), "id", sc, so, nc, no).collect()),
+        "TransformerTrainer.transformChurn" -> (() => TransformerTrainer.transformChurn(wide,
+          TransformerTrainer.Result(tfChurn, tfChurn.initParams(), Nil, 0), "id", sc, so, nc, no)
+          .collect()),
+        "LstmTrainer.fit" -> (() => LstmTrainer.fit(wide, lstm, sc, so, train, nc, no)),
+        "LstmTrainer.transform" -> (() => LstmTrainer.transform(wide,
+          LstmTrainer.Result(lstm, lstm.initParams(), Nil, 0), "id", sc, so, nc, no).collect()),
+        "LstmTrainer.transformChurn" -> (() => LstmTrainer.transformChurn(wide,
+          LstmTrainer.Result(lstmChurn, lstmChurn.initParams(), Nil, 0), "id", sc, so, nc, no)
+          .collect()))
+      for ((name, call) <- calls) {
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(msg), s"$name: ${e.getMessage}")
+      }
+    }
+    // the pipeline stage passes its column names through the same check
+    val plain = tf.copy(nonSeqVocabSizes = Nil, nNonSeqCont = 0)
+    val e = intercept[IllegalArgumentException] {
+      new graft.ml.CasprModel(plain, plain.initParams(), "id", Nil, Seq("x")).transform(wide).collect()
+    }
+    assert(e.getMessage.contains("seq cat: 0 column lists given"), e.getMessage)
+  }
 }
