@@ -23,7 +23,7 @@ import graft.train.{TrainConfig, TransformerTrainer}
  *
  * `fit` runs [[graft.train.TransformerTrainer.fit]] (broadcast weights +
  * treeAggregate grads — the J1/J2/J5 loop); the fitted [[CasprModel]]
- * scores via the same typed-mapPartitions path the standalone trainer
+ * scores via the same one-pass Ingress.score path the standalone trainer
  * exposes, appending `embedding: array<float>`. Column lists derive from
  * the base feature names × cfg.seqLen (`<feature>_<t>`, the featurizer's
  * wide naming), so the stage drops onto [[CasprStage]] output unchanged.
@@ -65,11 +65,9 @@ class CasprAutoencoder(
 /** The fitted autoencoder as an MLlib `Model`: APPENDS the entity
   * `embedding` (flattened encoder output) to the input row — Transformer
   * semantics, so downstream stages still see labels/profile columns. The
-  * embedding itself is computed on the codegen-narrowed Ingress projection
-  * and joined back on `idCol` (the wide table is entity-keyed, one row per
-  * id, so the join is key-unique); callers that want the minimal
-  * (id, embedding) scan shape use [[graft.train.TransformerTrainer
-  * .transform]] directly. */
+  * embedding is computed in the same scan, from the codegen-narrowed
+  * Ingress inputs (see [[EmbeddingStage]]); callers that want only
+  * (id, embedding) use [[graft.train.TransformerTrainer.transform]]. */
 class CasprModel(
     val cfg: AeConfig,
     val weights: Array[Double],
@@ -82,10 +80,10 @@ class CasprModel(
   private def cols(names: Seq[String]): Seq[Seq[String]] =
     names.map(c => (1 to cfg.seqLen).map(t => s"${c}_$t"))
 
-  override protected def score(df: DataFrame): DataFrame =
-    TransformerTrainer.transform(df,
+  override protected def withEmbedding(df: DataFrame): DataFrame =
+    TransformerTrainer.withEmbedding(df,
       TransformerTrainer.Result(cfg, weights, Nil, 0),
-      idCol, cols(seqCat), cols(seqCont))
+      cols(seqCat), cols(seqCont), Nil, Nil)
 
   override def copy(extra: ParamMap): CasprModel =
     new CasprModel(cfg, weights, idCol, seqCat, seqCont, uid)

@@ -1,9 +1,11 @@
 package graft.ml
 
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, FloatType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, StructField}
 
 /**
  * Row ingress for the model-side operators (trainers, scoring, explainer).
@@ -95,31 +97,45 @@ private[graft] object Ingress {
   val EmbeddingField: StructField =
     StructField("embedding", ArrayType(FloatType, containsNull = false))
 
-  /** Per-entity scoring over the narrowed projection: broadcasts `params`
-    * once, and emits one (id, `out`) row per input row. `rowFn` receives
-    * the broadcast value once per partition and returns the per-row
-    * function of (seq cat, seq cont, ns cat, ns cont). `t` is the
-    * model's sequence length. */
-  def score(wide: DataFrame, idCol: String, t: Int,
+  /** Per-entity scoring in one pass: appends column `out` to every row of
+    * `wide`, computed by one UDF over an `array<double>` of the narrowed
+    * model inputs (seq cat codes col-major, seq conts, ns cat codes, ns
+    * conts; null -> 0, codes exact as doubles), so no pass-through column
+    * is boxed and nothing is joined back. `params` is broadcast once;
+    * `rowFn` receives the broadcast value once per task and returns the
+    * per-row function of (seq cat, seq cont, ns cat, ns cont). `t` is the
+    * model's sequence length. The (id, score) callers select from the
+    * result. */
+  def score[R: TypeTag](wide: DataFrame, t: Int,
       seqCat: Seq[Seq[String]], seqCont: Seq[Seq[String]],
       nsCat: Seq[String], nsCont: Seq[String],
-      params: Array[Double], out: StructField)(
+      params: Array[Double], out: String)(
       rowFn: Array[Double] =>
-        (Array[Array[Int]], Array[Array[Double]], Array[Int], Array[Double]) => Any)
+        (Array[Array[Int]], Array[Array[Double]], Array[Int], Array[Double]) => R)
       : DataFrame = {
     val bc = wide.sparkSession.sparkContext.broadcast(params)
-    val nCat = seqCat.size; val nCont = seqCont.size
-    val nNsCat = nsCat.size; val nNsCont = nsCont.size
-    val proj = project(wide, idCol, seqCat, seqCont, nsCat, nsCont)
-    proj.mapPartitions { rows =>
-      val f = rowFn(bc.value)
-      rows.map { row =>
-        Row(row.get(0), f(
-          seqCatOf(row, t, nCat),
-          seqContOf(row, t, nCat, nCont),
-          nsCatOf(row, t, nCat, nCont, nNsCat),
-          nsContOf(row, t, nCat, nCont, nNsCat, nNsCont)))
-      }
-    }(Encoders.row(StructType(Seq(proj.schema(0), out))))
+    def code(c: String) = coalesce(col(c).cast("int"), lit(0)).cast("double")
+    def real(c: String) = coalesce(col(c).cast("double"), lit(0.0))
+    val inputs = seqCat.flatten.map(code) ++ seqCont.flatten.map(real) ++
+      nsCat.map(code) ++ nsCont.map(real)
+    val f = new Scorer(bc, rowFn, t, seqCat.size, seqCont.size, nsCat.size, nsCont.size)
+    wide.withColumn(out, udf(f).apply(array(inputs: _*).cast("array<double>")))
+  }
+
+  /** The scoring UDF's function: splits the input array into the four
+    * model-input groups and runs the forward built once per task. */
+  private final class Scorer[R](bc: Broadcast[Array[Double]],
+      rowFn: Array[Double] =>
+        (Array[Array[Int]], Array[Array[Double]], Array[Int], Array[Double]) => R,
+      t: Int, nCat: Int, nCont: Int, nNsCat: Int, nNsCont: Int)
+      extends (Array[Double] => R) with Serializable {
+    @transient private lazy val f = rowFn(bc.value)
+    def apply(x: Array[Double]): R = {
+      val ns = (nCat + nCont) * t
+      f(Array.tabulate(t, nCat)((ts, c) => x(c * t + ts).toInt),
+        Array.tabulate(t, nCont)((ts, c) => x((nCat + c) * t + ts)),
+        Array.tabulate(nNsCat)(c => x(ns + c).toInt),
+        Array.tabulate(nNsCont)(c => x(ns + nNsCat + c)))
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import graft.prep.{CasprFeaturizerModel, CategoricalEncoding, ColumnSummary,
   FeaturizerConfig, NormalizationSummary}
 
@@ -28,8 +29,12 @@ object Persist {
 
   def loadFeaturizer(spark: SparkSession, dir: String,
       cfg: FeaturizerConfig): CasprFeaturizerModel = {
-    val encodings = cfg.roles.seqCat.map { c =>
-      c -> CategoricalEncoding(c, spark.read.parquet(s"$dir/encodings/$c"))
+    // each vocabulary comes back as local rows, as fit leaves it
+    val vocabs = cfg.roles.seqCat.map { c =>
+      val saved = spark.read.parquet(s"$dir/encodings/$c")
+      val codes = saved.select(col(c), col("code")).collect()
+        .map(r => (r.get(0), r.getInt(1))).toSeq
+      c -> (CategoricalEncoding.local(spark, c, saved.schema(c).dataType, codes), codes.size)
     }.toMap
     val stats = java.nio.file.Files.readAllLines(
         java.nio.file.Paths.get(s"$dir/summary.csv"))
@@ -37,7 +42,8 @@ object Persist {
         val p = l.split(",")
         p(0) -> ColumnSummary(p(1).toDouble, p(2).toDouble, p(3).toDouble, p(4).toDouble)
       }.toMap
-    CasprFeaturizerModel(cfg, encodings, NormalizationSummary(stats))
+    CasprFeaturizerModel(cfg, vocabs.map { case (c, (e, _)) => c -> e },
+      NormalizationSummary(stats), vocabs.map { case (c, (_, n)) => c -> n.toLong })
   }
 
   def saveParams(params: Array[Double], path: String): Unit = {

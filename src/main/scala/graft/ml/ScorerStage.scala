@@ -4,6 +4,7 @@ import org.apache.spark.ml.Transformer
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import graft.train.LstmTrainer
 
@@ -12,18 +13,23 @@ import graft.train.LstmTrainer
  * §7.1): [[CasprModel]] (transformer arch) and [[LstmScorerStage]] (LSTM
  * arch, the J6 serving path) drop into an `org.apache.spark.ml.Pipeline`
  * next to [[CasprStage]] and [[CasprAutoencoder]]. The stage APPENDS
- * `embedding: array<float>` to the input row (computed on the narrowed
- * Ingress projection, joined back on the entity-unique id), so labels and
- * profile columns flow through to downstream MLlib stages.
+ * `embedding: array<float>` to each input row in one scan (the
+ * [[Ingress.score]] UDF over the narrowed model inputs; no join back, no
+ * driver round trip), so labels and profile columns flow through to
+ * downstream MLlib stages. Rows with a null id are dropped and the id
+ * column comes first: the rows and column order of the entity-keyed
+ * `df.join(scores, id)` this replaces.
  */
 private[ml] trait EmbeddingStage extends Transformer {
   def idCol: String
-  /** The underlying (id, embedding) scoring transform. */
-  protected def score(df: DataFrame): DataFrame
+  /** `df` with the embedding appended to every row. */
+  protected def withEmbedding(df: DataFrame): DataFrame
 
   override def transform(ds: Dataset[_]): DataFrame = {
     val df = ds.toDF()
-    df.join(score(df), Seq(idCol))
+    val cols = col(idCol) +: df.columns.toSeq.filterNot(_ == idCol).map(col) :+
+      col(Ingress.EmbeddingField.name)
+    withEmbedding(df.where(col(idCol).isNotNull)).select(cols: _*)
   }
 
   override def transformSchema(schema: StructType): StructType =
@@ -37,7 +43,7 @@ private[ml] object EmbeddingStage {
 
 /** LSTM-architecture scoring (the reference's arch switch,
   * caspr/utils/spark/score.py:53-61) as a Pipeline stage: embeds through
-  * [[graft.train.LstmTrainer.transform]] with the result's weights. Column
+  * [[graft.train.LstmTrainer.withEmbedding]] with the result's weights. Column
   * lists are the per-timestep wide columns, as for the trainer. */
 class LstmScorerStage(
     val res: LstmTrainer.Result,
@@ -48,8 +54,8 @@ class LstmScorerStage(
     val nonSeqContCols: Seq[String] = Nil,
     override val uid: String = Identifiable.randomUID("lstmScorer"))
     extends EmbeddingStage {
-  override protected def score(df: DataFrame): DataFrame =
-    LstmTrainer.transform(df, res, idCol, seqCatCols, seqContCols,
+  override protected def withEmbedding(df: DataFrame): DataFrame =
+    LstmTrainer.withEmbedding(df, res, seqCatCols, seqContCols,
       nonSeqCatCols, nonSeqContCols)
   override def copy(extra: ParamMap): LstmScorerStage =
     new LstmScorerStage(res, idCol, seqCatCols, seqContCols,

@@ -1,8 +1,11 @@
 package graft.prep
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.api.java.UDF1
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 
 /**
  * Frequency-rank categorical encoding (SURVEY.md §2 C5/D1/D2/F1/F2/H6/H7).
@@ -23,11 +26,43 @@ import org.apache.spark.sql.functions._
  * (value, count) side, never the event side — the single-task window the
  * reference runs (spark/preprocess.py:247) is fine only because its input is
  * tiny; we keep that invariant explicit by aggregating first and capping.
+ *
+ * `mapping` is the (value, code) table. From [[Encoding.fit]] it is a lazy
+ * plan over the fit input, re-run by every action on it; a fitted
+ * featurizer ([[CasprFeaturizer.fit]], [[graft.ml.Persist.loadFeaturizer]])
+ * holds it as local rows ([[CategoricalEncoding.local]]), so applying it
+ * never re-reads, or needs, the data it was fitted on.
  */
 final case class CategoricalEncoding(column: String, mapping: DataFrame) {
   /** vocab size for model embedding tables = distinct + 1 for UNK
     * (reference: get_num_activities, spark/preprocess.py:33-34). */
   def vocabSize(implicit spark: SparkSession): Long = mapping.count() + 1
+
+  /** F1 apply as one expression: the code of `value` in `mapping`;
+    * unseen, pruned and null -> 0 (UNK). The mapping is collected into a
+    * hash map on the driver that rides in the expression, so a local
+    * mapping costs no job, where [[Encoding.apply]]'s join broadcasts it
+    * in one. Keys compare as that join's keys do: -0.0 == 0.0, binary by
+    * content. Returns an int column. */
+  private[graft] def lookup(value: Column): Column = {
+    val codes = new java.util.HashMap[Any, Int]()
+    mapping.collect().foreach(r => codes.put(Encoding.joinKey(r.get(0)), r.getInt(1)))
+    udf(new Encoding.Lookup(codes), IntegerType)(value)
+  }
+}
+
+object CategoricalEncoding {
+
+  /** An encoding whose `mapping` is the given (value, code) rows, held as
+    * a `LocalRelation` with [[Encoding.fit]]'s schema: `column` of
+    * `valueType`, then `code: int`. */
+  private[graft] def local(spark: SparkSession, column: String, valueType: DataType,
+      codes: Seq[(Any, Int)]): CategoricalEncoding = {
+    val schema = StructType(Seq(StructField(column, valueType, nullable = false),
+      StructField("code", IntegerType, nullable = false)))
+    CategoricalEncoding(column, spark.createDataFrame(
+      codes.map { case (v, code) => Row(v, code) }.asJava, schema))
+  }
 }
 
 object Encoding {
@@ -35,6 +70,21 @@ object Encoding {
   /** Default vocabulary cap (reference MAX_CAT_CARDINALITY,
     * spark/preprocess.py:20). */
   val MaxCardinality = 30000
+
+  /** A value as an equi-join compares it: floating zeros folded to 0.0,
+    * binary wrapped so it hashes by content. */
+  private[prep] def joinKey(v: Any): Any = v match {
+    case d: Double if d == 0.0 => 0.0
+    case f: Float if f == 0.0f => 0.0f
+    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+    case other => other
+  }
+
+  /** [[CategoricalEncoding.lookup]]'s function. */
+  private[prep] final class Lookup(codes: java.util.HashMap[Any, Int])
+      extends UDF1[Any, Int] {
+    def call(v: Any): Int = if (v == null) 0 else codes.getOrDefault(joinKey(v), 0)
+  }
 
   /**
    * D1 cardinality probe driving the encoding-strategy choice (reference

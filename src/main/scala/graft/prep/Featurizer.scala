@@ -1,7 +1,9 @@
 package graft.prep
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 import graft.core.ColumnRoles
 
 /**
@@ -11,13 +13,19 @@ import graft.core.ColumnRoles
  * `data_process_all_sp` :615-632 (fit on train, re-apply to val/test).
  *
  * Physical design vs the reference (§4.2 inefficiencies deliberately fixed):
- *  - fit statistics = ONE aggregate pass per kind (encodings, summary); no
- *    per-column jobs, no describe().toPandas(), no rdd.getNumPartitions().
+ *  - fit = ONE aggregate pass for every statistic: grouping sets rank and
+ *    cap each categorical vocabulary in Spark and carry the normalization
+ *    summary, so at most `maxCardinality` rows per column reach the driver;
+ *    no per-column jobs, no describe().toPandas(), no rdd.getNumPartitions().
+ *  - the fitted model holds its vocabularies as local rows, so `transform`
+ *    never re-scans the fit input (nor needs it to still exist).
  *  - the whole transform is a single lazily-composed plan: the entity-keyed
  *    window (C1) establishes hash partitioning on tgtId which the pivot's
  *    groupBy reuses — one shuffle serves rank + pivot; the profile join
  *    shuffles only the (already deduped, entity-keyed) profile side.
- *  - zero UDFs: every step is a Catalyst expression inside codegen.
+ *  - one UDF, the vocabulary lookup ([[CategoricalEncoding.lookup]]: a
+ *    driver-built hash map, where a broadcast join costs one job per
+ *    vocabulary); every other step is a Catalyst expression inside codegen.
  *  - explicit pivot values kill the distinct-values job and the dummy-row
  *    union (E2), and `{col}_{t}` naming kills the rename pass (H8).
  */
@@ -44,15 +52,13 @@ final case class CasprFeaturizerModel(
     cfg: FeaturizerConfig,
     encodings: Map[String, CategoricalEncoding],
     summary: NormalizationSummary,
-    // exact capped cardinalities captured by fit's single aggregate pass
-    // (== encodings(c).mapping.count(), without the per-column count job);
-    // empty for models loaded from disk, where the fallback below applies
+    // capped vocabulary row counts (== encodings(c).mapping.count()),
+    // filled by fit and by Persist.loadFeaturizer
     cardinalities: Map[String, Long] = Map.empty) {
 
   /** Vocab row count for categorical column `c` — identical to
-    * `encodings(c).mapping.count()` (the cap is applied in both places)
-    * but free when fit captured it; models deserialized without the
-    * field fall back to the counting job. */
+    * `encodings(c).mapping.count()`, and free when the model carries it;
+    * a model built by hand without the field falls back to the count. */
   def cardinality(c: String): Long =
     cardinalities.getOrElse(c, encodings(c).mapping.count())
 
@@ -69,10 +75,9 @@ final case class CasprFeaturizerModel(
         if (dateMode == "interval") datediff(pred, col(c)).cast("double")
         else unix_seconds(col(c)).cast("double"))
     }
-    // categorical encode (F1): broadcast joins, UNK=0, stored as long
-    r.seqCat.foldLeft(dated) { (d, c) =>
-      Encoding.apply(d, encodings(c), c).withColumn(c, col(c).cast("long"))
-    }
+    // categorical encode (F1): hash lookups in the fitted vocabularies,
+    // UNK=0, stored as long
+    dated.withColumns(r.seqCat.map(c => c -> encodings(c).lookup(col(c)).cast("long")).toMap)
   }
 
   /**
@@ -128,9 +133,6 @@ object CasprFeaturizer {
     cfg.roles.validate(df.schema)
     val pred = col(cfg.roles.predictionDate)
     val filtered = Windows.activeWindowFilter(df, cfg.roles.activityDate, pred, cfg.historyDays)
-    val encodings = cfg.roles.seqCat.map { c =>
-      c -> Encoding.fit(filtered, c, cfg.maxCardinality)
-    }.toMap
     // summary over cont + derived date features on the long form
     val dated = cfg.roles.seqCols.filter(cfg.roles.dateCols.contains).foldLeft(filtered) { (d, c) =>
       d.withColumn(cfg.dateFeature(c),
@@ -139,14 +141,58 @@ object CasprFeaturizer {
     }
     val contFeats = cfg.roles.seqCols.filter(cfg.roles.contCols.contains) ++
       cfg.roles.seqCols.filter(cfg.roles.dateCols.contains).map(cfg.dateFeature)
-    // ONE aggregate pass carries the normalization stats AND the cat
-    // cardinalities: the vocab-size probe (min(distinct, cap), what
-    // mapping.count() returns) otherwise costs one count job per cat col
-    val (summary, rawCards) = Normalize.fitWithCardinalities(
-      dated, contFeats, cfg.roles.seqCat)
-    val cards = rawCards.map { case (c, n) =>
-      c -> math.min(n, cfg.maxCardinality.toLong)
+    val cats = cfg.roles.seqCat
+    if (cats.isEmpty)
+      CasprFeaturizerModel(cfg, Map.empty, Normalize.fit(dated, contFeats), Map.empty)
+    else {
+      val (summary, vocabs) = fitStatistics(dated, contFeats, cats, cfg.maxCardinality)
+      val encodings = cats.map { c =>
+        c -> CategoricalEncoding.local(df.sparkSession, c, dated.schema(c).dataType, vocabs(c))
+      }.toMap
+      CasprFeaturizerModel(cfg, encodings, summary,
+        vocabs.map { case (c, v) => c -> v.size.toLong })
     }
-    CasprFeaturizerModel(cfg, encodings, summary, cards)
+  }
+
+  /**
+   * Every vocabulary and the normalization summary in ONE aggregate pass:
+   * grouping sets `(c)` per categorical column count each value, the empty
+   * set `()` carries the summary aggregates. The counts are ranked and
+   * capped in Spark with [[Encoding.fit]]'s order (count descending, then
+   * value ascending, nulls and NaNs dropped), so at most `cap` (value,
+   * code) rows per column reach the driver. A missing `()` row (no input
+   * rows) reads as the NaN summary [[Normalize.fit]] gives.
+   */
+  private def fitStatistics(df: DataFrame, contCols: Seq[String],
+      catCols: Seq[String], cap: Int): (NormalizationSummary, Map[String, Seq[(Any, Int)]]) = {
+    val n = catCols.size
+    // grouping_id sets the bit of every column a set leaves out: all n for
+    // (), all but c's for (c)
+    val summaryGid = (1L << n) - 1
+    def gid(i: Int): Long = summaryGid ^ (1L << (n - 1 - i))
+    val aggs = grouping_id().as("__gid") +: count(lit(1)).as("__cnt") +:
+      Normalize.statAggs(contCols)
+    val isSummary = col("__gid") === summaryGid
+    // the values Encoding.fit's na.drop() keeps: not null, not NaN
+    def present(c: String): Column = df.schema(c).dataType match {
+      case DoubleType | FloatType => col(c).isNotNull && !isnan(col(c))
+      case _ => col(c).isNotNull
+    }
+    val rank = Window.partitionBy(col("__gid"))
+      .orderBy(col("__cnt").desc +: catCols.map(col(_).asc): _*)
+    val rows = df.groupingSets(catCols.map(c => Seq(col(c))) :+ Nil, catCols.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .where(isSummary || catCols.indices.map(i =>
+        col("__gid") === gid(i) && present(catCols(i))).reduce(_ || _))
+      .withColumn("__code", row_number().over(rank))
+      .where(isSummary || col("__code") <= cap)
+      .collect()
+    // row layout: the n cat values, __gid, __cnt, the summary, __code
+    val summaryRow = rows.find(_.getLong(n) == summaryGid).orNull
+    val vocabs = catCols.indices.map { i =>
+      catCols(i) -> rows.filter(_.getLong(n) == gid(i))
+        .map(r => (r.get(i), r.getInt(r.length - 1))).sortBy(_._2).toSeq
+    }.toMap
+    (Normalize.summaryOf(summaryRow, n + 2, contCols), vocabs)
   }
 }

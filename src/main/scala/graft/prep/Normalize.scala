@@ -1,6 +1,6 @@
 package graft.prep
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
@@ -73,34 +73,30 @@ object Normalize {
   /** Fit min/max/mean/stddev for all columns in a single aggregation pass.
     * Zero columns (cat-only role sets) is a valid configuration. */
   def fit(df: DataFrame, cols: Seq[String]): NormalizationSummary =
-    fitWithCardinalities(df, cols, Nil)._1
+    if (cols.isEmpty) NormalizationSummary(Map.empty)
+    else {
+      val aggs = statAggs(cols)
+      summaryOf(df.agg(aggs.head, aggs.tail: _*).head(), 0, cols)
+    }
 
-  /** [[fit]] plus exact non-null distinct counts for `catCols`, all in the
-    * SAME single aggregation pass — the featurizer's vocab-size probe
-    * otherwise costs one count job (scan + distinct shuffle + driver
-    * round-trip) per categorical column on top of the summary pass
-    * (optimization guide §1.2/§5: don't re-scan for what one pass can
-    * carry). Zero columns of either kind is valid. */
-  def fitWithCardinalities(df: DataFrame, cols: Seq[String],
-      catCols: Seq[String]): (NormalizationSummary, Map[String, Long]) = {
-    if (cols.isEmpty && catCols.isEmpty)
-      return (NormalizationSummary(Map.empty), Map.empty)
-    val aggs = cols.flatMap { c =>
-      Seq(min(col(c)).cast("double").as(s"${c}__min"),
-          max(col(c)).cast("double").as(s"${c}__max"),
-          avg(col(c)).as(s"${c}__mean"),
-          stddev_samp(col(c)).as(s"${c}__std"))
-    } ++ catCols.map(c => countDistinct(col(c)).as(s"${c}__card"))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val stats = cols.zipWithIndex.map { case (c, i) =>
-      def d(j: Int): Double = if (row.isNullAt(i * 4 + j)) Double.NaN else row.getDouble(i * 4 + j)
-      c -> ColumnSummary(d(0), d(1), d(2), d(3))
-    }.toMap
-    val cards = catCols.zipWithIndex.map { case (c, i) =>
-      c -> row.getLong(cols.size * 4 + i)
-    }.toMap
-    (NormalizationSummary(stats), cards)
+  /** The four summary aggregates per column, in [[summaryOf]]'s order. */
+  private[prep] def statAggs(cols: Seq[String]): Seq[Column] = cols.flatMap { c =>
+    Seq(min(col(c)).cast("double").as(s"${c}__min"),
+        max(col(c)).cast("double").as(s"${c}__max"),
+        avg(col(c)).as(s"${c}__mean"),
+        stddev_samp(col(c)).as(s"${c}__std"))
   }
+
+  /** Reads [[statAggs]]' values from `row` starting at field `from`; a null
+    * (no rows) reads as NaN. */
+  private[prep] def summaryOf(row: Row, from: Int, cols: Seq[String]): NormalizationSummary =
+    NormalizationSummary(cols.zipWithIndex.map { case (c, i) =>
+      def d(j: Int): Double = {
+        val k = from + i * 4 + j
+        if (row == null || row.isNullAt(k)) Double.NaN else row.getDouble(k)
+      }
+      c -> ColumnSummary(d(0), d(1), d(2), d(3))
+    }.toMap)
 
   /** Apply one scaling mode to many columns in a single projection. */
   def apply(df: DataFrame, summary: NormalizationSummary, cols: Seq[String],

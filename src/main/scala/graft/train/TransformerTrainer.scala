@@ -1,7 +1,7 @@
 package graft.train
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.functions.col
 import graft.nn.{AeConfig, TransformerAE}
 
 /**
@@ -86,9 +86,8 @@ object TransformerTrainer {
       cfg.nonSeqVocabSizes, cfg.nNonSeqCont,
       seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols)
     val lay = cfg.layout
-    graft.ml.Ingress.score(wide, idCol, cfg.seqLen, seqCatCols, seqContCols,
-        nonSeqCatCols, nonSeqContCols, res.params,
-        StructField("churn_prob", DoubleType, nullable = false)) { p =>
+    graft.ml.Ingress.score(wide, cfg.seqLen, seqCatCols, seqContCols,
+        nonSeqCatCols, nonSeqContCols, res.params, "churn_prob") { p =>
       val (wOff, _) = lay.offsets("churn_w")
       val (bOff, _) = lay.offsets("churn_b")
       (cat, cont, nsCat, nsCont) => {
@@ -100,22 +99,29 @@ object TransformerTrainer {
         while (i < emb.length) { z += p(wOff + i) * emb(i); i += 1 }
         1.0 / (1.0 + math.exp(-z))
       }
-    }
+    }.select(col(idCol), col("churn_prob"))
   }
 
-  /** Score with trained weights: embedding = flattened encoder output over
-    * tEff timesteps (+1 with non-seq features, I8). */
+  /** Score with trained weights: (id, embedding) rows, the embedding being
+    * the flattened encoder output over tEff timesteps (+1 with non-seq
+    * features, I8). */
   def transform(wide: DataFrame, res: Result, idCol: String,
       seqCatCols: Seq[Seq[String]], seqContCols: Seq[Seq[String]],
-      nonSeqCatCols: Seq[String] = Nil, nonSeqContCols: Seq[String] = Nil): DataFrame = {
+      nonSeqCatCols: Seq[String] = Nil, nonSeqContCols: Seq[String] = Nil): DataFrame =
+    withEmbedding(wide, res, seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols)
+      .select(col(idCol), col("embedding"))
+
+  /** [[transform]]'s embedding appended to every row of `wide`. */
+  private[graft] def withEmbedding(wide: DataFrame, res: Result,
+      seqCatCols: Seq[Seq[String]], seqContCols: Seq[Seq[String]],
+      nonSeqCatCols: Seq[String], nonSeqContCols: Seq[String]): DataFrame = {
     val cfg = res.cfg
     graft.ml.Ingress.requireColumns(cfg.seqLen, cfg.vocabSizes, cfg.nCont,
       cfg.nonSeqVocabSizes, cfg.nNonSeqCont,
       seqCatCols, seqContCols, nonSeqCatCols, nonSeqContCols)
     val lay = cfg.layout
-    graft.ml.Ingress.score(wide, idCol, cfg.seqLen, seqCatCols, seqContCols,
-        nonSeqCatCols, nonSeqContCols, res.params,
-        graft.ml.Ingress.EmbeddingField) { p =>
+    graft.ml.Ingress.score(wide, cfg.seqLen, seqCatCols, seqContCols,
+        nonSeqCatCols, nonSeqContCols, res.params, "embedding") { p =>
       (cat, cont, nsCat, nsCont) =>
         TransformerAE.embed(cfg, lay, p, cat, cont, nsCat, nsCont)
     }

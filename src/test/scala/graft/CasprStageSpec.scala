@@ -147,4 +147,52 @@ class CasprStageSpec extends SparkSpec {
     val b = embs(loaded)
     assert(a == b && a.nonEmpty)
   }
+
+  test("embedding stages append in one pass the rows of the join they replace") {
+    val base = SparkEntry.queries("q_pipeline_e2e")(spark, sf)
+    // id last and one null-id row: the join puts the id first and drops it
+    val order = (base.columns.filterNot(_ == "user_id") :+ "user_id").map(col)
+    val nullId = base.limit(1).withColumn("user_id", lit(null).cast("long"))
+    val df = base.select(order: _*).union(nullId.select(order: _*))
+    val cat = Seq((1 to 5).map(t => s"event_type_$t"))
+    val cont = Seq("value", "ts_days").map(c => (1 to 5).map(t => s"${c}_$t"))
+    val tCfg = graft.nn.AeConfig(dModel = 8, heads = 2, layers = 1, pf = 8,
+      seqLen = 5, vocabSizes = Seq(8), nCont = 2)
+    val tRes = graft.train.TransformerTrainer.Result(tCfg, tCfg.initParams(), Nil, 0)
+    val lCfg = graft.nn.LstmAeConfig(hidden = 8, outDim = 6, attnDim = 4, seqLen = 5,
+      vocabSizes = Seq(8), nCont = 2, nonSeqVocabSizes = Seq(2), nNonSeqCont = 1)
+    val lRes = graft.train.LstmTrainer.Result(lCfg, lCfg.initParams(), Nil, 0)
+    val cases = Seq(
+      new CasprModel(tCfg, tRes.params, "user_id", Seq("event_type"), Seq("value", "ts_days"))
+        -> df.join(graft.train.TransformerTrainer.transform(df, tRes, "user_id", cat, cont),
+          Seq("user_id")),
+      new graft.ml.LstmScorerStage(lRes, "user_id", cat, cont, Seq("churn"), Seq("c_acctbal"))
+        -> df.join(graft.train.LstmTrainer.transform(df, lRes, "user_id", cat, cont,
+          Seq("churn"), Seq("c_acctbal")), Seq("user_id")))
+    // embeddings compared by their bits
+    def rows(d: DataFrame) = d.collect().map(r => r.toSeq.map {
+      case a: scala.collection.Seq[_] => a.map(x => java.lang.Float.floatToRawIntBits(
+        x.asInstanceOf[Float]))
+      case v => v
+    }).toSet
+    for ((stage, want) <- cases) {
+      val got = stage.transform(df)
+      assert(got.columns.toSeq == want.columns.toSeq)
+      assert(got.columns.head == "user_id" && got.columns.last == "embedding")
+      val g = rows(got)
+      assert(g.size == base.count() && g == rows(want), stage.uid)
+    }
+  }
+
+  test("a projection reading the score twice runs the forward once per row") {
+    val wide = SparkEntry.queries("q_pipeline_e2e")(spark, sf)
+    val forwards = spark.sparkContext.longAccumulator("forwards")
+    val scored = graft.ml.Ingress.score(wide, 5, Seq((1 to 5).map(t => s"event_type_$t")),
+        Nil, Nil, Nil, Array(1.0), "embedding") { p =>
+      (cat, _, _, _) => { forwards.add(1); cat.map(r => (r(0) * p(0)).toFloat) }
+    }
+    val n = scored.select(col("embedding")(0), size(col("embedding")), col("embedding"))
+      .collect().length
+    assert(n > 0 && forwards.value == n)
+  }
 }

@@ -74,6 +74,31 @@ class MiscSpec extends SparkSpec {
     assert(back.rdd.getNumPartitions >= 1)
   }
 
+  test("A1 handover: read takes the schema from the sidecar, no job; plain parquet still reads") {
+    val df = (1 to 100).map(i => (i.toLong, s"v$i", i * 0.5)).toDF("id", "v", "x")
+    val base = tempDir("graft_handover_schema").toString
+    val path = Handover.write(df, base, partitions = 4)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    val back = try {
+      val r = Handover.read(spark, path)
+      org.apache.spark.sql.graftbridge.CatalystBridge.drainListenerBus(sc)
+      r
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get == 0)
+    assert(back.schema == spark.read.parquet(path).schema)
+    assert(back.collect().toSet == df.collect().toSet)
+    // a directory without the sidecar falls back to inference
+    val plain = s"$base/plain"
+    df.write.parquet(plain)
+    assert(Handover.read(spark, plain).collect().toSet == df.collect().toSet)
+  }
+
   test("J11 capacity formulas match the actual initialized weight counts") {
     val cfg = AeConfig(dModel = 8, heads = 2, layers = 2, pf = 4, seqLen = 10,
       vocabSizes = Seq(5, 11), nCont = 3)

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{LocalTableScanExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowGroupLimitExec
@@ -16,7 +17,8 @@ import org.apache.spark.sql.execution.window.WindowGroupLimitExec
  * The flagship claim frozen here is `q_pipeline_e2e`'s one-shuffle
  * featurization: a single entity-keyed Exchange serves
  * window -> WindowGroupLimit (latest-N pushdown) -> row_number -> pivot
- * aggregate, every encoding/profile join below it broadcasts, and the only
+ * aggregate, every profile join below it broadcasts (the encoding is a
+ * lookup inside the projection, no join), and the only
  * other shuffles in the feature branch are tiny stat branches that
  * terminate in a BroadcastExchange (k-row tables — irrelevant at scale).
  *
@@ -60,12 +62,19 @@ class PlanShapeSpec extends SparkSpec {
     val wgl = p.collectFirst { case w: WindowGroupLimitExec => w }
     assert(wgl.isDefined, s"no WindowGroupLimit in plan:\n$p")
 
-    // the final label join is the ONLY sort-merge join; everything else
-    // (encoding apply, profile, label-side customer join) broadcasts
+    // the final label join is the ONLY sort-merge join; every other join
+    // (profile, label-side customer and activity joins) broadcasts. The
+    // encoding apply is no join at all: the fitted vocabulary is a hash
+    // lookup inside the event-side projection, no table scan, no broadcast
     val smjs = p.collect { case j: SortMergeJoinExec => j }
     assert(smjs.length == 1, s"expected exactly 1 SortMergeJoin (the label join), got ${smjs.length}")
-    assert(p.collect { case j: BroadcastHashJoinExec => j }.length >= 4,
-      "encoding/profile/customer joins must broadcast")
+    val bhjs = p.collect { case j: BroadcastHashJoinExec => j }
+    assert(bhjs.length == 3, s"profile/customer/activity joins must broadcast, got:\n${bhjs.mkString("\n")}")
+    assert(p.collect { case s: LocalTableScanExec => s }.isEmpty,
+      "the fitted vocabulary must not be scanned or broadcast as a table")
+    assert(p.collect { case pr: ProjectExec =>
+      pr.projectList.exists(_.exists(_.isInstanceOf[ScalaUDF])) }.contains(true),
+      "encoding must run as a lookup inside a projection")
 
     // features branch = left child of the label join: exactly ONE shuffle
     // that is not a broadcast-bound stat branch, and it is keyed on the
