@@ -16,6 +16,9 @@ import java.nio.file.{DirectoryNotEmptyException, FileAlreadyExistsException,
  * fitted from the old one. Each build writes a private temp sibling and
  * renames it into place atomically, so a reader never sees a half-written
  * directory and a crashed build leaves nothing behind that looks done.
+ * The name splits the key in two, `graft_<name>_<h(path, parts)>_<h(size,
+ * mtime, token)>`: a new build deletes the other versions under its
+ * (name, path, parts) prefix, so stale state does not pile up.
  */
 private[graft] object Prebuilt {
 
@@ -32,23 +35,28 @@ private[graft] object Prebuilt {
     hex(md.digest())
   }
 
-  /** The state directory `graft_<name>_<key>` for (source, token, parts);
-    * runs `build(path)` into a temp sibling and renames it into place when
-    * the directory does not exist yet. Returns the directory's path. */
+  /** The state directory `graft_<name>_<h(path, parts)>_<h(size, mtime,
+    * token)>`; runs `build(path)` into a temp sibling and renames it into
+    * place when the directory does not exist yet, then deletes the other
+    * versions under the same prefix. Returns the directory's path. */
   def dir(name: String, source: File, token: String, parts: Any*)(
       build: String => Unit): String = {
-    val key = (Seq(source.getAbsolutePath, source.length(), source.lastModified(),
-      token) ++ parts).mkString("\u0000")
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(key.getBytes("UTF-8"))
+    val prefix = s"graft_${name}_${h(source.getAbsolutePath +: parts)}_"
     val target = new File(sys.props("java.io.tmpdir"),
-      s"graft_${name}_${hex(digest).take(16)}").toPath
+      prefix + h(Seq(source.length(), source.lastModified(), token))).toPath
     if (!Files.isDirectory(target)) {
       val tmp = Files.createTempDirectory(target.getParent,
         target.getFileName.toString + ".tmp-")
       try {
         build(tmp.toString)
         Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+        // drop stale versions; a file that will not delete (an open
+        // reader, say) is left for the next build to retry
+        Option(target.getParent.toFile.listFiles()).foreach(_.foreach { f =>
+          val n = f.getName
+          if (n.startsWith(prefix) && !n.contains(".tmp-") &&
+              n != target.getFileName.toString) deleteTree(f)
+        })
       } catch {
         // a concurrent build won the rename: serve its copy
         case _: FileAlreadyExistsException | _: DirectoryNotEmptyException
@@ -58,6 +66,11 @@ private[graft] object Prebuilt {
     }
     target.toString
   }
+
+  /** 16 hex digits of the SHA-256 of `parts`, NUL-joined. */
+  private def h(parts: Seq[Any]): String = hex(java.security.MessageDigest
+    .getInstance("SHA-256").digest(parts.mkString("\u0000").getBytes("UTF-8")))
+    .take(16)
 
   private def hex(bytes: Array[Byte]): String = bytes.map("%02x".format(_)).mkString
 

@@ -1,5 +1,7 @@
 package graft.core
 
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -73,6 +75,11 @@ object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Raw scan-column twin (nanos long or NTZ, per the file) kept alongside
+    * the converted `ts` so time predicates can reach the parquet scan
+    * (see Windows.activeWindowFilter). Pruned for free when unused. */
+  val RawTsCol = "__ts_raw_ns"
+
   /**
    * Load a table, normalizing `events.ts` to session-tz TimestampType
    * whichever way the generator wrote it:
@@ -83,15 +90,14 @@ object Tables {
    *     TIMESTAMP_NTZ, which `unix_seconds`/`unix_millis` reject — cast to
    *     TimestampType (wall clock == instant under the UTC session tz all
    *     entrypoints set, matching DuckDB's naive-as-UTC `epoch()`).
+   *
+   * The reader is handed the table's schema ([[schemaOf]]), so a load
+   * runs no footer-inference job once the table's files have been seen.
    */
-  /** Raw scan-column twin (nanos long or NTZ, per the file) kept alongside
-    * the converted `ts` so time predicates can reach the parquet scan
-    * (see Windows.activeWindowFilter). Pruned for free when unused. */
-  val RawTsCol = "__ts_raw_ns"
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
     import org.apache.spark.sql.functions.{col, expr}
     df.schema.find(_.name == "ts").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.LongType) =>
@@ -101,6 +107,27 @@ object Tables {
         df.withColumn(RawTsCol, col("ts"))
           .withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
+    }
+  }
+
+  /** Per table path: the file listing (name, length, mtime) its schema was
+    * inferred from, and that schema. One entry per path. */
+  private val schemas =
+    new ConcurrentHashMap[String, (Seq[(String, Long, Long)], StructType)]()
+
+  /** The parquet schema at `path`, inferred (one Spark job) only when the
+    * path's file listing differs from the one last inferred from. */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    val listing = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .toSeq.sorted
+    Option(schemas.get(path)).collect { case (`listing`, s) => s }.getOrElse {
+      val s = spark.read.parquet(path).schema
+      schemas.put(path, (listing, s))
+      s
     }
   }
 }

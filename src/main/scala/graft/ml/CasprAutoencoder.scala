@@ -59,7 +59,7 @@ class CasprAutoencoder(
       examplesPerEpoch, uid)
 
   override def transformSchema(schema: StructType): StructType =
-    EmbeddingStage.outSchema(schema)
+    EmbeddingStage.outSchema(schema, idCol)
 }
 
 /** The fitted autoencoder as an MLlib `Model`: APPENDS the entity

@@ -33,12 +33,19 @@ private[ml] trait EmbeddingStage extends Transformer {
   }
 
   override def transformSchema(schema: StructType): StructType =
-    EmbeddingStage.outSchema(schema)
+    EmbeddingStage.outSchema(schema, idCol)
 }
 
 private[ml] object EmbeddingStage {
-  def outSchema(input: StructType): StructType =
-    StructType(input.fields.toIndexedSeq :+ Ingress.EmbeddingField)
+  /** [[EmbeddingStage.transform]]'s output schema: the id field first, the
+    * other input fields in order, then the embedding. */
+  def outSchema(input: StructType, idCol: String): StructType = {
+    require(input.fieldNames.contains(idCol),
+      s"embedding stage: id column '$idCol' is not in the input schema " +
+        input.fieldNames.mkString("(", ", ", ")"))
+    val (id, rest) = input.fields.toIndexedSeq.partition(_.name == idCol)
+    StructType((id ++ rest) :+ Ingress.EmbeddingField)
+  }
 }
 
 /** LSTM-architecture scoring (the reference's arch switch,

@@ -22,12 +22,10 @@ import org.apache.spark.sql.functions._
  * src for repeated runs); `checkpointEvery` truncates the growing lineage
  * so 30-iteration runs don't replan a 30-deep join tree. The whole
  * iterative family checkpoints EVERY iteration by default
- * (`checkpointEvery = 1`) — default-off proved a footgun ([[hits]]'
- * norm-doubled lineage cost ~20× the per-iteration work unchecked);
- * pass 0 to opt out on short runs where replanning is cheaper than
- * materialization. A multi-executor cluster should point these at a
- * reliable checkpoint dir ([[connectedComponents]]' note) — local
- * checkpoints die with their executor.
+ * (`checkpointEvery = 1`); pass 0 on short runs where replanning is
+ * cheaper than materialization. A multi-executor cluster should point
+ * these at a reliable checkpoint dir ([[connectedComponents]]' note) —
+ * local checkpoints die with their executor.
  */
 object Graph {
 
@@ -119,38 +117,57 @@ object Graph {
   /**
    * HITS hubs & authorities (Kleinberg 1999) with a fixed iteration
    * count: auth(v) = Σ_{u→v} hub(u), hub(u) = Σ_{u→v} auth(v), each
-   * vector L2-normalized after its update (the classic formulation, so
-   * scores are comparable across graphs). Starts from hub = 1; each
-   * iteration updates auth from the CURRENT hubs, then hubs from the NEW
-   * auths. The link-analysis complement of [[pageRank]]: directories /
-   * query hubs vs cited sources — in corpus curation, the seed-site vs
+   * vector L2-normalized (the classic formulation, so scores are
+   * comparable across graphs). Starts from hub = 1; each iteration
+   * updates auth from the CURRENT hubs, then hubs from the NEW auths.
+   * The link-analysis complement of [[pageRank]]: directories / query
+   * hubs vs cited sources — in corpus curation, the seed-site vs
    * content-site split over a crawl's link graph.
    *
-   * Same scale shape as [[pageRank]]: per half-iteration one equi-join
-   * of the edge list to the current score vector plus one groupBy-sum
-   * (map-side combined), the L2 norm a broadcast scalar — no driver
-   * graph, AQE handles hub skew. Returns (v, hub, auth) over ALL
-   * vertices, 6-dp rounded; sink-only vertices hold hub 0, source-only
-   * vertices auth 0.
+   * Normalization is scale-invariant — normalize(M·normalize(x)) =
+   * normalize(M·x) — so the per-half norms are deferred: the
+   * unnormalized scores flow through every half-iteration as one lazy
+   * plan (per half one equi-join of the edge list to the score vector
+   * plus one groupBy-sum, map-side combined; AQE handles hub skew; each
+   * half consumes the previous one once, so the plan grows linearly).
+   * The full-outer-joined vertex table materializes once at the end,
+   * one aggregate collects both L2 norms, and the scores are divided by
+   * those literals. Returns (v, hub, auth) over ALL vertices, 6-dp
+   * rounded; sink-only vertices hold hub 0, source-only vertices auth 0.
    *
-   * Lineage: the L2 norm references its score subtree TWICE (once in
-   * the norm aggregate, once in the division), so an unchecked plan
-   * more than doubles per half-iteration — 3 iterations re-derived the
-   * edge join ~2⁶ times. Each half-iteration therefore checkpoints its
-   * un-normalized scores before the norm, which both flattens the plan
-   * (each iteration is one checkpoint deep) and computes every score
-   * vector exactly once (a cluster run would checkpoint to reliable
-   * storage the same way). `checkpointEvery` follows the family
-   * contract ([[pageRank]]/[[kCore]]/[[labelPropagation]]): counted in
-   * HALF-iterations here (each norm is one), default 1 = checkpoint
-   * every half, 0 = never — tiny-graph escape hatch ONLY, since every
-   * un-checkpointed half more than DOUBLES the plan (the norm's double
-   * subtree reference), so 3 iterations ≈ a 2⁶-deep recompute.
+   * `checkpointEvery` follows the family contract ([[pageRank]]/
+   * [[kCore]]/[[labelPropagation]]), counted in HALF-iterations:
+   * default 1 checkpoints every half's scores, 0 never. Only there are
+   * the scores renormalized (their norm is one aggregate over the
+   * checkpoint). The lazy plan deepens with every unchecked half, so
+   * more than 64 halves between checkpoints are refused by a named
+   * `require`; pass 0 only for short runs (q_hits: 3 iterations). A norm
+   * that overflowed the double range fails a named `require` instead of
+   * returning NaN.
    */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iterations: Int, checkpointEvery: Int = 1): DataFrame = {
+      iterations: Int, checkpointEvery: Int = 1): DataFrame =
+    hitsScores(edges, srcCol, dstCol, iterations, checkpointEvery)
+      .select(col("v"), round(col("hub"), 6).as("hub"),
+        round(col("auth"), 6).as("auth"))
+
+  /** Most half-iterations [[hits]] plans lazily between checkpoints:
+    * run time grows quadratically with the depth (on a 16-edge graph, 4
+    * local cores: 80 halves 27 s, 120 halves 61 s, 160 fail in stage
+    * materialization, 400 overflow the stack). */
+  private val MaxLazyHalves = 64
+
+  /** [[hits]] before the 6-dp rounding. */
+  private[graft] def hitsScores(edges: DataFrame, srcCol: String,
+      dstCol: String, iterations: Int, checkpointEvery: Int): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
     require(checkpointEvery >= 0, "checkpointEvery must be >= 0")
+    val lazyHalves =
+      if (checkpointEvery == 0) 2 * iterations
+      else math.min(checkpointEvery, 2 * iterations)
+    require(lazyHalves <= MaxLazyHalves, s"hits: $lazyHalves half-iterations " +
+      s"between checkpoints exceed $MaxLazyHalves; pass a positive checkpointEvery " +
+      s"of at most $MaxLazyHalves")
     // The edge list feeds EVERY half-iteration's join — materialize it
     // once instead of re-scanning + re-distincting the source per
     // reference. (A pre-partitioned copy per join key would also elide
@@ -160,17 +177,23 @@ object Graph {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct().localCheckpoint()
 
+    // Divides each score column of a MATERIALIZED frame by its L2 norm,
+    // all norms collected from one aggregate and applied as literals.
+    def normalized(scores: DataFrame, cs: String*): DataFrame = {
+      val norms = scores.select(cs.map(c => sqrt(sum(col(c) * col(c)))): _*).head()
+      scores.select(col("v") +: cs.zipWithIndex.map { case (c, i) =>
+        val n = if (norms.isNullAt(i)) 0.0 else norms.getDouble(i)
+        require(!n.isNaN && !n.isInfinite, s"hits: the $c scores " +
+          s"overflowed (L2 norm $n); pass a positive checkpointEvery")
+        (if (n > 0) col(c) / lit(n) else lit(0.0)).as(c)
+      }: _*)
+    }
     var half = 0
-    def l2norm(scores: DataFrame, c: String): DataFrame = {
+    def next(scores: DataFrame, c: String): DataFrame = {
       half += 1
-      val snap =
-        if (checkpointEvery > 0 && half % checkpointEvery == 0)
-          scores.localCheckpoint()
-        else scores
-      val nrm = snap.agg(sqrt(sum(col(c) * col(c))).as("_n"))
-      snap.crossJoin(broadcast(nrm))
-        .select(col("v"),
-          when(col("_n") > 0, col(c) / col("_n")).otherwise(lit(0.0)).as(c))
+      if (checkpointEvery > 0 && half % checkpointEvery == 0)
+        normalized(scores.localCheckpoint(), c)
+      else scores
     }
 
     // Iteration state is SPARSE: a vertex with no row has score 0, which
@@ -183,12 +206,10 @@ object Graph {
       .select(col("v"), lit(1.0).as("hub"))
     var auths = e.limit(0).select(col("src").as("v"), lit(0.0).as("auth"))
     for (_ <- 1 to iterations) {
-      auths = l2norm(
-        e.join(hubs.withColumnRenamed("v", "src"), "src")
-          .groupBy(col("dst").as("v")).agg(sum(col("hub")).as("auth")), "auth")
-      hubs = l2norm(
-        e.join(auths.withColumnRenamed("v", "dst"), "dst")
-          .groupBy(col("src").as("v")).agg(sum(col("auth")).as("hub")), "hub")
+      auths = next(e.join(hubs.withColumnRenamed("v", "src"), "src")
+        .groupBy(col("dst").as("v")).agg(sum(col("hub")).as("auth")), "auth")
+      hubs = next(e.join(auths.withColumnRenamed("v", "dst"), "dst")
+        .groupBy(col("src").as("v")).agg(sum(col("auth")).as("hub")), "hub")
     }
     // Vertex padding without re-deriving src∪dst from the (wide) edge
     // checkpoint: after iteration 1 the sparse states are COMPLETE on
@@ -198,9 +219,10 @@ object Graph {
     // two vertex-grain tables replaces union+distinct over 2 full edge
     // scans plus two left joins (identical rows; iterations >= 1 is
     // already required).
-    hubs.join(auths, Seq("v"), "full_outer")
-      .select(col("v"), round(coalesce(col("hub"), lit(0.0)), 6).as("hub"),
-        round(coalesce(col("auth"), lit(0.0)), 6).as("auth"))
+    normalized(hubs.join(auths, Seq("v"), "full_outer")
+      .select(col("v"), coalesce(col("hub"), lit(0.0)).as("hub"),
+        coalesce(col("auth"), lit(0.0)).as("auth")).localCheckpoint(),
+      "hub", "auth")
   }
 
   /**

@@ -1974,9 +1974,8 @@ object LlmOps extends QueryGroup {
         val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
           .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         // checkpointEvery = 0: katz's score lineage is LINEAR (each xᵢ is
-        // referenced exactly once by xᵢ₊₁ — unlike hits' norm, which
-        // doubles the subtree per half), so 5 unrolled iterations stay a
-        // 5-deep plan over the ONE checkpointed edge table. One action
+        // referenced exactly once by xᵢ₊₁), so 5 unrolled iterations stay
+        // a 5-deep plan over the ONE checkpointed edge table. One action
         // instead of 5 driver materialization round-trips; shuffle files
         // already persist each iteration's stage output, so nothing is
         // recomputed (guide §2.4 — remove materialization that buys no
@@ -2066,15 +2065,17 @@ object LlmOps extends QueryGroup {
     // graph (namespaced vertex ids so key spaces can't collide): hubs =
     // orders touching many popular parts, authorities = parts cited by
     // strong hubs. 3 fixed iterations, L2-normalized after each half
-    // update; the oracle unrolls them as chained CTEs.
+    // update; the oracle unrolls them as chained CTEs. Three iterations
+    // stay far from overflow, so the six halves run as one plan
+    // (checkpointEvery = 0, as q_pagerank) normalized once at the end.
     QueryDef("q_hits",
       (s, dir) => {
         // Narrow-type vertex encoding (optimization guide §2.3): the
-        // namespaced id is carried through 6 half-iterations of joins,
-        // aggregates and checkpoints, so run the WHOLE iteration on a
-        // reversible LONG key (orderkey*2 / partkey*2+1 — the spaces
-        // are disjoint by parity) and decode to the contract's 'o…'/'p…'
-        // string only in the final projection. Halves the iteration
+        // namespaced id is carried through 6 half-iterations of joins
+        // and aggregates and the final snapshot, so run the WHOLE
+        // iteration on a reversible LONG key (orderkey*2 /
+        // partkey*2+1 — the spaces are disjoint by parity) and decode to
+        // the contract's 'o…'/'p…' string only in the final projection. Halves the iteration
         // state and replaces UTF8 hash/equality with long ops in every
         // shuffle, join probe and hash aggregate; identity-only use of
         // the key inside hits (no ordering), so results are unchanged
@@ -2083,7 +2084,7 @@ object LlmOps extends QueryGroup {
           Tables.load(s, dir, "lineitem").select(
             (col("l_orderkey").cast("long") * 2).as("src"),
             (col("l_partkey").cast("long") * 2 + 1).as("dst")),
-          "src", "dst", iterations = 3)
+          "src", "dst", iterations = 3, checkpointEvery = 0)
           .select(
             concat(when(col("v") % 2 === 0, lit("o")).otherwise(lit("p")),
               shiftright(col("v"), 1).cast("string")).as("node_id"),

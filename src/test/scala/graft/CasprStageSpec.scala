@@ -184,6 +184,29 @@ class CasprStageSpec extends SparkSpec {
     }
   }
 
+  test("embedding stages: transformSchema is transform's schema, id first; a missing id fails by name") {
+    val base = SparkEntry.queries("q_pipeline_e2e")(spark, sf)
+    val df = base.select((base.columns.filterNot(_ == "user_id") :+ "user_id").map(col): _*)
+    val cat = Seq((1 to 5).map(t => s"event_type_$t"))
+    val cont = Seq("value", "ts_days").map(c => (1 to 5).map(t => s"${c}_$t"))
+    val tCfg = graft.nn.AeConfig(dModel = 8, heads = 2, layers = 1, pf = 8,
+      seqLen = 5, vocabSizes = Seq(8), nCont = 2)
+    val lCfg = graft.nn.LstmAeConfig(hidden = 8, outDim = 6, attnDim = 4, seqLen = 5,
+      vocabSizes = Seq(8), nCont = 2)
+    val stages = Seq(
+      new CasprModel(tCfg, tCfg.initParams(), "user_id", Seq("event_type"), Seq("value", "ts_days")),
+      new graft.ml.LstmScorerStage(
+        graft.train.LstmTrainer.Result(lCfg, lCfg.initParams(), Nil, 0), "user_id", cat, cont))
+    for (stage <- stages) {
+      val declared = stage.transformSchema(df.schema)
+      assert(declared == stage.transform(df).schema, stage.uid)
+      assert(declared.fieldNames.head == "user_id", stage.uid)
+      val e = intercept[IllegalArgumentException](
+        stage.transformSchema(df.drop("user_id").schema))
+      assert(e.getMessage.contains("id column 'user_id'"), e.getMessage)
+    }
+  }
+
   test("a projection reading the score twice runs the forward once per row") {
     val wide = SparkEntry.queries("q_pipeline_e2e")(spark, sf)
     val forwards = spark.sparkContext.longAccumulator("forwards")

@@ -149,21 +149,70 @@ class MiscSpec extends SparkSpec {
     assert(stateFor("old-code") == oldCode && builds == 1, "same token must reuse")
     val newCode = stateFor("new-code")
     assert(newCode != oldCode && builds == 2 && fittedBy(newCode) == "new-code")
-    assert(fittedBy(oldCode) == "old-code")
     // no temp sibling is left behind once a build is renamed into place
-    val parent = new java.io.File(oldCode).getParentFile
-    val name = new java.io.File(oldCode).getName
+    val parent = new java.io.File(newCode).getParentFile
+    val name = new java.io.File(newCode).getName
     assert(!parent.list().exists(_.startsWith(name + ".tmp-")))
-    for (d <- Seq(oldCode, newCode)) {
-      java.nio.file.Files.delete(java.nio.file.Paths.get(d, "fitted_by"))
-      java.nio.file.Files.delete(java.nio.file.Paths.get(d))
-    }
+    java.nio.file.Files.delete(java.nio.file.Paths.get(newCode, "fitted_by"))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(newCode))
     src.delete()
     // the token tracks bytecode: distinct classes, distinct tokens
     assert(Prebuilt.codeToken(graft.ops.Cf.getClass) ==
       Prebuilt.codeToken(graft.ops.Cf.getClass))
     assert(Prebuilt.codeToken(graft.ops.Cf.getClass) !=
       Prebuilt.codeToken(classOf[graft.ops.SearchIndex]))
+  }
+
+  test("Prebuilt: a rebuild under a new code token leaves exactly one directory") {
+    import graft.core.Prebuilt
+    val src = tempFile("graft_prebuilt_src", ".parquet").toFile
+    def stateFor(token: String) = Prebuilt.dir("spec", src, token, 7) { p =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(p, "fitted_by"), token)
+    }
+    val oldCode = new java.io.File(stateFor("old-code"))
+    // another parameter set of the same source is a different prefix
+    val other = new java.io.File(Prebuilt.dir("spec", src, "old-code", 8)(_ => ()))
+    val newCode = new java.io.File(stateFor("new-code"))
+    // graft_spec_<h(path, parts)>_<h(size, mtime, token)>
+    val prefix = newCode.getName.dropRight(16)
+    assert(oldCode.getName.startsWith(prefix) && !other.getName.startsWith(prefix))
+    assert(newCode.getParentFile.list().filter(_.startsWith(prefix)).toSeq ==
+      Seq(newCode.getName))
+    assert(!oldCode.exists() && other.isDirectory)
+    for (d <- Seq(newCode, other)) {
+      Option(d.listFiles()).foreach(_.foreach(_.delete()))
+      d.delete()
+    }
+  }
+
+  test("Tables.load: a second load of an unchanged table runs no job; a rewritten table is re-inferred") {
+    import graft.core.Tables
+    val dir = tempDir("graft_tables_load").toString
+    val v1 = (1 to 50).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    v1.write.parquet(s"$dir/t.parquet")
+    Tables.load(spark, dir, "t")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    val again = try {
+      val r = Tables.load(spark, dir, "t")
+      org.apache.spark.sql.graftbridge.CatalystBridge.drainListenerBus(sc)
+      r
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get == 0)
+    assert(again.schema == spark.read.parquet(s"$dir/t.parquet").schema)
+    assert(again.collect().toSet == v1.collect().toSet)
+    // same path, new files and a new schema
+    val v2 = (1 to 20).map(i => (s"k$i", i * 0.5, i)).toDF("k", "x", "n")
+    v2.write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val back = Tables.load(spark, dir, "t")
+    assert(back.schema == spark.read.parquet(s"$dir/t.parquet").schema)
+    assert(back.columns.toSeq == Seq("k", "x", "n"))
+    assert(back.collect().toSet == v2.collect().toSet)
   }
 
   test("Bench.adjudicate: quiet retry heals a load spike; flag survives only a confirmed-hot retry") {

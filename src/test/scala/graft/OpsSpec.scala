@@ -1895,6 +1895,95 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("hits: equals a plain-Scala power iteration with per-half normalization") {
+    import graft.ops.Graph
+    // seeded random bipartite graph, duplicates included: 60 sources,
+    // 40 sinks (disjoint id ranges), 400 listed edges
+    val rnd = new scala.util.Random(9)
+    val edges = Seq.fill(400)((rnd.nextInt(60).toLong, 1000L + rnd.nextInt(40)))
+    val g = edges.toDF("src", "dst")
+    val iters = 5
+    // the classic formulation: every half-iteration L2-normalized
+    val want: Map[Long, (Double, Double)] = {
+      val e = edges.distinct
+      def norm(m: Map[Long, Double]) = {
+        val n = math.sqrt(m.values.map(x => x * x).sum)
+        m.map { case (k, x) => k -> (if (n > 0) x / n else 0.0) }
+      }
+      var hub = e.map(_._1 -> 1.0).toMap
+      var auth = Map.empty[Long, Double]
+      for (_ <- 1 to iters) {
+        auth = norm(e.groupBy(_._2).map { case (d, es) => d -> es.map(x => hub(x._1)).sum })
+        hub = norm(e.groupBy(_._1).map { case (s, es) => s -> es.map(x => auth(x._2)).sum })
+      }
+      (e.map(_._1) ++ e.map(_._2)).distinct
+        .map(v => v -> ((hub.getOrElse(v, 0.0), auth.getOrElse(v, 0.0)))).toMap
+    }
+    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    def close(a: Double, b: Double) = math.abs(a - b) <= 1e-12 * math.max(a.abs, b.abs)
+    for (ce <- Seq(0, 1, 3)) {
+      val raw = Graph.hitsScores(g, "src", "dst", iters, ce).collect()
+        .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
+      assert(raw.keySet == want.keySet)
+      for ((v, (h, a)) <- raw)
+        assert(close(h, want(v)._1) && close(a, want(v)._2),
+          s"checkpointEvery=$ce v=$v: ($h, $a) vs ${want(v)}")
+      val rounded = Graph.hits(g, "src", "dst", iters, ce).collect()
+        .map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
+      assert(rounded == want.map { case (v, (h, a)) => v -> ((r6(h), r6(a))) },
+        s"checkpointEvery=$ce")
+    }
+  }
+
+  test("hits: an empty edge list gives zero rows") {
+    import graft.ops.Graph
+    val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
+    for (ce <- Seq(0, 1))
+      assert(Graph.hits(empty, "src", "dst", iterations = 3, checkpointEvery = ce)
+        .collect().isEmpty)
+  }
+
+  test("hits: 200 iterations on K(40,40) stay finite when checkpointed; unchecked they fail a named require") {
+    import graft.ops.Graph
+    // every half multiplies the unnormalized scores by 40: 400 halves
+    // pass 40^192 ~ 1e307, past the double range
+    val k = (for (s <- 0L until 40L; d <- 100L until 140L) yield (s, d)).toDF("src", "dst")
+    val inv = BigDecimal(1 / math.sqrt(40)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val out = Graph.hits(k, "src", "dst", iterations = 200, checkpointEvery = 1)
+      .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
+    assert(out.size == 80)
+    assert(out.forall { case (v, (h, a)) =>
+      if (v < 100) h == inv && a == 0.0 else h == 0.0 && a == inv }, out)
+    // unchecked, the 400 halves would be one 400-deep plan: refused
+    // before any job runs
+    val e = intercept[IllegalArgumentException] {
+      Graph.hits(k, "src", "dst", iterations = 200, checkpointEvery = 0).collect()
+    }
+    assert(e.getMessage.contains("hits: 400 half-iterations between checkpoints"),
+      e.getMessage)
+  }
+
+  test("hits: the q_hits call shape (3 iterations, checkpointEvery = 0) runs at most 20 jobs") {
+    import graft.ops.Graph
+    val edges = graft.core.Tables.load(spark, sf, "lineitem").select(
+      (col("l_orderkey").cast("long") * 2).as("src"),
+      (col("l_partkey").cast("long") * 2 + 1).as("dst"))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    val rows = try {
+      val r = Graph.hits(edges, "src", "dst", iterations = 3, checkpointEvery = 0).collect()
+      org.apache.spark.sql.graftbridge.CatalystBridge.drainListenerBus(sc)
+      r
+    } finally sc.removeSparkListener(l)
+    assert(rows.nonEmpty)
+    assert(jobs.get <= 20, s"${jobs.get} jobs")
+  }
+
   test("triangleCounts: square+diagonal hand-count; canon kills dups/loops/reversals") {
     import graft.ops.Graph
     // square 1-2-3-4 with diagonal 1-3: triangles {1,2,3} and {1,3,4};
