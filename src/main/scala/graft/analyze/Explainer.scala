@@ -123,85 +123,9 @@ object Explainer {
       idCol: String, seqCatCols: Seq[Seq[String]], seqContCols: Seq[Seq[String]],
       targetDim: Int,
       baselineCat: Array[Array[Array[Int]]] = Array.empty,
-      baselineCont: Array[Array[Array[Double]]] = Array.empty): DataFrame = {
-    require(baselineCat.length == baselineCont.length,
-      "baselineCat and baselineCont must have the same number of samples")
-    val spark = wide.sparkSession
-    val lay = cfg.layout
-    val bc = spark.sparkContext.broadcast(params)
-    val t = cfg.seqLen
-    val nCat = seqCatCols.size
-    val nCont = seqContCols.size
-    val embDims = cfg.embDims
-    val embSum = embDims.sum
-    val nBase = baselineCat.length
-    val bcBase = spark.sparkContext.broadcast((baselineCat, baselineCont))
-    val proj = graft.ml.Ingress.project(wide, idCol, seqCatCols, seqContCols)
-    val outNames: Seq[String] =
-      seqCatCols.flatten.map(n => s"attr_$n") ++ seqContCols.flatten.map(n => s"attr_$n")
-    val outSchema = StructType(
-      proj.schema(0) +: outNames.map(StructField(_, DoubleType, nullable = false)))
-
-    proj.mapPartitions { rows =>
-      val p = bc.value
-      val (bCat, bCont) = bcBase.value
-      val seed = DenseMatrix.zeros[Double](cfg.tEff, cfg.dModel)
-      seed(targetDim / cfg.dModel, targetDim % cfg.dModel) = 1.0
-      // mean baseline in embedding/cont space (zero matrices when nBase=0)
-      val embBase = DenseMatrix.zeros[Double](t, embSum)
-      val contBase = Array.ofDim[Double](t, nCont)
-      for (s <- 0 until nBase) {
-        for (i <- 0 until t) {
-          var off = 0
-          for (c <- 0 until nCat) {
-            val table = lay.mat(s"emb$c", p)
-            val code = math.min(math.max(bCat(s)(i)(c), 0), table.rows - 1)
-            embBase(i, off until off + embDims(c)) :+= (table(code, ::).t / nBase.toDouble).t
-            off += embDims(c)
-          }
-          for (c <- 0 until nCont) contBase(i)(c) += bCont(s)(i)(c) / nBase
-        }
-      }
-      rows.map { row =>
-        val cat = graft.ml.Ingress.seqCatOf(row, t, nCat)
-        val x = graft.ml.Ingress.seqContOf(row, t, nCat, nCont)
-        val embX = DenseMatrix.zeros[Double](t, embSum)
-        for (i <- 0 until t) {
-          var off = 0
-          for (c <- 0 until nCat) {
-            val table = lay.mat(s"emb$c", p)
-            val code = math.min(math.max(cat(i)(c), 0), table.rows - 1)
-            embX(i, off until off + embDims(c)) := table(code, ::)
-            off += embDims(c)
-          }
-        }
-        val scratch = new Array[Double](lay.totalSize)
-        val gradCont = Array.ofDim[Double](t, nCont)
-        val gradEmb = DenseMatrix.zeros[Double](t, embSum)
-        // ONE backward at the input point — the captum-faithful multiplier
-        TransformerAE.lossAndGrad(cfg, lay, p, scratch, cat, x,
-          encSeed = seed, contGradOut = gradCont,
-          seqEmbInput = embX, seqEmbGradOut = gradEmb)
-        val out = new Array[Any](1 + nCat * t + nCont * t)
-        out(0) = row.get(0)
-        var idx = 1
-        var off = 0
-        for (c <- 0 until nCat) {
-          for (i <- 0 until t) {
-            var s = 0.0
-            for (j <- off until off + embDims(c))
-              s += (embX(i, j) - embBase(i, j)) * gradEmb(i, j)
-            out(idx) = s; idx += 1
-          }
-          off += embDims(c)
-        }
-        for (c <- 0 until nCont; i <- 0 until t) {
-          out(idx) = (x(i)(c) - contBase(i)(c)) * gradCont(i)(c); idx += 1
-        }
-        Row.fromSeq(out.toIndexedSeq)
-      }
-    }(Encoders.row(outSchema))
-  }
+      baselineCont: Array[Array[Array[Double]]] = Array.empty): DataFrame =
+    deepLiftAll(wide, cfg, params, idCol, seqCatCols, seqContCols, Seq(targetDim),
+      baselineCat, baselineCont).drop("target_dim")
 
   /**
    * The reference `explain()` loop (CASPRExplainer.py:258-272): attribute

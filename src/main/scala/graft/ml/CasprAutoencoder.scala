@@ -6,7 +6,7 @@ import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable,
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.types._
 import graft.nn.AeConfig
-import graft.train.{TrainConfig, TransformerTrainer}
+import graft.train.{AeResult, TrainConfig, TransformerTrainer}
 
 /**
  * SURVEY.md §7.1 step 6: the transformer-autoencoder TRAINER as an MLlib
@@ -21,12 +21,14 @@ import graft.train.{TrainConfig, TransformerTrainer}
  *   new LogisticRegression()))                     // any downstream head
  * }}}
  *
- * `fit` runs [[graft.train.TransformerTrainer.fit]] (broadcast weights +
- * treeAggregate grads — the J1/J2/J5 loop); the fitted [[CasprModel]]
- * scores via the same one-pass Ingress.score path the standalone trainer
- * exposes, appending `embedding: array<float>`. Column lists derive from
- * the base feature names × cfg.seqLen (`<feature>_<t>`, the featurizer's
- * wide naming), so the stage drops onto [[CasprStage]] output unchanged.
+ * `fit` runs [[graft.train.TransformerTrainer.fit]], the
+ * [[graft.train.AeTrainer]] body both architectures share (broadcast
+ * weights + treeAggregate grads — the J1/J2/J5 loop); the fitted
+ * [[CasprModel]] scores through that trainer's `withEmbedding`, the one
+ * Ingress.score pass, appending `embedding: array<float>`. Column lists
+ * derive from the base feature names × cfg.seqLen (`<feature>_<t>`, the
+ * featurizer's wide naming), so the stage drops onto [[CasprStage]] output
+ * unchanged.
  *
  * [[CasprModel]] is `MLWritable` (reference checkpoints state_dicts,
  * early_stopping.py:66-70): weights go through [[Persist.saveParams]]
@@ -82,7 +84,7 @@ class CasprModel(
 
   override protected def withEmbedding(df: DataFrame): DataFrame =
     TransformerTrainer.withEmbedding(df,
-      TransformerTrainer.Result(cfg, weights, Nil, 0),
+      AeResult(cfg, weights, Nil, 0),
       cols(seqCat), cols(seqCont), Nil, Nil)
 
   override def copy(extra: ParamMap): CasprModel =

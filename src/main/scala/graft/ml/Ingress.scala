@@ -6,6 +6,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, StructField}
+import graft.nn.AeModelConfig
 
 /**
  * Row ingress for the model-side operators (trainers, scoring, explainer).
@@ -50,19 +51,18 @@ private[graft] object Ingress {
     * index past the projected row inside a task, a long one would be
     * dropped silently, and a seq group that is not `seqLen` long would
     * make the positional getters read across group boundaries. */
-  def requireColumns(seqLen: Int, vocabSizes: Seq[Int], nCont: Int,
-      nonSeqVocabSizes: Seq[Int], nNonSeqCont: Int,
+  def requireColumns(cfg: AeModelConfig[_],
       seqCat: Seq[Seq[String]], seqCont: Seq[Seq[String]],
       nsCat: Seq[String], nsCont: Seq[String]): Unit = {
     def count(what: String, got: Int, want: Int, field: String): Unit =
       require(got == want,
         s"$what: $got column lists given, the model config has $want ($field)")
-    count("seq cat", seqCat.size, vocabSizes.size, "vocabSizes")
-    count("seq cont", seqCont.size, nCont, "nCont")
-    count("non-seq cat", nsCat.size, nonSeqVocabSizes.size, "nonSeqVocabSizes")
-    count("non-seq cont", nsCont.size, nNonSeqCont, "nNonSeqCont")
-    (seqCat ++ seqCont).foreach(g => require(g.size == seqLen,
-      s"seq column group [${g.mkString(", ")}] has ${g.size} columns, the model's seqLen is $seqLen"))
+    count("seq cat", seqCat.size, cfg.vocabSizes.size, "vocabSizes")
+    count("seq cont", seqCont.size, cfg.nCont, "nCont")
+    count("non-seq cat", nsCat.size, cfg.nonSeqVocabSizes.size, "nonSeqVocabSizes")
+    count("non-seq cont", nsCont.size, cfg.nNonSeqCont, "nNonSeqCont")
+    (seqCat ++ seqCont).foreach(g => require(g.size == cfg.seqLen,
+      s"seq column group [${g.mkString(", ")}] has ${g.size} columns, the model's seqLen is ${cfg.seqLen}"))
   }
 
   /** One entity's model inputs: (T x nCat codes, T x nCont doubles, ns

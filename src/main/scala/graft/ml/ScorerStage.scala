@@ -6,7 +6,8 @@ import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
-import graft.train.LstmTrainer
+import graft.nn.LstmAeConfig
+import graft.train.{AeResult, LstmTrainer}
 
 /**
  * Shared `ml.Transformer` surface of the embedding stages (SURVEY.md
@@ -50,10 +51,12 @@ private[ml] object EmbeddingStage {
 
 /** LSTM-architecture scoring (the reference's arch switch,
   * caspr/utils/spark/score.py:53-61) as a Pipeline stage: embeds through
-  * [[graft.train.LstmTrainer.withEmbedding]] with the result's weights. Column
-  * lists are the per-timestep wide columns, as for the trainer. */
+  * [[graft.train.LstmTrainer.withEmbedding]] — the [[graft.train.AeTrainer]]
+  * scoring body [[CasprModel]] runs for the transformer — with the
+  * result's weights. Column lists are the per-timestep wide columns, as for
+  * the trainer. */
 class LstmScorerStage(
-    val res: LstmTrainer.Result,
+    val res: AeResult[LstmAeConfig],
     override val idCol: String,
     val seqCatCols: Seq[Seq[String]],
     val seqContCols: Seq[Seq[String]],

@@ -62,24 +62,45 @@ final class ParamLayout(val specs: Seq[ParamSpec]) extends Serializable {
   }
 }
 
-final case class AeConfig(
-    dModel: Int, heads: Int, layers: Int, pf: Int, seqLen: Int,
-    vocabSizes: Seq[Int], nCont: Int, seed: Long = 42L,
-    decoderLayers: Int = 0,
-    nonSeqVocabSizes: Seq[Int] = Nil, nNonSeqCont: Int = 0,
-    dropout: Double = 0.0, // training-time inverted dropout (factory.py:75-78)
-    churn: Boolean = false, // I16 TransformerChurnModel fine-tune
-    // I1 pretrained vectors (embedding_layer.py:18-39, surfaced per
-    // unified_transformer_encoder.py:41-44): seq-cat column index ->
-    // (vocab+1) x embDim table injected into the flat-param layout at init
-    // (per-column, like the reference's per-layer from_pretrained; columns
-    // without an entry stay randomly initialized and trainable). When
-    // `freezePretrained` (reference default true) the injected tables'
-    // parameter slices are masked out of every optimizer step.
-    pretrainedEmb: Map[Int, Array[Array[Double]]] = Map.empty,
-    freezePretrained: Boolean = true) {
-  require(dropout >= 0.0 && dropout < 1.0)
-  require(dModel % heads == 0)
+/**
+ * What every autoencoder config shares, and all that the trainer layer
+ * ([[graft.train.AeTrainer]]) needs of one: the input shape, the flat
+ * parameter layout and its seeded init, the churn head switch, and the I1
+ * pretrained-embedding contract (embedding_layer.py:18-39, surfaced per
+ * unified_transformer_encoder.py:41-44).
+ *
+ * Pretrained vectors: `pretrainedEmb` maps a seq-cat column index to a
+ * (vocab+1) x embDim table injected into the layout's `emb$i` at init
+ * (per column, like the reference's per-layer from_pretrained; columns
+ * without an entry stay randomly initialized and trainable). When
+ * `freezePretrained` (reference default true) the injected tables'
+ * parameter slices are masked out of every optimizer step.
+ */
+trait AeModelConfig[C <: AeModelConfig[C]] {
+  def seqLen: Int
+  def vocabSizes: Seq[Int]
+  def nCont: Int
+  def nonSeqVocabSizes: Seq[Int]
+  def nNonSeqCont: Int
+  def seed: Long
+  def pretrainedEmb: Map[Int, Array[Array[Double]]]
+  def freezePretrained: Boolean
+
+  def layout: ParamLayout
+  /** I16 fine-tune mode: a BCE head `churn_w`/`churn_b` over the serving
+    * embedding replaces the reconstruction objective. */
+  def churnHead: Boolean
+  /** This config with every dropout rate zeroed: inference behavior. */
+  def withoutDropout: C
+  /** The init value of every element of parameter `name`, or None for the
+    * seeded Glorot-uniform draw. */
+  protected def constInit(name: String): Option[Double]
+
+  def embDims: Seq[Int] = vocabSizes.map(v => Dims.embeddingDim(v.toLong))
+  /** Width of one timestep's seq input: cat embeddings ++ conts. */
+  def inDim: Int = embDims.sum + nCont
+  def nsEmbDims: Seq[Int] = nonSeqVocabSizes.map(v => Dims.embeddingDim(v.toLong))
+
   pretrainedEmb.foreach { case (i, vecs) =>
     require(i >= 0 && i < vocabSizes.size,
       s"pretrainedEmb column index $i outside the ${vocabSizes.size} seq cat columns")
@@ -89,18 +110,67 @@ final case class AeConfig(
       s"pretrainedEmb($i) vectors must have the layout dim ${embDims(i)} " +
         "(the reference derives emb_dims before injecting pretrained tensors)")
   }
+
+  def initParams(): Array[Double] = {
+    val lay = layout
+    val rng = new scala.util.Random(seed)
+    val a = new Array[Double](lay.totalSize)
+    lay.specs.foreach { s =>
+      val (off, _) = lay.offsets(s.name)
+      constInit(s.name) match {
+        case Some(v) => java.util.Arrays.fill(a, off, off + s.size, v)
+        case None =>
+          val limit = math.sqrt(6.0 / (s.rows + s.cols))
+          for (i <- 0 until s.size) a(off + i) = (rng.nextDouble() * 2 - 1) * limit
+      }
+    }
+    // inject pretrained embedding tables AFTER the random sweep so the rng
+    // stream (and thus every other table) is identical with or without
+    // injection; storage is column-major (ParamLayout.mat)
+    pretrainedEmb.foreach { case (ci, vecs) =>
+      val (off, s) = lay.offsets(s"emb$ci")
+      for (r <- 0 until s.rows; c <- 0 until s.cols)
+        a(off + c * s.rows + r) = vecs(r)(c)
+    }
+    a
+  }
+
+  /** The frozen flat-param slices ((offset, length) per frozen table):
+    * pretrained embedding tables when `freezePretrained` — the optimizer
+    * masks these out of every step (from_pretrained freeze semantics). */
+  def frozenRanges: Seq[(Int, Int)] =
+    if (!freezePretrained || pretrainedEmb.isEmpty) Nil
+    else {
+      val lay = layout
+      pretrainedEmb.keys.toSeq.sorted.map { ci =>
+        val (off, s) = lay.offsets(s"emb$ci"); (off, s.size)
+      }
+    }
+}
+
+final case class AeConfig(
+    dModel: Int, heads: Int, layers: Int, pf: Int, seqLen: Int,
+    vocabSizes: Seq[Int], nCont: Int, seed: Long = 42L,
+    decoderLayers: Int = 0,
+    nonSeqVocabSizes: Seq[Int] = Nil, nNonSeqCont: Int = 0,
+    dropout: Double = 0.0, // training-time inverted dropout (factory.py:75-78)
+    churn: Boolean = false, // I16 TransformerChurnModel fine-tune
+    // I1 pretrained vectors (see AeModelConfig)
+    pretrainedEmb: Map[Int, Array[Array[Double]]] = Map.empty,
+    freezePretrained: Boolean = true) extends AeModelConfig[AeConfig] {
+  require(dropout >= 0.0 && dropout < 1.0)
+  require(dModel % heads == 0)
   // TransformerChurnModel runs the unified ENCODER + a head on its
   // flattened output (model_wrapper.py:284-299) — no seq2seq decoder
   require(!churn || decoderLayers == 0,
     "churn fine-tune uses the encoder only (model_wrapper.py:296-298)")
   def headDim: Int = dModel / heads
-  def embDims: Seq[Int] = vocabSizes.map(v => Dims.embeddingDim(v.toLong))
-  def inDim: Int = embDims.sum + nCont
-  def nsEmbDims: Seq[Int] = nonSeqVocabSizes.map(v => Dims.embeddingDim(v.toLong))
   def nsInDim: Int = nsEmbDims.sum + nNonSeqCont
   /** Non-seq features present -> one extra timestep (factory.py:43). */
   def hasNonSeq: Boolean = nonSeqVocabSizes.nonEmpty || nNonSeqCont > 0
   def tEff: Int = seqLen + (if (hasNonSeq) 1 else 0)
+  def churnHead: Boolean = churn
+  def withoutDropout: AeConfig = copy(dropout = 0.0)
 
   def layout: ParamLayout = {
     val specs = Seq.newBuilder[ParamSpec]
@@ -171,43 +241,12 @@ final case class AeConfig(
     new ParamLayout(specs.result())
   }
 
-  def initParams(): Array[Double] = {
-    val lay = layout
-    val rng = new scala.util.Random(seed)
-    val a = new Array[Double](lay.totalSize)
-    lay.specs.foreach { s =>
-      val (off, _) = lay.offsets(s.name)
-      if (s.name.contains("_b") && !s.name.contains("ln")) () // zero biases
-      else if (s.name.matches(".*ln[123]_g"))
-        for (i <- 0 until s.size) a(off + i) = 1.0
-      else if (s.name.matches(".*ln[123]_b")) ()
-      else {
-        val limit = math.sqrt(6.0 / (s.rows + s.cols))
-        for (i <- 0 until s.size) a(off + i) = (rng.nextDouble() * 2 - 1) * limit
-      }
-    }
-    // inject pretrained embedding tables AFTER the random sweep so the rng
-    // stream (and thus every other table) is identical with or without
-    // injection; storage is column-major (ParamLayout.mat)
-    pretrainedEmb.foreach { case (ci, vecs) =>
-      val (off, s) = lay.offsets(s"emb$ci")
-      for (r <- 0 until s.rows; c <- 0 until s.cols)
-        a(off + c * s.rows + r) = vecs(r)(c)
-    }
-    a
-  }
-
-  /** The frozen flat-param slices ((offset, length) per frozen table):
-    * pretrained embedding tables when `freezePretrained` — the optimizer
-    * masks these out of every step (from_pretrained freeze semantics). */
-  def frozenRanges: Seq[(Int, Int)] =
-    if (!freezePretrained || pretrainedEmb.isEmpty) Nil
-    else {
-      val lay = layout
-      pretrainedEmb.keys.toSeq.sorted.map { ci =>
-        val (off, s) = lay.offsets(s"emb$ci"); (off, s.size)
-      }
-    }
+  /** Biases and layer-norm shifts 0, layer-norm gains 1. */
+  protected def constInit(name: String): Option[Double] =
+    if (name.contains("_b") && !name.contains("ln")) Some(0.0)
+    else if (name.matches(".*ln[123]_g")) Some(1.0)
+    else if (name.matches(".*ln[123]_b")) Some(0.0)
+    else None
 }
 
 object TransformerAE {
@@ -471,17 +510,19 @@ object TransformerAE {
   }
 
   /** Inference: the flattened encoder output over tEff timesteps — the
-    * serving embedding (caspr/utils/spark/score.py:55-57). Every
-    * transformer scoring path (trainer, [[graft.ml.CasprModel]], the
-    * scoring queries) runs this one forward. */
+    * serving embedding (caspr/utils/spark/score.py:55-57) — rounded to
+    * float as the scoring paths emit it. */
   def embed(cfg: AeConfig, lay: ParamLayout, p: Array[Double],
       catCodes: Array[Array[Int]], cont: Array[Array[Double]],
       nsCat: Array[Int] = null, nsCont: Array[Double] = null): Array[Float] =
     embedDouble(cfg, lay, p, catCodes, cont, nsCat, nsCont).map(_.toFloat)
 
-  /** Double-precision embed (numerics tests need it — float output would
-    * drown finite differences in quantization): `lossAndGrad`'s encoder
-    * forward without dropout, its output flattened row-major. */
+  /** Double-precision embed: `lossAndGrad`'s encoder forward without
+    * dropout, its output flattened row-major. Every transformer scoring
+    * path (the trainer, [[graft.ml.CasprModel]], the scoring queries) runs
+    * it; churn scoring reads it unrounded, as training did, and numerics
+    * tests need it (float output would drown finite differences in
+    * quantization). */
   def embedDouble(cfg: AeConfig, lay: ParamLayout, p: Array[Double],
       catCodes: Array[Array[Int]], cont: Array[Array[Double]],
       nsCat: Array[Int] = null, nsCont: Array[Double] = null): Array[Double] = {

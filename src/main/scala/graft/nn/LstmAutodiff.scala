@@ -81,20 +81,10 @@ final case class LstmAeConfig(hidden: Int, outDim: Int, attnDim: Int,
                         // MultiHeadAttentionLSTMWrapper(dropout=0.1)
                         // (unified_encoder.py:186-192), independent of the
                         // inter-layer LSTM `dropout` above
-    // I1 pretrained vectors (embedding_layer.py:18-39): seq-cat column
-    // index -> (vocab+1) x embDim table injected at init; frozen tables'
-    // slices are masked out of optimizer steps (same contract as AeConfig)
+    // I1 pretrained vectors (see AeModelConfig)
     pretrainedEmb: Map[Int, Array[Array[Double]]] = Map.empty,
-    freezePretrained: Boolean = true) {
+    freezePretrained: Boolean = true) extends AeModelConfig[LstmAeConfig] {
   require(Seq("none", "teacher", "auto", "churn").contains(decoder))
-  pretrainedEmb.foreach { case (i, vecs) =>
-    require(i >= 0 && i < vocabSizes.size,
-      s"pretrainedEmb column index $i outside the ${vocabSizes.size} seq cat columns")
-    require(vecs.length == vocabSizes(i) + 1,
-      s"pretrainedEmb($i) needs ${vocabSizes(i) + 1} rows (vocab + UNK/pad row 0), got ${vecs.length}")
-    require(vecs.forall(_.length == embDims(i)),
-      s"pretrainedEmb($i) vectors must have the layout dim ${embDims(i)}")
-  }
   require(attnHeads >= 1 && (attnHeads == 1 || dirs * hidden % attnHeads == 0),
     "attention heads must divide D*hidden")
   require(!hasDecoder || outDim == hidden,
@@ -102,13 +92,10 @@ final case class LstmAeConfig(hidden: Int, outDim: Int, attnDim: Int,
   require(numLayers >= 1)
   require(dropout >= 0.0 && dropout < 1.0)
   require(attnDropout >= 0.0 && attnDropout < 1.0)
-  def embDims: Seq[Int] = vocabSizes.map(v => Dims.embeddingDim(v.toLong))
-  def inDim: Int = embDims.sum + nCont
   def hasDecoder: Boolean = decoder == "teacher" || decoder == "auto"
   /** Bahdanau score width; 0 = reference-faithful (= hidden,
     * attention_mechanisms.py:109). */
   def attnW: Int = if (attnDim <= 0) hidden else attnDim
-  def nsEmbDims: Seq[Int] = nonSeqVocabSizes.map(v => Dims.embeddingDim(v.toLong))
   /** emb_lin_layer_non_seq exists iff there are ns cat embeddings
     * (unified_encoder.py:142-146). */
   def hasNsMlp: Boolean = nonSeqVocabSizes.nonEmpty
@@ -116,7 +103,8 @@ final case class LstmAeConfig(hidden: Int, outDim: Int, attnDim: Int,
   def nsFinal: Int = if (hasNsMlp) nsMlpDim else 0
   def nsWidth: Int = nsFinal + nNonSeqCont
   /** I16 fine-tune mode: BCE sigmoid head, no reconstruction decoder. */
-  def hasChurn: Boolean = decoder == "churn"
+  def churnHead: Boolean = decoder == "churn"
+  def withoutDropout: LstmAeConfig = copy(dropout = 0.0, attnDropout = 0.0)
   /** nn.LSTM num_directions (multi_layer_lstm.py:30). */
   def dirs: Int = if (bidirectional) 2 else 1
   /** Width of the per-timestep layer output: [h_fwd ; h_bwd] when bidir. */
@@ -192,7 +180,7 @@ final case class LstmAeConfig(hidden: Int, outDim: Int, attnDim: Int,
     }
     specs += ParamSpec("fuse_w", nsWidth + hidden + outWidth, outDim)
     specs += ParamSpec("fuse_b", 1, outDim)
-    if (hasChurn) {
+    if (churnHead) {
       // I16 ChurnModel head (model_wrapper.py:125-133): mlp on the fused
       // embedding; BCE-with-logits against `label`, encoder unfrozen
       specs += ParamSpec("churn_w", outDim, 1)
@@ -238,44 +226,14 @@ final case class LstmAeConfig(hidden: Int, outDim: Int, attnDim: Int,
 
   private val GateBias = "(d?)b([ifgo])(_l\\d+r?)?".r
 
-  def initParams(): Array[Double] = {
-    val lay = layout
-    val rng = new scala.util.Random(seed)
-    val a = new Array[Double](lay.totalSize)
-    lay.specs.foreach { s =>
-      val (off, _) = lay.offsets(s.name)
-      s.name match {
-        case GateBias(_, "f", _) =>
-          for (i <- 0 until s.size) a(off + i) = 1.0 // forget bias
-        case GateBias(_, _, _) => () // other gate biases zero
-        case "ns_g" | "mln_g" =>
-          for (i <- 0 until s.size) a(off + i) = 1.0 // BatchNorm/LN gamma
-        case n if n.endsWith("_b") || n == "ab1" || n == "avb" || n == "ns_beta" => ()
-        case _ =>
-          val limit = math.sqrt(6.0 / (s.rows + s.cols))
-          for (i <- 0 until s.size) a(off + i) = (rng.nextDouble() * 2 - 1) * limit
-      }
-    }
-    // inject pretrained embedding tables AFTER the random sweep (rng stream
-    // unchanged with or without injection); column-major per ParamLayout.mat
-    pretrainedEmb.foreach { case (ci, vecs) =>
-      val (off, s) = lay.offsets(s"emb$ci")
-      for (r <- 0 until s.rows; c <- 0 until s.cols)
-        a(off + c * s.rows + r) = vecs(r)(c)
-    }
-    a
+  /** Forget-gate biases 1, other biases 0, BatchNorm / layer-norm gains 1. */
+  protected def constInit(name: String): Option[Double] = name match {
+    case GateBias(_, "f", _) => Some(1.0)
+    case GateBias(_, _, _) => Some(0.0)
+    case "ns_g" | "mln_g" => Some(1.0)
+    case n if n.endsWith("_b") || n == "ab1" || n == "avb" || n == "ns_beta" => Some(0.0)
+    case _ => None
   }
-
-  /** Frozen flat-param slices: pretrained embedding tables when
-    * `freezePretrained` (from_pretrained freeze semantics). */
-  def frozenRanges: Seq[(Int, Int)] =
-    if (!freezePretrained || pretrainedEmb.isEmpty) Nil
-    else {
-      val lay = layout
-      pretrainedEmb.keys.toSeq.sorted.map { ci =>
-        val (off, s) = lay.offsets(s"emb$ci"); (off, s.size)
-      }
-    }
 }
 
 object LstmAE {
@@ -511,7 +469,7 @@ object LstmAE {
       // seeds into the encoder: h_0 = fused embedding, c_0 = encoder c_T
       dEmb :+= ddhNext
       dcSeed = ddcNext
-    } else if (cfg.hasChurn) {
+    } else if (cfg.churnHead) {
       // ---- I16 churn fine-tune: BCE-with-logits sigmoid head on the
       // fused embedding, gradients through the UNFROZEN encoder
       // (ChurnModel.run, model_wrapper.py:140-155) ---------------------

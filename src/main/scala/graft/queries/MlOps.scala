@@ -6,7 +6,7 @@ import graft.analyze.Segmentation
 import graft.core.{ColumnRoles, Tables}
 import graft.nn.{AeConfig, LstmAeConfig}
 import graft.prep.{CasprFeaturizer, Encoding, FeaturizerConfig}
-import graft.train.{LinearAutoencoder, LstmTrainer, TrainConfig, TransformerTrainer}
+import graft.train.{AeResult, LinearAutoencoder, LstmTrainer, TrainConfig, TransformerTrainer}
 import Catalog.{HistoryDays, LabelDays, PredTs}
 
 /**
@@ -133,7 +133,7 @@ object MlOps extends QueryGroup {
           seqLen = seqLen, vocabSizes = Seq(vocab("event_type").toInt), nCont = 2,
           nonSeqVocabSizes = Seq(vocab("c_mktsegment").toInt), nNonSeqCont = 1)
         embedScalars(TransformerTrainer.transform(wideEnc,
-          TransformerTrainer.Result(cfg, cfg.initParams(), Nil, 0), "user_id",
+          AeResult(cfg, cfg.initParams(), Nil, 0), "user_id",
           ProfileSeqCat, ProfileSeqCont, ProfileNsCat, ProfileNsCont))
       },
       None),
@@ -150,7 +150,7 @@ object MlOps extends QueryGroup {
           nonSeqVocabSizes = Seq(vocab("c_mktsegment").toInt), nNonSeqCont = 1,
           numLayers = 2, bidirectional = true) // I12 stack exercised end-to-end
         embedScalars(LstmTrainer.transform(wideEnc,
-          LstmTrainer.Result(cfg, cfg.initParams(), Nil, 0), "user_id",
+          AeResult(cfg, cfg.initParams(), Nil, 0), "user_id",
           ProfileSeqCat, ProfileSeqCont, ProfileNsCat, ProfileNsCont))
       },
       None),
@@ -172,7 +172,7 @@ object MlOps extends QueryGroup {
         val vecs = Array.tabulate(vocab + 1, dim)((r, c) =>
           (r * dim + c + 1).toDouble / ((vocab + 1) * dim))
         val cfg = base.copy(pretrainedEmb = Map(0 -> vecs))
-        val res = graft.train.TransformerTrainer.Result(cfg, cfg.initParams(), Nil, 0)
+        val res = AeResult(cfg, cfg.initParams(), Nil, 0)
         embedScalars(graft.train.TransformerTrainer.transform(wide, res, "user_id",
           Seq((1 to seqLen).map(t => s"event_type_$t")),
           Seq("value", "ts_days").map(c => (1 to seqLen).map(t => s"${c}_$t"))))
@@ -450,7 +450,7 @@ object MlOps extends QueryGroup {
         // fit on the SAME train fold, evaluated on the SAME test fold
         def frozenEmb(df: DataFrame) = {
           val emb = graft.train.LstmTrainer.transform(df,
-            graft.train.LstmTrainer.Result(cfg, cfg.initParams(), Nil, 0), "user_id",
+            AeResult(cfg, cfg.initParams(), Nil, 0), "user_id",
             catCols, contCols, Seq("c_mktsegment"), Seq("c_acctbal"))
             .join(df.select(col("user_id"), col("churn")), Seq("user_id"))
           Segmentation.withFeatures(emb, "embedding")

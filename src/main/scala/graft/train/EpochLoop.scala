@@ -7,8 +7,9 @@ import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
 import org.apache.spark.storage.StorageLevel
 
 /**
- * Distributed epoch loop shared by every trainer (LinearAutoencoder,
- * TransformerTrainer, LstmTrainer): broadcast params -> executors
+ * Distributed epoch loop shared by every trainer (LinearAutoencoder and
+ * [[AeTrainer]], the transformer and LSTM autoencoders' one fit body):
+ * broadcast params -> executors
  * accumulate per-partition (gradientSum ++ lossSum ++ count) ->
  * treeAggregate -> driver applies Adam + warmup/plateau schedule + early
  * stopping. This is MLlib's own optimization pattern (e.g. LBFGS),

@@ -1,8 +1,7 @@
 package graft.train
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /**
  * Spark-native distributed autoencoder training (SURVEY.md §3.2 rebuild
@@ -14,9 +13,10 @@ import org.apache.spark.sql.types._
  * driver = rank 0.
  *
  * The model here is a linear autoencoder (x -> W1 x + b1 -> W2 h + b2 -> x̂,
- * squared loss) — closed-form gradients, exactly distributed. The
- * transformer forward (graft.nn) shares the same training harness once its
- * backward lands; the harness is the architecture-independent part.
+ * squared loss) — closed-form gradients, exactly distributed. It trains
+ * through the same [[EpochLoop]] harness as the transformer and LSTM
+ * autoencoders ([[AeTrainer]]); only its loss history is consumed
+ * (`q_train_ae_loss`, `q_train_ae_weighted`), so it has no scoring path.
  */
 final case class AeWeights(nIn: Int, nHidden: Int, params: Array[Double]) {
   // layout: W1 (nIn*nHidden) ++ b1 (nHidden) ++ W2 (nHidden*nIn) ++ b2 (nIn)
@@ -75,7 +75,7 @@ final case class TrainResult(weights: AeWeights, losses: Seq[Double], stoppedAt:
 object LinearAutoencoder {
 
   /** Fit on the numeric columns of `df` via the shared [[EpochLoop]]
-    * harness (reference-style multi-step epochs; see [[TransformerTrainer]]
+    * harness (reference-style multi-step epochs; see [[AeTrainer]]
     * for the `examplesPerEpoch` budget semantics). Nulls are treated as 0.
     *
     * `weightCol` (soft-dedup / importance weighting): per-example loss
@@ -151,24 +151,5 @@ object LinearAutoencoder {
       weight = if (weighted) Some((x: Array[Double]) => x(nIn)) else None)
     data.unpersist()
     TrainResult(w, res.losses, res.stoppedAt)
-  }
-
-  /** Attach the hidden representation as `ae_embedding: array<float>`. */
-  def transform(df: DataFrame, cols: Seq[String], w: AeWeights, idCol: String): DataFrame = {
-    val bc = df.sparkSession.sparkContext.broadcast(w)
-    val idIdx = df.schema.fieldIndex(idCol)
-    val colIdx = cols.map(df.schema.fieldIndex)
-    val outSchema = StructType(Seq(df.schema(idIdx),
-      StructField("ae_embedding", ArrayType(FloatType, containsNull = false))))
-    df.mapPartitions { rows =>
-      val wt = bc.value
-      rows.map { r =>
-        val x = Array.tabulate(cols.size) { i =>
-          val v = r.get(colIdx(i))
-          if (v == null) 0.0 else v.asInstanceOf[Number].doubleValue()
-        }
-        Row(r.get(idIdx), wt.encode(x).map(_.toFloat))
-      }
-    }(Encoders.row(outSchema))
   }
 }

@@ -107,7 +107,7 @@ class CasprStageSpec extends SparkSpec {
     val lCfg = graft.nn.LstmAeConfig(hidden = 8, outDim = 6, attnDim = 0,
       seqLen = 4, vocabSizes = Seq(8), nCont = 2)
     val lStage = new graft.ml.LstmScorerStage(
-      graft.train.LstmTrainer.Result(lCfg, lCfg.initParams(), Nil, 0),
+      graft.train.AeResult(lCfg, lCfg.initParams(), Nil, 0),
       "user_id",
       Seq((1 to 4).map(t => s"event_type_$t")),
       Seq("value", "ts_days").map(c => (1 to 4).map(t => s"${c}_$t")))
@@ -158,10 +158,10 @@ class CasprStageSpec extends SparkSpec {
     val cont = Seq("value", "ts_days").map(c => (1 to 5).map(t => s"${c}_$t"))
     val tCfg = graft.nn.AeConfig(dModel = 8, heads = 2, layers = 1, pf = 8,
       seqLen = 5, vocabSizes = Seq(8), nCont = 2)
-    val tRes = graft.train.TransformerTrainer.Result(tCfg, tCfg.initParams(), Nil, 0)
+    val tRes = graft.train.AeResult(tCfg, tCfg.initParams(), Nil, 0)
     val lCfg = graft.nn.LstmAeConfig(hidden = 8, outDim = 6, attnDim = 4, seqLen = 5,
       vocabSizes = Seq(8), nCont = 2, nonSeqVocabSizes = Seq(2), nNonSeqCont = 1)
-    val lRes = graft.train.LstmTrainer.Result(lCfg, lCfg.initParams(), Nil, 0)
+    val lRes = graft.train.AeResult(lCfg, lCfg.initParams(), Nil, 0)
     val cases = Seq(
       new CasprModel(tCfg, tRes.params, "user_id", Seq("event_type"), Seq("value", "ts_days"))
         -> df.join(graft.train.TransformerTrainer.transform(df, tRes, "user_id", cat, cont),
@@ -196,7 +196,7 @@ class CasprStageSpec extends SparkSpec {
     val stages = Seq(
       new CasprModel(tCfg, tCfg.initParams(), "user_id", Seq("event_type"), Seq("value", "ts_days")),
       new graft.ml.LstmScorerStage(
-        graft.train.LstmTrainer.Result(lCfg, lCfg.initParams(), Nil, 0), "user_id", cat, cont))
+        graft.train.AeResult(lCfg, lCfg.initParams(), Nil, 0), "user_id", cat, cont))
     for (stage <- stages) {
       val declared = stage.transformSchema(df.schema)
       assert(declared == stage.transform(df).schema, stage.uid)

@@ -212,7 +212,7 @@ class StreamingSpec extends SparkSpec {
     val vocab = (model.encodings("event_type").mapping.count() + 1).toInt
     val aeCfg = graft.nn.AeConfig(dModel = 8, heads = 2, layers = 1, pf = 8,
       seqLen = 5, vocabSizes = Seq(vocab), nCont = 2)
-    val res = graft.train.TransformerTrainer.Result(aeCfg, aeCfg.initParams(), Nil, 0)
+    val res = graft.train.AeResult(aeCfg, aeCfg.initParams(), Nil, 0)
     // scoring is a projection + mapPartitions with broadcast weights, so
     // the SAME weights transform the batch wide frame and the streaming
     // featurized frame — end-to-end streaming inference

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.graftbridge.CatalystBridge
 import graft.nn.AeConfig
-import graft.train.{EpochLoop, TrainConfig, TransformerTrainer}
+import graft.train.{AeResult, EpochLoop, TrainConfig, TransformerTrainer}
 
 /** Distributed transformer-AE training on the real featurized fixture. */
 class TrainerSpec extends SparkSpec {
@@ -198,6 +198,53 @@ class TrainerSpec extends SparkSpec {
     }
   }
 
+  test("transformer churn probabilities are the sigmoid of the double-precision trained logit") {
+    val wide = SparkEntry.queries("q_pipeline_e2e")(spark, sf)
+    val catCols = Seq((1 to 5).map(t => s"event_type_$t"))
+    val contCols = Seq("value", "ts_days").map(c => (1 to 5).map(t => s"${c}_$t"))
+    val cfg = AeConfig(dModel = 8, heads = 2, layers = 1, pf = 8,
+      seqLen = 5, vocabSizes = Seq(6), nCont = 2, churn = true)
+    val res = TransformerTrainer.fit(wide, cfg, catCols, contCols,
+      TrainConfig(lr = 2e-2, maxEpochs = 2, warmupEpochs = 1),
+      labelCol = Some("churn"), batchSize = 4, examplesPerEpoch = Some(8))
+    val got = TransformerTrainer.transformChurn(wide, res, "user_id", catCols, contCols)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val lay = cfg.layout
+    val p = res.params
+    val (wOff, _) = lay.offsets("churn_w")
+    val (bOff, _) = lay.offsets("churn_b")
+    val rows = graft.ml.Ingress.project(wide, "user_id", catCols, contCols).collect()
+    assert(rows.length == got.size && rows.length > 1)
+    for (row <- rows) {
+      val emb = graft.nn.TransformerAE.embedDouble(cfg, lay, p,
+        graft.ml.Ingress.seqCatOf(row, 5, 1), graft.ml.Ingress.seqContOf(row, 5, 1, 2))
+      var z = p(bOff)
+      for (i <- emb.indices) z += p(wOff + i) * emb(i)
+      val want = 1.0 / (1.0 + math.exp(-z))
+      assert(java.lang.Double.doubleToRawLongBits(got(row.getLong(0))) ==
+        java.lang.Double.doubleToRawLongBits(want),
+        s"user ${row.getLong(0)}: scored ${got(row.getLong(0))}, trained logit gives $want")
+    }
+  }
+
+  test("LSTM monitoring probe runs without the MHA wrapper's attention dropout") {
+    val wide = SparkEntry.queries("q_pipeline_e2e")(spark, sf)
+    val catCols = Seq((1 to 5).map(t => s"event_type_$t"))
+    val contCols = Seq("value", "ts_days").map(c => (1 to 5).map(t => s"${c}_$t"))
+    val cfg = graft.nn.LstmAeConfig(hidden = 8, outDim = 8, attnDim = 0,
+      seqLen = 5, vocabSizes = Seq(6), nCont = 2, attnHeads = 2)
+    // lr 0 leaves only the schedule's minLr floor, so both fits end one
+    // capped epoch at almost the init params; the probe must then see the
+    // same inference forward whatever the training-time attention dropout
+    def firstLoss(attnDropout: Double): Double =
+      graft.train.LstmTrainer.fit(wide, cfg.copy(attnDropout = attnDropout),
+        catCols, contCols, TrainConfig(lr = 0.0, maxEpochs = 1),
+        batchSize = 4, examplesPerEpoch = Some(8)).losses.head
+    val (on, off) = (firstLoss(0.1), firstLoss(0.0))
+    assert(math.abs(on - off) <= 1e-3 * math.abs(off),
+      s"probe loss $on with attnDropout 0.1, $off with 0")
+  }
+
   test("dropout=0.1 distributed training still reduces the monitored loss") {
     val wide = SparkEntry.queries("q_pipeline_e2e")(spark, sf)
     val catCols = Seq((1 to 5).map(t => s"event_type_$t"))
@@ -366,15 +413,15 @@ class TrainerSpec extends SparkSpec {
       val calls = Seq[(String, () => Any)](
         "TransformerTrainer.fit" -> (() => TransformerTrainer.fit(wide, tf, sc, so, train, nc, no)),
         "TransformerTrainer.transform" -> (() => TransformerTrainer.transform(wide,
-          TransformerTrainer.Result(tf, tf.initParams(), Nil, 0), "id", sc, so, nc, no).collect()),
+          AeResult(tf, tf.initParams(), Nil, 0), "id", sc, so, nc, no).collect()),
         "TransformerTrainer.transformChurn" -> (() => TransformerTrainer.transformChurn(wide,
-          TransformerTrainer.Result(tfChurn, tfChurn.initParams(), Nil, 0), "id", sc, so, nc, no)
+          AeResult(tfChurn, tfChurn.initParams(), Nil, 0), "id", sc, so, nc, no)
           .collect()),
         "LstmTrainer.fit" -> (() => LstmTrainer.fit(wide, lstm, sc, so, train, nc, no)),
         "LstmTrainer.transform" -> (() => LstmTrainer.transform(wide,
-          LstmTrainer.Result(lstm, lstm.initParams(), Nil, 0), "id", sc, so, nc, no).collect()),
+          AeResult(lstm, lstm.initParams(), Nil, 0), "id", sc, so, nc, no).collect()),
         "LstmTrainer.transformChurn" -> (() => LstmTrainer.transformChurn(wide,
-          LstmTrainer.Result(lstmChurn, lstmChurn.initParams(), Nil, 0), "id", sc, so, nc, no)
+          AeResult(lstmChurn, lstmChurn.initParams(), Nil, 0), "id", sc, so, nc, no)
           .collect()))
       for ((name, call) <- calls) {
         val e = intercept[IllegalArgumentException](call())
