@@ -2,7 +2,9 @@ package graft.analyze
 
 import breeze.linalg.DenseMatrix
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import graft.ml.Ingress
 import graft.nn.{AeConfig, TransformerAE}
 
 /**
@@ -43,7 +45,6 @@ object Explainer {
    * summed output keeps the name `attr_<col>`.
    */
   def sumAcrossTime(attrs: DataFrame, seqCols: Seq[String], seqLen: Int): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val keep = attrs.columns.filterNot(c =>
       seqCols.exists(s => (1 to seqLen).exists(t => c == s"attr_${s}_$t")))
     attrs.select(keep.map(col).toIndexedSeq ++ seqCols.map { s =>
@@ -146,122 +147,49 @@ object Explainer {
     require(targetDims.nonEmpty, "need at least one target dim")
     require(baselineCat.length == baselineCont.length,
       "baselineCat and baselineCont must have the same number of samples")
-    val spark = wide.sparkSession
     val lay = cfg.layout
-    val bc = spark.sparkContext.broadcast(params)
     val t = cfg.seqLen
-    val nCat = seqCatCols.size
     val nCont = seqContCols.size
-    val embDims = cfg.embDims
-    val embSum = embDims.sum
     val nBase = baselineCat.length
-    val bcBase = spark.sparkContext.broadcast((baselineCat, baselineCont))
+    val bcBase = wide.sparkSession.sparkContext.broadcast((baselineCat, baselineCont))
     val dims = targetDims.toArray
-    val proj = graft.ml.Ingress.project(wide, idCol, seqCatCols, seqContCols)
-    val outNames: Seq[String] =
-      seqCatCols.flatten.map(n => s"attr_$n") ++ seqContCols.flatten.map(n => s"attr_$n")
-    val outSchema = StructType(
-      proj.schema(0) +: StructField("target_dim", LongType, nullable = false) +:
-        outNames.map(StructField(_, DoubleType, nullable = false)))
-
-    proj.mapPartitions { rows =>
-      val p = bc.value
+    attribute(wide, cfg, params, idCol, seqCatCols, seqContCols,
+        Seq(StructField("target_dim", LongType, nullable = false)), div = 1.0) { p =>
       val (bCat, bCont) = bcBase.value
-      val embBase = DenseMatrix.zeros[Double](t, embSum)
+      // the mean baseline, accumulated per sample in sample order
+      val embBase = DenseMatrix.zeros[Double](t, cfg.embDims.sum)
       val contBase = Array.ofDim[Double](t, nCont)
       for (s <- 0 until nBase) {
-        for (i <- 0 until t) {
-          var off = 0
-          for (c <- 0 until nCat) {
-            val table = lay.mat(s"emb$c", p)
-            val code = math.min(math.max(bCat(s)(i)(c), 0), table.rows - 1)
-            embBase(i, off until off + embDims(c)) :+= (table(code, ::).t / nBase.toDouble).t
-            off += embDims(c)
-          }
-          for (c <- 0 until nCont) contBase(i)(c) += bCont(s)(i)(c) / nBase
-        }
+        embBase :+= TransformerAE.seqEmbeddings(cfg, lay, p, bCat(s)) / nBase.toDouble
+        for (i <- 0 until t; c <- 0 until nCont) contBase(i)(c) += bCont(s)(i)(c) / nBase
       }
-      rows.flatMap { row =>
-        val cat = graft.ml.Ingress.seqCatOf(row, t, nCat)
-        val x = graft.ml.Ingress.seqContOf(row, t, nCat, nCont)
-        val embX = DenseMatrix.zeros[Double](t, embSum)
-        for (i <- 0 until t) {
-          var off = 0
-          for (c <- 0 until nCat) {
-            val table = lay.mat(s"emb$c", p)
-            val code = math.min(math.max(cat(i)(c), 0), table.rows - 1)
-            embX(i, off until off + embDims(c)) := table(code, ::)
-            off += embDims(c)
-          }
-        }
-        dims.iterator.map { dim =>
-          val seed = DenseMatrix.zeros[Double](cfg.tEff, cfg.dModel)
-          seed(dim / cfg.dModel, dim % cfg.dModel) = 1.0
-          val scratch = new Array[Double](lay.totalSize)
-          val gradCont = Array.ofDim[Double](t, nCont)
-          val gradEmb = DenseMatrix.zeros[Double](t, embSum)
-          TransformerAE.lossAndGrad(cfg, lay, p, scratch, cat, x,
-            encSeed = seed, contGradOut = gradCont,
-            seqEmbInput = embX, seqEmbGradOut = gradEmb)
-          val out = new Array[Any](2 + nCat * t + nCont * t)
-          out(0) = row.get(0)
-          out(1) = dim.toLong
-          var idx = 2
-          var off = 0
-          for (c <- 0 until nCat) {
-            for (i <- 0 until t) {
-              var s = 0.0
-              for (j <- off until off + embDims(c))
-                s += (embX(i, j) - embBase(i, j)) * gradEmb(i, j)
-              out(idx) = s; idx += 1
-            }
-            off += embDims(c)
-          }
-          for (c <- 0 until nCont; i <- 0 until t) {
-            out(idx) = (x(i)(c) - contBase(i)(c)) * gradCont(i)(c); idx += 1
-          }
-          Row.fromSeq(out.toIndexedSeq)
-        }
-      }
-    }(Encoders.row(outSchema))
+      Method(embBase, contBase, (cat, x, embX) => dims.iterator.map { dim =>
+        val seed = DenseMatrix.zeros[Double](cfg.tEff, cfg.dModel)
+        seed(dim / cfg.dModel, dim % cfg.dModel) = 1.0
+        val gradCont = Array.ofDim[Double](t, nCont)
+        val gradEmb = DenseMatrix.zeros[Double](t, embX.cols)
+        TransformerAE.lossAndGrad(cfg, lay, p, new Array[Double](lay.totalSize), cat, x,
+          encSeed = seed, contGradOut = gradCont,
+          seqEmbInput = embX, seqEmbGradOut = gradEmb)
+        Grad(Seq(dim.toLong), gradEmb, gradCont)
+      })
+    }
   }
 
   def integratedGradients(wide: DataFrame, cfg: AeConfig, params: Array[Double],
       idCol: String, seqCatCols: Seq[Seq[String]], seqContCols: Seq[Seq[String]],
       targetDim: Int, steps: Int = 32): DataFrame = {
-    val spark = wide.sparkSession
     val lay = cfg.layout
-    val bc = spark.sparkContext.broadcast(params)
     val t = cfg.seqLen
-    val nCat = seqCatCols.size
     val nCont = seqContCols.size
-    val embDims = cfg.embDims
-    val embSum = embDims.sum
-    val proj = graft.ml.Ingress.project(wide, idCol, seqCatCols, seqContCols)
-    // output order: per cat col its T wide names, then per cont col its T
-    val outNames: Seq[String] =
-      seqCatCols.flatten.map(n => s"attr_$n") ++ seqContCols.flatten.map(n => s"attr_$n")
-    val outSchema = StructType(
-      proj.schema(0) +: outNames.map(StructField(_, DoubleType, nullable = false)))
-
-    proj.mapPartitions { rows =>
-      val p = bc.value
+    val embSum = cfg.embDims.sum
+    // the zero baseline; the path-summed gradients are divided by steps
+    attribute(wide, cfg, params, idCol, seqCatCols, seqContCols, Nil,
+        div = steps.toDouble) { p =>
       val seed = DenseMatrix.zeros[Double](cfg.tEff, cfg.dModel)
       seed(targetDim / cfg.dModel, targetDim % cfg.dModel) = 1.0
-      rows.map { row =>
-        val cat = graft.ml.Ingress.seqCatOf(row, t, nCat)
-        val x = graft.ml.Ingress.seqContOf(row, t, nCat, nCont)
-        // the row's full-strength embedding vectors (the IG endpoint)
-        val embX = DenseMatrix.zeros[Double](t, embSum)
-        for (i <- 0 until t) {
-          var off = 0
-          for (c <- 0 until nCat) {
-            val table = lay.mat(s"emb$c", p)
-            val code = math.min(math.max(cat(i)(c), 0), table.rows - 1)
-            embX(i, off until off + embDims(c)) := table(code, ::)
-            off += embDims(c)
-          }
-        }
+      Method(DenseMatrix.zeros[Double](t, embSum), Array.ofDim[Double](t, nCont),
+          (cat, x, embX) => {
         val accCont = Array.ofDim[Double](t, nCont)
         val accEmb = DenseMatrix.zeros[Double](t, embSum)
         val scratch = new Array[Double](lay.totalSize)
@@ -270,32 +198,79 @@ object Explainer {
         for (k <- 1 to steps) {
           val alpha = (k - 0.5) / steps
           val xi = Array.tabulate(t, nCont)((i, j) => x(i)(j) * alpha)
-          val embI = embX * alpha
           java.util.Arrays.fill(scratch, 0.0)
           TransformerAE.lossAndGrad(cfg, lay, p, scratch, cat, xi,
             encSeed = seed, contGradOut = gradCont,
-            seqEmbInput = embI, seqEmbGradOut = gradEmb)
+            seqEmbInput = embX * alpha, seqEmbGradOut = gradEmb)
           for (i <- 0 until t; j <- 0 until nCont) accCont(i)(j) += gradCont(i)(j)
           accEmb :+= gradEmb
         }
-        // cat attribution: sum over the variable's embedding dims
-        // (_aggregate_cat_attributions_util); cont: straight product
-        val out = new Array[Any](1 + nCat * t + nCont * t)
-        out(0) = row.get(0)
-        var idx = 1
-        var off = 0
-        for (c <- 0 until nCat) {
-          for (i <- 0 until t) {
-            var s = 0.0
-            for (j <- off until off + embDims(c)) s += embX(i, j) * accEmb(i, j) / steps
-            out(idx) = s; idx += 1
+        Iterator.single(Grad(Nil, accEmb, accCont))
+      })
+    }
+  }
+
+  /** One output row's gradients of the target dim: its values after the
+    * id, then w.r.t. the seq embedding rows (T x sum(embDims)) and the seq
+    * conts (T x nCont). */
+  private final case class Grad(keys: Seq[Any], emb: DenseMatrix[Double],
+      cont: Array[Array[Double]])
+
+  /** A method's per-task state: the baseline and, per row of (codes,
+    * conts, embedding rows), its output rows' gradients. */
+  private final case class Method(embBase: DenseMatrix[Double],
+      contBase: Array[Array[Double]],
+      grads: (Array[Array[Int]], Array[Array[Double]], DenseMatrix[Double]) => Iterator[Grad])
+
+  /**
+   * The one attribution pass: broadcasts the params, projects the seq
+   * inputs with [[Ingress.inputs]], looks each row's embedding rows up
+   * through `nn` and packs each [[Grad]] the method returns as the id,
+   * `keys`, then one `attr_<wide col>` per (feature, timestep), cat
+   * features first: (input − base) ⊙ grad / div, summed over the
+   * embedding dims for a cat feature (_aggregate_cat_attributions_util).
+   * `method` builds its state once per task from the params.
+   */
+  private def attribute(wide: DataFrame, cfg: AeConfig, params: Array[Double],
+      idCol: String, seqCatCols: Seq[Seq[String]], seqContCols: Seq[Seq[String]],
+      keys: Seq[StructField], div: Double)(method: Array[Double] => Method): DataFrame = {
+    val lay = cfg.layout
+    val bc = wide.sparkSession.sparkContext.broadcast(params)
+    val t = cfg.seqLen
+    val nCat = seqCatCols.size
+    val nCont = seqContCols.size
+    val embDims = cfg.embDims
+    val proj = wide.select(col(idCol), Ingress.inputs(seqCatCols, seqContCols, Nil, Nil))
+    val outSchema = StructType(proj.schema(0) +: (keys ++
+      (seqCatCols.flatten ++ seqContCols.flatten)
+        .map(n => StructField(s"attr_$n", DoubleType, nullable = false))))
+    proj.mapPartitions { rows =>
+      val p = bc.value
+      val m = method(p)
+      rows.flatMap { row =>
+        Ingress.decode(row.getSeq[Double](1).toArray, t, nCat, nCont, 0, 0) { (cat, x, _, _) =>
+          val embX = TransformerAE.seqEmbeddings(cfg, lay, p, cat)
+          m.grads(cat, x, embX).map { g =>
+            val out = new Array[Any](1 + keys.size + (nCat + nCont) * t)
+            out(0) = row.get(0)
+            for (k <- keys.indices) out(1 + k) = g.keys(k)
+            var idx = 1 + keys.size
+            var off = 0
+            for (c <- 0 until nCat) {
+              for (i <- 0 until t) {
+                var s = 0.0
+                for (j <- off until off + embDims(c))
+                  s += (embX(i, j) - m.embBase(i, j)) * g.emb(i, j) / div
+                out(idx) = s; idx += 1
+              }
+              off += embDims(c)
+            }
+            for (c <- 0 until nCont; i <- 0 until t) {
+              out(idx) = (x(i)(c) - m.contBase(i)(c)) * g.cont(i)(c) / div; idx += 1
+            }
+            Row.fromSeq(out.toIndexedSeq)
           }
-          off += embDims(c)
         }
-        for (c <- 0 until nCont; i <- 0 until t) {
-          out(idx) = x(i)(c) * accCont(i)(c) / steps; idx += 1
-        }
-        Row.fromSeq(out.toIndexedSeq)
       }
     }(Encoders.row(outSchema))
   }

@@ -84,8 +84,9 @@ object Tables {
    * Load a table, normalizing `events.ts` to session-tz TimestampType
    * whichever way the generator wrote it:
    *   - parquet TIMESTAMP(NANOS): Spark 4 has no native ns type — read as
-   *     long (`nanosAsLong`, runtime-settable so this works under any
-   *     caller-provided session) and truncate ns -> us;
+   *     long (`nanosAsLong`) and truncate ns -> us. The conf is set here at
+   *     run time, not only in the builders, because a caller of
+   *     [[graft.SparkEntry]] may pass a session it built itself;
    *   - parquet timestamp[us] without UTC adjustment: Spark 4 infers
    *     TIMESTAMP_NTZ, which `unix_seconds`/`unix_millis` reject — cast to
    *     TimestampType (wall clock == instant under the UTC session tz all

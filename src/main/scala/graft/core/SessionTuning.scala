@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * Shared session tuning for every graft entry point (Bench, Verify,
- * BenchOne, Profile, RunOne, Explain, DevScratch; `local` builds their
- * session) — optimization-round settings that make
+ * BenchOne, Profile, RunOne, Explain, DevScratch and the test suites'
+ * `SparkSpec` session; `local` builds theirs, perfbench applies `apply`
+ * to its own builder) — optimization-round settings that make
  * partitioning SCALE-ADAPTIVE instead of constant-tuned (optimization
  * guide §2.2/§6), applied identically to the bench and the correctness
  * harness so the timed configuration is exactly the verified one.

@@ -115,8 +115,7 @@ class CasprModel(
         s"vocabSizes=${cfg.vocabSizes.mkString(",")}",
         s"nCont=${cfg.nCont}", s"seed=${cfg.seed}",
         s"decoderLayers=${cfg.decoderLayers}")
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$path/config.txt"),
-        lines.mkString("\n").getBytes("UTF-8"))
+      Persist.write(s"$path/config.txt", lines.mkString("\n").getBytes("UTF-8"))
     }
   }
 }
@@ -125,9 +124,7 @@ object CasprModel extends MLReadable[CasprModel] {
 
   override def read: MLReader[CasprModel] = new MLReader[CasprModel] {
     override def load(path: String): CasprModel = {
-      val kv = java.nio.file.Files
-        .readAllLines(java.nio.file.Paths.get(s"$path/config.txt"))
-        .toArray(Array.empty[String]).filter(_.nonEmpty)
+      val kv = Persist.lines(s"$path/config.txt")
         .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap
       def ints(k: String): Seq[Int] =
         kv(k).split(",").filter(_.nonEmpty).map(_.toInt).toSeq

@@ -1,5 +1,6 @@
 package graft.ml
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import graft.prep.{CasprFeaturizerModel, CategoricalEncoding, ColumnSummary,
@@ -12,6 +13,9 @@ import graft.prep.{CasprFeaturizerModel, CategoricalEncoding, ColumnSummary,
  *   encodings/<col>/      (value, code) parquet — the broadcast-join maps
  *   summary.csv           column, min, max, mean, stddev
  *   params.bin            flat Double array (model weights), big-endian
+ * Every file goes through the Hadoop `FileSystem` of its path, as Spark's
+ * writers do, so a `file:`, `hdfs:` or `s3a:` directory holds the whole
+ * artifact.
  */
 object Persist {
 
@@ -22,9 +26,7 @@ object Persist {
     val lines = model.summary.stats.toSeq.sortBy(_._1).map { case (c, s) =>
       s"$c,${s.min},${s.max},${s.mean},${s.stddev}"
     }
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/summary.csv"),
-      lines.mkString("\n").getBytes("UTF-8"))
+    write(s"$dir/summary.csv", lines.mkString("\n").getBytes("UTF-8"))
   }
 
   def loadFeaturizer(spark: SparkSession, dir: String,
@@ -36,12 +38,10 @@ object Persist {
         .map(r => (r.get(0), r.getInt(1))).toSeq
       c -> (CategoricalEncoding.local(spark, c, saved.schema(c).dataType, codes), codes.size)
     }.toMap
-    val stats = java.nio.file.Files.readAllLines(
-        java.nio.file.Paths.get(s"$dir/summary.csv"))
-      .toArray(Array.empty[String]).filter(_.nonEmpty).map { l =>
-        val p = l.split(",")
-        p(0) -> ColumnSummary(p(1).toDouble, p(2).toDouble, p(3).toDouble, p(4).toDouble)
-      }.toMap
+    val stats = lines(s"$dir/summary.csv").map { l =>
+      val p = l.split(",")
+      p(0) -> ColumnSummary(p(1).toDouble, p(2).toDouble, p(3).toDouble, p(4).toDouble)
+    }.toMap
     CasprFeaturizerModel(cfg, vocabs.map { case (c, (e, _)) => c -> e },
       NormalizationSummary(stats), vocabs.map { case (c, (_, n)) => c -> n.toLong })
   }
@@ -49,13 +49,32 @@ object Persist {
   def saveParams(params: Array[Double], path: String): Unit = {
     val bb = java.nio.ByteBuffer.allocate(params.length * 8)
     params.foreach(bb.putDouble)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path).getParent)
-    java.nio.file.Files.write(java.nio.file.Paths.get(path), bb.array())
+    write(path, bb.array())
   }
 
   def loadParams(path: String): Array[Double] = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    val bytes = read(path)
     val bb = java.nio.ByteBuffer.wrap(bytes)
     Array.fill(bytes.length / 8)(bb.getDouble)
   }
+
+  private def fileSystem(p: Path) =
+    p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
+
+  /** Writes `bytes` to `path`, replacing it; parent directories are made. */
+  private[ml] def write(path: String, bytes: Array[Byte]): Unit = {
+    val p = new Path(path)
+    val out = fileSystem(p).create(p, true)
+    try out.write(bytes) finally out.close()
+  }
+
+  private def read(path: String): Array[Byte] = {
+    val p = new Path(path)
+    val in = fileSystem(p).open(p)
+    try in.readAllBytes() finally in.close()
+  }
+
+  /** The non-empty lines of the UTF-8 text file at `path`. */
+  private[ml] def lines(path: String): Array[String] =
+    new String(read(path), "UTF-8").linesIterator.filter(_.nonEmpty).toArray
 }

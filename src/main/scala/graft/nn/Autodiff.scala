@@ -533,4 +533,12 @@ object TransformerAE {
     for (i <- 0 until cfg.tEff; j <- 0 until cfg.dModel) { out(idx) = enc(i, j); idx += 1 }
     out
   }
+
+  /** The encoder's seq embedding lookup alone, clamp included: one row per
+    * timestep, each table's row at its column's code (T x sum(embDims)).
+    * The explainers attribute in this space. */
+  private[graft] def seqEmbeddings(cfg: AeConfig, lay: ParamLayout, p: Array[Double],
+      catCodes: Array[Array[Int]]): DenseMatrix[Double] =
+    seqInput(new Params(lay, p, null).tables("emb", cfg.vocabSizes.size, p),
+      catCodes, null, cfg.seqLen, 0)
 }

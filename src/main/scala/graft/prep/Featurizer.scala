@@ -43,9 +43,7 @@ final case class FeaturizerConfig(
   def dateFeature(c: String): String = s"${c}_days"
 
   /** Sequential feature columns entering the pivot, in pivot order. */
-  def seqFeatures: Seq[String] =
-    roles.seqCat ++ roles.seqCols.filter(roles.contCols.contains) ++
-      roles.seqCols.filter(roles.dateCols.contains).map(dateFeature)
+  def seqFeatures: Seq[String] = roles.seqCat ++ CasprFeaturizer.contFeats(this)
 }
 
 final case class CasprFeaturizerModel(
@@ -65,20 +63,12 @@ final case class CasprFeaturizerModel(
   import cfg._
   private def r = roles
 
-  /** Steps 1-5 of the pipeline on the long/event form (shared by fit). */
-  private[prep] def longForm(df: DataFrame): DataFrame = {
-    val pred = col(r.predictionDate)
-    val filtered = Windows.activeWindowFilter(df, r.activityDate, pred, historyDays)
-    // date featurization (H5): interval = days to cutoff; absolute = epoch s
-    val dated = r.seqCols.filter(r.dateCols.contains).foldLeft(filtered) { (d, c) =>
-      d.withColumn(cfg.dateFeature(c),
-        if (dateMode == "interval") datediff(pred, col(c)).cast("double")
-        else unix_seconds(col(c)).cast("double"))
-    }
-    // categorical encode (F1): hash lookups in the fitted vocabularies,
-    // UNK=0, stored as long
-    dated.withColumns(r.seqCat.map(c => c -> encodings(c).lookup(col(c)).cast("long")).toMap)
-  }
+  /** Steps 1-5 of the pipeline on the long/event form: the dated form fit
+    * saw, then the categorical encode (F1): hash lookups in the fitted
+    * vocabularies, UNK=0, stored as long. */
+  private[prep] def longForm(df: DataFrame): DataFrame =
+    CasprFeaturizer.dated(df, cfg)
+      .withColumns(r.seqCat.map(c => c -> encodings(c).lookup(col(c)).cast("long")).toMap)
 
   /**
    * Long -> wide transform. The input must carry the prediction-date column
@@ -86,9 +76,8 @@ final case class CasprFeaturizerModel(
    * per row (spark/preprocess.py:96-97).
    */
   def transform(df: DataFrame): DataFrame = {
-    val contFeats = r.seqCols.filter(r.contCols.contains) ++
-      r.seqCols.filter(r.dateCols.contains).map(cfg.dateFeature)
-    val normalized = Normalize.apply(longForm(df), summary, contFeats, normMode)
+    val normalized = Normalize.apply(longForm(df), summary,
+      CasprFeaturizer.contFeats(cfg), normMode)
 
     // fused rank -> WindowGroupLimit -> capped count -> pad shift: one
     // sort serves all three windows and the count runs over n-bounded
@@ -131,26 +120,37 @@ object CasprFeaturizer {
     * then reuse the model for val/test (data_process_all_sp semantics). */
   def fit(df: DataFrame, cfg: FeaturizerConfig): CasprFeaturizerModel = {
     cfg.roles.validate(df.schema)
-    val pred = col(cfg.roles.predictionDate)
-    val filtered = Windows.activeWindowFilter(df, cfg.roles.activityDate, pred, cfg.historyDays)
     // summary over cont + derived date features on the long form
-    val dated = cfg.roles.seqCols.filter(cfg.roles.dateCols.contains).foldLeft(filtered) { (d, c) =>
-      d.withColumn(cfg.dateFeature(c),
-        if (cfg.dateMode == "interval") datediff(pred, col(c)).cast("double")
-        else unix_seconds(col(c)).cast("double"))
-    }
-    val contFeats = cfg.roles.seqCols.filter(cfg.roles.contCols.contains) ++
-      cfg.roles.seqCols.filter(cfg.roles.dateCols.contains).map(cfg.dateFeature)
+    val long = dated(df, cfg)
     val cats = cfg.roles.seqCat
     if (cats.isEmpty)
-      CasprFeaturizerModel(cfg, Map.empty, Normalize.fit(dated, contFeats), Map.empty)
+      CasprFeaturizerModel(cfg, Map.empty, Normalize.fit(long, contFeats(cfg)), Map.empty)
     else {
-      val (summary, vocabs) = fitStatistics(dated, contFeats, cats, cfg.maxCardinality)
+      val (summary, vocabs) = fitStatistics(long, contFeats(cfg), cats, cfg.maxCardinality)
       val encodings = cats.map { c =>
-        c -> CategoricalEncoding.local(df.sparkSession, c, dated.schema(c).dataType, vocabs(c))
+        c -> CategoricalEncoding.local(df.sparkSession, c, long.schema(c).dataType, vocabs(c))
       }.toMap
       CasprFeaturizerModel(cfg, encodings, summary,
         vocabs.map { case (c, v) => c -> v.size.toLong })
+    }
+  }
+
+  /** The continuous seq features the normalization summary covers: the
+    * cont columns, then the derived date features, in seq-column order. */
+  private[prep] def contFeats(cfg: FeaturizerConfig): Seq[String] =
+    cfg.roles.seqCols.filter(cfg.roles.contCols.contains) ++
+      cfg.roles.seqCols.filter(cfg.roles.dateCols.contains).map(cfg.dateFeature)
+
+  /** Steps 1-3 on the long form, shared by fit and transform: the active
+    * window filter, then date featurization (H5): interval = days to the
+    * cutoff, absolute = epoch seconds. */
+  private[prep] def dated(df: DataFrame, cfg: FeaturizerConfig): DataFrame = {
+    val pred = col(cfg.roles.predictionDate)
+    val filtered = Windows.activeWindowFilter(df, cfg.roles.activityDate, pred, cfg.historyDays)
+    cfg.roles.seqCols.filter(cfg.roles.dateCols.contains).foldLeft(filtered) { (d, c) =>
+      d.withColumn(cfg.dateFeature(c),
+        if (cfg.dateMode == "interval") datediff(pred, col(c)).cast("double")
+        else unix_seconds(col(c)).cast("double"))
     }
   }
 

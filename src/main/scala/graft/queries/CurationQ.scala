@@ -397,9 +397,7 @@ object CurationQ extends QueryGroup {
         val ip = "\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b"
         val phone = "\\d{3}[-.]\\d{3}[-.]\\d{4}"
         val stoplist = Text.Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-        val h = "md5(CAST(doc_id AS VARCHAR))"
-        def nib(k: Int) = s"(strpos('0123456789abcdef', substr($h, $k, 1)) - 1)"
-        val hv = s"(${nib(1)}*4096 + ${nib(2)}*256 + ${nib(3)}*16 + ${nib(4)})"
+        val hv = Catalog.md5Val16Sql("doc_id")
         s"""WITH d AS (SELECT doc_id,
            |    CASE WHEN doc_id % 10 = 9 THEN '$BoilerDoc' ELSE text END AS text
            |  FROM documents),
@@ -594,9 +592,7 @@ object CurationQ extends QueryGroup {
         "domain", Seq("train" -> 0.9, "test" -> 0.1))
         .select(col("doc_id"), col("domain"), col("split")),
       Some {
-        val h = "md5(domain)"
-        def nib(k: Int) = s"(strpos('0123456789abcdef', substr($h, $k, 1)) - 1)"
-        val hv = s"(${nib(1)}*4096 + ${nib(2)}*256 + ${nib(3)}*16 + ${nib(4)})"
+        val hv = Catalog.hex16Sql("md5(domain)")
         s"""WITH s AS (SELECT doc_id, $urlSql AS url FROM documents),
            |d AS (SELECT doc_id, regexp_replace(lower(regexp_extract(url,
            |    '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)), '^www\\.', '') AS domain

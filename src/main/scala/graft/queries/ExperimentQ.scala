@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Tables
 import graft.ops.Experiment
+import Catalog.{md5Val16, md5Val16Sql}
 
 /**
  * Experimentation / causal-inference readouts (`graft.ops.Experiment`)
@@ -21,17 +22,6 @@ import graft.ops.Experiment
 object ExperimentQ extends QueryGroup {
 
   private val Cut = "2024-01-16 00:00:00"
-
-  /** md5 16-bit value of an id expression, DuckDB side (LlmOps twin). */
-  private def md5Val16Sql(idExpr: String): String = {
-    val h = s"md5(CAST($idExpr AS VARCHAR))"
-    def nib(k: Int) = s"(strpos('0123456789abcdef', substr($h, $k, 1)) - 1)"
-    s"(${nib(1)}*4096 + ${nib(2)}*256 + ${nib(3)}*16 + ${nib(4)})"
-  }
-
-  /** md5 16-bit value, Spark side. */
-  private def md5Val16(c: org.apache.spark.sql.Column) =
-    conv(substring(md5(c.cast("string")), 1, 4), 16, 10).cast("long")
 
   /** Delta-method arm moments over a (cluster, arm, x, y) CTE — the
     * DuckDB replay of [[graft.ops.Experiment.deltaMethodRatio]]'s

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.core.{Prebuilt, Tables}
 import graft.ops.{Bpe, Calibrate, Chat, Dedup, Dsir, Graph, Multimodal, NgramLm, Pq, Profile, QualityFilter, Rank, Search, SearchIndex, Select, Sketch, Sq, Text, Vectors}
+import Catalog.md5Val16Sql
 
 /**
  * LLM training-data pipeline operators (SURVEY.md §7.5) with DuckDB oracles:
@@ -138,15 +139,6 @@ object LlmOps extends QueryGroup {
        |    CASE WHEN st.cum + c.n_tokens > $maxTokens
        |         THEN c.n_tokens ELSE st.cum + c.n_tokens END
        |  FROM st JOIN o c ON c.$keyCol = st.$keyCol AND c.rn = st.rn + 1)""".stripMargin
-  }
-
-  /** Shared oracle fragment: the first 4 hex nibbles of md5(id) as a
-    * uniform value in [0, 65536) — the hash behind [[Text.docBucket]] and
-    * [[Text.hashSplit]] (md5 is lowercase hex in both engines). */
-  private def md5Val16Sql(idExpr: String): String = {
-    val h = s"md5(CAST($idExpr AS VARCHAR))"
-    def nib(k: Int) = s"(strpos('0123456789abcdef', substr($h, $k, 1)) - 1)"
-    s"(${nib(1)}*4096 + ${nib(2)}*256 + ${nib(3)}*16 + ${nib(4)})"
   }
 
   /** [[Text.docBucket]] in DuckDB. */
@@ -2548,8 +2540,7 @@ object LlmOps extends QueryGroup {
           .select(col("doc_id"), col("split"))
       },
       Some {
-        def nib(k: Int) = s"(strpos('0123456789abcdef', substr(h, $k, 1)) - 1)"
-        val hv = s"(${nib(1)}*4096 + ${nib(2)}*256 + ${nib(3)}*16 + ${nib(4)})"
+        val hv = Catalog.hex16Sql("h")
         s"""WITH RECURSIVE $shinglesCte,
            |inter AS (SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS i
            |  FROM sh x JOIN sh y USING(shingle) WHERE x.doc_id < y.doc_id GROUP BY 1, 2),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.core.{Prebuilt, Tables}
 import graft.ops.{Cf, Text, Vectors}
 import graft.stats.Planners
+import Catalog.{md5Val16, md5Val16Sql}
 
 /**
  * Distribution/feature mining + collaborative filtering
@@ -43,17 +44,6 @@ object MiningQ extends QueryGroup {
       Cf.saveState(Cf.cfFit(cfEvents(s, dir).filter(col("event_id") % 2 === 0),
         "user_id", "item", maxUserItems = cap), stDir)
     })
-
-  /** md5 16-bit value of an id expression, DuckDB side (LlmOps twin). */
-  private def md5Val16Sql(idExpr: String): String = {
-    val h = s"md5(CAST($idExpr AS VARCHAR))"
-    def nib(k: Int) = s"(strpos('0123456789abcdef', substr($h, $k, 1)) - 1)"
-    s"(${nib(1)}*4096 + ${nib(2)}*256 + ${nib(3)}*16 + ${nib(4)})"
-  }
-
-  /** md5 16-bit value, Spark side. */
-  private def md5Val16(c: org.apache.spark.sql.Column) =
-    conv(substring(md5(c.cast("string")), 1, 4), 16, 10).cast("long")
 
   /** The q_item_cf oracle CTE chain, shared by q_item_recs and (at a
     * tighter cap) q_item_cf_incremental — the incremental query's

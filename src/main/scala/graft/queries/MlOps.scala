@@ -322,10 +322,12 @@ object MlOps extends QueryGroup {
           seqLen = seqLen, vocabSizes = Seq(vocab), nCont = 2)
         val seqCat = Seq((1 to seqLen).map(t => s"event_type_$t"))
         val seqCont = Seq("value", "ts_days").map(c => (1 to seqLen).map(t => s"${c}_$t"))
-        val baseRows = graft.ml.Ingress.project(wide, "user_id", seqCat, seqCont)
-          .orderBy(col("user_id")).limit(4).collect()
-        val bCat = baseRows.map(r => graft.ml.Ingress.seqCatOf(r, seqLen, 1))
-        val bCont = baseRows.map(r => graft.ml.Ingress.seqContOf(r, seqLen, 1, 2))
+        import s.implicits._
+        val (bCat, bCont) = wide.orderBy(col("user_id")).limit(4)
+          .select(graft.ml.Ingress.inputs(seqCat, seqCont, Nil, Nil))
+          .as[Array[Double]].collect()
+          .map(graft.ml.Ingress.decode(_, seqLen, 1, 2, 0, 0)((c, x, _, _) => (c, x)))
+          .unzip
         val attrs = graft.analyze.Explainer.deepLift(wide, cfg,
           cfg.initParams(), "user_id", seqCat, seqCont,
           targetDim = 0, baselineCat = bCat, baselineCont = bCont)

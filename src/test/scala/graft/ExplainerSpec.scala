@@ -196,4 +196,46 @@ class ExplainerSpec extends SparkSpec {
       assert(math.abs(dl(n) - v) < 5e-3 * scale + 1e-15,
         s"$n: deeplift=${dl(n)} ig=$v (scale=$scale)") }
   }
+
+  // ---- golden outputs: every value and the schema, bit for bit
+
+  /** Three rows over the edge cases of the input path: a null code, codes
+    * past the vocabulary and below 0 (clamped), null conts (read 0). */
+  private def goldenWide = {
+    import spark.implicits._
+    Seq[(Long, Option[Int], Option[Int], Option[Double], Option[Double], Option[Double], Option[Double])](
+      (1L, Some(1), Some(2), Some(0.4), Some(0.1), Some(-0.2), Some(0.7)),
+      (2L, None, Some(7), None, Some(0.3), Some(0.5), None),
+      (3L, Some(-1), Some(0), Some(1.5), Some(-0.6), Some(0.0), Some(2.0)))
+      .toDF("user_id", "et_1", "et_2", "v_1", "v_2", "w_1", "w_2")
+  }
+
+  /** The schema's JSON hash, then each row's values in (id, keys) order. */
+  private def fingerprint(df: org.apache.spark.sql.DataFrame): Fingerprint = {
+    val rows = df.collect().map(r => r.toSeq.map {
+      case l: Long => l.toDouble
+      case d: Double => d
+    }.toArray).sortBy(r => (r(0), r(1)))
+    Fingerprint.of(df.schema.json.hashCode.toDouble +: rows.flatten)
+  }
+
+  test("golden: deepLiftAll over two target dims against a two-row baseline sample") {
+    val baseCat = Array(Array(Array(0), Array(1)), Array(Array(2), Array(5)))
+    val baseCont = Array(Array(Array(0.2, 0.1), Array(-0.3, 0.5)),
+      Array(Array(1.0, -1.0), Array(0.25, 0.0)))
+    val got = fingerprint(graft.analyze.Explainer.deepLiftAll(goldenWide, cfg, p,
+      "user_id", seqCat, seqCont, Seq(1, 6), baseCat, baseCont))
+    assert(got == GoldenDeepLiftAll, s"got $got")
+  }
+
+  test("golden: integratedGradients") {
+    val got = fingerprint(graft.analyze.Explainer.integratedGradients(goldenWide, cfg, p,
+      "user_id", seqCat, seqCont, targetDim = 6, steps = 8))
+    assert(got == GoldenIg, s"got $got")
+  }
+
+  private val GoldenDeepLiftAll =
+    Fingerprint(6876259246150009525L, 9.158672992609142E8, 9.158674104884286E8)
+  private val GoldenIg =
+    Fingerprint(2945610099829800634L, 9.473905526448444E8, 9.473905409874343E8)
 }

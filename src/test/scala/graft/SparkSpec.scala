@@ -27,12 +27,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    // the mains' tuned builder; nanosAsLong from the start because specs
+    // read testdata with a raw `spark.read.parquet`, and `events.ts` has
+    // been written as parquet TIMESTAMP(NANOS) as well as micros
+    val s = graft.core.SessionTuning.local(4)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

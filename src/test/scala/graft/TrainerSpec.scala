@@ -213,11 +213,14 @@ class TrainerSpec extends SparkSpec {
     val p = res.params
     val (wOff, _) = lay.offsets("churn_w")
     val (bOff, _) = lay.offsets("churn_b")
-    val rows = graft.ml.Ingress.project(wide, "user_id", catCols, contCols).collect()
+    val rows = wide.select(org.apache.spark.sql.functions.col("user_id"),
+        graft.ml.Ingress.inputs(catCols, contCols, Nil, Nil))
+      .collect()
     assert(rows.length == got.size && rows.length > 1)
     for (row <- rows) {
-      val emb = graft.nn.TransformerAE.embedDouble(cfg, lay, p,
-        graft.ml.Ingress.seqCatOf(row, 5, 1), graft.ml.Ingress.seqContOf(row, 5, 1, 2))
+      val emb = graft.ml.Ingress.decode(row.getSeq[Double](1).toArray, 5, 1, 2, 0, 0) {
+        (cat, cont, _, _) => graft.nn.TransformerAE.embedDouble(cfg, lay, p, cat, cont)
+      }
       var z = p(bOff)
       for (i <- emb.indices) z += p(wOff + i) * emb(i)
       val want = 1.0 / (1.0 + math.exp(-z))
